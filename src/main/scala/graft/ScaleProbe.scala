@@ -259,7 +259,8 @@ object ScaleProbe {
         val (tFull, nOut) = tt(out.count())
         println(f"JACCARD $lbl%-3s docs=$nDocs%d tok=$tTok%6.2fs cand=$nCand%d " +
           f"candJoin=$tCand%6.2fs full=$tFull%6.2fs verify~=${tFull - tCand}%6.2fs out=$nOut%d")
-        sorted.unpersist()
+        org.apache.spark.sql.graft.CheckpointBridge.free(sorted)
+        org.apache.spark.sql.graft.CheckpointBridge.free(cand)
         spark.catalog.clearCache()
         spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
       }

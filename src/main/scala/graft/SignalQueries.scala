@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CheckpointBridge.{AdaptiveHash, materialize}
 
 /** Round-6 sixth wave: sequential-recurrence analytics (EWMA folds),
   * experimentation (CUPED variance reduction), video scene-cut
@@ -870,8 +871,7 @@ object SignalQueries {
     * graph — the same arboricity argument as the triangle pass.
     * Single-row (n_triangles, n_k4) output. */
   private def qK4(s: SparkSession, dir: String): DataFrame =
-    k4Census(s, dir,
-      sys.env.get("SPARK_GRAFT_K4_BATCHES").map(_.toInt).getOrElse(1))
+    k4Census(s, dir, batches = 1)
 
   /** K4 census with the same BOUNDED-SCRATCH batched mode as
     * [[itemCf]]: every oriented clique is owned by its MIN vertex x
@@ -882,9 +882,8 @@ object SignalQueries {
     * quadratic-ish intermediates (wedges, extension fan-out) drop to
     * ~1/batches, and each batch reduces to two driver scalars before
     * the next starts, so spill never accumulates. batches = 1 is the
-    * exact historical single-pass plan (the driver path; env knob
-    * SPARK_GRAFT_K4_BATCHES is probe-only). K4BatchedSpec asserts
-    * batched ≡ unbatched. */
+    * exact historical single-pass plan (the query path). K4BatchedSpec
+    * asserts batched ≡ unbatched. */
   private[graft] def k4Census(s: SparkSession, dir: String,
                               batches: Int): DataFrame = {
     // Round-14: the edge list is checkpointed with DECLARED hash(u)
@@ -901,9 +900,7 @@ object SignalQueries {
     // concentrates |E| under few u values can OOM a build task where
     // the old sort-merge would have spilled. PLANS.md r15 records the
     // sizing rule; np (shuffle.partitions) is the at-scale safety valve.
-    val np = s.sessionState.conf.numShufflePartitions
-    val cp = org.apache.spark.sql.graft.CheckpointBridge.localCheckpointHash(
-      TestGraphs.partCoPairs(Tables(s, dir)), "u", np)
+    val cp = materialize(TestGraphs.partCoPairs(Tables(s, dir)), AdaptiveHash("u"))
     def census(cpA: DataFrame): (DataFrame, DataFrame) = {
       val t = cpA.as("a")
         .join(cp.as("b").hint("shuffle_hash"),
@@ -1144,8 +1141,7 @@ object SignalQueries {
     * can't quadratically explode the shuffle at warehouse scale (the
     * contamination df-cap discipline). */
   private def qItemCf(s: SparkSession, dir: String): DataFrame =
-    itemCf(s, dir,
-      sys.env.get("SPARK_GRAFT_CF_BATCHES").map(_.toInt).getOrElse(1))
+    itemCf(s, dir, batches = 1)
 
   /** Item-CF with a BOUNDED-SCRATCH batched mode (round-12 second-
     * decade work): the neighbor-intersection class (this kernel, k4,
@@ -1163,8 +1159,7 @@ object SignalQueries {
     * (small, linear) user-item frame per batch; per-batch results
     * materialize as ≤5 rows/item checkpoints before the next batch
     * starts, so spill never accumulates across batches. batches = 1 is
-    * the EXACT historical plan (the driver's correctness/bench path —
-    * env knob SPARK_GRAFT_CF_BATCHES is probe-only). ItemCfBatchedSpec
+    * the EXACT historical plan (the query path). ItemCfBatchedSpec
     * asserts batched ≡ unbatched; the ≥67× probe row uses this path. */
   private[graft] def itemCf(s: SparkSession, dir: String,
                             batches: Int): DataFrame = {
@@ -1176,15 +1171,13 @@ object SignalQueries {
     // runs with zero exchanges of the user-item frame; the self-join is
     // pinned to a shuffled-hash build (one ui partition per task)
     // instead of sorting both sides.
-    val np = s.sessionState.conf.numShufflePartitions
-    val ui0 = org.apache.spark.sql.graft.CheckpointBridge.localCheckpointHash(
+    val ui0 = materialize(
       t.orders.join(t.lineitem, col("l_orderkey") === col("o_orderkey"))
         .select(col("o_custkey").as("u"), col("l_partkey").as("i")).distinct(),
-      "u", np)
+      AdaptiveHash("u"))
     val keep = ui0.groupBy(col("u")).agg(count(lit(1)).as("ni"))
       .filter(col("ni") <= 200).select(col("u"))
-    val ui = org.apache.spark.sql.graft.CheckpointBridge.localCheckpointHash(
-      ui0.join(keep, Seq("u"), "left_semi"), "u", np)
+    val ui = materialize(ui0.join(keep, Seq("u"), "left_semi"), AdaptiveHash("u"))
     val pop0 = ui.groupBy(col("i")).agg(count(lit(1)).as("p"))
     // checkpoint the global popularity only when it is reused across
     // batches — the batches = 1 plan stays byte-identical to history

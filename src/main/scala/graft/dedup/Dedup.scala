@@ -2,6 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CheckpointBridge.{AdaptiveHash, Stats, Tally, materialize}
 
 import graft.text.TextFunctions._
 
@@ -86,8 +87,7 @@ object Dedup {
         .agg(count(lit(1)).as("bsz"))
         .filter(col("bsz") > maxBucket)
         .select(kc: _*)
-      val (ck, nHot) = org.apache.spark.sql.graft.CheckpointBridge
-        .localCheckpointStatsCountWhere(hotKeys, lit(true))
+      val (ck, Tally(nHot, _, _)) = materialize(hotKeys, Stats, lit(true))
       if (nHot == 0) {
         org.apache.spark.sql.graft.CheckpointBridge.free(ck)
         selfJoin(banded)
@@ -632,10 +632,17 @@ object Dedup {
     * ([[jaccardJoin]]) checkpoints `scored` instead and applies
     * [[finishJaccard]] above the barrier for a single evaluation per
     * candidate. Callers other than the probes use the single-frame
-    * wrapper above. */
+    * wrapper above.
+    *
+    * The token checkpoint is freed here: it feeds only `sorted`, which is
+    * already materialized. Two checkpoints stay live for the caller to
+    * release with [[org.apache.spark.sql.graft.CheckpointBridge.free]]
+    * once done: `sorted`, and the prefix checkpoint, which is the only
+    * checkpoint leaf of `cand` (so `free(cand)` releases it). */
   def jaccardJoinStaged(sets: DataFrame, thresholdPct: Int = 80)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val (_, sorted, cand, scored, out, _) = jaccardJoinStaged5(sets, thresholdPct)
+    val (toks, sorted, cand, scored, out, _) = jaccardJoinStaged5(sets, thresholdPct)
+    org.apache.spark.sql.graft.CheckpointBridge.free(toks)
     (sorted, cand, scored, out)
   }
 
@@ -645,7 +652,6 @@ object Dedup {
   private[graft] def jaccardJoinStaged5(sets: DataFrame, thresholdPct: Int = 80)
       : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) = {
     val t = thresholdPct.toLong
-    val np = sets.sparkSession.sessionState.conf.numShufflePartitions
     // Single-scan token build (r15): lazily, this frame — the corpus
     // scan + shingle kernel + explode — is evaluated TWICE, once under
     // the df aggregation's exchange and once under the dictionary join's
@@ -659,9 +665,9 @@ object Dedup {
     // materialization (spills to local disk) for a full corpus re-scan +
     // re-shingle; recomputing is never cheaper than one sequential
     // read-back of the narrower (doc_id, tok) frame.
-    val toks = org.apache.spark.sql.graft.CheckpointBridge.localCheckpointHash(
+    val toks = materialize(
       sets.select(col("doc_id"),
-        explode(array_distinct(col("items"))).as("tok")), "tok", np)
+        explode(array_distinct(col("items"))).as("tok")), AdaptiveHash("tok"))
     val dfreq = toks.groupBy(col("tok")).agg(count(lit(1)).as("df"))
     // rarest-first order WITHOUT a global rank window: lexicographic
     // (df, token) ordering IS the rank ordering
@@ -696,7 +702,7 @@ object Dedup {
       // plan-matching in the loop. Also the reason the old eager
       // `sorted.count()` staging job is gone — the checkpoint IS the
       // staging job.
-      .transform(org.apache.spark.sql.graft.CheckpointBridge.localCheckpointStats)
+      .transform(materialize(_, Stats))
     // positional prefix frame: (doc, set size, 1-based prefix position,
     // token). The PPJoin filters prune candidate ROWS before the
     // distinct: (a) length filter — J ≥ t forces t·max(n) ≤ 100·min(n);
@@ -732,8 +738,7 @@ object Dedup {
     // with it every stage is np-way and neither side is ever collected
     // to one node, which is the only shape that survives a corpus where
     // both prefix frames are TB-scale.
-    val shuffled = org.apache.spark.sql.graft.CheckpointBridge
-      .localCheckpointHash(prefix, "tok", np)
+    val shuffled = materialize(prefix, AdaptiveHash("tok"))
     val p1 = shuffled.select(col("doc_id").as("da"), col("n").as("pna"),
       col("pos").as("pa"), col("tok"))
     val p2 = shuffled.filter(col("idx")).select(col("doc_id").as("db"),

@@ -3,7 +3,8 @@ package graft.graph
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.CheckpointBridge.{free => freeCkpt}
+import org.apache.spark.sql.graft.CheckpointBridge.{AdaptiveHash, Hash, Stats, Tally,
+  materialize, free => freeCkpt}
 import org.apache.spark.storage.StorageLevel
 
 /** The reference's algorithm corpus (giraph-examples, SURVEY §2.9)
@@ -23,36 +24,6 @@ object Algos {
     * per-job cost (scheduling, planning, codegen) — the dominant cost
     * when round frames are small — is paid once per batch. */
   private val WaveBatch = 4
-
-  /** Edge frame materialized once with DECLARED hash(key) partitioning
-    * (CheckpointBridge): a persisted frame's partitioning is invisible
-    * under AQE, so iteration joins would reshuffle it every round. */
-  private def ckptHash(df: DataFrame, key: String): DataFrame =
-    org.apache.spark.sql.graft.CheckpointBridge.localCheckpointHash(
-      df, key, df.sparkSession.sessionState.conf.numShufflePartitions)
-
-  /** [[ckptHash]] with a fused predicate count — the loop's convergence
-    * count rides the checkpoint's own materializing job (one driver
-    * barrier per round, not two). */
-  private def ckptHashCountWhere(df: DataFrame, key: String,
-                                 pred: Column): (DataFrame, Long) =
-    org.apache.spark.sql.graft.CheckpointBridge.localCheckpointHashCountWhere(
-      df, key, df.sparkSession.sessionState.conf.numShufflePartitions, pred)
-
-  /** localCheckpoint with MEASURED stats (CheckpointBridge). A plain
-    * `localCheckpoint()` PROPAGATES the pre-checkpoint plan's estimated
-    * Statistics through the LogicalRDD (LogicalRDD.fromDataset →
-    * rewriteStatsAndConstraints), so a fixpoint whose iterate references
-    * itself k≥2 times per round compounds sizeInBytes multiplicatively —
-    * bits grow k^round, and by ~15 supersteps of a 3-self-reference loop
-    * the driver burns minutes in BigInteger.multiply inside
-    * SizeInBytesOnlyStatsPlanVisitor and dies with "BigInteger would
-    * overflow supported range" (reproduced by IndependentOracleSpec's
-    * many-round SCC tangle). Measured stats reset the estimate to the
-    * frame's REAL byte size every round — both correct and
-    * broadcast-friendly. */
-  private def ckptStats(df: DataFrame): DataFrame =
-    org.apache.spark.sql.graft.CheckpointBridge.localCheckpointStats(df)
 
   /** Fresh-flag delta-frontier reachability: the ids reachable from
     * `seeds` along `edges` within ≤ `maxHops` hops (seeds included), i.e.
@@ -80,9 +51,8 @@ object Algos {
     val bcBytes = seeds.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
     def hint(frontier: DataFrame, n: Long): DataFrame =
       if (n * 32L <= bcBytes) broadcast(frontier) else frontier // ~32 B/id row
-    var (reached, fresh) = org.apache.spark.sql.graft.CheckpointBridge
-      .localCheckpointStatsCountWhere(
-        seeds.select(col("id")).distinct().withColumn("fresh", lit(true)),
+    var (reached, Tally(fresh, _, _)) = materialize(
+        seeds.select(col("id")).distinct().withColumn("fresh", lit(true)), Stats,
         col("fresh"))
     var h = 0
     while (fresh > 0 && h < maxHops) {
@@ -93,8 +63,7 @@ object Algos {
             Seq("src"))
           .select(col("dst").as("id"), lit(true).as("cand")))
         .groupBy(col("id")).agg(bool_and(col("cand")).as("fresh"))
-      val (ck, freshCnt) = org.apache.spark.sql.graft.CheckpointBridge
-        .localCheckpointStatsCountWhere(next, col("fresh"))
+      val (ck, Tally(freshCnt, _, _)) = materialize(next, Stats, col("fresh"))
       reached = ck
       fresh = freshCnt
       // the new frame is eagerly materialized; the superseded wave's
@@ -138,12 +107,11 @@ object Algos {
     // e is joined on src every round and f on id (aliased to src) — both
     // carry DECLARED hash partitioning so the m1 join never reshuffles
     // (plain persist/localCheckpoint partitioning is invisible under
-    // AQE; see CheckpointBridge.localCheckpointHash)
-    val e = ckptHash(symEdges.select("src", "dst"), "src")
+    // AQE; see CheckpointBridge.materialize)
+    val e = materialize(symEdges.select("src", "dst"), AdaptiveHash("src"))
     val nbrMin0 = e.groupBy(col("src").as("id")).agg(min(col("dst")).as("nm"))
-    var f: DataFrame = org.apache.spark.sql.graft.CheckpointBridge
-      .localCheckpointStats(verticesOf(e).join(nbrMin0, Seq("id"), "left")
-        .select(col("id"), col("id").as("f_old"), least(col("id"), col("nm")).as("f")))
+    var f: DataFrame = materialize(verticesOf(e).join(nbrMin0, Seq("id"), "left")
+        .select(col("id"), col("id").as("f_old"), least(col("id"), col("nm")).as("f")), Stats)
     // |f| is INVARIANT across rounds (always one row per vertex), so one
     // measurement decides the whole loop's checkpoint strategy — the
     // static analogue of AQE's broadcast decision. Small vertex frame:
@@ -170,10 +138,9 @@ object Algos {
           least(col("f"), col("m1"), col("gf")).as("f"))
       // the changed-count rides the checkpoint's materializing job
       // (fused accumulator — one driver barrier per round, not two)
-      val (next, nChanged) =
-        if (smallV) org.apache.spark.sql.graft.CheckpointBridge
-          .localCheckpointStatsCountWhere(next0, col("f") < col("f_old"))
-        else ckptHashCountWhere(next0, "id", col("f") < col("f_old"))
+      val (next, Tally(nChanged, _, _)) =
+        if (smallV) materialize(next0, Stats, col("f") < col("f_old"))
+        else materialize(next0, Hash("id"), col("f") < col("f_old"))
       changed = nChanged
       freeCkpt(f) // every f here (init included) is this loop's own checkpoint
       f = next // carries a stale f_old column; joins above project it away
@@ -270,7 +237,7 @@ object Algos {
   def pagerank(edges: DataFrame, iterations: Int,
                damping: Double = 0.85, resetProb: Double = 0.15,
                opts: PregelOptions = PregelOptions()): DataFrame = {
-    val e = ckptHash(edges.select("src", "dst"), "src")
+    val e = materialize(edges.select("src", "dst"), AdaptiveHash("src"))
     val v = verticesOf(e).persist(StorageLevel.MEMORY_AND_DISK)
     val n = v.count().toDouble
     val deg = e.groupBy(col("src").as("id"))
@@ -319,16 +286,16 @@ object Algos {
   def pagerankConverged(edges: DataFrame, maxIters: Int = 64,
                         tol: Double = 1e-8, convergence: String = "sum",
                         damping: Double = 0.85, resetProb: Double = 0.15): (DataFrame, Int) = {
-    val e = ckptHash(edges.select("src", "dst"), "src")
+    val e = materialize(edges.select("src", "dst"), AdaptiveHash("src"))
     val v = verticesOf(e).persist(StorageLevel.MEMORY_AND_DISK)
     val n = v.count().toDouble
     val deg = e.groupBy(col("src").as("id"))
       .agg(count(lit(1)).cast("double").as("outdeg"))
-    var verts = ckptHash(v.join(deg, Seq("id"), "left")
+    var verts = materialize(v.join(deg, Seq("id"), "left")
       .select(col("id"), lit(1.0 / n).as("pr"),
-        coalesce(col("outdeg"), lit(0.0)).as("outdeg")), "id")
+        coalesce(col("outdeg"), lit(0.0)).as("outdeg")), AdaptiveHash("id"))
     // The per-row |Δ| metric rides the checkpoint's materializing job
-    // (CheckpointBridge.localCheckpointHashDeltaWhere): one driver
+    // (CheckpointBridge.materialize): one driver
     // barrier per round, not checkpoint + a separate delta-agg job
     // (round-7 verdict task 5). The accumulator contract is one-sided —
     // a retry can only inflate the delta, so the loop can only run long,
@@ -341,15 +308,13 @@ object Algos {
       case "sum_rel" | "max_rel" => diff / col("prev_pr")
       case "rmse"                => diff * diff
     }
-    val np = edges.sparkSession.sessionState.conf.numShufflePartitions
     var it = 0
     var delta = Double.MaxValue
     while (it < maxIters && delta >= tol) {
       val prev = verts
       val nextJ = prUpdate(prev, e, n, damping, resetProb)
         .join(prev.select(col("id"), col("pr").as("prev_pr")), Seq("id"))
-      val (ck, dSum, dMax) = org.apache.spark.sql.graft.CheckpointBridge
-        .localCheckpointHashDeltaWhere(nextJ, "id", np, rowMetric)
+      val (ck, Tally(_, dSum, dMax)) = materialize(nextJ, Hash("id"), rowMetric)
       verts = ck.select("id", "pr", "outdeg")
       delta = convergence match {
         case "sum" | "sum_rel" => dSum
@@ -371,7 +336,7 @@ object Algos {
   def pagerankWeighted(edges: DataFrame, iterations: Int,
                        damping: Double = 0.85, resetProb: Double = 0.15,
                        opts: PregelOptions = PregelOptions()): DataFrame = {
-    val e = ckptHash(edges.select("src", "dst", "w"), "src")
+    val e = materialize(edges.select("src", "dst", "w"), AdaptiveHash("src"))
     val v = verticesOf(e).persist(StorageLevel.MEMORY_AND_DISK)
     val n = v.count().toDouble
     val wdeg = e.groupBy(col("src").as("id")).agg(sum(col("w")).cast("double").as("wsum"))
@@ -397,7 +362,7 @@ object Algos {
   def randomWalkWithRestart(edges: DataFrame, source: Long, iterations: Int,
                             damping: Double = 0.85, resetProb: Double = 0.15,
                             opts: PregelOptions = PregelOptions()): DataFrame = {
-    val e = ckptHash(edges.select("src", "dst"), "src")
+    val e = materialize(edges.select("src", "dst"), AdaptiveHash("src"))
     val v = verticesOf(e).persist(StorageLevel.MEMORY_AND_DISK)
     val deg = e.groupBy(col("src").as("id")).agg(count(lit(1)).cast("double").as("outdeg"))
     val init = v.join(deg, Seq("id"))
@@ -431,34 +396,36 @@ object Algos {
     * per round. */
   def rwrMulti(edges: DataFrame, nSources: Int, iterations: Int,
                damping: Double = 0.85, resetProb: Double = 0.15): DataFrame = {
-    val e = ckptHash(edges.select("src", "dst"), "src")
+    val e = materialize(edges.select("src", "dst"), AdaptiveHash("src"))
     // vertex frame = vertices WITH out-edges, matching the single-source
     // randomWalkWithRestart (inner join with deg) and the oracle's
     // DISTINCT-src CTE: sink (dst-only) vertices hold no walk state in
     // the reference semantics, so they must not emit (sink, tag) rows
-    val v = ckptHash(e.select(col("src").as("id")).distinct(), "id")
+    val v = materialize(e.select(col("src").as("id")).distinct(), AdaptiveHash("id"))
     val srcs = e.select(col("src")).distinct()
       .orderBy(col("src")).limit(nSources)
       .select(col("src").as("tag")).localCheckpoint()
-    val deg = ckptHash(
-      e.groupBy(col("src").as("id")).agg(count(lit(1)).cast("double").as("outdeg")), "id")
-    var p = ckptHash(
+    val deg = materialize(
+      e.groupBy(col("src").as("id")).agg(count(lit(1)).cast("double").as("outdeg")),
+      AdaptiveHash("id"))
+    var p = materialize(
       v.crossJoin(broadcast(srcs))
         .select(col("id"), col("tag"),
-          when(col("id") === col("tag"), lit(1.0)).otherwise(lit(0.0)).as("pr")), "id")
+          when(col("id") === col("tag"), lit(1.0)).otherwise(lit(0.0)).as("pr")),
+      AdaptiveHash("id"))
     var i = 0
     while (i < iterations) {
       val sums = p.join(deg, Seq("id"))
         .join(e, col("id") === col("src"))
         .select(col("dst"), col("tag"), (col("pr") / col("outdeg")).as("c"))
         .groupBy(col("dst"), col("tag")).agg(sum(col("c")).as("s"))
-      val nextReal = ckptHash(
+      val nextReal = materialize(
         v.crossJoin(broadcast(srcs)).as("vt")
           .join(sums.as("sm"),
             col("vt.id") === col("sm.dst") && col("vt.tag") === col("sm.tag"), "left")
           .select(col("vt.id").as("id"), col("vt.tag").as("tag"),
             (when(col("vt.id") === col("vt.tag"), lit(resetProb)).otherwise(lit(0.0)) +
-              lit(damping) * coalesce(col("sm.s"), lit(0.0))).as("pr")), "id")
+              lit(damping) * coalesce(col("sm.s"), lit(0.0))).as("pr")), AdaptiveHash("id"))
       freeCkpt(p)
       p = nextReal
       i += 1
@@ -602,12 +569,6 @@ object Algos {
           .otherwise(lit(0L)).as("cc_e6"))
   }
 
-  /** Default batch count for the BOUNDED-SCRATCH support pass —
-    * probe-only env knob; 1 (every driver run) keeps every plan in the
-    * triangle-intersection family byte-identical to history. */
-  private[graph] val SupportBatches: Int =
-    sys.env.get("SPARK_GRAFT_SUPPORT_BATCHES").map(_.toInt).getOrElse(1)
-
   /** Per-edge triangle support over canonical pairs (u < v), via the
     * same degree-oriented adjacency intersection [[triangleCount]] uses:
     * each triangle found at its pivot edge credits its THREE canonical
@@ -615,13 +576,12 @@ object Algos {
     * intermediate. Self-managed checkpoints (freed before returning the
     * materialized support frame) so the peeling loop doesn't strand
     * blocks per round. Returns (u, v, support), support 0-filled.
-    * `batches` > 1 (SPARK_GRAFT_SUPPORT_BATCHES, probe-only) bounds
-    * peak spill at ~1/batches of the wedge volume — the itemCf/k4Census
-    * bounded-scratch pattern; results are exact either way
-    * (EdgeSupportBatchedSpec). kTruss and [[edgeJaccard]] inherit the
-    * knob through this pass. */
+    * `batches` > 1 bounds peak spill at ~1/batches of the wedge volume
+    * — the itemCf/k4Census bounded-scratch pattern; results are exact
+    * either way (EdgeSupportBatchedSpec). kTruss and [[edgeJaccard]]
+    * run the single-pass default. */
   private def edgeSupport0(e: DataFrame,
-                           batches: Int = SupportBatches): (DataFrame, Seq[DataFrame]) = {
+                           batches: Int = 1): (DataFrame, Seq[DataFrame]) = {
     val o = orientByDegree(e, pairDegrees(e))
       .select(col("src"), col("dst")).localCheckpoint()
     val nb = o.groupBy(col("src").as("id"))
@@ -663,7 +623,7 @@ object Algos {
   }
 
   private[graph] def edgeSupport(e: DataFrame,
-                                 batches: Int = SupportBatches): DataFrame = {
+                                 batches: Int = 1): DataFrame = {
     val (out0, tmp) = edgeSupport0(e, batches)
     val out = out0.localCheckpoint()
     tmp.foreach(freeCkpt)
@@ -673,10 +633,9 @@ object Algos {
   /** [[edgeSupport]] with a fused predicate count on the checkpoint job. */
   private def edgeSupportCount(e: DataFrame, pred: Column): (DataFrame, Long) = {
     val (out0, tmp) = edgeSupport0(e)
-    val r = org.apache.spark.sql.graft.CheckpointBridge
-      .localCheckpointStatsCountWhere(out0, pred)
+    val (out, Tally(kept, _, _)) = materialize(out0, Stats, pred)
     tmp.foreach(freeCkpt)
-    r
+    (out, kept)
   }
 
   /** k-truss: the maximal subgraph where every edge closes ≥ k−2
@@ -693,28 +652,24 @@ object Algos {
     * edge-count scalar. */
   def kTruss(pairs: DataFrame, k: Int,
              opts: PregelOptions = PregelOptions(maxSupersteps = 40)): DataFrame = {
-    // ckptStats, not plain localCheckpoint: edgeSupport references e
-    // three times per round, so estimated stats would compound 3^rounds
-    // through the checkpoints (see ckptStats)
-    val trace = sys.env.contains("SPARK_GRAFT_TRACE_ROUNDS")
-    var e = pairs.select(col("u"), col("v")).transform(ckptStats)
+    // measured stats, not plain localCheckpoint: edgeSupport references
+    // e three times per round, so estimated stats would compound
+    // 3^rounds through the checkpoints (see CheckpointBridge.materialize)
+    var e = pairs.select(col("u"), col("v")).transform(materialize(_, Stats))
     var cnt = e.count()
     var step = 0
     while (step < opts.maxSupersteps) {
-      val tRound = System.nanoTime()
       // fixpoint ⟺ a support pass over the CURRENT edge set drops
       // nothing (filtering on stale supports would exit one round early
       // with under-supported edges still in); the kept-count rides the
       // support checkpoint's own job
       val (sup, keptCnt) = edgeSupportCount(e, col("support") >= k - 2)
-      if (trace) println(f"KTRUSS round=$step%2d edges=$cnt%8d kept=$keptCnt%8d " +
-        f"wall=${(System.nanoTime() - tRound) / 1e9}%6.2fs")
       if (keptCnt == cnt) {
         freeCkpt(e)
         return sup.orderBy(col("u"), col("v"))
       }
       val kept = sup.filter(col("support") >= k - 2)
-        .select("u", "v").transform(ckptStats)
+        .select("u", "v").transform(materialize(_, Stats))
       freeCkpt(sup); freeCkpt(e)
       e = kept
       cnt = keptCnt
@@ -781,8 +736,7 @@ object Algos {
         .select(col("comp"), col("m.u").as("u"), col("m.v").as("v"),
           col("m.w").as("w"), col("m.p").as("par"))
       val mm = {
-        val (ck, n) = org.apache.spark.sql.graft.CheckpointBridge
-          .localCheckpointStatsCountWhere(m0, lit(true))
+        val (ck, Tally(n, _, _)) = materialize(m0, Stats, lit(true))
         merges = n; ck
       }
       if (merges > 0) {
@@ -798,17 +752,16 @@ object Algos {
             when(col("b.par") === col("a.comp"),
               least(col("a.comp"), col("a.par")))
               .otherwise(col("a.par")).as("par"))
-          .transform(ckptStats)
+          .transform(materialize(_, Stats))
         // pointer doubling to fixpoint (roots map to themselves, so the
         // composition is total and monotone toward the root; the changed
         // count rides each checkpoint job)
         var moved = 1L
         while (moved > 0) {
-          val (next, nMoved) = org.apache.spark.sql.graft.CheckpointBridge
-            .localCheckpointStatsCountWhere(
+          val (next, Tally(nMoved, _, _)) = materialize(
               f.as("a").join(f.as("b"), col("b.comp") === col("a.par"))
                 .select(col("a.comp").as("comp"), col("a.par").as("p_old"),
-                  col("b.par").as("par")),
+                  col("b.par").as("par")), Stats,
               col("par") =!= col("p_old"))
           moved = nMoved
           freeCkpt(f)
@@ -1024,7 +977,7 @@ object Algos {
                                maxHops: Int): DataFrame = {
     val s = edges.sparkSession
     import s.implicits._
-    val e = ckptHash(Prep.makeSymmetric(edges.select("src", "dst")), "src")
+    val e = materialize(Prep.makeSymmetric(edges.select("src", "dst")), AdaptiveHash("src"))
     val src0 = sources.map(x => (x, x, 0L)).toDF("id", "tag", "level")
       .localCheckpoint()
     var frontiers = Vector(src0)
@@ -1045,8 +998,7 @@ object Algos {
         .transform(d0 => {
           val d = if (prev == null) d0
             else d0.join(prev.select("id", "tag"), Seq("id", "tag"), "left_anti")
-          val (ck, n) = org.apache.spark.sql.graft.CheckpointBridge
-            .localCheckpointStatsCountWhere(d, lit(true))
+          val (ck, Tally(n, _, _)) = materialize(d, Stats, lit(true))
           live = n > 0; ck
         })
       if (live) {
@@ -1105,15 +1057,15 @@ object Algos {
                              .map(_.toLong).getOrElse(2000000000L)): DataFrame = {
     val s = edges.sparkSession
     import s.implicits._
-    val e = ckptHash(Prep.makeSymmetric(edges.select("src", "dst")), "src")
+    val e = materialize(Prep.makeSymmetric(edges.select("src", "dst")), AdaptiveHash("src"))
     // one scalar job: edge count + approximate vertex count → the
     // average degree the per-wave expansion projection prices with
     val dr = e.agg(count(lit(1)).as("m"),
       approx_count_distinct(col("src")).as("n")).first()
     val avgDeg = math.max(1.0, dr.getLong(0).toDouble / math.max(1L, dr.getLong(1)))
-    var frontier = ckptHash(
+    var frontier = materialize(
       verticesOf(e).filter(pmod(col("id"), lit(sampleMod)) === 0L)
-        .select(col("id"), col("id").as("tag"), lit(0L).as("level")), "id")
+        .select(col("id"), col("id").as("tag"), lit(0L).as("level")), AdaptiveHash("id"))
     var prev: DataFrame = null
     var counts = Vector((0L, frontier.count()))
     var lastWave = counts.last._2
@@ -1150,8 +1102,7 @@ object Algos {
           // the materialized blocks exactly (a count() over a cached
           // checkpoint is a metadata-cheap job; the loop is fixed-length,
           // so no barrier is saved by fusing here anyway).
-          val ck = org.apache.spark.sql.graft.CheckpointBridge
-            .localCheckpointStats(d)
+          val ck = materialize(d, Stats)
           val n = ck.count()
           lastWave = n
           counts :+= ((h.toLong, counts.last._2 + n)); ck
@@ -1185,7 +1136,7 @@ object Algos {
   def anfSketch(symEdges: DataFrame, maxH: Int = 4, numReg: Int = 64): DataFrame = {
     val s = symEdges.sparkSession
     import s.implicits._
-    val e = ckptHash(symEdges.select("src", "dst"), "src")
+    val e = materialize(symEdges.select("src", "dst"), AdaptiveHash("src"))
     // register j's initial bitmap: the lowest set bit of a 60-bit md5
     // value (x & -x) — geometric ρ without a count-trailing-zeros builtin
     val seeded = verticesOf(e).select(col("id"),
@@ -1194,7 +1145,7 @@ object Algos {
           .cast("long")
         x.bitwiseAND(-x)
       }).as("regs"))
-    var cur = ckptHash(seeded, "id")
+    var cur = materialize(seeded, AdaptiveHash("id"))
     // per-register estimate: R = index of the lowest ZERO bit of the
     // union bitmap = log2((~m) & (m+1)); ball ≈ 2^mean(R) / 0.77351
     val estimate = (df: DataFrame) => df.select(
@@ -1218,7 +1169,7 @@ object Algos {
         .groupBy(col("id"))
         .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
           x => x.getField("m")).as("regs"))
-      val ck = ckptHash(next, "id")
+      val ck = materialize(next, AdaptiveHash("id"))
       freeCkpt(cur)
       cur = ck
       out :+= ((h.toLong, estimate(cur)))
@@ -1242,17 +1193,13 @@ object Algos {
     * the color count ≤ Δ+1, not the degree), state one row per vertex.
     * Returns (id, color). */
   def greedyColoring(symEdges: DataFrame, maxRounds: Int = 64): DataFrame = {
-    // dev-only round tracing (SPARK_GRAFT_TRACE_ROUNDS=1): wall +
-    // uncolored per JP round, for per-round cost attribution
-    val trace = sys.env.contains("SPARK_GRAFT_TRACE_ROUNDS")
-    val e = ckptHash(symEdges.select("src", "dst"), "src")
-    var verts = ckptHash(verticesOf(e).select(col("id"),
+    val e = materialize(symEdges.select("src", "dst"), AdaptiveHash("src"))
+    var verts = materialize(verticesOf(e).select(col("id"),
       conv(substring(md5(col("id").cast("string")), 1, 15), 16, 10).cast("long").as("p"),
-      lit(null).cast("long").as("color")), "id")
+      lit(null).cast("long").as("color")), AdaptiveHash("id"))
     var round = 0
     var uncolored = verts.filter(col("color").isNull).count()
     while (uncolored > 0 && round < maxRounds) {
-      val tRound = System.nanoTime()
       val st = verts.select(col("id").as("dst"), col("p").as("np"), col("color").as("nc"))
       // strongest uncolored neighbor per vertex ((p, id) order)
       val nbrMax = e.join(st, Seq("dst"))
@@ -1275,16 +1222,14 @@ object Algos {
         .select(col("id"),
           aggregate(coalesce(col("cols"), array().cast("array<long>")),
             lit(0L), (acc, c) => when(c === acc, acc + 1L).otherwise(acc)).as("newc"))
-      val (next, stillUncolored) = ckptHashCountWhere(
+      val (next, Tally(stillUncolored, _, _)) = materialize(
         verts.join(assigned, Seq("id"), "left")
           .select(col("id"), col("p"), coalesce(col("color"), col("newc")).as("color")),
-        "id", col("color").isNull)
+        Hash("id"), col("color").isNull)
       freeCkpt(verts)
       verts = next
       uncolored = stillUncolored
       round += 1
-      if (trace) println(f"COLORING round=$round%2d uncolored=$uncolored%8d " +
-        f"wall=${(System.nanoTime() - tRound) / 1e9}%6.2fs")
     }
     val out = verts.select(col("id"), col("color")).orderBy(col("id")).localCheckpoint()
     freeCkpt(verts); freeCkpt(e)
@@ -1303,10 +1248,10 @@ object Algos {
   def maximalMatching(symEdges: DataFrame, maxRounds: Int = 30): DataFrame = {
     val s = symEdges.sparkSession
     import s.implicits._
-    val e = ckptHash(symEdges.select("src", "dst"), "src")
-    val prio = ckptHash(verticesOf(e).select(col("id"),
+    val e = materialize(symEdges.select("src", "dst"), AdaptiveHash("src"))
+    val prio = materialize(verticesOf(e).select(col("id"),
       conv(substring(md5(col("id").cast("string")), 1, 15), 16, 10).cast("long").as("p")),
-      "id")
+      AdaptiveHash("id"))
     var live = e
     // one ROUND-SIZED checkpoint per round; the matched result is their
     // lazy union. The anti-join partner is only THIS round's mutual
@@ -1326,21 +1271,20 @@ object Algos {
           Window.partitionBy(col("src")).orderBy(col("np").desc, col("dst").desc)))
         .filter(col("rn") === 1)
         .select(col("src"), col("dst"))
-      val mutual = org.apache.spark.sql.graft.CheckpointBridge
-        .localCheckpointStats(pick.as("a")
+      val mutual = materialize(pick.as("a")
           .join(pick.as("b"),
             col("a.src") === col("b.dst") && col("a.dst") === col("b.src"))
           .filter(col("a.src") < col("a.dst"))
-          .select(col("a.src").as("u"), col("a.dst").as("v")))
+          .select(col("a.src").as("u"), col("a.dst").as("v")), Stats)
       rounds :+= mutual
       // dup endpoints are harmless on the anti-join's build side — no
       // distinct pass needed
       val mv = mutual.select(col("u").as("id"))
         .union(mutual.select(col("v").as("id")))
-      val (nextLive, nextLiveCount) = ckptHashCountWhere(
+      val (nextLive, Tally(nextLiveCount, _, _)) = materialize(
         live.join(mv.withColumnRenamed("id", "src"), Seq("src"), "left_anti")
           .join(mv.withColumnRenamed("id", "dst"), Seq("dst"), "left_anti")
-          .select(col("src"), col("dst")), "src", lit(true))
+          .select(col("src"), col("dst")), Hash("src"), lit(true))
       if (round > 0) freeCkpt(live)
       live = nextLive
       liveCount = nextLiveCount
@@ -1364,7 +1308,7 @@ object Algos {
   def maxWeightMatching(symEdges: DataFrame, maxRounds: Int = 12): DataFrame = {
     val s = symEdges.sparkSession
     import s.implicits._
-    var live = ckptHash(symEdges.select("src", "dst", "w"), "src")
+    var live = materialize(symEdges.select("src", "dst", "w"), AdaptiveHash("src"))
     // round-sized checkpoints + current-round-endpoints anti-join — same
     // rationale as [[maximalMatching]] (live inductively excludes every
     // earlier round's matched endpoints)
@@ -1377,19 +1321,18 @@ object Algos {
           Window.partitionBy(col("src")).orderBy(col("w").desc, col("dst").desc)))
         .filter(col("rn") === 1)
         .select(col("src"), col("dst"), col("w"))
-      val mutual = org.apache.spark.sql.graft.CheckpointBridge
-        .localCheckpointStats(pick.as("a")
+      val mutual = materialize(pick.as("a")
           .join(pick.as("b"),
             col("a.src") === col("b.dst") && col("a.dst") === col("b.src"))
           .filter(col("a.src") < col("a.dst"))
-          .select(col("a.src").as("u"), col("a.dst").as("v"), col("a.w").as("w")))
+          .select(col("a.src").as("u"), col("a.dst").as("v"), col("a.w").as("w")), Stats)
       rounds :+= mutual
       val mv = mutual.select(col("u").as("id"))
         .union(mutual.select(col("v").as("id")))
-      val (nextLive, nextLiveCount) = ckptHashCountWhere(
+      val (nextLive, Tally(nextLiveCount, _, _)) = materialize(
         live.join(mv.withColumnRenamed("id", "src"), Seq("src"), "left_anti")
           .join(mv.withColumnRenamed("id", "dst"), Seq("dst"), "left_anti")
-          .select(col("src"), col("dst"), col("w")), "src", lit(true))
+          .select(col("src"), col("dst"), col("w")), Hash("src"), lit(true))
       if (round > 0) freeCkpt(live)
       live = nextLive
       liveCount = nextLiveCount
@@ -1415,7 +1358,7 @@ object Algos {
     * scalar aggs; iterated state is one row per vertex, checkpointed
     * with declared hash(id) layout. Returns (id, auth, hub) doubles. */
   def hits(edges: DataFrame, iterations: Int): DataFrame = {
-    val e = ckptHash(edges.select("src", "dst"), "src")
+    val e = materialize(edges.select("src", "dst"), AdaptiveHash("src"))
     // (r15: a hash(dst)-declared edge twin for the hub pull was tried
     // and REVERTED — jobs 71 → 89: at bench scale the measured-stats
     // edge frame broadcasts into that join anyway, so the declared
@@ -1424,8 +1367,8 @@ object Algos {
     // exchange this would remove only exists past the broadcast
     // threshold, where the salsa-style eo/ei twins are the shape to
     // copy if hits iterations ever grow.)
-    val v = ckptHash(verticesOf(e), "id")
-    var h = ckptHash(v.select(col("id"), lit(1.0).as("h")), "id")
+    val v = materialize(verticesOf(e), AdaptiveHash("id"))
+    var h = materialize(v.select(col("id"), lit(1.0).as("h")), AdaptiveHash("id"))
     var a: DataFrame = null
     var i = 0
     while (i < iterations) {
@@ -1436,22 +1379,22 @@ object Algos {
         .select(col("id"), coalesce(col("x"), lit(0.0)).as("a"))
       // (r15: a lazy-aN half-iteration fusion was tried here and
       // REVERTED — jobs 71 → 118 with wall up: under the adaptive
-      // ckptHash the chained plan re-materializes each internal exchange
+      // AdaptiveHash layout the chained plan re-materializes each internal exchange
       // as its own AQE stage job and rebuilds the normalization
       // broadcasts per reference, costing more driver jobs than the
       // checkpoint it saved. Per-half-iteration materialization stands,
       // consistent with the r13 WaveBatch and r14 textrank findings.)
-      val aN = ckptHash(
+      val aN = materialize(
         araw.crossJoin(broadcast(araw.agg(sum(col("a")).as("s"))))
-          .select(col("id"), (col("a") / col("s")).as("a")), "id")
+          .select(col("id"), (col("a") / col("s")).as("a")), AdaptiveHash("id"))
       val hraw = v.join(
           e.join(aN.select(col("id").as("dst"), col("a")), Seq("dst"))
             .groupBy(col("src").as("id")).agg(sum(col("a")).as("x")),
           Seq("id"), "left")
         .select(col("id"), coalesce(col("x"), lit(0.0)).as("h"))
-      val hN = ckptHash(
+      val hN = materialize(
         hraw.crossJoin(broadcast(hraw.agg(sum(col("h")).as("s"))))
-          .select(col("id"), (col("h") / col("s")).as("h")), "id")
+          .select(col("id"), (col("h") / col("s")).as("h")), AdaptiveHash("id"))
       freeCkpt(h)
       if (a != null) freeCkpt(a)
       h = hN
@@ -1479,7 +1422,7 @@ object Algos {
   def temporalReach(edges: DataFrame, source: Long, rounds: Int): DataFrame = {
     val s = edges.sparkSession
     import s.implicits._
-    val e = ckptHash(edges.select("src", "dst", "t"), "src")
+    val e = materialize(edges.select("src", "dst", "t"), AdaptiveHash("src"))
     var a = Seq((source, 0L)).toDF("id", "arr").localCheckpoint()
     var i = 0
     while (i < rounds) {
@@ -1526,7 +1469,7 @@ object Algos {
                   maxHops: Int = 32): DataFrame = {
     val s = edges.sparkSession
     import s.implicits._
-    val e = ckptHash(Prep.makeSymmetric(edges.select("src", "dst")), "src")
+    val e = materialize(Prep.makeSymmetric(edges.select("src", "dst")), AdaptiveHash("src"))
     val src0 = sources.map(x => (x, x, 0L, 1L)).toDF("id", "tag", "level", "sigma")
       .localCheckpoint()
     // one checkpoint PER LEVEL (levels(h) holds exactly the level-h
@@ -1560,9 +1503,8 @@ object Algos {
         .transform(d0 => {
           val d = if (prev == null) d0
             else d0.join(prev.select("id", "tag"), Seq("id", "tag"), "left_anti")
-          val (ck, n) = org.apache.spark.sql.graft.CheckpointBridge
-            .localCheckpointStatsCountWhere(d.select(col("id"), col("tag"),
-              lit((h + 1).toLong).as("level"), col("sigma")), lit(true))
+          val (ck, Tally(n, _, _)) = materialize(d.select(col("id"), col("tag"),
+              lit((h + 1).toLong).as("level"), col("sigma")), Stats, lit(true))
           live = n > 0; ck
         })
       if (live) {
@@ -1697,8 +1639,8 @@ object Algos {
     * checkpoint-managed with declared hash(id) partitioning so the
     * per-round joins never reshuffle the label frame. */
   def lpa(symEdges: DataFrame, rounds: Int): DataFrame = {
-    val e = ckptHash(symEdges.select("src", "dst"), "src")
-    var l = ckptHash(verticesOf(e).select(col("id"), col("id").as("lbl")), "id")
+    val e = materialize(symEdges.select("src", "dst"), AdaptiveHash("src"))
+    var l = materialize(verticesOf(e).select(col("id"), col("id").as("lbl")), AdaptiveHash("id"))
     var r = 0
     while (r < rounds) {
       val counts = e.join(l.select(col("id").as("src"), col("lbl")), Seq("src"))
@@ -1709,10 +1651,10 @@ object Algos {
         .groupBy(col("id"))
         .agg(max(struct(col("c"), (-col("lbl")).as("neg"))).as("m"))
         .select(col("id"), (-col("m.neg")).as("nl"))
-      val next = ckptHash(
+      val next = materialize(
         l.join(pick, Seq("id"), "left")
           .select(col("id"), coalesce(col("nl"), col("lbl")).as("lbl")),
-        "id")
+        AdaptiveHash("id"))
       freeCkpt(l)
       l = next
       r += 1
@@ -1792,7 +1734,7 @@ object Algos {
   def katz(edges: DataFrame, rounds: Int, attenDiv: Long = 4096L,
            scale: Long = 1000000L,
            opts: PregelOptions = PregelOptions()): DataFrame = {
-    val e = ckptHash(edges.select("src", "dst"), "src")
+    val e = materialize(edges.select("src", "dst"), AdaptiveHash("src"))
     val v = verticesOf(e).persist(StorageLevel.MEMORY_AND_DISK)
     val init = v.withColumn("x", lit(scale))
     val res = Pregel.iterate(init, rounds, opts) { (verts, _) =>
@@ -1821,7 +1763,7 @@ object Algos {
     * vertex reaching AND reached by the core is in the core SCC by
     * definition, so the four classes partition the vertex set. */
   def bowtie(edges: DataFrame, opts: PregelOptions = PregelOptions()): DataFrame = {
-    val e = ckptHash(edges.select("src", "dst"), "src")
+    val e = materialize(edges.select("src", "dst"), AdaptiveHash("src"))
     val comp = scc(e, opts)
     val core = comp.groupBy(col("comp")).agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("comp")).limit(1).select(col("comp"))
@@ -1839,10 +1781,10 @@ object Algos {
     // partitioning — which is hash(dst) of the reversed frame, the WRONG
     // key — so every non-broadcast wave paid a full edge exchange
     // (round-10 verdict, minor finding). Re-materializing through
-    // ckptHash declares hash(new src): one extra checkpoint job buys
+    // AdaptiveHash declares hash(new src): one extra checkpoint job buys
     // exchange-free edge sides on all large-frontier waves.
-    val rev = ckptHash(
-      e.select(col("dst").as("src"), col("src").as("dst")), "src")
+    val rev = materialize(
+      e.select(col("dst").as("src"), col("src").as("dst")), AdaptiveHash("src"))
     val bwd = reachable(coreSet, rev, Int.MaxValue)
     val out = verticesOf(e)
       .join(coreSet.withColumnRenamed("id", "cid"), col("id") === col("cid"), "left")
@@ -1884,15 +1826,14 @@ object Algos {
       val outs = e.join(ins.select(col("id").as("src")), Seq("src"))
         .select(col("dst").as("id")).distinct()
       // the undecided-count rides the checkpoint job (fused accumulator)
-      val (next, stillUndecided) = org.apache.spark.sql.graft.CheckpointBridge
-        .localCheckpointStatsCountWhere(verts
+      val (next, Tally(stillUndecided, _, _)) = materialize(verts
           .join(ins.withColumn("is_in", lit(1)), Seq("id"), "left")
           .join(outs.withColumn("is_out", lit(1)), Seq("id"), "left")
           .select(col("id"),
             when(col("st") =!= 0, col("st"))
               .when(col("is_in") === 1, lit(1))
               .when(col("is_out") === 1, lit(2))
-              .otherwise(lit(0)).as("st")),
+              .otherwise(lit(0)).as("st")), Stats,
           col("st") === 0)
       undecided = stillUndecided
       if (step == 0) verts.unpersist() else freeCkpt(verts)
@@ -1917,11 +1858,10 @@ object Algos {
       val keep = e.groupBy(col("src")).agg(count(lit(1)).as("d"))
         .filter(col("d") >= k).select(col("src").as("id"))
       // edge-count rides the checkpoint job (fused accumulator)
-      val (next, nextCount) = org.apache.spark.sql.graft.CheckpointBridge
-        .localCheckpointStatsCountWhere(e
+      val (next, Tally(nextCount, _, _)) = materialize(e
           .join(keep.select(col("id").as("src")), Seq("src"), "left_semi")
           .join(keep.select(col("id").as("dst")), Seq("dst"), "left_semi")
-          .select("src", "dst"),
+          .select("src", "dst"), Stats,
           lit(true))
       changed = nextCount != edgeCount
       edgeCount = nextCount
@@ -2149,8 +2089,8 @@ object Algos {
     // (reproduced by IndependentOracleSpec's many-round tangle fixture).
     // Checkpointing truncates the plan per round — the repo's own
     // iterate-eagerly rule, applied to the outer loop too.
-    var remEdges = edges.select("src", "dst").transform(ckptStats)
-    var remVerts = verticesOf(remEdges).transform(ckptStats)
+    var remEdges = edges.select("src", "dst").transform(materialize(_, Stats))
+    var remVerts = verticesOf(remEdges).transform(materialize(_, Stats))
     var remaining = remVerts.count()
     // per-round assigned sets stay their OWN checkpoints and the result
     // is their lazy union (taggedBfs r10 discipline): the old
@@ -2169,7 +2109,7 @@ object Algos {
       // full length in plain-propagation supersteps). Same unique
       // fixpoint, same per-round shape as wcc's FastSV loop.
       var f = remVerts.select(col("id"), col("id").as("f_old"), col("id").as("lbl"))
-        .transform(ckptStats)
+        .transform(materialize(_, Stats))
       var changed = 1L
       var cstep = 0
       while (changed > 0 && cstep < opts.maxSupersteps) {
@@ -2178,12 +2118,11 @@ object Algos {
           .groupBy(col("dst").as("id")).agg(max(col("ls")).as("m1"))
         val gp = f.select(col("id").as("gid"), col("lbl").as("gf"))
         // changed-count fused into the checkpoint job (one barrier/round)
-        val (next, nChanged) = org.apache.spark.sql.graft.CheckpointBridge
-          .localCheckpointStatsCountWhere(f
+        val (next, Tally(nChanged, _, _)) = materialize(f
             .join(m1, Seq("id"), "left")
             .join(gp, col("lbl") === col("gid"), "left")
             .select(col("id"), col("lbl").as("f_old"),
-              greatest(col("lbl"), col("m1"), col("gf")).as("lbl")),
+              greatest(col("lbl"), col("m1"), col("gf")).as("lbl")), Stats,
             col("lbl") > col("f_old"))
         changed = nChanged
         freeCkpt(f) // every f (incl. the first) is this loop's checkpoint
@@ -2198,7 +2137,7 @@ object Algos {
       // vertex's color — the sweep reduces to monotone-set reachability
       // (delta-frontier, one small job per wave) + a color lookup,
       // instead of a full-vertex label-propagation Pregel loop.
-      // persist, NOT ckptHash (round-11 A/B): declaring hash(src) on
+      // persist, NOT AdaptiveHash (round-11 A/B): declaring hash(src) on
       // this transposed frame was tried and REVERTED — it adds an
       // unconditional exchange+materialization per outer round (+4 jobs,
       // +1.5 s at sf0.1) that only pays for itself when several sweep
@@ -2218,18 +2157,17 @@ object Algos {
       val assigned = reachable(roots, colored, opts.maxSupersteps)
         .join(colors, Seq("id"))
         .select(col("id"), col("color").as("comp"))
-        .transform(ckptStats)
+        .transform(materialize(_, Stats))
       colored.unpersist()
       assignedRounds :+= assigned
       // remainder-count fused into the remainder checkpoint job
-      val (newVerts, nRemaining) = org.apache.spark.sql.graft.CheckpointBridge
-        .localCheckpointStatsCountWhere(
-          remVerts.join(assigned.select("id"), Seq("id"), "left_anti"), lit(true))
+      val (newVerts, Tally(nRemaining, _, _)) = materialize(
+          remVerts.join(assigned.select("id"), Seq("id"), "left_anti"), Stats, lit(true))
       val newEdges = remEdges
         .join(newVerts.select(col("id").as("src")), Seq("src"), "left_semi")
         .join(newVerts.select(col("id").as("dst")), Seq("dst"), "left_semi")
         .select("src", "dst")
-        .transform(ckptStats)
+        .transform(materialize(_, Stats))
       remaining = nRemaining
       // new remainder frames are materialized — the superseded round's
       // remainder checkpoints are dead now; `assigned` stays live as
@@ -2331,10 +2269,9 @@ object Algos {
       // the peel size is RESULT data (not loop control — the round count
       // is fixed), so count the materialized blocks exactly rather than
       // ride an at-least-once accumulator that task retries can inflate
-      val peeled = org.apache.spark.sql.graft.CheckpointBridge
-        .localCheckpointStats(verts.join(deg, Seq("id"), "left")
+      val peeled = materialize(verts.join(deg, Seq("id"), "left")
           .filter(coalesce(col("d"), lit(0L)) <= 1)
-          .select(col("id")))
+          .select(col("id")), Stats)
       counts += ((r.toLong, peeled.count()))
       val pv = verts.join(peeled, Seq("id"), "left_anti").localCheckpoint()
       val pe = e.join(peeled.select(col("id").as("src")), Seq("src"), "left_anti")
@@ -2418,10 +2355,10 @@ object Algos {
     val ideg = e0.groupBy(col("dst")).agg(count(lit(1)).cast("double").as("idg"))
     // degree-annotated edge frames, built ONCE: the per-round joins then
     // touch only (edge ⋈ score) — same per-round shuffle budget as hits
-    val eo = ckptHash(e0.join(odeg, Seq("src")), "src")
-    val ei = ckptHash(e0.join(ideg, Seq("dst")), "dst")
-    val v = ckptHash(verticesOf(e0), "id")
-    var h = ckptHash(v.select(col("id"), lit(1.0).as("h")), "id")
+    val eo = materialize(e0.join(odeg, Seq("src")), AdaptiveHash("src"))
+    val ei = materialize(e0.join(ideg, Seq("dst")), AdaptiveHash("dst"))
+    val v = materialize(verticesOf(e0), AdaptiveHash("id"))
+    var h = materialize(v.select(col("id"), lit(1.0).as("h")), AdaptiveHash("id"))
     var a: DataFrame = null
     var i = 0
     while (i < iterations) {
@@ -2432,17 +2369,17 @@ object Algos {
         .select(col("id"), coalesce(col("x"), lit(0.0)).as("a"))
       // (r15: lazy-aN fusion tried and REVERTED here too — jobs 97 → 126;
       // see [[hits]] for the mechanism)
-      val aN = ckptHash(
+      val aN = materialize(
         araw.crossJoin(broadcast(araw.agg(sum(col("a")).as("s"))))
-          .select(col("id"), (col("a") / col("s")).as("a")), "id")
+          .select(col("id"), (col("a") / col("s")).as("a")), AdaptiveHash("id"))
       val hraw = v.join(
           ei.join(aN.select(col("id").as("dst"), col("a")), Seq("dst"))
             .groupBy(col("src").as("id")).agg(sum(col("a") / col("idg")).as("x")),
           Seq("id"), "left")
         .select(col("id"), coalesce(col("x"), lit(0.0)).as("h"))
-      val hN = ckptHash(
+      val hN = materialize(
         hraw.crossJoin(broadcast(hraw.agg(sum(col("h")).as("s"))))
-          .select(col("id"), (col("h") / col("s")).as("h")), "id")
+          .select(col("id"), (col("h") / col("s")).as("h")), AdaptiveHash("id"))
       freeCkpt(h)
       if (a != null) freeCkpt(a)
       h = hN

@@ -2,6 +2,8 @@ package graft.graph
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CheckpointBridge
+import org.apache.spark.sql.graft.CheckpointBridge.{AdaptiveHash, Hash}
 import org.apache.spark.storage.StorageLevel
 
 /** Options for the BSP superstep loop.
@@ -113,10 +115,8 @@ object Pregel {
     // layout is materialized once and DECLARED, so the id=src join and
     // the vprog join are exchange-free on these sides — the one-shuffle-
     // per-superstep (combined messages only) contract, enforced by the
-    // CoverageSpec plan assertion.
-    val numParts = spark.sessionState.conf.numShufflePartitions
-    val e = org.apache.spark.sql.graft.CheckpointBridge
-      .localCheckpointHash(edges.toDF(), "src", numParts)
+    // CheckpointBridgeSpec plan assertion.
+    val e = CheckpointBridge.materialize(edges.toDF(), AdaptiveHash("src"))
 
     val resumed = resumePoint(spark, opts)
     var verts = resumed.map(_._2).getOrElse(vertices).persist(opts.storageLevel)
@@ -133,7 +133,7 @@ object Pregel {
       // times) and analysis alone OOMs (SURVEY §7.4 risk #1). The
       // active-count rides the materialization job (fused accumulator):
       // one driver barrier per superstep, not two.
-      val (newVerts, nActive) = materializeCount(vprog(verts, msgs), step, opts, numParts)
+      val (newVerts, nActive) = materialize(vprog(verts, msgs), step, opts, Some(col("active")))
       active = nActive
       writeAggregates(newVerts, step, opts)
       opts.onSuperstep(newVerts, step)
@@ -141,11 +141,11 @@ object Pregel {
       // its plan leaves could kill caller-owned checkpoints); later frames
       // are this loop's own materialize() products
       if (fromCaller) { verts.unpersist(); fromCaller = false }
-      else org.apache.spark.sql.graft.CheckpointBridge.free(verts)
+      else CheckpointBridge.free(verts)
       verts = newVerts
       step += 1
     }
-    org.apache.spark.sql.graft.CheckpointBridge.free(e)
+    CheckpointBridge.free(e)
     verts
   }
 
@@ -188,7 +188,6 @@ object Pregel {
       step: (DataFrame, Int) => DataFrame,
       master: (DataFrame, Int) => Boolean = (_, _) => true): DataFrame = {
     val resumed = resumePoint(vertices.sparkSession, opts)
-    val numParts = vertices.sparkSession.sessionState.conf.numShufflePartitions
     var verts = resumed.map(_._2).getOrElse(vertices).persist(opts.storageLevel)
     var fromCaller = true
     verts.count()
@@ -198,11 +197,11 @@ object Pregel {
       opts.onBeforeSuperstep(verts, i)
       // materialize is eager (both checkpoint flavors) — it already ran
       // the superstep's job, so no extra action is needed here
-      val next = materialize(step(verts, i), i, opts, numParts)
+      val (next, _) = materialize(step(verts, i), i, opts, None)
       writeAggregates(next, i, opts)
       opts.onSuperstep(next, i)
       if (fromCaller) { verts.unpersist(); fromCaller = false }
-      else org.apache.spark.sql.graft.CheckpointBridge.free(verts)
+      else CheckpointBridge.free(verts)
       verts = next
       go = master(verts, i)
       i += 1
@@ -234,36 +233,30 @@ object Pregel {
       }
     }
 
-  /** Eagerly materialize one superstep's frame with truncated lineage:
-    * on the configured cadence with a checkpoint dir set, a *restartable*
-    * parquet snapshot (`<dir>/step_<N>`) read straight back (the write is
-    * the materializing action; the read-back plan is a bare scan — both
-    * reliable and resumable, unlike `RDD.checkpoint` files which die with
-    * the SparkContext); a declared-hash(id) localCheckpoint otherwise
-    * (plain localCheckpoint loses partitioning under AQE — see run()). */
-  /** Checkpoint without a fused count — for loops whose frames carry no
-    * `active` column (fixed-iteration mode terminates by master check). */
+  /** Eagerly materialize one superstep's frame with truncated lineage,
+    * counting the rows where `active` is true when given (0 otherwise).
+    * On the configured cadence with a checkpoint dir set, a
+    * *restartable* parquet snapshot (`<dir>/step_<N>`) is read straight
+    * back (the write is the materializing action; the read-back plan is a
+    * bare scan — both reliable and resumable, unlike `RDD.checkpoint`
+    * files which die with the SparkContext), and the count is a second
+    * job over it. Otherwise a declared-hash(id) checkpoint: AQE-off with
+    * the count fused into its one job when counting, adaptive for the
+    * fixed-iteration loops, whose frames carry no `active` column. */
   private def materialize(df: DataFrame, step: Int, opts: PregelOptions,
-                          numParts: Int): DataFrame =
-    opts.checkpointDir match {
-      case Some(dir) if (step + 1) % opts.checkpointEvery == 0 =>
-        val path = s"$dir/step_$step"
-        df.write.mode("overwrite").parquet(path)
-        df.sparkSession.read.parquet(path)
-      case _ => org.apache.spark.sql.graft.CheckpointBridge
-        .localCheckpointHash(df, "id", numParts)
-    }
-
-  private def materializeCount(df: DataFrame, step: Int, opts: PregelOptions,
-                               numParts: Int): (DataFrame, Long) =
+                          active: Option[Column]): (DataFrame, Long) =
     opts.checkpointDir match {
       case Some(dir) if (step + 1) % opts.checkpointEvery == 0 =>
         val path = s"$dir/step_$step"
         df.write.mode("overwrite").parquet(path)
         val back = df.sparkSession.read.parquet(path)
-        (back, back.filter(col("active")).count())
-      case _ => org.apache.spark.sql.graft.CheckpointBridge
-        .localCheckpointHashCount(df, "id", numParts, "active")
+        (back, active.fold(0L)(back.filter(_).count()))
+      case _ => active match {
+        case Some(a) =>
+          val (ck, t) = CheckpointBridge.materialize(df, Hash("id"), a)
+          (ck, t.count)
+        case None => (CheckpointBridge.materialize(df, AdaptiveHash("id")), 0L)
+      }
     }
 
   /** The latest completed snapshot under `dir`: (superstep, frame).

@@ -3,6 +3,7 @@ package graft.sim
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CheckpointBridge.{Stats, materialize}
 
 /** Similarity search over embedding columns (Array[Float]).
   *
@@ -402,9 +403,9 @@ object Similarity {
   def semanticDupPairs(corpus: DataFrame, k: Int, iters: Int,
                        thresholdE4: Long): DataFrame = {
     val assigned = kmeansAssign(corpus, k, iters)
-    val withC = org.apache.spark.sql.graft.CheckpointBridge.localCheckpointStats(
+    val withC = materialize(
       corpus.select(col("vec_id"), col("embedding"))
-        .join(assigned, Seq("vec_id")))
+        .join(assigned, Seq("vec_id")), Stats)
     withC.select(col("cluster"), col("vec_id").as("a"), col("embedding").as("va"))
       .join(withC.select(col("cluster"), col("vec_id").as("b"),
         col("embedding").as("vb")), Seq("cluster"))

@@ -69,7 +69,8 @@ object JaccardProbe {
       println("==== scored plan (the query path's single-eval verify) ====")
       println(scored.queryExecution.executedPlan.toString.take(8000))
     }
-    sorted.unpersist()
+    org.apache.spark.sql.graft.CheckpointBridge.free(sorted)
+    org.apache.spark.sql.graft.CheckpointBridge.free(cand)
     spark.stop()
   }
 }

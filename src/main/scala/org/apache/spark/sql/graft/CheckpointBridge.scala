@@ -1,61 +1,66 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning,
+  PartitioningCollection, UnknownPartitioning}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{BooleanType, DoubleType, NumericType}
 
-/** Release the storage behind a superseded frame, whichever way it was
-  * materialized. `Dataset.unpersist` only clears CacheManager entries
-  * (`.persist`/`.cache`); a `localCheckpoint()`-ed frame is backed by a
-  * raw persistent RDD inside a [[LogicalRDD]] leaf that the CacheManager
-  * never sees — verified empirically: after `df.localCheckpoint();
-  * df.unpersist(true)`, `sc.getPersistentRDDs` still holds the blocks.
-  * Iterative loops that keep only the latest checkpoint must free the
-  * superseded one at the RDD level or blocks pile up until the
-  * ContextCleaner happens to collect them.
-  *
-  * MUST only be called on frames that are never read again, and only on
-  * frames that are DIRECT `localCheckpoint()` products (their single
-  * plan leaf is their own RDD): a localCheckpoint has truncated lineage,
-  * so freed blocks are unrecoverable — and calling this on a frame whose
-  * plan merely *contains* someone else's checkpoint leaf would free that
-  * caller-owned data too.
+/** The one materialization barrier of graft's iterative and staged
+  * plans: [[materialize]] eagerly checkpoints a frame, declares its
+  * layout and measured size, and can fuse a metric into the same job.
+  * [[free]] releases such a frame, [[sizeOf]] reads its size, and
+  * [[drainListeners]] flushes the listener bus.
   */
 object CheckpointBridge {
 
-  /** Rebind `df` onto a session that plans with AQE OFF. The fused-count
-    * checkpoints exist to make each fixpoint
-    * round cost ONE driver job; under AQE the same round pays one job
-    * per query-stage materialization (measured 7 jobs/round on the
-    * pagerankConverged body: sums shuffle, two join stages, the
-    * repartition, the dangling broadcast, then the count — round-8
-    * verdict). AQE buys nothing inside these round bodies — every join
-    * input is a declared-partitioning LogicalRDD with measured stats,
-    * so there are no runtime re-plan decisions left to make, while each
-    * extra stage job is a driver scheduling round-trip that a
+  /** How [[materialize]] lays out and plans a frame (contract table on
+    * [[materialize]]). */
+  sealed trait Layout
+  /** Keep the layout the plan already produces; planned AQE-off. */
+  case object Stats extends Layout
+  /** hash(key) over `spark.sql.shuffle.partitions`, planned AQE-off:
+    * per-round state of a fixpoint loop. */
+  final case class Hash(key: String) extends Layout
+  /** hash(key) over `spark.sql.shuffle.partitions`, planned adaptively:
+    * one-shot prep of big frames (edge lists, token frames). */
+  final case class AdaptiveHash(key: String) extends Layout
+
+  /** What a fused metric measured during the materializing job. For a
+    * BOOLEAN metric, `count` is the number of rows where it is true
+    * (`sum` equals it, `max` is 1.0). For a numeric metric, `count` is
+    * the number of non-null values and `sum`/`max` are over them. `max`
+    * is -Infinity when nothing was counted. */
+  final case class Tally(count: Long, sum: Double, max: Double)
+
+  /** Rebind `df` onto a session that plans with AQE OFF. Under AQE a
+    * round body pays one driver job per query-stage materialization
+    * (measured 7 jobs/round on the pagerankConverged body: sums
+    * shuffle, two join stages, the repartition, the dangling broadcast,
+    * then the count). AQE buys nothing inside these round bodies: every
+    * join input is a declared-partitioning LogicalRDD with measured
+    * stats, so there are no runtime re-plan decisions left to make,
+    * while each extra stage job is a driver scheduling round-trip that a
     * 1000-executor cluster pays in O(100 ms) units per round.
     *
-    * SESSION-SCOPED (round-10, was a session-global conf flip): the
-    * input frame's logical plan is rebound onto a fresh CLONED session
-    * whose conf (cloned too) has AQE off — physical planning reads the
-    * BOUND session's conf, so only the helper's own planning+execution
-    * is non-adaptive. (A thread-local `SQLConf.withExistingConf` clone
-    * does NOT work: measured on 4.1.2, executedPlan stays
-    * AdaptiveSparkPlanExec even though SQLConf.get reads false inside
-    * the scope — planning resolves the session conf, not the
-    * thread-local.) A concurrent query on the caller's session plans
-    * adaptively as configured, the caller's conf is never touched, and
-    * overlapping fixpoints each get their own clone — nothing to
-    * restore, nothing to race. cloneSession() copies SessionState
-    * (conf, catalog incl. temp views, registry) and shares the
-    * SparkContext, so accumulators, cached blocks, and the returned
-    * declared-LogicalRDD frames (always built against the CALLER's
-    * session) behave exactly as before. Per-round clone cost is driver
-    * metadata only — measured: 50 clones add ONE listener to the shared
-    * LiveListenerBus total (the execution-listener bus is shared, not
-    * per-session), so a 1000-round fixpoint leaks nothing. Pinned by
-    * the two-thread test in CheckpointBridgeSpec. */
+    * SESSION-SCOPED: the input frame's logical plan is rebound onto a
+    * fresh CLONED session whose conf (cloned too) has AQE off. Physical
+    * planning reads the BOUND session's conf, so only this planning and
+    * execution is non-adaptive. (A thread-local `SQLConf.withExistingConf`
+    * clone does NOT work: measured on 4.1.2, executedPlan stays
+    * AdaptiveSparkPlanExec even though SQLConf.get reads false inside the
+    * scope.) A concurrent query on the caller's session plans adaptively
+    * as configured, the caller's conf is never touched, and overlapping
+    * fixpoints each get their own clone: nothing to restore, nothing to
+    * race. cloneSession() copies SessionState (conf, catalog incl. temp
+    * views, registry) and shares the SparkContext, so accumulators and
+    * cached blocks behave as on the caller's session, and the returned
+    * frame is always built against the CALLER's session. Per-round clone
+    * cost is driver metadata only: 50 clones add ONE listener to the
+    * shared LiveListenerBus total, so a 1000-round fixpoint leaks
+    * nothing. Pinned by the two-thread test in CheckpointBridgeSpec. */
   private def aqeOffTwin(df: DataFrame): DataFrame = {
     val parent = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val clone = parent.cloneSession()
@@ -63,6 +68,23 @@ object CheckpointBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(clone, df.queryExecution.logical)
   }
 
+  /** Release the storage behind a superseded frame, whichever way it was
+    * materialized. `Dataset.unpersist` only clears CacheManager entries
+    * (`.persist`/`.cache`); a `localCheckpoint()`-ed frame is backed by a
+    * raw persistent RDD inside a [[LogicalRDD]] leaf that the CacheManager
+    * never sees — verified empirically: after `df.localCheckpoint();
+    * df.unpersist(true)`, `sc.getPersistentRDDs` still holds the blocks.
+    * Iterative loops that keep only the latest checkpoint must free the
+    * superseded one at the RDD level or blocks pile up until the
+    * ContextCleaner happens to collect them.
+    *
+    * MUST only be called on frames that are never read again, and only on
+    * frames that are DIRECT `localCheckpoint()` products (their single
+    * plan leaf is their own RDD): a localCheckpoint has truncated lineage,
+    * so freed blocks are unrecoverable — and calling this on a frame whose
+    * plan merely *contains* someone else's checkpoint leaf would free that
+    * caller-owned data too.
+    */
   def free(df: Dataset[_]): Unit = {
     df.unpersist(false)
     df.queryExecution.analyzed.collectLeaves().foreach {
@@ -71,275 +93,172 @@ object CheckpointBridge {
     }
   }
 
-  /** localCheckpoint that KEEPS its hash partitioning visible to the
-    * optimizer. Under AQE, `Dataset.localCheckpoint` captures the
-    * adaptive plan's pre-execution `outputPartitioning` — which is
-    * Unknown — so every downstream keyed join/aggregation reshuffles the
-    * checkpointed frame even though its rows are already correctly
-    * hash-placed. For an iterative engine that is one extra vertex-frame
-    * shuffle per superstep, per algorithm.
+  private val MetricCol = "__graft_metric"
+
+  /** Eagerly materialize `df` in ONE job, truncate its lineage and return
+    * it as a declared [[LogicalRDD]] leaf on the caller's session.
     *
-    * This forces the exact layout first (`repartition(n, key)` — the
-    * explicit-count form, which AQE never coalesces, so the materialized
-    * RDD is bit-exactly pmod(murmur3(key), n) placed), checkpoints, then
-    * rebuilds the LogicalRDD leaf declaring that HashPartitioning. The
-    * declaration is sound because the RDD partitions ARE the shuffle
-    * output partitions of that exact partitioning — nothing is assumed.
+    * | layout              | planned  | declared partitioning | stats    | metric (at-least-once) |
+    * |---------------------|----------|-----------------------|----------|------------------------|
+    * | `Stats`             | AQE-off  | the physical plan's, with its ordering; Unknown when a metric is fused | measured | boolean: true rows; numeric: sum, max |
+    * | `Hash(key)`         | AQE-off  | hash(key) over n      | measured | boolean: true rows; numeric: sum, max |
+    * | `AdaptiveHash(key)` | adaptive | hash(key) over n      | measured | boolean: true rows; numeric: sum, max |
     *
-    * Deliberately planned ADAPTIVELY (not wrapped in withAqeOff, unlike
-    * the fused helpers and localCheckpointStats): this checkpoint's
-    * callers feed it BIG frames — one-shot edge prep (symmetrize/dedup
-    * pipelines whose shuffles genuinely benefit from AQE coalescing and
-    * skew splits at TB scale) and big-frame round bodies. Loops that
-    * want the one-job-per-round driver bill use the fused
-    * localCheckpointHashCount/DeltaWhere variants, which are AQE-off. */
-  def localCheckpointHash(df: DataFrame, key: String, n: Int): DataFrame = {
-    val ck = df.repartition(n, col(key)).localCheckpoint()
-    ck.queryExecution.analyzed match {
-      case l: LogicalRDD =>
-        val attr = l.output.find(_.name == key).getOrElse(
-          throw new IllegalArgumentException(s"no column $key in ${l.output}"))
-        // Declare the frame's MEASURED size too (the blocks are already
-        // materialized — this is metadata, not a job). A bare LogicalRDD
-        // reports defaultSizeInBytes (= "huge"), which forbids broadcast
-        // planning forever; and because the declared partitioning removes
-        // every exchange, AQE never gets a shuffle stage to re-measure, so
-        // without this a small iterated frame is stuck in sort-merge
-        // joins — measured 1.4–3.2× on sf0.1 WCC vs the round-3 plans
-        // where AQE runtime-broadcast the vertex frame. With real stats
-        // the planner broadcasts small frames statically and keeps the
-        // exchange-free co-partitioned join for frames that are genuinely
-        // big — the right plan at both ends of the scale.
-        val info = ck.sparkSession.sparkContext.getRDDStorageInfo
-          .find(_.id == l.rdd.id)
-        val stats = info.map(i =>
-          org.apache.spark.sql.catalyst.plans.logical.Statistics(
-            sizeInBytes = BigInt(i.memSize + i.diskSize).max(1)))
-        val declared = new LogicalRDD(
-          l.output, l.rdd, HashPartitioning(Seq(attr), n),
-          l.outputOrdering, l.isStreaming, l.getStream)(
-          ck.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
-          stats, None)
-        org.apache.spark.sql.classic.Dataset.ofRows(
-          ck.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
-          declared)
-      case _ => ck // unexpected plan shape: fall back to the plain checkpoint
+    * `n` is `spark.sql.shuffle.partitions`; measured stats are the
+    * frame's mem + disk block bytes.
+    *
+    * Partitioning: under AQE a plain `localCheckpoint` captures the
+    * adaptive plan's pre-execution `outputPartitioning`, which is
+    * Unknown, so every downstream keyed join or aggregation reshuffles
+    * the frame although its rows are already hash-placed: one extra
+    * vertex-frame shuffle per superstep. The hash layouts force the exact
+    * layout first (`repartition(n, key)`, the explicit-count form AQE
+    * never coalesces, so rows are bit-exactly pmod(murmur3(key), n)
+    * placed) and declare it; the declaration is sound because the RDD
+    * partitions ARE that exchange's output partitions. `Stats` skips the
+    * repartition pass, saving one exchange of the frame per round, and
+    * is the better choice for frames small enough that their joins
+    * broadcast. `Stats` with a metric declares no partitioning: its
+    * call sites' downstream plans (and job counts) were tuned against an
+    * Unknown layout, and declaring one would change them.
+    *
+    * Adaptivity: `Stats` and `Hash` plan AQE-off (see [[aqeOffTwin]]),
+    * so a fixpoint round costs one driver job. `AdaptiveHash` stays
+    * adaptive because its callers feed it BIG one-shot frames whose
+    * shuffles benefit from AQE coalescing and skew splits. Known trade,
+    * accepted deliberately: a few ONE-SHOT `Stats` call sites feed it
+    * data-sized frames (scc's round-0 remainder, kTruss's pair frame, the
+    * matchings' window+self-join over the live edge set) and forgo AQE's
+    * post-shuffle coalescing; their shuffles hash on high-cardinality
+    * keys with no skew-join site AQE could split. A big frame that does
+    * contain a skewable join belongs on `AdaptiveHash`.
+    *
+    * Measured stats: a bare LogicalRDD reports defaultSizeInBytes
+    * ("huge"), which forbids broadcast planning forever, and because the
+    * declared partitioning removes every exchange, AQE never gets a
+    * shuffle stage to re-measure: a small iterated frame is stuck in
+    * sort-merge joins (measured 1.4–3.2× on sf0.1 WCC). Plain
+    * `localCheckpoint` is worse still: it PROPAGATES the pre-checkpoint
+    * plan's estimated Statistics, so a fixpoint whose iterate references
+    * itself k≥2 times per round compounds sizeInBytes as k^round, and by
+    * ~15 supersteps of a 3-self-reference loop the driver burns minutes
+    * in BigInteger.multiply inside SizeInBytesOnlyStatsPlanVisitor and
+    * dies with "BigInteger would overflow supported range" (reproduced by
+    * IndependentOracleSpec's many-round SCC tangle). Measured stats reset
+    * the estimate to the frame's real byte size every round: correct,
+    * and broadcast-friendly.
+    *
+    * Metric (the overload below): a BOOLEAN metric counts its true rows,
+    * a numeric one sums and maxes its values ([[Tally]]), during the
+    * materializing job itself, so a loop's convergence check costs no
+    * second job. A metric that names a boolean or double input column is
+    * read in place; any other expression rides as a synthetic
+    * `__graft_metric` column that is dropped from the returned frame, so
+    * the input must not have one. Retry contract: the accumulators are
+    * at-least-once. A task retry can only re-add rows that exist, so
+    * counts and sums of non-negative values can only be over-reported: a
+    * loop may run one redundant round but never stops early, and a true
+    * zero is reported as zero. max is idempotent. The metric is LOOP CONTROL only and must
+    * never become query result data. */
+  def materialize(df: DataFrame, layout: Layout): DataFrame =
+    run(df, layout, None)._1
+
+  /** [[materialize]] with a metric fused into the materializing job. */
+  def materialize(df: DataFrame, layout: Layout, metric: Column): (DataFrame, Tally) =
+    run(df, layout, Some(metric))
+
+  private def run(df: DataFrame, layout: Layout,
+                  metric: Option[Column]): (DataFrame, Tally) = {
+    val spark = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val n = spark.sessionState.conf.numShufflePartitions
+    val (key, planned) = layout match {
+      case Hash(k) => (Some(k), aqeOffTwin(df))
+      case AdaptiveHash(k) => (Some(k), df)
+      case Stats => (None, aqeOffTwin(df))
     }
-  }
-
-  /** [[localCheckpointHash]] that ALSO counts the rows whose `boolCol`
-    * is true DURING the materialization job — fusing the Pregel loop's
-    * per-superstep (checkpoint, active-count) job pair into one job, i.e.
-    * one driver barrier per superstep instead of two. The accumulator
-    * fires inside the single materializing action; a task retry can only
-    * ever over-count rows that exist, so a true zero (termination) can
-    * never be reported as non-zero spuriously in the other direction —
-    * the loop may at worst run one redundant round, never stop early.
-    *
-    * Row copies mirror `Dataset.checkpoint`'s own implementation: the
-    * physical rows are reused UnsafeRows and MUST be copied before
-    * caching. */
-  def localCheckpointHashCount(df: DataFrame, key: String, n: Int,
-                               boolCol: String): (DataFrame, Long) = {
-    val spark = df.sparkSession
-    val base = aqeOffTwin(df).repartition(n, col(key))
-    val output = base.queryExecution.analyzed.output
-    val ord = output.indexWhere(_.name == boolCol)
-    require(ord >= 0, s"no column $boolCol in $output")
-    val keyAttr = output.find(_.name == key).getOrElse(
-      throw new IllegalArgumentException(s"no column $key in $output"))
-    val acc = spark.sparkContext.longAccumulator("graft.activeCount")
-    val rdd = base.queryExecution.toRdd.mapPartitions({ it =>
-      it.map { row =>
-        if (!row.isNullAt(ord) && row.getBoolean(ord)) acc.add(1L)
-        row.copy()
-      }
-    }, preservesPartitioning = true)
-    rdd.localCheckpoint()
-    rdd.count() // the ONE materializing job; acc is complete after it
-    val stats = spark.sparkContext.getRDDStorageInfo.find(_.id == rdd.id)
-      .map(i => org.apache.spark.sql.catalyst.plans.logical.Statistics(
-        sizeInBytes = BigInt(i.memSize + i.diskSize).max(1)))
-    val declared = new LogicalRDD(
-      output, rdd, HashPartitioning(Seq(keyAttr), n),
-      Nil, false, None)(
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
-      stats, None)
-    (org.apache.spark.sql.classic.Dataset.ofRows(
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
-      declared), acc.value)
-  }
-
-  /** [[localCheckpointHashCount]] for an arbitrary predicate: the
-    * predicate is appended as a synthetic boolean column for the fused
-    * count and dropped again on the way out (the Project on top of the
-    * declared LogicalRDD preserves its partitioning). */
-  def localCheckpointHashCountWhere(df: DataFrame, key: String, n: Int,
-                                    pred: org.apache.spark.sql.Column): (DataFrame, Long) = {
-    require(!df.columns.contains("__graft_cnt"),
-      "input already has a __graft_cnt column: withColumn would replace it " +
-        "and the fused count would read caller data")
-    val (ck, cnt) = localCheckpointHashCount(
-      df.withColumn("__graft_cnt", pred), key, n, "__graft_cnt")
-    (ck.drop("__graft_cnt"), cnt)
-  }
-
-  /** Max-of-doubles accumulator (Spark ships sum-only DoubleAccumulator).
-    * max is IDEMPOTENT, so task retries cannot perturb it at all. */
-  private final class MaxDoubleAccumulator
-      extends org.apache.spark.util.AccumulatorV2[java.lang.Double, java.lang.Double] {
-    private var _v = Double.NegativeInfinity
-    override def isZero: Boolean = _v == Double.NegativeInfinity
-    override def copy(): MaxDoubleAccumulator = {
-      val c = new MaxDoubleAccumulator; c._v = _v; c
-    }
-    override def reset(): Unit = _v = Double.NegativeInfinity
-    override def add(v: java.lang.Double): Unit = if (v > _v) _v = v
-    override def merge(
-        o: org.apache.spark.util.AccumulatorV2[java.lang.Double, java.lang.Double]): Unit =
-      o match { case m: MaxDoubleAccumulator => if (m._v > _v) _v = m._v; case _ => () }
-    override def value: java.lang.Double = _v
-  }
-
-  /** [[localCheckpointHashCount]] for a DOUBLE convergence metric: the
-    * SUM and MAX of `metric` over all rows accumulate during the one
-    * materializing job, so a delta-halted loop (pagerankConverged) pays
-    * ONE materializing action per round instead of checkpoint +
-    * delta-agg. Measured round bill (AlgosSpec job trace): exactly one
-    * action job; any broadcast-exchange builds inside the round's plan
-    * (the dangling-mass scalar always; other join builds only when the
-    * frames are small enough that stats elect broadcast) run as
-    * additional async future jobs, whose count is scale-dependent by
-    * design. Returns (frame without the metric column, sum, max); max
-    * is Double.NegativeInfinity on an empty frame.
-    *
-    * Same one-sided-error contract as the fused counts: a task retry can
-    * only re-ADD non-negative metric values (callers pass |Δ|-shaped
-    * metrics), so the reported delta is ≥ the true delta — the loop can
-    * at worst run extra rounds, never halt early on a wrong small delta.
-    * The delta is LOOP CONTROL only; it must never become query result
-    * data (ADVICE r7). */
-  def localCheckpointHashDeltaWhere(df: DataFrame, key: String, n: Int,
-                                    metric: org.apache.spark.sql.Column)
-      : (DataFrame, Double, Double) = {
-    require(!df.columns.contains("__graft_delta"),
-      "input already has a __graft_delta column")
-    val spark = df.sparkSession
-    val base = aqeOffTwin(df).withColumn("__graft_delta", metric.cast("double"))
-      .repartition(n, col(key))
-    val output = base.queryExecution.analyzed.output
-    val ord = output.indexWhere(_.name == "__graft_delta")
-    val keyAttr = output.find(_.name == key).getOrElse(
-      throw new IllegalArgumentException(s"no column $key in $output"))
-    val sumAcc = spark.sparkContext.doubleAccumulator("graft.deltaSum")
-    val maxAcc = new MaxDoubleAccumulator
-    spark.sparkContext.register(maxAcc, "graft.deltaMax")
-    val rdd = base.queryExecution.toRdd.mapPartitions({ it =>
-      it.map { row =>
-        if (!row.isNullAt(ord)) {
-          val d = row.getDouble(ord); sumAcc.add(d); maxAcc.add(d)
+    // (frame carrying the metric, metric ordinal, boolean count?, synthetic?)
+    val (flagged, metricOrd, isCount, synthetic) = metric match {
+      case None => (planned, None, false, false)
+      case Some(m) =>
+        require(!df.columns.contains(MetricCol),
+          s"input already has a $MetricCol column: the metric would replace it " +
+            "and the returned frame would lose caller data")
+        val a = planned.select(m).queryExecution.analyzed.output.head
+        val isCount = a.dataType match {
+          case BooleanType => true
+          case _: NumericType => false
+          case t => throw new IllegalArgumentException(
+            s"metric must be boolean or numeric, got $t")
         }
-        row.copy()
-      }
-    }, preservesPartitioning = true)
-    rdd.localCheckpoint()
-    rdd.count() // the ONE materializing job; both accumulators complete
-    val stats = spark.sparkContext.getRDDStorageInfo.find(_.id == rdd.id)
-      .map(i => org.apache.spark.sql.catalyst.plans.logical.Statistics(
-        sizeInBytes = BigInt(i.memSize + i.diskSize).max(1)))
-    val declared = new LogicalRDD(
-      output, rdd, HashPartitioning(Seq(keyAttr), n),
-      Nil, false, None)(
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
-      stats, None)
-    (org.apache.spark.sql.classic.Dataset.ofRows(
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
-      declared).drop("__graft_delta"), sumAcc.value, maxAcc.value)
-  }
-
-  /** [[localCheckpointStats]] with a fused predicate count (same
-    * accumulator-on-the-materializing-action contract as
-    * [[localCheckpointHashCount]], no partitioning claim and no
-    * repartition pass). */
-  def localCheckpointStatsCountWhere(df: DataFrame,
-                                     pred: org.apache.spark.sql.Column): (DataFrame, Long) = {
-    require(!df.columns.contains("__graft_cnt"),
-      "input already has a __graft_cnt column: withColumn would replace it " +
-        "in place, so ord would read the wrong column and drop() would " +
-        "remove caller data")
-    val spark = df.sparkSession
-    val flagged = aqeOffTwin(df).withColumn("__graft_cnt", pred)
-    val output = flagged.queryExecution.analyzed.output
-    val ord = output.size - 1
-    val acc = spark.sparkContext.longAccumulator("graft.statsCount")
-    val rdd = flagged.queryExecution.toRdd.mapPartitions({ it =>
-      it.map { row =>
-        if (!row.isNullAt(ord) && row.getBoolean(ord)) acc.add(1L)
-        row.copy()
-      }
-    }, preservesPartitioning = true)
-    rdd.localCheckpoint()
-    rdd.count()
-    val stats = spark.sparkContext.getRDDStorageInfo.find(_.id == rdd.id)
-      .map(i => org.apache.spark.sql.catalyst.plans.logical.Statistics(
-        sizeInBytes = BigInt(i.memSize + i.diskSize).max(1)))
-    val declared = new LogicalRDD(
-      output, rdd,
-      org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning(rdd.getNumPartitions),
-      Nil, false, None)(
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
-      stats, None)
-    (org.apache.spark.sql.classic.Dataset.ofRows(
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
-      declared).drop("__graft_cnt"), acc.value)
-  }
-
-  /** Plain localCheckpoint that declares the frame's MEASURED size (no
-    * partitioning claim — the input is checkpointed as-laid-out, no
-    * repartition pass). For iterated frames SMALL enough that their
-    * joins should broadcast, this is the better checkpoint: the declared
-    * stats let the planner pick broadcast statically (a bare checkpoint
-    * reports "huge" and blocks it), and skipping the forced repartition
-    * saves one full exchange of the frame per round.
-    *
-    * Planned AQE-OFF like the fused helpers (ADVICE r9): the loops that
-    * call this per round (WCC's vertex frame, tagged-BFS frontiers,
-    * leaf-peel) otherwise pay one driver job per AQE query-stage
-    * materialization — the exact bill the fused helpers eliminated. For
-    * those round bodies the toggle is free: the frames are
-    * broadcast-small, and the measured stats make the static planner
-    * pick that broadcast — AQE's runtime conversions and skew splits
-    * have nothing left to add. Known trade, accepted deliberately: a
-    * few ONE-SHOT call sites feed this data-sized frames (scc's round-0
-    * remainder, kTruss's pair frame, the matchings' window+self-join
-    * over the live edge set) and forgo AQE's post-shuffle coalescing
-    * there — their internal shuffles hash on high-cardinality keys
-    * (vertex/edge ids) with no skew-join site AQE could split, and the
-    * per-round job-bill win across the loop family dominates a one-time
-    * partition-count nicety. A checkpoint of a big frame that DOES
-    * contain a skewable join belongs on [[localCheckpointHash]] (stays
-    * adaptive) instead. */
-  def localCheckpointStats(df: DataFrame): DataFrame = {
-    // checkpoint via the AQE-off twin; the returned frame is rebound to
-    // the CALLER's session (a clone-bound result would silently plan
-    // every downstream consumer non-adaptively too)
-    val parent = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val ck = aqeOffTwin(df).localCheckpoint()
-    ck.queryExecution.analyzed match {
-      case l: LogicalRDD =>
-        val stats = parent.sparkContext.getRDDStorageInfo
-          .find(_.id == l.rdd.id)
-          .map(i => org.apache.spark.sql.catalyst.plans.logical.Statistics(
-            sizeInBytes = BigInt(i.memSize + i.diskSize).max(1)))
-        val declared = new LogicalRDD(
-          l.output, l.rdd, l.outputPartitioning,
-          l.outputOrdering, l.isStreaming, l.getStream)(
-          parent, stats, None)
-        org.apache.spark.sql.classic.Dataset.ofRows(parent, declared)
-      case _ =>
-        org.apache.spark.sql.classic.Dataset.ofRows(
-          parent, ck.queryExecution.logical)
+        val in = planned.queryExecution.analyzed.output
+        val inPlace = in.indexWhere(_.exprId == a.exprId)
+        if (inPlace >= 0 && (isCount || a.dataType == DoubleType))
+          (planned, Some(inPlace), isCount, false)
+        else (planned.withColumn(MetricCol, if (isCount) m else m.cast(DoubleType)),
+          Some(in.size), isCount, true)
     }
+    val base = key.fold(flagged)(k => flagged.repartition(n, col(k)))
+    val output = base.queryExecution.analyzed.output
+    val tally = new TallyAccumulator
+    val rows = base.queryExecution.toRdd
+    // Row copies mirror `Dataset.checkpoint`'s own implementation: the
+    // physical rows are reused UnsafeRows and MUST be copied before caching.
+    val rdd = metricOrd match {
+      case None => rows.mapPartitions(_.map(_.copy()), preservesPartitioning = true)
+      case Some(ord) =>
+        spark.sparkContext.register(tally, "graft.metric")
+        rows.mapPartitions({ it =>
+          it.map { row =>
+            if (!row.isNullAt(ord)) {
+              if (!isCount) tally.add(row.getDouble(ord))
+              else if (row.getBoolean(ord)) tally.add(1.0)
+            }
+            row.copy()
+          }
+        }, preservesPartitioning = true)
+    }
+    rdd.localCheckpoint()
+    rdd.count() // the ONE materializing job; the metric is complete after it
+    val (partitioning, ordering) = key match {
+      case Some(k) =>
+        (HashPartitioning(Seq(output.find(_.name == k).getOrElse(
+          throw new IllegalArgumentException(s"no column $k in $output"))), n), Nil)
+      case None if metric.isEmpty =>
+        val exec = base.queryExecution.executedPlan
+        (firstLeaf(exec.outputPartitioning), exec.outputOrdering)
+      case None => (UnknownPartitioning(rdd.getNumPartitions), Nil)
+    }
+    val stats = spark.sparkContext.getRDDStorageInfo.find(_.id == rdd.id)
+      .map(i => Statistics(sizeInBytes = BigInt(i.memSize + i.diskSize).max(1)))
+    val declared = org.apache.spark.sql.classic.Dataset.ofRows(spark,
+      new LogicalRDD(output, rdd, partitioning, ordering, false, None)(spark, stats, None))
+    (if (synthetic) declared.drop(MetricCol) else declared, tally.value)
+  }
+
+  /** What `Dataset.localCheckpoint` declares for a multi-child layout. */
+  private def firstLeaf(p: Partitioning): Partitioning = p match {
+    case c: PartitioningCollection => firstLeaf(c.partitionings.head)
+    case other => other
+  }
+
+  /** count / sum / max of the metric values one materializing job saw. */
+  private final class TallyAccumulator
+      extends org.apache.spark.util.AccumulatorV2[Double, Tally] {
+    private var c = 0L
+    private var s = 0.0
+    private var m = Double.NegativeInfinity
+    override def isZero: Boolean = c == 0L && s == 0.0 && m == Double.NegativeInfinity
+    override def copy(): TallyAccumulator = {
+      val t = new TallyAccumulator; t.c = c; t.s = s; t.m = m; t
+    }
+    override def reset(): Unit = { c = 0L; s = 0.0; m = Double.NegativeInfinity }
+    override def add(v: Double): Unit = { c += 1; s += v; if (v > m) m = v }
+    override def merge(o: org.apache.spark.util.AccumulatorV2[Double, Tally]): Unit =
+      o match {
+        case t: TallyAccumulator => c += t.c; s += t.s; if (t.m > m) m = t.m
+        case _ => ()
+      }
+    override def value: Tally = Tally(c, s, m)
   }
 
   /** The materialized byte size of a checkpointed frame (mem + disk

@@ -4,11 +4,14 @@ import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CheckpointBridge
+import org.apache.spark.sql.graft.CheckpointBridge.{AdaptiveHash, Hash, Layout, Stats, Tally}
 
-/** Scoping contract of the AQE-off planning inside CheckpointBridge's
-  * fused helpers (round-9 verdict task 4 / ADVICE): the toggle that
-  * plans fixpoint round bodies non-adaptively is a CLONED SESSION the
-  * input frame is rebound onto (`aqeOffTwin` — NOT a session-global
+/** Contract of [[org.apache.spark.sql.graft.CheckpointBridge.materialize]].
+  *
+  * Scoping of its AQE-off planning (round-9 verdict task 4 / ADVICE):
+  * the toggle that plans fixpoint round bodies non-adaptively is a
+  * CLONED SESSION the input frame is rebound onto (`aqeOffTwin` — NOT a session-global
   * conf flip, and NOT a thread-local SQLConf, which measurably does not
   * scope physical planning on 4.1.2; see aqeOffTwin's scaladoc). So a
   * concurrent query on the caller's session must keep planning
@@ -36,10 +39,9 @@ class CheckpointBridgeSpec extends SparkSpec {
       try (1 to 8).foreach { _ =>
         val df = spark.range(200).toDF("id")
           .withColumn("act", col("id") % 2 === 0)
-        val (ck, cnt) = org.apache.spark.sql.graft.CheckpointBridge
-          .localCheckpointHashCount(df, "id", 4, "act")
+        val (ck, Tally(cnt, _, _)) = CheckpointBridge.materialize(df, Hash("id"), col("act"))
         if (cnt != 100L) failures.add(s"$tag: fused count $cnt != 100")
-        org.apache.spark.sql.graft.CheckpointBridge.free(ck)
+        CheckpointBridge.free(ck)
       } catch { case e: Throwable => failures.add(s"$tag: ${e.getMessage}") }
     }
     val fA = pool.submit(fused("A"))
@@ -78,5 +80,138 @@ class CheckpointBridgeSpec extends SparkSpec {
     assert(nonAdaptive.get() == 0,
       s"${nonAdaptive.get()} concurrent queries planned non-adaptively — the toggle leaked")
     assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+  }
+
+  /** One row per layout × metric kind of [[CheckpointBridge.materialize]]'s
+    * contract table. The input is hash(id)-placed over 4 partitions (the
+    * shuffle-partition count of the test session), so `Stats` without a
+    * metric inherits a hash(id) layout from its physical plan and only
+    * `Stats` with a metric declares no partitioning. */
+  test("materialize contract: every layout and metric kind") {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, UnknownPartitioning}
+    import org.apache.spark.sql.execution.LogicalRDD
+    val base = spark.range(1000)
+      .withColumn("v", col("id") % 7)
+      .withColumn("flag", col("id") % 3 === 0)
+      .withColumn("d", (col("id") % 11).cast("double"))
+      .repartition(4, col("id"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2), r.getDouble(3))).toSet
+    val want = rows(base)
+    def expected(m: Column, isCount: Boolean): Tally =
+      if (isCount) {
+        val n = base.filter(m).count()
+        Tally(n, n.toDouble, if (n > 0) 1.0 else Double.NegativeInfinity)
+      } else {
+        val r = base.filter(m.isNotNull)
+          .agg(count(lit(1)), sum(m.cast("double")), max(m.cast("double"))).first()
+        Tally(r.getLong(0), r.getDouble(1), r.getDouble(2))
+      }
+    // the baseline the hash layouts beat: a plain localCheckpoint loses
+    // partitioning under AQE, so a keyed aggregate over it reshuffles
+    val plain = base.localCheckpoint().groupBy(col("id")).agg(sum(col("v")))
+    plain.count()
+    assert(plain.queryExecution.executedPlan.toString.contains("Exchange hashpartitioning"))
+    val jobs = new AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    val layouts = Seq[Layout](Stats, Hash("id"), AdaptiveHash("id"))
+    // (label, metric, boolean count?) — bare columns are read in place,
+    // expressions and non-double numerics ride as a synthetic column
+    val metrics = Seq[(String, Option[(Column, Boolean)])](
+      "none" -> None,
+      "boolean column" -> Some((col("flag"), true)),
+      "boolean expression" -> Some((col("v") < 2, true)),
+      "double column" -> Some((col("d"), false)),
+      "long column" -> Some((col("v"), false)),
+      "numeric expression" -> Some((col("d") * 2 - col("v"), false)))
+    spark.sparkContext.addSparkListener(listener)
+    try for (layout <- layouts; (label, metric) <- metrics) withClue(s"$layout × $label: ") {
+      CheckpointBridge.drainListeners(spark)
+      jobs.set(0)
+      val (ck, tally) = metric match {
+        case None =>
+          (CheckpointBridge.materialize(base, layout), Tally(0L, 0.0, Double.NegativeInfinity))
+        case Some((m, _)) => CheckpointBridge.materialize(base, layout, m)
+      }
+      CheckpointBridge.drainListeners(spark)
+      // adaptivity: the AQE-off layouts materialize in ONE job; the
+      // adaptive one pays its shuffle stage as a job of its own
+      assert(jobs.get() == (if (layout.isInstanceOf[AdaptiveHash]) 2 else 1))
+      assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+      assert(ck.columns.toSeq == base.columns.toSeq)
+      assert(rows(ck) == want)
+      metric.foreach { case (m, isCount) => assert(tally == expected(m, isCount)) }
+      val leaf = ck.queryExecution.analyzed.collectLeaves().collectFirst {
+        case l: LogicalRDD => l
+      }.get
+      val declared = leaf.outputPartitioning
+      if (layout == Stats && metric.isDefined) assert(declared.isInstanceOf[UnknownPartitioning])
+      else declared match {
+        case h: HashPartitioning =>
+          assert(h.numPartitions == 4)
+          assert(h.expressions.map(_.toString.takeWhile(_ != '#')) == Seq("id"))
+        case other => fail(s"declared $other, not hash(id)")
+      }
+      assert(leaf.stats.sizeInBytes == BigInt(CheckpointBridge.sizeOf(ck)))
+      assert(leaf.stats.sizeInBytes < spark.sessionState.conf.defaultSizeInBytes)
+      // a keyed aggregate plans no Exchange over a hash-declared frame,
+      // and the returned frame plans adaptively on the caller's session
+      val agg = ck.groupBy(col("id")).agg(sum(col("v")).as("s"))
+      agg.count()
+      assert(agg.queryExecution.executedPlan.isInstanceOf[
+        org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec])
+      assert(agg.queryExecution.executedPlan.toString.contains("Exchange") ==
+        declared.isInstanceOf[UnknownPartitioning],
+        agg.queryExecution.executedPlan.toString.take(800))
+      assert(agg.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ==
+        want.map(r => (r._1, r._2)))
+      metric.foreach { case (m, _) =>
+        intercept[IllegalArgumentException](CheckpointBridge.materialize(
+          base.withColumn("__graft_metric", lit(1)), layout, m))
+      }
+      CheckpointBridge.free(ck)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** Each routine that checkpoints internally must release every block
+    * it creates, save those of the frame it returns: a long-lived session
+    * otherwise accumulates blocks until the ContextCleaner happens to
+    * collect them. */
+  test("leak invariant: loops and staged Jaccard strand no checkpoint") {
+    import spark.implicits._
+    import graft.graph.{Algos, Prep}
+    val e = Prep.makeSymmetric(
+      Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (5L, 6L)).toDF("src", "dst"))
+    val sets = Seq((1L, Seq("a", "b", "c", "d")), (2L, Seq("a", "b", "c", "e")),
+      (3L, Seq("x", "y")), (4L, Seq("x", "y", "z"))).toDF("doc_id", "items")
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val cases = Seq[(String, () => Seq[org.apache.spark.sql.DataFrame])](
+      "wcc" -> (() => Seq(Algos.wcc(e))),
+      "pagerankConverged" -> (() => Seq(Algos.pagerankConverged(e, maxIters = 5)._1)),
+      "labelProp via Pregel.run" -> (() => Seq(Algos.maxProp(e))),
+      "greedyColoring" -> (() => Seq(Algos.greedyColoring(e))),
+      "jaccardJoinStaged" -> (() => {
+        val (sorted, cand, scored, out) = graft.dedup.Dedup.jaccardJoinStaged(sets, 50)
+        Seq(sorted, cand, scored, out)
+      }))
+    cases.foreach { case (name, run) =>
+      val before = persisted
+      val frames = run()
+      // hold every RDD persisted by now: a stranded checkpoint that is
+      // strongly reachable cannot be collected by the ContextCleaner, so
+      // a leak cannot hide behind a timely garbage collection
+      val held = spark.sparkContext.getPersistentRDDs
+      assert(frames.last.count() > 0L)
+      // release what the caller owns: each frame's checkpoint leaves
+      frames.foreach(CheckpointBridge.free)
+      val leaked = persisted -- before
+      assert(leaked.isEmpty, s"$name stranded persistent RDDs $leaked")
+      java.lang.ref.Reference.reachabilityFence(held)
+    }
   }
 }

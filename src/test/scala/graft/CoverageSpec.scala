@@ -69,28 +69,6 @@ class CoverageSpec extends SparkSpec {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("localCheckpointHash keeps hash partitioning (Pregel one-shuffle invariant)") {
-    // plain localCheckpoint LOSES partitioning under AQE (the adaptive
-    // plan reports Unknown before execution), so a keyed aggregation on
-    // it reshuffles; the declared-partitioning checkpoint must not.
-    val base = (1L to 1000L).toDF("id").withColumn("v", col("id") % 7)
-    val plain = base.repartition(4, col("id")).localCheckpoint()
-      .groupBy(col("id")).agg(sum(col("v")))
-    plain.count()
-    assert(plain.queryExecution.executedPlan.toString.contains("Exchange hashpartitioning"))
-    val declared = org.apache.spark.sql.graft.CheckpointBridge
-      .localCheckpointHash(base, "id", 4)
-    val agg = declared.groupBy(col("id")).agg(sum(col("v")).as("s"))
-    agg.count()
-    assert(!agg.queryExecution.executedPlan.toString.contains("Exchange hashpartitioning"),
-      agg.queryExecution.executedPlan.toString.take(800))
-    // and the declaration is SOUND: results equal the plain computation
-    val a = agg.orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val b = base.groupBy(col("id")).agg(sum(col("v")).as("s"))
-      .orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(a == b)
-  }
-
   test("salted join replicates via explode, never BroadcastNestedLoop") {
     import spark.implicits._
     val skewed = (0 until 100).map(i => (1L, i.toLong)).toDF("k", "payload")

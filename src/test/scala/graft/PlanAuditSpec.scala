@@ -425,6 +425,7 @@ class PlanAuditSpec extends SparkSpec {
     assert(post.toString.contains("Scan ExistingRDD"),
       "candidate join no longer reads the checkpointed prefix frame:\n"
         + post.toString.take(2500))
-    sorted.unpersist()
+    org.apache.spark.sql.graft.CheckpointBridge.free(sorted)
+    org.apache.spark.sql.graft.CheckpointBridge.free(cand)
   }
 }

@@ -61,7 +61,7 @@ class AlgosSpec extends SparkSpec {
       override def onJobStart(
           js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
         jobs.incrementAndGet()
-        if (js.stageInfos.exists(_.name.contains("localCheckpointHashDeltaWhere")))
+        if (js.stageInfos.exists(_.name.contains("materialize")))
           fused.incrementAndGet()
         ()
       }
@@ -80,9 +80,9 @@ class AlgosSpec extends SparkSpec {
       val (j6, f6) = jobsFor(6)
       // The fusion's claim: ONE materializing ACTION per round — the
       // fused checkpoint+delta count (job-traced: its stage carries the
-      // localCheckpointHashDeltaWhere call site). Holding that requires
-      // the fused helpers to plan the round body NON-adaptively
-      // (CheckpointBridge.withAqeOff): under AQE every query-stage
+      // materialize call site). Holding that requires
+      // the Hash layout to plan the round body NON-adaptively
+      // (CheckpointBridge.aqeOffTwin): under AQE every query-stage
       // materialization is its own job and the same body paid
       // 7 jobs/round (round-8 verdict measurement).
       assert(f6 - f3 == 3,

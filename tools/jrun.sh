@@ -8,10 +8,14 @@ set -euo pipefail
 # Derive the repo root from this script's location (ADVICE r14) and make
 # stale-binary runs VISIBLE: echo the newest-class mtime so a probe run
 # after an uncompiled edit can be caught attributing numbers to the
-# wrong binary.
+# wrong binary. The probe is diagnostic only: `|| true` keeps a missing
+# classes dir, or sort's SIGPIPE once head exits, from failing the script
+# under pipefail.
 ROOT="$(cd "$(dirname "$0")/.." && pwd)"
 CLASSES="$ROOT/target/scala-2.13/classes"
-NEWEST=$(find "$CLASSES" -name '*.class' -printf '%TY-%Tm-%Td %TH:%TM:%TS\n' 2>/dev/null | sort -r | head -1)
+NEWEST=$(find "$CLASSES" -name '*.class' -printf '%TY-%Tm-%Td %TH:%TM:%TS\n' 2>/dev/null | sort -r | head -1 || true)
+# Heap: SPARK_DRIVER_MEM, else half the host's memory clamped to 2-8g.
+MEM="${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' </proc/meminfo 2>/dev/null || echo 2g)}"
 echo "[jrun] classes: $CLASSES (newest class compiled: ${NEWEST:-none})" >&2
 CP="$CLASSES:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
 ADD_OPENS=""
@@ -23,6 +27,6 @@ done
 exec java $ADD_OPENS \
   -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \
-  -Xmx"${SPARK_DRIVER_MEM:-48g}" \
+  -Xmx"$MEM" \
   -XX:ReservedCodeCacheSize=1g \
   -cp "$CP" "$@"

@@ -1,6 +1,8 @@
 #!/bin/bash
 # Direct JVM runner for graft mains (bypasses sbt): tools/run.sh <MainClass> [args...]
-exec java -Xmx96g \
+# Heap: SPARK_DRIVER_MEM, else half the host's memory clamped to 2-8g.
+MEM="${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' </proc/meminfo 2>/dev/null || echo 2g)}"
+exec java -Xmx"$MEM" \
   --add-opens=java.base/java.lang=ALL-UNNAMED \
   --add-opens=java.base/java.lang.invoke=ALL-UNNAMED \
   --add-opens=java.base/java.lang.reflect=ALL-UNNAMED \
