@@ -44,10 +44,12 @@ object Bench {
       // the entire scan path (measured 4.6x inflation in round 4)
       spark.read.parquet(s"$sfDir/lineitem.parquet")
         .groupBy("l_returnflag").agg(sum("l_quantity"), avg("l_extendedprice")).count()
-      // the dedup family's per-row md5 kernels (MinhashSignature /
-      // Simhash60 / shingling) are shared interpreted expressions — one
-      // small pass here C2-compiles them so no measured query pays the
-      // multi-second cold-JIT penalty for the whole family
+      // the dedup family's per-row md5 kernels (MinhashSignature, the
+      // Simhash expression behind both simhash32 and simhash60, and
+      // shingling) are shared interpreted expressions — one small pass
+      // here C2-compiles them so no measured query pays the multi-second
+      // cold-JIT penalty for the whole family. Both widths run the same
+      // Simhash.eval, so the simhash60 call also compiles simhash32's path.
       import graft.text.TextFunctions._
       val docs = spark.range(3000).select(col("id").as("doc_id"),
         concat_ws(" ", (0 until 30).map(i =>

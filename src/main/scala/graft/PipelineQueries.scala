@@ -264,8 +264,8 @@ object PipelineQueries {
   private def qDedupSimhashPairs(s: SparkSession, dir: String): DataFrame =
     Dedup.simhashDupPairs(Tables(s, dir).documents)
 
-  /** DuckDB twin of graft.functions.Simhash60: bit j = majority (count·2
-    * ≥ n) of bit j%4 of the VALUE of md5 hex digit ⌊j/4⌋. */
+  /** DuckDB twin of graft.functions.Simhash at width 60: bit j = majority
+    * (count·2 ≥ n) of bit j%4 of the VALUE of md5 hex digit ⌊j/4⌋. */
   private val simhash60ExprSql =
     """CAST(list_sum(list_transform(range(0, 60), j ->
       |CASE WHEN len(list_filter(sh, s ->

@@ -2,6 +2,7 @@ package graft.functions
 
 import java.security.MessageDigest
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -43,21 +44,23 @@ case class MinhashSignature(child: Expression, numHashes: Int)
     val mins = new Array[String](numHashes)
     var i = 0
     while (i < n) {
-      val sBytes = arr.getUTF8String(i).getBytes
-      var a = 0
-      while (a < numMd5) {
-        md.reset()
-        md.update((a.toString + ":").getBytes("US-ASCII"))
-        md.update(sBytes)
-        val hex = hexString(md.digest())
-        var b = 0
-        var j = a * 4
-        while (b < 4 && j < numHashes) {
-          val w = hex.substring(b * 8, b * 8 + 8)
-          if (mins(j) == null || w.compareTo(mins(j)) < 0) mins(j) = w
-          b += 1; j += 1
+      if (!arr.isNullAt(i)) { // a NULL shingle hashes to nothing
+        val sBytes = arr.getUTF8String(i).getBytes
+        var a = 0
+        while (a < numMd5) {
+          md.reset()
+          md.update((a.toString + ":").getBytes("US-ASCII"))
+          md.update(sBytes)
+          val hex = hexString(md.digest())
+          var b = 0
+          var j = a * 4
+          while (b < 4 && j < numHashes) {
+            val w = hex.substring(b * 8, b * 8 + 8)
+            if (mins(j) == null || w.compareTo(mins(j)) < 0) mins(j) = w
+            b += 1; j += 1
+          }
+          a += 1
         }
-        a += 1
       }
       i += 1
     }
@@ -88,56 +91,71 @@ object MinhashSignature {
     ThreadLocal.withInitial(() => MessageDigest.getInstance("MD5"))
 }
 
-/** One-pass 60-bit SimHash over a shingle-set column.
+/** One-pass SimHash over a shingle-set column, 32 or 60 bits wide.
   *
-  * Semantics (oracle-replayable): bit j (0 ≤ j < 60) is set when the
-  * majority of shingles (count·2 ≥ n, the same tie rule as the 32-bit
-  * variant) have bit j%4 set in the VALUE of hex digit ⌊j/4⌋ of md5(s).
-  * 60 bits = 15 hex digits — wide enough that LSH bands over the
-  * fingerprint stay discriminating even on statistically-similar corpora
-  * (a 32-bit fingerprint's band values concentrate and explode the
-  * candidate join), while staying inside a positive BIGINT in both
-  * engines (bit 63 would overflow DuckDB's POWER(2, j) BIGINT cast).
+  * Semantics (oracle-replayable): bit j is set when at least half of the
+  * shingles (count·2 ≥ n) have digest bit j set, and digest bit j is bit
+  * j % bitsPerDigit of the VALUE of md5 hex digit ⌊j / bitsPerDigit⌋:
+  *   - width 32 (`simhash32`): the parity of each of 32 hex digits;
+  *   - width 60 (`simhash60`, the pairing-grade fingerprint): all four
+  *     bits of each of 15 hex digits. 60 bits keep LSH bands over the
+  *     fingerprint discriminating even on statistically-similar corpora
+  *     (a 32-bit fingerprint's band values concentrate and explode the
+  *     candidate join), while staying inside a positive BIGINT in both
+  *     engines (bit 63 would overflow DuckDB's POWER(2, j) BIGINT cast).
+  * NULL shingles hash to nothing but count toward n; a NULL array yields
+  * 0. Both are what the composed `aggregate`/`filter`/`md5` form and the
+  * DuckDB twins answer.
   *
   * Native expression for the same reason as [[MinhashSignature]]: one md5
-  * + 60 local counter bumps per shingle, no per-bit re-hash.
+  * + `width` local counter bumps per shingle, where the composed form
+  * re-hashed every shingle once per output bit.
   */
-case class Simhash60(child: Expression)
+case class Simhash(child: Expression, width: Int)
   extends UnaryExpression with CodegenFallback {
 
-  override def dataType: DataType = org.apache.spark.sql.types.LongType
-  override def prettyName: String = "simhash60"
+  require(width == 32 || width == 60, s"simhash width must be 32 or 60, got $width")
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  override def dataType: DataType = org.apache.spark.sql.types.LongType
+  override def nullable: Boolean = false
+  override def prettyName: String = s"simhash$width"
+
+  private val bitsPerDigit = if (width == 32) 1 else 4
+  /** Digest bit j is bit `shift(j)` of byte `byteIdx(j)`: hex digit p is
+    * the high nibble of byte p/2 when p is even. */
+  private val byteIdx = Array.tabulate(width)(j => j / bitsPerDigit / 2)
+  private val shift = Array.tabulate(width) { j =>
+    (if (j / bitsPerDigit % 2 == 0) 4 else 0) + j % bitsPerDigit
+  }
+
+  override def eval(input: InternalRow): Any = {
+    val arr = child.eval(input).asInstanceOf[ArrayData]
+    if (arr == null) return 0L
     val n = arr.numElements()
     val md = MinhashSignature.digest.get()
-    md.reset()
-    val cnt = new Array[Int](60)
+    val cnt = new Array[Int](width)
     var i = 0
     while (i < n) {
-      md.reset()
-      val d = md.digest(arr.getUTF8String(i).getBytes)
-      var j = 0
-      while (j < 60) {
-        val p = j / 4 // hex digit index; digit p = nibble of byte p/2
-        val v =
-          if ((p & 1) == 0) (d(p / 2) >> 4) & 0xf
-          else d(p / 2) & 0xf
-        cnt(j) += (v >> (j % 4)) & 1
-        j += 1
+      if (!arr.isNullAt(i)) {
+        md.reset()
+        val d = md.digest(arr.getUTF8String(i).getBytes)
+        var j = 0
+        while (j < width) {
+          cnt(j) += (d(byteIdx(j)) >> shift(j)) & 1
+          j += 1
+        }
       }
       i += 1
     }
     var out = 0L
     var j = 0
-    while (j < 60) {
+    while (j < width) {
       if (cnt(j) * 2 >= n) out |= 1L << j
       j += 1
     }
     out
   }
 
-  override protected def withNewChildInternal(newChild: Expression): Simhash60 =
+  override protected def withNewChildInternal(newChild: Expression): Simhash =
     copy(child = newChild)
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
-import graft.functions.{MinhashSignature, Simhash60, VecDot}
+import graft.functions.{MinhashSignature, Simhash, VecDot}
 
 /** SQL surface for the engine's native Catalyst expressions, via the
   * standard `SparkSessionExtensions` hook — `spark.sql("SELECT
@@ -32,10 +32,10 @@ object GraftExtensions {
   /** (name, info, builder) triples in `injectFunction` shape. */
   val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
     (FunctionIdentifier("simhash60"),
-      new ExpressionInfo(classOf[Simhash60].getName, "simhash60"),
+      new ExpressionInfo(classOf[Simhash].getName, "simhash60"),
       (args: Seq[Expression]) => {
         require(args.length == 1, "simhash60(shingles) takes one argument")
-        Simhash60(args.head)
+        Simhash(args.head, 60)
       }),
     (FunctionIdentifier("minhash_signature"),
       new ExpressionInfo(classOf[MinhashSignature].getName, "minhash_signature"),

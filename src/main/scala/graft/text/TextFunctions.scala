@@ -3,11 +3,17 @@ package graft.text
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Text-analysis building blocks for training-data pipelines, as pure
-  * Column expressions (whole-stage-codegen friendly; no UDFs — every
-  * function here compiles into Catalyst expressions that run inside the
-  * generated code, which is what keeps a 100 TB scan CPU-bound instead of
+/** Text-analysis building blocks for training-data pipelines, as Column
+  * expressions that run inside whole-stage codegen (no UDFs: a UDF's
+  * row serialization is what turns a 100 TB scan from CPU-bound into
   * serialization-bound).
+  *
+  * The rule: compose built-ins, unless a per-element hash would be
+  * re-evaluated inside a higher-order-function lambda. Catalyst does no
+  * subexpression elimination inside lambdas, so a hash nested under two
+  * of them runs once per (element, outer iteration). Then write a
+  * one-pass expression in `graft.functions` instead — as
+  * [[minhashSignature]], [[simhash32]] and [[simhash60]] do.
   *
   * Everything is engine-portable: the DuckDB oracle reproduces each
   * function with the same arithmetic (see graft.Queries / PipelineQueries).
@@ -45,11 +51,14 @@ object TextFunctions {
     size(filter(tokens(c), t => t.isin(words: _*))).cast("long")
 
   /** Character k-shingles (sliding window), deduplicated.
-    * Short texts yield their own (single) truncated shingle. */
+    * Short texts yield their own (single) truncated shingle; NULL text
+    * yields no shingles, as the oracle's `list_distinct` (which drops
+    * NULLs) does. */
   def shingleSet(c: Column, k: Int): Column =
-    array_distinct(transform(
-      sequence(lit(1), greatest(length(c) - lit(k - 1), lit(1))),
-      i => c.substr(i, lit(k))))
+    when(c.isNull, typedLit(Seq.empty[String])).otherwise(
+      array_distinct(transform(
+        sequence(lit(1), greatest(length(c) - lit(k - 1), lit(1))),
+        i => c.substr(i, lit(k)))))
 
   /** Word n-grams WITHOUT dedup — the multiset, as repetition measurement
     * needs it. Documents shorter than n tokens yield their single
@@ -113,25 +122,19 @@ object TextFunctions {
       graft.functions.MinhashSignature(
         org.apache.spark.sql.graft.ColumnBridge.expression(shingles), numHashes))
 
-  /** 32-bit SimHash from the hex-digit parity of each shingle's md5:
-    * bit j is set when the majority of shingles have an odd hex digit at
-    * position j. Returned as BIGINT. */
-  def simhash32(shingles: Column): Column = {
-    val oddHex = Seq("1", "3", "5", "7", "9", "b", "d", "f")
-    aggregate(
-      sequence(lit(0), lit(31)), lit(0L),
-      (acc, j) => acc + when(
-        size(filter(shingles,
-          s => md5(s).substr(j + lit(1), lit(1)).isin(oddHex: _*))) * 2 >= size(shingles),
-        pow(lit(2.0), j).cast("long")).otherwise(lit(0L)))
-  }
+  /** 32-bit SimHash, returned as BIGINT: bit j is set when at least half
+    * of the shingles (count·2 ≥ n) have an odd hex digit j in their md5.
+    * One md5 per shingle — see [[graft.functions.Simhash]]. */
+  def simhash32(shingles: Column): Column = simhash(shingles, 32)
 
   /** 60-bit SimHash (pairing-grade fingerprint — see
-    * graft.functions.Simhash60 for the bit semantics and why 60). */
-  def simhash60(shingles: Column): Column =
+    * graft.functions.Simhash for the bit semantics and why 60). */
+  def simhash60(shingles: Column): Column = simhash(shingles, 60)
+
+  private def simhash(shingles: Column, width: Int): Column =
     org.apache.spark.sql.graft.ColumnBridge.column(
-      graft.functions.Simhash60(
-        org.apache.spark.sql.graft.ColumnBridge.expression(shingles)))
+      graft.functions.Simhash(
+        org.apache.spark.sql.graft.ColumnBridge.expression(shingles), width))
 
   /** Jaccard similarity of two (deduplicated) array columns, as the exact
     * double |∩| / (|a|+|b|-|∩|). */

@@ -305,6 +305,47 @@ class PlanAuditSpec extends SparkSpec {
       s"wordNgramsAll no longer binds the token array as the outer HOF input: $top")
   }
 
+  /** Top-level expressions of `p` (subqueries included) holding an md5
+    * nested under two or more lambdas. Catalyst does no subexpression
+    * elimination inside higher-order-function lambdas, so such an md5
+    * runs once per (element, outer iteration): the composed simhash32
+    * hashed every shingle once per output bit. */
+  private def nestedLambdaMd5(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      : Seq[String] = {
+    import org.apache.spark.sql.catalyst.expressions.{Expression, LambdaFunction, Md5}
+    def trapped(e: Expression, depth: Int): Boolean = e match {
+      case _: Md5 if depth >= 2 => true
+      case l: LambdaFunction => l.children.exists(trapped(_, depth + 1))
+      case o => o.children.exists(trapped(_, depth))
+    }
+    p.collectWithSubqueries { case n => n.expressions.filter(trapped(_, 0)) }
+      .flatten.map(_.toString.take(200))
+  }
+
+  test("per-row kernels hash once per element: no md5 under two nested " +
+    "lambdas in the dedup/text/multimodal/jaccard/ann/knn plans") {
+    import org.apache.spark.sql.functions.{array, col, lit}
+    // self-check: the composed simhash32 is the trap, the native one is
+    // not (a non-local, non-literal input, so nothing folds the kernel away)
+    val sh = spark.range(2).select(array(col("id").cast("string"), lit("x")).as("sh"))
+    assert(nestedLambdaMd5(sh.select(PropertiesSpec.simhash32Composed(col("sh")))
+      .queryExecution.optimizedPlan).nonEmpty)
+    assert(nestedLambdaMd5(sh.select(graft.text.TextFunctions.simhash32(col("sh")))
+      .queryExecution.optimizedPlan).isEmpty)
+    val family = "^q_(dedup|text|multimodal|ann)_|^q_(jaccard|knn)".r
+    val names = Queries.all.keys.filter(family.findFirstIn(_).nonEmpty).toSeq.sorted
+    assert(names.contains("q_dedup_simhash"), names)
+    val offenders = names.flatMap { name =>
+      val hits = nestedLambdaMd5(Queries.all(name)(spark, sf).queryExecution.optimizedPlan)
+      // registry queries persist/checkpoint internally during construction
+      spark.catalog.clearCache()
+      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      hits.map(h => s"$name: $h")
+    }
+    assert(offenders.isEmpty,
+      s"md5 re-evaluated per outer lambda iteration in:\n  ${offenders.mkString("\n  ")}")
+  }
+
   // ---- TPC-H family pins (round 7) ---------------------------------
 
   test("q19: the OR-of-conjuncts predicate reaches BOTH parquet scans") {

@@ -2,21 +2,24 @@ package graft
 
 import java.security.MessageDigest
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, StringType}
+import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.{Gen, Prop, Test => SCTest}
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.multimodal.Multimodal
 import graft.pipeline.Corpus
+import graft.text.TextFunctions
 
-/** ScalaCheck properties over the engine's pure kernels (no SparkSession
-  * in the loop — these are the pieces whose contracts are algebraic:
-  * parsers must be total, packers must respect their invariants, native
-  * expressions must match their specification arithmetic). */
-class PropertiesSpec extends AnyFunSuite {
+/** ScalaCheck properties over the engine's pure kernels — the pieces whose
+  * contracts are algebraic: parsers must be total, packers must respect
+  * their invariants, native expressions must match their specification
+  * arithmetic. Only the simhash32 reference check runs through Spark,
+  * because its reference is a Column composition. */
+class PropertiesSpec extends SparkSpec {
 
   private def check(name: String, p: Prop, minTests: Int = 100): Unit = {
     val r = SCTest.check(SCTest.Parameters.default
@@ -135,35 +138,92 @@ class PropertiesSpec extends AnyFunSuite {
     mk(Literal.create(arr, ArrayType(StringType))).eval(null)
   }
 
-  private val shinglesGen =
-    Gen.nonEmptyListOf(Gen.nonEmptyListOf(Gen.alphaNumChar).map(_.mkString))
-      .map(_.distinct)
+  /** Shingle arrays as the kernels may meet them: empty, with NULL
+    * elements, duplicates and non-ASCII text (md5 runs over UTF-8 bytes). */
+  private val wildShinglesGen: Gen[List[String]] = {
+    val shingle = Gen.frequency(
+      6 -> Gen.nonEmptyListOf(Gen.alphaNumChar).map(_.mkString),
+      2 -> Gen.nonEmptyListOf(Gen.oneOf("é", "ß", "中文", "\uD83D\uDE00", "x"))
+        .map(_.mkString),
+      1 -> Gen.const(null: String))
+    for {
+      base <- Gen.listOf(shingle)
+      dups <- Gen.choose(0, base.length)
+    } yield base ++ base.take(dups)
+  }
+
+  /** …and, for the Spark-evaluated spec, also a NULL array. */
+  private val wildShinglesOrNullGen: Gen[Option[List[String]]] =
+    Gen.frequency(1 -> Gen.const(None), 8 -> wildShinglesGen.map(Some(_)))
 
   test("MinhashSignature equals the per-word md5-min specification") {
-    val p = Prop.forAll(shinglesGen) { sh =>
+    val p = Prop.forAll(wildShinglesGen) { sh =>
       val got = evalOn(sh, e => graft.functions.MinhashSignature(e, 16))
         .asInstanceOf[ArrayData]
+      val hashed = sh.filter(_ != null) // NULL shingles contribute nothing
       (0 until 16).forall { j =>
-        val expect = sh.map(s => md5Hex(s"${j / 4}:$s").substring((j % 4) * 8, (j % 4) * 8 + 8)).min
-        got.getUTF8String(j).toString == expect
+        val words = hashed.map(s => md5Hex(s"${j / 4}:$s").substring((j % 4) * 8, (j % 4) * 8 + 8))
+        if (words.isEmpty) got.isNullAt(j) else got.getUTF8String(j).toString == words.min
       }
     }
     check("minhash", p, minTests = 50)
   }
 
-  test("Simhash60 equals the hex-digit majority specification") {
-    val p = Prop.forAll(shinglesGen) { sh =>
-      val got = evalOn(sh, e => graft.functions.Simhash60(e)).asInstanceOf[Long]
-      val n = sh.length
-      val expect = (0 until 60).map { j =>
+  /** Simhash at `width` against its specification: digest bit j is bit
+    * j % bitsPerDigit of md5 hex digit j / bitsPerDigit. */
+  private def checkSimhashSpec(width: Int, bitsPerDigit: Int): Unit = {
+    val p = Prop.forAll(wildShinglesGen) { sh =>
+      val got = evalOn(sh, e => graft.functions.Simhash(e, width)).asInstanceOf[Long]
+      val n = sh.length // NULL shingles count toward n, never toward a bit
+      val expect = (0 until width).map { j =>
+        val d = j / bitsPerDigit
         val cnt = sh.count { s =>
-          val digit = Integer.parseInt(md5Hex(s).substring(j / 4, j / 4 + 1), 16)
-          ((digit >> (j % 4)) & 1) == 1
+          s != null &&
+            ((Integer.parseInt(md5Hex(s).substring(d, d + 1), 16) >> (j % bitsPerDigit)) & 1) == 1
         }
         if (cnt * 2 >= n) 1L << j else 0L
       }.sum
-      got == expect && (got >> 60) == 0L
+      got == expect && (got >> width) == 0L
     }
-    check("simhash", p, minTests = 50)
+    check(s"simhash$width", p, minTests = 50)
+    val nullArray = Literal.create(null, ArrayType(StringType))
+    assert(graft.functions.Simhash(nullArray, width).eval(null) == 0L)
+  }
+
+  test("Simhash60 equals the hex-digit majority specification") {
+    checkSimhashSpec(60, bitsPerDigit = 4) // bit j%4 of hex digit j/4
+  }
+
+  test("simhash32 equals the hex-digit parity specification") {
+    checkSimhashSpec(32, bitsPerDigit = 1) // bit 0 of hex digit j
+  }
+
+  test("simhash32 equals its composed aggregate/filter/md5 reference, evaluated by Spark") {
+    import spark.implicits._
+    // a batch of arrays per case: one Spark job checks 40 of them
+    val p = Prop.forAll(Gen.listOfN(40, wildShinglesOrNullGen)) { rows =>
+      spark.sparkContext.parallelize(rows.map(Tuple1(_)), 2).toDF("sh")
+        .select(TextFunctions.simhash32(col("sh")), PropertiesSpec.simhash32Composed(col("sh")))
+        .collect().forall(r => !r.isNullAt(0) && r.get(0) == r.get(1))
+    }
+    check("simhash32", p, minTests = 10)
+  }
+}
+
+object PropertiesSpec {
+
+  /** The composed form `TextFunctions.simhash32` had before it became the
+    * native [[graft.functions.Simhash]]: bit j is set when count·2 ≥ n of
+    * the shingles have an odd md5 hex digit j. It is the reference the
+    * native kernel must reproduce — and the trap it replaced: the md5 sits
+    * under two lambdas, so it runs 32 times per shingle. */
+  def simhash32Composed(shingles: Column): Column = {
+    val oddHex = Seq("1", "3", "5", "7", "9", "b", "d", "f")
+    aggregate(
+      sequence(lit(0), lit(31)), lit(0L),
+      (acc, j) => acc + when(
+        size(filter(shingles,
+          s => md5(s).substr(j + lit(1), lit(1)).isin(oddHex: _*))) * 2 >= size(shingles),
+        pow(lit(2.0), j).cast("long")).otherwise(lit(0L)))
   }
 }

@@ -74,16 +74,23 @@ class PipelineSpec extends SparkSpec {
     assert(Multimodal.decodeWav(bb.array()).contains((1, 8000, 8, 4L)))
   }
 
+  /** `docs` plus a NULL-text row: it has no shingles, so (as in the DuckDB
+    * oracle) no bit has a majority against it and every bit is set. */
+  private val docsWithNullText =
+    docs.union(Seq((5L, null: String, "s1")).toDF("doc_id", "text", "source"))
+
   test("simhash is equal for identical docs, different for unrelated") {
-    val fp = Dedup.simhashFingerprints(docs).as[(Long, Long)].collect().toMap
+    val fp = Dedup.simhashFingerprints(docsWithNullText).as[(Long, Long)].collect().toMap
     assert(fp(1L) == fp(4L))
     assert(fp(1L) != fp(3L))
+    assert(fp(5L) == 0xffffffffL)
   }
 
   test("simhash hamming pairs find the identical pair at distance 0") {
-    val pairs = Dedup.simhashDupPairs(docs).as[(Long, Long, Long)].collect().toSeq
+    val pairs = Dedup.simhashDupPairs(docsWithNullText).as[(Long, Long, Long)].collect().toSeq
     assert(pairs.exists(p => (p._1, p._2, p._3) == ((1L, 4L, 0L)))) // exact dup
     assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L))            // unrelated doc
+    assert(!pairs.exists(p => p._1 == 5L || p._2 == 5L))            // NULL text
   }
 
   test("hot-bucket guard: a planted boilerplate bucket star-expands to " +
