@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CheckpointBridge
 import org.apache.spark.sql.graft.CheckpointBridge.{AdaptiveHash, materialize}
 
 /** Round-6 sixth wave: sequential-recurrence analytics (EWMA folds),
@@ -1057,16 +1058,20 @@ object SignalQueries {
       .localCheckpoint()
     var i = 0
     while (i < 12) {
-      p = p.join(tt, Seq("v", "j"))
+      val next = p.join(tt, Seq("v", "j"))
         .select(col("v"), col("k").as("j"),
           expr("(val * prob) div 1000000").as("contrib"))
         .groupBy(col("v"), col("j")).agg(sum(col("contrib")).as("val"))
         .localCheckpoint() // ≤ channels·states rows; keeps the 12-step plan flat
+      CheckpointBridge.free(p)
+      p = next
       i += 1
     }
     val pc = p.groupBy(col("v"))
       .agg(coalesce(max(when(col("j") === "purchase", col("val"))), lit(0L)).as("p_conv"))
       .localCheckpoint()
+    // the returned plan reads only pc
+    Seq(p, tt, vars, cnt, seq0).foreach(CheckpointBridge.free)
     val full = pc.filter(col("v") === "FULL").select(col("p_conv").as("p_full_e6"))
     pc.filter(col("v") =!= "FULL").crossJoin(broadcast(full))
       .select(col("v").as("channel"), col("p_full_e6"),

@@ -51,29 +51,18 @@ object Algos {
     val bcBytes = seeds.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
     def hint(frontier: DataFrame, n: Long): DataFrame =
       if (n * 32L <= bcBytes) broadcast(frontier) else frontier // ~32 B/id row
-    var (reached, Tally(fresh, _, _)) = materialize(
+    val (seeded, seededFresh) = materialize(
         seeds.select(col("id")).distinct().withColumn("fresh", lit(true)), Stats,
         col("fresh"))
-    var h = 0
-    while (fresh > 0 && h < maxHops) {
-      val prev = reached
-      val next = reached.select(col("id"), lit(false).as("cand"))
+    Fixpoint.run(seeded, Fixpoint.materializing(Stats, col("fresh")), maxHops,
+        start = Some(seededFresh), continue = _.tally.count > 0) { (reached, _, fresh) =>
+      reached.select(col("id"), lit(false).as("cand"))
         .union(edges
-          .join(hint(reached.filter(col("fresh")).select(col("id").as("src")), fresh),
+          .join(hint(reached.filter(col("fresh")).select(col("id").as("src")), fresh.count),
             Seq("src"))
           .select(col("dst").as("id"), lit(true).as("cand")))
         .groupBy(col("id")).agg(bool_and(col("cand")).as("fresh"))
-      val (ck, Tally(freshCnt, _, _)) = materialize(next, Stats, col("fresh"))
-      reached = ck
-      fresh = freshCnt
-      // the new frame is eagerly materialized; the superseded wave's
-      // blocks are dead — drop them at the RDD level (Dataset.unpersist
-      // is a no-op on localCheckpoint frames) instead of waiting on the
-      // ContextCleaner. Every prev here is a direct checkpoint product.
-      freeCkpt(prev)
-      h += 1
-    }
-    reached.select("id")
+    }._1.select("id")
   }
 
   /** Distinct vertex ids appearing as an endpoint. */
@@ -110,7 +99,7 @@ object Algos {
     // AQE; see CheckpointBridge.materialize)
     val e = materialize(symEdges.select("src", "dst"), AdaptiveHash("src"))
     val nbrMin0 = e.groupBy(col("src").as("id")).agg(min(col("dst")).as("nm"))
-    var f: DataFrame = materialize(verticesOf(e).join(nbrMin0, Seq("id"), "left")
+    val f0 = materialize(verticesOf(e).join(nbrMin0, Seq("id"), "left")
         .select(col("id"), col("id").as("f_old"), least(col("id"), col("nm")).as("f")), Stats)
     // |f| is INVARIANT across rounds (always one row per vertex), so one
     // measurement decides the whole loop's checkpoint strategy — the
@@ -121,30 +110,23 @@ object Algos {
     // declared hash(id) makes the label self-joins exchange-free, which
     // is what survives at 100 TB.
     val smallV = {
-      val sz = org.apache.spark.sql.graft.CheckpointBridge.sizeOf(f)
+      val sz = org.apache.spark.sql.graft.CheckpointBridge.sizeOf(f0)
       val thr = org.apache.spark.sql.internal.SQLConf.get.autoBroadcastJoinThreshold
       thr > 0 && sz >= 0 && sz < thr
     }
-    var changed = 1L
-    var step = 0
-    while (changed > 0 && step < opts.maxSupersteps) {
+    // the changed-count rides the checkpoint's materializing job
+    // (fused accumulator — one driver barrier per round, not two)
+    val (f, _) = Fixpoint.run(f0,
+        Fixpoint.materializing(if (smallV) Stats else Hash("id"), col("f") < col("f_old")),
+        opts.maxSupersteps, continue = _.tally.count > 0) { (f, _, _) =>
+      // f carries a stale f_old column from round 1 on; the joins project it away
       val m1 = e.join(f.select(col("id").as("src"), col("f").as("fs")), Seq("src"))
         .groupBy(col("dst").as("id")).agg(min(col("fs")).as("m1"))
       val gp = f.select(col("id").as("gid"), col("f").as("gf"))
-      val next0 = f
-        .join(m1, Seq("id"), "left")
+      f.join(m1, Seq("id"), "left")
         .join(gp, col("f") === col("gid"), "left")
         .select(col("id"), col("f").as("f_old"),
           least(col("f"), col("m1"), col("gf")).as("f"))
-      // the changed-count rides the checkpoint's materializing job
-      // (fused accumulator — one driver barrier per round, not two)
-      val (next, Tally(nChanged, _, _)) =
-        if (smallV) materialize(next0, Stats, col("f") < col("f_old"))
-        else materialize(next0, Hash("id"), col("f") < col("f_old"))
-      changed = nChanged
-      freeCkpt(f) // every f here (init included) is this loop's own checkpoint
-      f = next // carries a stale f_old column; joins above project it away
-      step += 1
     }
     freeCkpt(e)
     f.select(col("id"), col("f").as("component"))
@@ -291,7 +273,7 @@ object Algos {
     val n = v.count().toDouble
     val deg = e.groupBy(col("src").as("id"))
       .agg(count(lit(1)).cast("double").as("outdeg"))
-    var verts = materialize(v.join(deg, Seq("id"), "left")
+    val init = materialize(v.join(deg, Seq("id"), "left")
       .select(col("id"), lit(1.0 / n).as("pr"),
         coalesce(col("outdeg"), lit(0.0)).as("outdeg")), AdaptiveHash("id"))
     // The per-row |Δ| metric rides the checkpoint's materializing job
@@ -308,21 +290,16 @@ object Algos {
       case "sum_rel" | "max_rel" => diff / col("prev_pr")
       case "rmse"                => diff * diff
     }
-    var it = 0
-    var delta = Double.MaxValue
-    while (it < maxIters && delta >= tol) {
-      val prev = verts
-      val nextJ = prUpdate(prev, e, n, damping, resetProb)
+    val delta: Tally => Double = convergence match {
+      case "sum" | "sum_rel" => _.sum
+      case "max" | "max_rel" => _.max
+      case "rmse"            => t => math.sqrt(t.sum / n)
+    }
+    val (verts, it) = Fixpoint.run(init, Fixpoint.materializing(Hash("id"), rowMetric),
+        maxIters, continue = r => delta(r.tally) >= tol) { (verts, _, _) =>
+      val prev = verts.select("id", "pr", "outdeg")
+      prUpdate(prev, e, n, damping, resetProb)
         .join(prev.select(col("id"), col("pr").as("prev_pr")), Seq("id"))
-      val (ck, Tally(_, dSum, dMax)) = materialize(nextJ, Hash("id"), rowMetric)
-      verts = ck.select("id", "pr", "outdeg")
-      delta = convergence match {
-        case "sum" | "sum_rel" => dSum
-        case "max" | "max_rel" => dMax
-        case "rmse"            => math.sqrt(dSum / n)
-      }
-      freeCkpt(prev)
-      it += 1
     }
     freeCkpt(e); v.unpersist()
     (verts.select("id", "pr"), it)
@@ -408,30 +385,26 @@ object Algos {
     val deg = materialize(
       e.groupBy(col("src").as("id")).agg(count(lit(1)).cast("double").as("outdeg")),
       AdaptiveHash("id"))
-    var p = materialize(
+    val p0 = materialize(
       v.crossJoin(broadcast(srcs))
         .select(col("id"), col("tag"),
           when(col("id") === col("tag"), lit(1.0)).otherwise(lit(0.0)).as("pr")),
       AdaptiveHash("id"))
-    var i = 0
-    while (i < iterations) {
+    val (p, _) = Fixpoint.run(p0, Fixpoint.materializing(AdaptiveHash("id")), iterations) {
+        (p, _, _) =>
       val sums = p.join(deg, Seq("id"))
         .join(e, col("id") === col("src"))
         .select(col("dst"), col("tag"), (col("pr") / col("outdeg")).as("c"))
         .groupBy(col("dst"), col("tag")).agg(sum(col("c")).as("s"))
-      val nextReal = materialize(
-        v.crossJoin(broadcast(srcs)).as("vt")
-          .join(sums.as("sm"),
-            col("vt.id") === col("sm.dst") && col("vt.tag") === col("sm.tag"), "left")
-          .select(col("vt.id").as("id"), col("vt.tag").as("tag"),
-            (when(col("vt.id") === col("vt.tag"), lit(resetProb)).otherwise(lit(0.0)) +
-              lit(damping) * coalesce(col("sm.s"), lit(0.0))).as("pr")), AdaptiveHash("id"))
-      freeCkpt(p)
-      p = nextReal
-      i += 1
+      v.crossJoin(broadcast(srcs)).as("vt")
+        .join(sums.as("sm"),
+          col("vt.id") === col("sm.dst") && col("vt.tag") === col("sm.tag"), "left")
+        .select(col("vt.id").as("id"), col("vt.tag").as("tag"),
+          (when(col("vt.id") === col("vt.tag"), lit(resetProb)).otherwise(lit(0.0)) +
+            lit(damping) * coalesce(col("sm.s"), lit(0.0))).as("pr"))
     }
     val out = p.orderBy(col("tag"), col("id")).localCheckpoint()
-    freeCkpt(p); freeCkpt(v); freeCkpt(e); freeCkpt(deg)
+    freeCkpt(p); freeCkpt(v); freeCkpt(e); freeCkpt(deg); freeCkpt(srcs)
     out
   }
 
@@ -747,7 +720,7 @@ object Algos {
         // every par value is itself a live component with a chosen edge,
         // so the self-join is total (inner is exact — oracle q_r_0)
         val mp = mm.select(col("comp"), col("par"))
-        var f = mp.as("a").join(mp.as("b"), col("b.comp") === col("a.par"))
+        val rooted = mp.as("a").join(mp.as("b"), col("b.comp") === col("a.par"))
           .select(col("a.comp").as("comp"),
             when(col("b.par") === col("a.comp"),
               least(col("a.comp"), col("a.par")))
@@ -756,16 +729,13 @@ object Algos {
         // pointer doubling to fixpoint (roots map to themselves, so the
         // composition is total and monotone toward the root; the changed
         // count rides each checkpoint job)
-        var moved = 1L
-        while (moved > 0) {
-          val (next, Tally(nMoved, _, _)) = materialize(
-              f.as("a").join(f.as("b"), col("b.comp") === col("a.par"))
-                .select(col("a.comp").as("comp"), col("a.par").as("p_old"),
-                  col("b.par").as("par")), Stats,
-              col("par") =!= col("p_old"))
-          moved = nMoved
-          freeCkpt(f)
-          f = next.drop("p_old")
+        val (f, _) = Fixpoint.run(rooted,
+            Fixpoint.materializing(Stats, col("par") =!= col("p_old")), Int.MaxValue,
+            continue = _.tally.count > 0) { (g0, _, _) =>
+          val g = g0.drop("p_old")
+          g.as("a").join(g.as("b"), col("b.comp") === col("a.par"))
+            .select(col("a.comp").as("comp"), col("a.par").as("p_old"),
+              col("b.par").as("par"))
         }
         val nextComp = comp.join(f.select(col("comp").as("c"), col("par")),
             Seq("c"), "left")
@@ -781,14 +751,13 @@ object Algos {
       round += 1
     }
     freeCkpt(edges)
-    val out =
-      if (chosen == null) s.emptyDataFrame
-      else {
-        val o = chosen.orderBy(col("u"), col("v")).localCheckpoint()
-        freeCkpt(chosen); freeCkpt(comp)
-        o
-      }
-    out
+    freeCkpt(comp)
+    if (chosen == null) s.emptyDataFrame
+    else {
+      val out = chosen.orderBy(col("u"), col("v")).localCheckpoint()
+      freeCkpt(chosen)
+      out
+    }
   }
 
   /** Deterministic random-walk corpus: one walk per vertex, `len` steps.
@@ -1145,7 +1114,7 @@ object Algos {
           .cast("long")
         x.bitwiseAND(-x)
       }).as("regs"))
-    var cur = materialize(seeded, AdaptiveHash("id"))
+    val init = materialize(seeded, AdaptiveHash("id"))
     // per-register estimate: R = index of the lowest ZERO bit of the
     // union bitmap = log2((~m) & (m+1)); ball ≈ 2^mean(R) / 0.77351
     val estimate = (df: DataFrame) => df.select(
@@ -1158,9 +1127,10 @@ object Algos {
         .divide(lit(numReg.toDouble)).as("rbar"))
       .select((pow(lit(2.0), col("rbar")) / lit(0.77351)).as("est"))
       .agg(sum(col("est"))).first().getDouble(0)
-    var out = Vector((0L, estimate(cur)))
-    (1 to maxH).foreach { h =>
-      val next = cur.select(col("id").as("src"), col("regs"))
+    var out = Vector((0L, estimate(init)))
+    val (cur, _) = Fixpoint.run(init, Fixpoint.materializing(AdaptiveHash("id")), maxH,
+        continue = r => { out :+= ((r.index + 1L, estimate(r.state))); true }) { (cur, _, _) =>
+      cur.select(col("id").as("src"), col("regs"))
         .join(e, Seq("src"))
         .select(col("dst").as("id"), posexplode(col("regs")).as(Seq("pos", "m")))
         .union(cur.select(col("id"), posexplode(col("regs")).as(Seq("pos", "m"))))
@@ -1169,10 +1139,6 @@ object Algos {
         .groupBy(col("id"))
         .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
           x => x.getField("m")).as("regs"))
-      val ck = materialize(next, AdaptiveHash("id"))
-      freeCkpt(cur)
-      cur = ck
-      out :+= ((h.toLong, estimate(cur)))
     }
     freeCkpt(cur); freeCkpt(e)
     out.toDF("h", "n_pairs_est").orderBy(col("h"))
@@ -1194,12 +1160,12 @@ object Algos {
     * Returns (id, color). */
   def greedyColoring(symEdges: DataFrame, maxRounds: Int = 64): DataFrame = {
     val e = materialize(symEdges.select("src", "dst"), AdaptiveHash("src"))
-    var verts = materialize(verticesOf(e).select(col("id"),
+    val init = materialize(verticesOf(e).select(col("id"),
       conv(substring(md5(col("id").cast("string")), 1, 15), 16, 10).cast("long").as("p"),
       lit(null).cast("long").as("color")), AdaptiveHash("id"))
-    var round = 0
-    var uncolored = verts.filter(col("color").isNull).count()
-    while (uncolored > 0 && round < maxRounds) {
+    val uncolored = Fixpoint.counted(init.filter(col("color").isNull).count())
+    val (verts, _) = Fixpoint.run(init, Fixpoint.materializing(Hash("id"), col("color").isNull),
+        maxRounds, start = Some(uncolored), continue = _.tally.count > 0) { (verts, _, _) =>
       val st = verts.select(col("id").as("dst"), col("p").as("np"), col("color").as("nc"))
       // strongest uncolored neighbor per vertex ((p, id) order)
       val nbrMax = e.join(st, Seq("dst"))
@@ -1222,14 +1188,8 @@ object Algos {
         .select(col("id"),
           aggregate(coalesce(col("cols"), array().cast("array<long>")),
             lit(0L), (acc, c) => when(c === acc, acc + 1L).otherwise(acc)).as("newc"))
-      val (next, Tally(stillUncolored, _, _)) = materialize(
-        verts.join(assigned, Seq("id"), "left")
-          .select(col("id"), col("p"), coalesce(col("color"), col("newc")).as("color")),
-        Hash("id"), col("color").isNull)
-      freeCkpt(verts)
-      verts = next
-      uncolored = stillUncolored
-      round += 1
+      verts.join(assigned, Seq("id"), "left")
+        .select(col("id"), col("p"), coalesce(col("color"), col("newc")).as("color"))
     }
     val out = verts.select(col("id"), col("color")).orderBy(col("id")).localCheckpoint()
     freeCkpt(verts); freeCkpt(e)
@@ -1640,9 +1600,9 @@ object Algos {
     * per-round joins never reshuffle the label frame. */
   def lpa(symEdges: DataFrame, rounds: Int): DataFrame = {
     val e = materialize(symEdges.select("src", "dst"), AdaptiveHash("src"))
-    var l = materialize(verticesOf(e).select(col("id"), col("id").as("lbl")), AdaptiveHash("id"))
-    var r = 0
-    while (r < rounds) {
+    val init = materialize(verticesOf(e).select(col("id"), col("id").as("lbl")), AdaptiveHash("id"))
+    val (l, _) = Fixpoint.run(init, Fixpoint.materializing(AdaptiveHash("id")), rounds) {
+        (l, _, _) =>
       val counts = e.join(l.select(col("id").as("src"), col("lbl")), Seq("src"))
         .groupBy(col("dst").as("id"), col("lbl")).agg(count(lit(1)).as("c"))
       // argmax by (count desc, label asc) without a window: struct max
@@ -1651,13 +1611,8 @@ object Algos {
         .groupBy(col("id"))
         .agg(max(struct(col("c"), (-col("lbl")).as("neg"))).as("m"))
         .select(col("id"), (-col("m.neg")).as("nl"))
-      val next = materialize(
-        l.join(pick, Seq("id"), "left")
-          .select(col("id"), coalesce(col("nl"), col("lbl")).as("lbl")),
-        AdaptiveHash("id"))
-      freeCkpt(l)
-      l = next
-      r += 1
+      l.join(pick, Seq("id"), "left")
+        .select(col("id"), coalesce(col("nl"), col("lbl")).as("lbl"))
     }
     freeCkpt(e)
     l.withColumnRenamed("lbl", "community")
@@ -1769,6 +1724,7 @@ object Algos {
       .orderBy(col("n").desc, col("comp")).limit(1).select(col("comp"))
     val coreSet = comp.join(broadcast(core), Seq("comp")).select(col("id"))
       .localCheckpoint()
+    freeCkpt(comp) // scc's per-round checkpoints: nothing reads them past coreSet
 
     // Int.MaxValue: bow-tie classification is a TRUE fixpoint (a vertex
     // 51 hops up a tendril is still "in") — reachable's per-wave fused
@@ -1812,11 +1768,13 @@ object Algos {
                      opts: PregelOptions = PregelOptions(maxSupersteps = 40)): DataFrame = {
     val e = symEdges.select("src", "dst").repartition(col("src"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var verts = verticesOf(e).select(col("id"), lit(0).as("st"))
+    val init = verticesOf(e).select(col("id"), lit(0).as("st"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var undecided = verts.count()
-    var step = 0
-    while (undecided > 0 && step < opts.maxSupersteps) {
+    val undecided = Fixpoint.counted(init.count())
+    // the undecided-count rides the checkpoint job (fused accumulator)
+    val (verts, _) = Fixpoint.run(init, Fixpoint.materializing(Stats, col("st") === 0),
+        opts.maxSupersteps, initOwned = false, start = Some(undecided),
+        continue = _.tally.count > 0) { (verts, _, _) =>
       val unk = verts.filter(col("st") === 0)
       val minNbr = e.join(unk.select(col("id").as("dst")), Seq("dst"))
         .groupBy(col("src").as("id")).agg(min(col("dst")).as("min_unk_nbr"))
@@ -1825,20 +1783,14 @@ object Algos {
         .select(col("id"))
       val outs = e.join(ins.select(col("id").as("src")), Seq("src"))
         .select(col("dst").as("id")).distinct()
-      // the undecided-count rides the checkpoint job (fused accumulator)
-      val (next, Tally(stillUndecided, _, _)) = materialize(verts
-          .join(ins.withColumn("is_in", lit(1)), Seq("id"), "left")
-          .join(outs.withColumn("is_out", lit(1)), Seq("id"), "left")
-          .select(col("id"),
-            when(col("st") =!= 0, col("st"))
-              .when(col("is_in") === 1, lit(1))
-              .when(col("is_out") === 1, lit(2))
-              .otherwise(lit(0)).as("st")), Stats,
-          col("st") === 0)
-      undecided = stillUndecided
-      if (step == 0) verts.unpersist() else freeCkpt(verts)
-      verts = next
-      step += 1
+      verts
+        .join(ins.withColumn("is_in", lit(1)), Seq("id"), "left")
+        .join(outs.withColumn("is_out", lit(1)), Seq("id"), "left")
+        .select(col("id"),
+          when(col("st") =!= 0, col("st"))
+            .when(col("is_in") === 1, lit(1))
+            .when(col("is_out") === 1, lit(2))
+            .otherwise(lit(0)).as("st"))
     }
     e.unpersist()
     verts.select(col("id"), (col("st") === 1).cast("int").as("in_set"))
@@ -1850,24 +1802,18 @@ object Algos {
     * Prep.removeStandAloneVertices (1-core). */
   def kCore(symEdges: DataFrame, k: Int,
             opts: PregelOptions = PregelOptions(maxSupersteps = 40)): DataFrame = {
-    var e = symEdges.select("src", "dst").localCheckpoint()
-    var edgeCount = e.count()
-    var changed = true
-    var step = 0
-    while (changed && step < opts.maxSupersteps && edgeCount > 0) {
+    val init = symEdges.select("src", "dst").localCheckpoint()
+    val edgeCount = Fixpoint.counted(init.count())
+    // edge-count rides the checkpoint job (fused accumulator); stable
+    // once a round drops no edge
+    val (e, _) = Fixpoint.run(init, Fixpoint.materializing(Stats, lit(true)),
+        opts.maxSupersteps, start = Some(edgeCount),
+        continue = r => r.tally.count != r.prev.count && r.tally.count > 0) { (e, _, _) =>
       val keep = e.groupBy(col("src")).agg(count(lit(1)).as("d"))
         .filter(col("d") >= k).select(col("src").as("id"))
-      // edge-count rides the checkpoint job (fused accumulator)
-      val (next, Tally(nextCount, _, _)) = materialize(e
-          .join(keep.select(col("id").as("src")), Seq("src"), "left_semi")
-          .join(keep.select(col("id").as("dst")), Seq("dst"), "left_semi")
-          .select("src", "dst"), Stats,
-          lit(true))
-      changed = nextCount != edgeCount
-      edgeCount = nextCount
-      freeCkpt(e) // every e (incl. the first) is this loop's checkpoint
-      e = next
-      step += 1
+      e.join(keep.select(col("id").as("src")), Seq("src"), "left_semi")
+        .join(keep.select(col("id").as("dst")), Seq("dst"), "left_semi")
+        .select("src", "dst")
     }
     e.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg")).orderBy(col("id"))
   }
@@ -1895,6 +1841,7 @@ object Algos {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val dl = reachable(cyclic, reversed, opts.maxSupersteps)
     reversed.unpersist()
+    freeCkpt(comp) // scc's per-round checkpoints: reachable's seed frame read them eagerly
     verticesOf(e)
       .join(dl.withColumn("d", lit(1)), Seq("id"), "left")
       .select(col("id"), coalesce(col("d") === 1, lit(false)).cast("int").as("deadlocked"))
@@ -2108,26 +2055,20 @@ object Algos {
       // rounds instead of O(longest path) (a long ring cycle needs its
       // full length in plain-propagation supersteps). Same unique
       // fixpoint, same per-round shape as wcc's FastSV loop.
-      var f = remVerts.select(col("id"), col("id").as("f_old"), col("id").as("lbl"))
-        .transform(materialize(_, Stats))
-      var changed = 1L
-      var cstep = 0
-      while (changed > 0 && cstep < opts.maxSupersteps) {
+      // changed-count fused into the checkpoint job (one barrier/round)
+      val (f, _) = Fixpoint.run(
+          remVerts.select(col("id"), col("id").as("f_old"), col("id").as("lbl"))
+            .transform(materialize(_, Stats)),
+          Fixpoint.materializing(Stats, col("lbl") > col("f_old")), opts.maxSupersteps,
+          continue = _.tally.count > 0) { (f, _, _) =>
         val m1 = remEdges
           .join(f.select(col("id").as("src"), col("lbl").as("ls")), Seq("src"))
           .groupBy(col("dst").as("id")).agg(max(col("ls")).as("m1"))
         val gp = f.select(col("id").as("gid"), col("lbl").as("gf"))
-        // changed-count fused into the checkpoint job (one barrier/round)
-        val (next, Tally(nChanged, _, _)) = materialize(f
-            .join(m1, Seq("id"), "left")
-            .join(gp, col("lbl") === col("gid"), "left")
-            .select(col("id"), col("lbl").as("f_old"),
-              greatest(col("lbl"), col("m1"), col("gf")).as("lbl")), Stats,
-            col("lbl") > col("f_old"))
-        changed = nChanged
-        freeCkpt(f) // every f (incl. the first) is this loop's checkpoint
-        f = next
-        cstep += 1
+        f.join(m1, Seq("id"), "left")
+          .join(gp, col("lbl") === col("gid"), "left")
+          .select(col("id"), col("lbl").as("f_old"),
+            greatest(col("lbl"), col("m1"), col("gf")).as("lbl"))
       }
       val colors = f.select(col("id"), col("lbl").as("color"))
         .persist(StorageLevel.MEMORY_AND_DISK)
@@ -2154,10 +2095,12 @@ object Algos {
         .select(col("dst").as("src"), col("src").as("dst"))
         .persist(StorageLevel.MEMORY_AND_DISK)
       val roots = colors.filter(col("id") === col("color")).select(col("id"))
-      val assigned = reachable(roots, colored, opts.maxSupersteps)
+      val swept = reachable(roots, colored, opts.maxSupersteps)
+      val assigned = swept
         .join(colors, Seq("id"))
         .select(col("id"), col("color").as("comp"))
         .transform(materialize(_, Stats))
+      freeCkpt(swept)
       colored.unpersist()
       assignedRounds :+= assigned
       // remainder-count fused into the remainder checkpoint job

@@ -13,14 +13,10 @@ import org.apache.spark.storage.StorageLevel
   *                        DataFrame plans grow per iteration; without eager
   *                        checkpointing the optimizer re-analyzes an
   *                        exponentially growing tree (SURVEY §7.4 risk #1).
-  * @param storageLevel    MEMORY_AND_DISK replaces the reference's whole
-  *                        out-of-core engine (giraph-core ooc/, ~7k LoC):
-  *                        Spark spills partitions natively.
   */
 final case class PregelOptions(
     maxSupersteps: Int = 50,
     checkpointEvery: Int = 6,
-    storageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK,
     /** When set, every `checkpointEvery` supersteps write a *reliable*,
       * restartable snapshot (`<dir>/step_<N>` parquet) instead of only
       * `localCheckpoint`-ing (which truncates lineage but dies with the
@@ -75,7 +71,12 @@ final case class PregelOptions(
   *    boolean `active` column maintained by the vertex program; global
   *    termination = zero active vertices (BspServiceMaster.java:1681-1684);
   *  - checkpointing (.../worker/BspServiceWorker.java:1340-1460) =
-  *    `localCheckpoint` cadence (also mandatory here to cut lineage).
+  *    `localCheckpoint` cadence (also mandatory here to cut lineage);
+  *  - the superstep loop = an instance of [[Fixpoint]], given the
+  *    superstep body, a barrier (hash(id) checkpoint or parquet snapshot)
+  *    and a continue predicate that runs the hooks;
+  *  - the out-of-core engine (giraph-core ooc/, ~7k LoC) = persisting the
+  *    caller's vertex frame MEMORY_AND_DISK: Spark spills natively.
   *
   * Scale posture: per superstep the only driver-side data is the active
   * count (a scalar) — vertex/edge/message frames never leave the cluster.
@@ -119,34 +120,24 @@ object Pregel {
     val e = CheckpointBridge.materialize(edges.toDF(), AdaptiveHash("src"))
 
     val resumed = resumePoint(spark, opts)
-    var verts = resumed.map(_._2).getOrElse(vertices).persist(opts.storageLevel)
-    var fromCaller = true
-    var active = verts.filter(col("active")).count()
-    var step = resumed.map(_._1 + 1).getOrElse(0)
-    while (active > 0L && step < opts.maxSupersteps) {
+    val init = resumed.map(_._2).getOrElse(vertices).persist(StorageLevel.MEMORY_AND_DISK)
+    val active = init.filter(col("active")).count()
+    val (out, _) = Fixpoint.run(init, materialize(opts, Some(col("active"))),
+        opts.maxSupersteps, initOwned = false, start = Some(Fixpoint.counted(active)),
+        firstRound = resumed.map(_._1 + 1).getOrElse(0),
+        continue = r => { afterSuperstep(r, opts); r.tally.count > 0 }) { (verts, step, _) =>
       opts.onBeforeSuperstep(verts, step)
-      val msgs = sendMsg(verts.filter(col("active")).join(e, col("id") === col("src")))
-        .groupBy("id").agg(combineMsg.as("msg"))
-      // eager localCheckpoint: materializes AND truncates the logical
-      // plan — without it the plan tree grows exponentially with the
-      // superstep count (each step references the previous frame 2-3
-      // times) and analysis alone OOMs (SURVEY §7.4 risk #1). The
+      // the barrier is an eager checkpoint: it materializes AND truncates
+      // the logical plan; without it the plan tree grows exponentially
+      // with the superstep count (each step references the previous frame
+      // 2-3 times) and analysis alone OOMs (SURVEY §7.4 risk #1). The
       // active-count rides the materialization job (fused accumulator):
       // one driver barrier per superstep, not two.
-      val (newVerts, nActive) = materialize(vprog(verts, msgs), step, opts, Some(col("active")))
-      active = nActive
-      writeAggregates(newVerts, step, opts)
-      opts.onSuperstep(newVerts, step)
-      // first frame is the caller's (persisted — plain unpersist; freeing
-      // its plan leaves could kill caller-owned checkpoints); later frames
-      // are this loop's own materialize() products
-      if (fromCaller) { verts.unpersist(); fromCaller = false }
-      else CheckpointBridge.free(verts)
-      verts = newVerts
-      step += 1
+      vprog(verts, sendMsg(verts.filter(col("active")).join(e, col("id") === col("src")))
+        .groupBy("id").agg(combineMsg.as("msg")))
     }
     CheckpointBridge.free(e)
-    verts
+    out
   }
 
   /** [[run]] with NO MessageCombiner — the reference's default mode:
@@ -188,25 +179,14 @@ object Pregel {
       step: (DataFrame, Int) => DataFrame,
       master: (DataFrame, Int) => Boolean = (_, _) => true): DataFrame = {
     val resumed = resumePoint(vertices.sparkSession, opts)
-    var verts = resumed.map(_._2).getOrElse(vertices).persist(opts.storageLevel)
-    var fromCaller = true
-    verts.count()
-    var i = resumed.map(_._1 + 1).getOrElse(0)
-    var go = true
-    while (i < iterations && go) {
+    val init = resumed.map(_._2).getOrElse(vertices).persist(StorageLevel.MEMORY_AND_DISK)
+    init.count()
+    Fixpoint.run(init, materialize(opts, None), iterations, initOwned = false,
+        firstRound = resumed.map(_._1 + 1).getOrElse(0),
+        continue = r => { afterSuperstep(r, opts); master(r.state, r.index) }) { (verts, i, _) =>
       opts.onBeforeSuperstep(verts, i)
-      // materialize is eager (both checkpoint flavors) — it already ran
-      // the superstep's job, so no extra action is needed here
-      val (next, _) = materialize(step(verts, i), i, opts, None)
-      writeAggregates(next, i, opts)
-      opts.onSuperstep(next, i)
-      if (fromCaller) { verts.unpersist(); fromCaller = false }
-      else CheckpointBridge.free(verts)
-      verts = next
-      go = master(verts, i)
-      i += 1
-    }
-    verts
+      step(verts, i)
+    }._1
   }
 
   /** A text-sink AggregatorWriter appending "superstep<TAB>name<TAB>value"
@@ -221,21 +201,24 @@ object Pregel {
       finally w.close()
     }
 
-  /** Evaluate the configured aggregators over the (already materialized)
-    * superstep frame and hand the scalars to the writer — one extra
-    * aggregation job per superstep, only when aggregators are set. */
-  private def writeAggregates(verts: DataFrame, step: Int, opts: PregelOptions): Unit =
+  /** The post-superstep hooks, run on the (already materialized)
+    * superstep frame: the configured aggregators are evaluated and their
+    * scalars handed to the writer (one extra aggregation job per
+    * superstep, only when aggregators are set), then `onSuperstep` runs. */
+  private def afterSuperstep(r: Fixpoint.Round, opts: PregelOptions): Unit = {
     opts.aggregatorWriter.foreach { w =>
       if (opts.aggregators.nonEmpty) {
         val exprs = opts.aggregators.toSeq.map { case (nm, c) => c.as(nm) }
-        val row = verts.agg(exprs.head, exprs.tail: _*).first()
-        w(step, opts.aggregators.keys.map(nm => nm -> row.getAs[Any](nm)).toMap)
+        val row = r.state.agg(exprs.head, exprs.tail: _*).first()
+        w(r.index, opts.aggregators.keys.map(nm => nm -> row.getAs[Any](nm)).toMap)
       }
     }
+    opts.onSuperstep(r.state, r.index)
+  }
 
-  /** Eagerly materialize one superstep's frame with truncated lineage,
-    * counting the rows where `active` is true when given (0 otherwise).
-    * On the configured cadence with a checkpoint dir set, a
+  /** The superstep barrier: eagerly materialize one superstep's frame
+    * with truncated lineage, counting the rows where `active` is true
+    * when given. On the configured cadence with a checkpoint dir set, a
     * *restartable* parquet snapshot (`<dir>/step_<N>`) is read straight
     * back (the write is the materializing action; the read-back plan is a
     * bare scan — both reliable and resumable, unlike `RDD.checkpoint`
@@ -243,19 +226,16 @@ object Pregel {
     * job over it. Otherwise a declared-hash(id) checkpoint: AQE-off with
     * the count fused into its one job when counting, adaptive for the
     * fixed-iteration loops, whose frames carry no `active` column. */
-  private def materialize(df: DataFrame, step: Int, opts: PregelOptions,
-                          active: Option[Column]): (DataFrame, Long) =
-    opts.checkpointDir match {
+  private def materialize(opts: PregelOptions, active: Option[Column]): Fixpoint.Barrier =
+    (df, step) => opts.checkpointDir match {
       case Some(dir) if (step + 1) % opts.checkpointEvery == 0 =>
         val path = s"$dir/step_$step"
         df.write.mode("overwrite").parquet(path)
         val back = df.sparkSession.read.parquet(path)
-        (back, active.fold(0L)(back.filter(_).count()))
+        (back, active.fold(Fixpoint.Unmeasured)(a => Fixpoint.counted(back.filter(a).count())))
       case _ => active match {
-        case Some(a) =>
-          val (ck, t) = CheckpointBridge.materialize(df, Hash("id"), a)
-          (ck, t.count)
-        case None => (CheckpointBridge.materialize(df, AdaptiveHash("id")), 0L)
+        case Some(a) => CheckpointBridge.materialize(df, Hash("id"), a)
+        case None => Fixpoint.materializing(AdaptiveHash("id"))(df, step)
       }
     }
 

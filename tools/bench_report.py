@@ -1,6 +1,7 @@
 #!/usr/bin/env python3
 """Summarize a bench_out.json: top queries by seconds with jobs/gc_ms,
-and (optionally) a diff against a second artifact. Usage:
+and (optionally) a diff against a second artifact, which also lists every
+query whose job count differs between the two. Usage:
   tools/bench_report.py bench_out.json [old_bench_out.json] [-n 40]
 """
 import json, sys
@@ -38,6 +39,12 @@ def main():
             print("\nregressions (>1s and >1.3x):")
             for k, v, ov in sorted(regs, key=lambda x: -(x[1] / x[2])):
                 print(f"  {k:32s} {ov:.2f} -> {v:.2f}  jobs {oj.get(k,-1)}->{js.get(k,0)}")
+        # the job census: every query whose job count moved, whatever its time
+        jdiff = sorted(k for k in set(js) | set(oj) if js.get(k, -1) != oj.get(k, -1))
+        print(f"\njob count differs on {len(jdiff)} of {len(set(js) | set(oj))} queries"
+              + (":" if jdiff else ""))
+        for k in jdiff:
+            print(f"  {k:32s} jobs {oj.get(k, -1)} -> {js.get(k, -1)}")
     else:
         print(f"{'query':34s} {'sec':>8s} {'jobs':>5s} {'gc_ms':>6s}")
         for k, v in rows:
