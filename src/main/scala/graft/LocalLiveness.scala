@@ -10,7 +10,7 @@ import org.apache.spark.sql.SparkSession
   * twice at probe scale: a post-query System.gc() on the 48 g heap and
   * a spill-heavy CDC join each froze the JVM 2.5–3 min) still gets the
   * executor "removed" by HeartbeatReceiver and the context shut down
-  * mid-run. Every local main (Verify, Bench, probes, the CLI's local
+  * mid-run. Every local main (Verify, Bench, Profile, the CLI's local
   * default) widens the window; cluster submissions keep Spark defaults
   * (there the heartbeat IS the liveness signal — see GraftRunner's
   * SPARK_MASTER branch, which does not apply this). */
@@ -18,11 +18,21 @@ object LocalLiveness {
   /** The 600 s default also delays RPC ask timeouts that inherit
     * spark.network.timeout, so a genuinely wedged local run takes up
     * to 10 min to be declared dead (ADVICE r12) — acceptable for the
-    * unattended probe/bench/driver runs this guards, but interactive
+    * unattended profile/bench/driver runs this guards, but interactive
     * dev runs can dial it back via SPARK_GRAFT_NETWORK_TIMEOUT
     * (any Spark duration string, e.g. "120s"). */
   def widen(b: SparkSession.Builder): SparkSession.Builder =
     b.config("spark.network.timeout",
         sys.env.getOrElse("SPARK_GRAFT_NETWORK_TIMEOUT", "600s"))
       .config("spark.executor.heartbeatInterval", "60s")
+
+  /** The one local session builder of the Bench, Verify and Profile
+    * mains: `local[cpus]` with as many shuffle partitions, no UI, UTC
+    * session time and the widened liveness window. */
+  def local(cpus: Int): SparkSession.Builder =
+    widen(SparkSession.builder())
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.session.timeZone", "UTC")
 }

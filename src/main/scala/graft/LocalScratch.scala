@@ -13,9 +13,10 @@ import org.apache.spark.sql.SparkSession
   * RAM-speed (measured 1.0 GB/s vs 178–470 MB/s to disk), zeroed per
   * boot, and per-process dirs are deleted by Spark on clean shutdown.
   *
-  * Scope: applied by the Bench and Verify mains ONLY. The scale probes
-  * keep disk scratch — their spill volumes (70+ GB at 100×) exceed
-  * RAM, which is exactly the regime where tmpfs would OOM the box.
+  * Scope: applied by the Bench and Verify mains ONLY. graft.tools.Profile
+  * keeps disk scratch: its `--copies` corpora spill 70+ GB at 100×
+  * (PLANS.md, "Round-12: collision-free second decade"), more than RAM,
+  * which is exactly the regime where tmpfs would OOM the box.
   * A real cluster submission is untouched (this is a local-mode main
   * concern; at fleet scale the equivalent lever is NVMe local dirs or
   * disaggregated shuffle, a deployment choice, not engine code).

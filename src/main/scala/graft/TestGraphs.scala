@@ -12,14 +12,14 @@ import org.apache.spark.sql.functions._
 object TestGraphs {
 
   /** Namespace offset so supplier ids don't collide with customer ids.
-    * Env-overridable (SPARK_GRAFT_SUPP_OFFSET) for the second-decade
-    * scale probe ONLY: 100 key-offset copies push custkeys past the
-    * 1e6 default, aliasing ~6% of vertices into the supplier range
-    * (round-11 'What's wrong #3' — it merged components and biased the
-    * 100× ratios up). ScaleProbe sets 1e9 so the construction is
-    * collision-free at any probe scale; every builder and every *Sql
-    * oracle twin reads this one val, so the Spark and DuckDB graphs
-    * stay byte-identical under any override. Unset (the driver's
+    * Env-overridable (SPARK_GRAFT_SUPP_OFFSET) for large copied corpora
+    * ONLY: 100 key-offset copies ([[TestCorpora.copies]]) push custkeys
+    * past the 1e6 default and would alias vertices into the supplier
+    * range, merging components; `copies` refuses such a build, and 1e9
+    * makes it collision-free at any copy count (PLANS.md, "Round-12:
+    * collision-free second decade"). Every builder and every *Sql oracle
+    * twin reads this one val, so the Spark and DuckDB graphs stay
+    * byte-identical under any override. Unset (the driver's
     * correctness/bench runs), the value is the historical 1e6. */
   val SuppOffset: Long = sys.env.get("SPARK_GRAFT_SUPP_OFFSET")
     .map(_.toLong).getOrElse(1000000L)

@@ -1,40 +1,32 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // RAM-backed scratch (LocalScratch): the driver's correctness drive
-    // is sf0.01 — tiny spills. Probe-scale corpora pushed through
-    // Verify (e.g. the 50x CDC pair dump) must export
-    // SPARK_GRAFT_LOCAL_DIR=disk: their spill exceeds RAM.
-    val spark = LocalScratch.fast(LocalLiveness.widen(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    // is sf0.01, whose spills are tiny. A corpus whose spill exceeds RAM
+    // (PLANS.md, "Round-12 continuation #4": the 50× CDC pair dump) must
+    // be run with SPARK_GRAFT_LOCAL_DIR=disk.
+    val spark = LocalScratch.fast(LocalLiveness.local(Bench.cpus)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val recorder = new graft.obs.Recorder(spark)
     new java.io.File(outDir).mkdirs()
     // optional name filter for fast local iteration (unset => all)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
+        // the recorder's cleanup after each query drops its leftover
+        // checkpoints, so one query's cache can't starve the next
+        recorder.measure {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+          -1L
+        }.error.foreach { e =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
           e.printStackTrace()
         }
-        // queries persist/checkpoint internally; drop leftovers so one
-        // query's cache can't starve the next (localCheckpoint blocks are
-        // plain persistent RDDs — clearCache alone misses them)
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
       }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

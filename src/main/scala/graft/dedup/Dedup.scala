@@ -26,20 +26,23 @@ object Dedup {
   /** Default per-bucket member cap for the banding candidate self-joins
     * ([[bucketPairs]]). Still generous at test scale — measured max
     * bucket at sf0.1 is 6 (minhash, 19k buckets) and 3 (simhash, 9.8k
-    * buckets; tools_dev.GuardProbe SPARK_GRAFT_BUCKET_STATS) — binding
-    * at 100 TB where one degenerate boilerplate bucket would otherwise
-    * quadratically dominate (GuardProbe demo: 200k identical docs →
-    * 199,999 star candidates in 10.6 s instead of ~2·10¹⁰ pairs).
+    * buckets) — binding at 100 TB where one degenerate boilerplate bucket
+    * would otherwise quadratically dominate (200k identical docs →
+    * 199,999 star candidates in 10.6 s instead of ~2·10¹⁰ pairs). Both
+    * measurements: PLANS.md, "Round-11 second probe batch + code-review
+    * fixes".
     *
-    * Lowered 10000 → 2000 after the round-14 SkewProbe measured the
-    * regime the old cap still admitted: a 5000-member bucket (allowed
+    * Lowered 10000 → 2000 after the round-14 skew measurement (PLANS.md,
+    * "Round-14: the skew decade") found the regime the old cap still
+    * admitted: a 5000-member bucket (allowed
     * unguarded) put its 12.5M-pair expansion into ONE task holding
     * 82-87% of the whole query wall — a bucket self-join's hot key is
     * a single shuffle partition, so everything under the cap is a
     * straggler bound, not just a volume bound. Worst single-task pair
     * volume is now 2M (measured seconds) instead of 50M (measured
     * minutes-class); real buckets keep two orders of magnitude of
-    * headroom, so non-degenerate corpora never see the guard fire. */
+    * headroom, so non-degenerate corpora never see the guard fire.
+    * PipelineSpec's planted-bucket cases pin the guard. */
   val DefaultMaxBucket: Int = 2000
 
   /** Candidate pairs from a banded frame — the one self-join every LSH
@@ -622,17 +625,17 @@ object Dedup {
           / col("uni")).cast("long").as("jaccard_e6"))
   }
 
-  /** [[jaccardJoin]] with its stages exposed for cost attribution
-    * (ScaleProbe's breakdown mode): (sorted-token frame, candidate-pair
-    * frame, scored candidates (a, b, na, nb, inter) unfiltered, verified
-    * output). `out` is the LIVE pipeline (no barrier): built lazily, the
-    * threshold filter folds into the verify join and re-evaluates
-    * array_intersect per condition reference — the probes keep it so
-    * historical stage attributions stay comparable; the query path
-    * ([[jaccardJoin]]) checkpoints `scored` instead and applies
-    * [[finishJaccard]] above the barrier for a single evaluation per
-    * candidate. Callers other than the probes use the single-frame
-    * wrapper above.
+  /** [[jaccardJoin]] with its stages exposed for cost attribution (the
+    * tok/candJoin/verify breakdown in PLANS.md, "Recall-audit truth pass
+    * at 10×"): (sorted-token frame, candidate-pair frame, scored
+    * candidates (a, b, na, nb, inter) unfiltered, verified output). `out`
+    * is the LIVE pipeline (no barrier): built lazily, the threshold filter
+    * folds into the verify join and re-evaluates array_intersect per
+    * condition reference, so stage attributions stay comparable with the
+    * recorded ones; the query path ([[jaccardJoin]]) checkpoints `scored`
+    * instead and applies [[finishJaccard]] above the barrier for a single
+    * evaluation per candidate. Query callers use the single-frame wrapper
+    * above.
     *
     * The token checkpoint is freed here: it feeds only `sorted`, which is
     * already materialized. Two checkpoints stay live for the caller to

@@ -820,7 +820,7 @@ object Algos {
     // expensive lazy derivation — partCoPairs is a lineitem self-join +
     // distinct. Re-deriving it per reference read flat at sf0.1 but was
     // the dominant term of a 17.1× blow-up at the 10× decade
-    // (ScaleProbe r11): three 10×-sized self-join+distinct evaluations,
+    // (round 11, PLANS.md): three 10×-sized self-join+distinct evaluations,
     // each spilling, where one checkpointed pass suffices.
     val e = pairs.select(col("u"), col("v")).localCheckpoint()
     val sup = edgeSupport(e)
@@ -935,7 +935,7 @@ object Algos {
     * broadcast to a full exchange+sort of the whole reached set every
     * round once the ball outgrew the broadcast threshold (q_graph_
     * neighborhood measured 15.1× on the 10× events decade before this
-    * fix — ScaleProbe r10, PLANS.md). It also removes the per-round
+    * fix — round 10, PLANS.md). It also removes the per-round
     * settled∪next re-checkpoint: each frontier stays its own checkpoint
     * and the settled result is their lazy union.
     *
@@ -1001,7 +1001,7 @@ object Algos {
     * re-checkpointed at all. Before round 10 this anti-joined the whole
     * settled ball, which broadcast at sf0.1 but flipped to a per-round
     * full exchange+sort of the ball at the 10× events decade — measured
-    * 15.1× there (ScaleProbe r10, PLANS.md); the frontier rule restores
+    * 15.1× there (round 10, PLANS.md); the frontier rule restores
     * the output-linear bill. The driver sees maxH+1 count scalars.
     * [[anfSketch]] is the constant-state sketch variant for when even
     * the sampled pair frame is too wide (AlgosSpec asserts it tracks

@@ -668,4 +668,21 @@ class AlgosSpec extends SparkSpec {
       assert(rel < 0.15, s"h=$h est=${est(h)} exact=${exact(h)} rel=$rel")
     }
   }
+
+  test("wcc over a planted hub on sf0.001 custSuppSym is one component holding the hub") {
+    val base = graft.TestGraphs.custSuppSym(graft.Tables(spark, "/root/testdata/sf0.001"))
+      .select("src", "dst", "w")
+    val g = graft.TestCorpora.plantedHub(base, pct = 10)
+    val (nE, nV) = (base.count(), base.select("src").distinct().count())
+    val hubId = base.agg(greatest(max(col("src")), max(col("dst")))).first().getLong(0) + 1
+    // the hub reaches every vertex, in both directions, with >= 10% of |E|
+    val out = g.filter(col("src") === hubId)
+    val in = g.filter(col("dst") === hubId)
+    assert(out.count() == in.count() && out.count() >= nE / 10)
+    assert(out.select("dst").distinct().count() == nV)
+    assert(g.count() == nE + 2 * out.count())
+    val cc = Algos.wcc(g.select("src", "dst"))
+    assert(cc.count() == nV + 1)
+    assert(cc.select("component").distinct().count() == 1)
+  }
 }

@@ -1,8 +1,10 @@
 #!/usr/bin/env python3
-"""Summarize a bench_out.json: top queries by seconds with jobs/gc_ms,
-and (optionally) a diff against a second artifact, which also lists every
-query whose job count differs between the two. Usage:
-  tools/bench_report.py bench_out.json [old_bench_out.json] [-n 40]
+"""Summarize a bench artifact (bench_out_c{cpus}.json): top queries by
+seconds with jobs/gc_ms, and (optionally) a diff against a second artifact,
+which also lists every query whose job count differs between the two. Two
+artifacts of different widths (`cpus`) are not comparable: the report then
+prints both widths and exits 2. Usage:
+  tools/bench_report.py bench_out_c4.json [old_bench_out_c4.json] [-n 40]
 """
 import json, sys
 
@@ -20,8 +22,12 @@ def main():
     args = argv
     cur = load(args[0])
     old = load(args[1]) if len(args) > 1 else None
+    if old and cur.get('cpus') != old.get('cpus'):
+        print(f"width mismatch: {args[0]} has cpus={cur.get('cpus')}, "
+              f"{args[1]} has cpus={old.get('cpus')}", file=sys.stderr)
+        sys.exit(2)
     qs, js, gs = cur['queries'], cur.get('jobs', {}), cur.get('gc_ms', {})
-    print(f"total={cur['value']}s n={len(qs)} passes={cur.get('n_passes')} "
+    print(f"total={cur['value']}s cpus={cur.get('cpus')} n={len(qs)} passes={cur.get('n_passes')} "
           f"err={cur.get('n_err')} local_dir={cur.get('local_dir')}")
     rows = sorted(qs.items(), key=lambda x: -abs(x[1]))[:n]
     if old:
