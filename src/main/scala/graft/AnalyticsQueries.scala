@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CheckpointBridge.owned
 
 /** Round-6 second-wave event/ops analytics: rolling distinct windows,
   * sweep-line concurrency, distributional audits (Benford), changepoint
@@ -778,9 +779,9 @@ object AnalyticsQueries {
     * oracle recomputes them independently via transitive-closure
     * squaring ([[graft.sql.OracleGen.sccSql]]) and replays the
     * contraction joins. */
-  private def qCondensation(s: SparkSession, dir: String): DataFrame = {
-    val e = TestGraphs.waitFor(Tables(s, dir)).localCheckpoint()
-    val comp = graph.Algos.scc(e).localCheckpoint()
+  private def qCondensation(s: SparkSession, dir: String): DataFrame = owned { o =>
+    val e = o(TestGraphs.waitFor(Tables(s, dir)).localCheckpoint())
+    val comp = o(graph.Algos.scc(e)).localCheckpoint()
     val ce = e
       .join(comp.select(col("id").as("src"), col("comp").as("c1")), Seq("src"))
       .join(comp.select(col("id").as("dst"), col("comp").as("c2")), Seq("dst"))
@@ -952,9 +953,9 @@ object AnalyticsQueries {
     * decomposition. Each rung is one [[graft.graph.Algos.kCore]]
     * fixpoint (converged; the oracle unrolls 16 peel rounds, trailing
     * rounds no-ops). sum_deg counts symmetric edge ends (2·edges). */
-  private def qCoreLadder(s: SparkSession, dir: String): DataFrame = {
-    val e = TestGraphs.custSuppSym(Tables(s, dir)).select("src", "dst")
-      .localCheckpoint()
+  private def qCoreLadder(s: SparkSession, dir: String): DataFrame = owned { o =>
+    val e = o(TestGraphs.custSuppSym(Tables(s, dir)).select("src", "dst")
+      .localCheckpoint())
     CoreLadderKs.map { k =>
       graph.Algos.kCore(e, k.toInt)
         .agg(count(lit(1)).as("n_vertices"),
@@ -1323,16 +1324,16 @@ object AnalyticsQueries {
     * persisted once; per-day work ∝ increment + component-graph size).
     * Reference analogue: the mutable-graph recompute avoidance that
     * motivates giraph's SimpleMutateGraphComputation family. */
-  private def qWccIncremental(s: SparkSession, dir: String): DataFrame = {
-    val ce = TestGraphs.custSupp(Tables(s, dir)).select(col("src"), col("dst"))
-      .localCheckpoint()
+  private def qWccIncremental(s: SparkSession, dir: String): DataFrame = owned { o =>
+    val ce = o(TestGraphs.custSupp(Tables(s, dir)).select(col("src"), col("dst"))
+      .localCheckpoint())
     val split = pmod(graft.pipeline.Corpus.md5Uniform(
       concat_ws(":", col("src"), col("dst"))), lit(5L))
     val base = ce.filter(split =!= 0L)
-    val inc = ce.filter(split === 0L).localCheckpoint()
+    val inc = o(ce.filter(split === 0L).localCheckpoint())
     def symm(df: DataFrame): DataFrame =
       df.union(df.select(col("dst").as("src"), col("src").as("dst")))
-    val labels = graph.Algos.wcc(symm(base))
+    val labels = o(graph.Algos.wcc(symm(base)))
     val verts = symm(ce).select(col("src").as("id")).distinct()
     val lab = verts.join(labels, Seq("id"), "left")
       .select(col("id"), coalesce(col("component"), col("id")).as("lbl"))

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CheckpointBridge.owned
 
 import graft.dedup.Dedup
 import graft.multimodal.Multimodal
@@ -289,10 +290,11 @@ object PipelineQueries {
   /** Transitive dup clusters over the MinHash near-dup pair graph (the
     * actionable final step of a dedup pass: min-id survivor per cluster).
     * Oracle = the shared pair CTEs + a min-label-propagation unroll. */
-  private def qDedupClusters(s: SparkSession, dir: String): DataFrame =
+  private def qDedupClusters(s: SparkSession, dir: String): DataFrame = owned { o =>
     Dedup.dupClusters(
-      Dedup.minhashDupPairs(Tables(s, dir).documents).select(col("a"), col("b")))
+      o(Dedup.minhashDupPairs(Tables(s, dir).documents)).select(col("a"), col("b")))
       .orderBy(col("id"))
+  }
 
   private val qDedupClustersSql = graft.sql.OracleGen.labelPropSql(
     s"""$minhashPairsCtes,
@@ -305,10 +307,10 @@ object PipelineQueries {
     * multi-member cluster ([[graft.dedup.Dedup.keepBestPerCluster]],
     * score = n_chars, max-id tiebreak) — the quality-aware alternative to
     * min-id survival. */
-  private def qDedupKeepBest(s: SparkSession, dir: String): DataFrame = {
+  private def qDedupKeepBest(s: SparkSession, dir: String): DataFrame = owned { o =>
     val docs = Tables(s, dir).documents
     Dedup.keepBestPerCluster(docs,
-      Dedup.minhashDupPairs(docs).select(col("a"), col("b")))
+      o(Dedup.minhashDupPairs(docs)).select(col("a"), col("b")))
   }
 
   private val qDedupKeepBestSql =
@@ -321,11 +323,12 @@ object PipelineQueries {
        |FROM r WHERE rn = 1 AND n_members >= 2 ORDER BY cluster""".stripMargin.replace('\n', ' ')
 
   /** The dedup action: corpus minus non-canonical cluster members. */
-  private def qDedupFiltered(s: SparkSession, dir: String): DataFrame =
+  private def qDedupFiltered(s: SparkSession, dir: String): DataFrame = owned { o =>
     Dedup.dropDuplicateDocs(
       Tables(s, dir).documents.select(col("doc_id"), col("source")),
-      Dedup.minhashDupPairs(Tables(s, dir).documents).select(col("a"), col("b")))
+      o(Dedup.minhashDupPairs(Tables(s, dir).documents)).select(col("a"), col("b")))
       .orderBy(col("doc_id"))
+  }
 
   private val qDedupFilteredSql =
     s"""SELECT doc_id, source FROM documents
@@ -804,9 +807,10 @@ object PipelineQueries {
     * (WCC, min-id canonical — [[graft.dedup.Dedup.dupClusters]]); the
     * oracle closes the same pair set with unrolled min-label
     * propagation. */
-  private def qSemDedupKeep(s: SparkSession, dir: String): DataFrame =
-    Dedup.dupClusters(qSemDedup(s, dir).select(col("a"), col("b")))
+  private def qSemDedupKeep(s: SparkSession, dir: String): DataFrame = owned { o =>
+    Dedup.dupClusters(o(qSemDedup(s, dir)).select(col("a"), col("b")))
       .orderBy(col("id"))
+  }
 
   /** Shared oracle prefix for the SemDeDup pair: planted corpus →
     * k-means chain (c0 seeds, a1 assign, c1 update, a2 final assign —
@@ -1189,10 +1193,10 @@ object PipelineQueries {
     * Signatures are computed once (persisted) and re-banded per config;
     * each config is a self-join on its own (band, hash) key, exactly the
     * production pipeline's shape with only the constant changed. */
-  private def qDedupBandTuning(s: SparkSession, dir: String): DataFrame = {
+  private def qDedupBandTuning(s: SparkSession, dir: String): DataFrame = owned { o =>
     val docs = Tables(s, dir).documents
-    val sigs = Dedup.withMinhash(docs, shingleLen = 8, numHashes = 16)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sigs = o(Dedup.withMinhash(docs, shingleLen = 8, numHashes = 16)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val sh = sigs.select(col("doc_id"), col("sh"))
     val configs = Seq((2, 8), (4, 4), (8, 2))
     // r15 (guide §1.2 "don't compute things you throw away"): the three
@@ -1205,11 +1209,11 @@ object PipelineQueries {
     // per-config (n_candidates, n_dups) are over the identical pair
     // sets, and `dup` is a deterministic function of the pair, so the
     // aggregates are unchanged by construction.
-    val tagged = configs.map { case (b, r) =>
-      Dedup.lshCandidates(sigs, b, r)
+    val tagged = o(configs.map { case (b, r) =>
+      o(Dedup.lshCandidates(sigs, b, r))
         .select(lit(b.toLong).as("bands"), lit(r.toLong).as("rows_per_band"),
           col("ida"), col("idb"))
-    }.reduce(_ unionByName _).localCheckpoint()
+    }.reduce(_ unionByName _).localCheckpoint())
     val verdict = tagged.select(col("ida"), col("idb")).distinct()
       .join(sh.select(col("doc_id").as("ida"), col("sh").as("sha")), Seq("ida"))
       .join(sh.select(col("doc_id").as("idb"), col("sh").as("shb")), Seq("idb"))
@@ -1228,7 +1232,7 @@ object PipelineQueries {
       configs.map { case (b, r) => (b.toLong, r.toLong) }
         .toDF("bands", "rows_per_band")
     }
-    val out = seed.join(counts, Seq("bands", "rows_per_band"), "left")
+    seed.join(counts, Seq("bands", "rows_per_band"), "left")
       .select(col("bands"), col("rows_per_band"),
         coalesce(col("n_candidates"), lit(0L)).as("n_candidates"),
         coalesce(col("n_dups"), lit(0L)).as("n_dups"))
@@ -1238,9 +1242,6 @@ object PipelineQueries {
           expr("(n_dups * 1000000) div n_candidates")).otherwise(lit(0L))
           .as("precision_e6"))
       .orderBy(col("bands")).localCheckpoint()
-    sigs.unpersist()
-    org.apache.spark.sql.graft.CheckpointBridge.free(tagged)
-    out
   }
 
   private val qDedupBandTuningSql = {
@@ -1272,7 +1273,7 @@ object PipelineQueries {
     * number a dedup deployment must publish. One signature pass + one
     * exact join; the oracle recomputes the truth by the independent
     * brute shingle-posting join AND replays the banding. */
-  private def qDedupRecallAudit(s: SparkSession, dir: String): DataFrame = {
+  private def qDedupRecallAudit(s: SparkSession, dir: String): DataFrame = owned { o =>
     // deterministic half-corpus sample: recall/precision are RATIO
     // estimates, so a fixed 1-in-2 slice answers the audit question at
     // a quarter of the pair cost (the exact-Jaccard truth side is the
@@ -1283,20 +1284,20 @@ object PipelineQueries {
     // reads it twice internally (df pass + sorted-token build) and the
     // MinHash side once more — unshared, that is three full text-shingle
     // scans of the corpus for one audit.
-    val sh = docs.select(col("doc_id"),
+    val sh = o(docs.select(col("doc_id"),
         graft.text.TextFunctions.shingleSet(col("text"), 8).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val truth = Dedup.jaccardJoin(
-        sh.select(col("doc_id"), col("sh").as("items")), thresholdPct = 70)
-      .select(col("a"), col("b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cands = Dedup.lshCandidates(
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val exact = o(Dedup.jaccardJoin(
+        sh.select(col("doc_id"), col("sh").as("items")), thresholdPct = 70))
+    val truth = o(exact.select(col("a"), col("b"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val lsh = o(Dedup.lshCandidates(
         sh.withColumn("sig",
-          graft.text.TextFunctions.minhashSignature(col("sh"), 16)), 4, 4)
-      .select(col("ida").as("a"), col("idb").as("b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          graft.text.TextFunctions.minhashSignature(col("sh"), 16)), 4, 4))
+    val cands = o(lsh.select(col("ida").as("a"), col("idb").as("b"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val hits = truth.join(cands, Seq("a", "b"), "left_semi")
-    val out = truth.agg(count(lit(1)).as("n_truth"))
+    truth.agg(count(lit(1)).as("n_truth"))
       .crossJoin(cands.agg(count(lit(1)).as("n_cands")))
       .crossJoin(hits.agg(count(lit(1)).as("n_hits")))
       .select(col("n_truth"), col("n_cands"), col("n_hits"),
@@ -1305,8 +1306,6 @@ object PipelineQueries {
         when(col("n_cands") > 0, expr("(n_hits * 1000000) div n_cands"))
           .otherwise(lit(0L)).as("precision_e6"))
       .localCheckpoint()
-    sh.unpersist(); truth.unpersist(); cands.unpersist()
-    out
   }
 
   private val qDedupRecallAuditSql =

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CheckpointBridge.owned
 
 import graft.graph.{Algos, Prep}
 import graft.functions.Sketches
@@ -2411,10 +2412,9 @@ object Queries {
     * ([[graft.graph.Algos.modularity]] ∘ [[graft.graph.Algos.lpa]]) —
     * the "was this community structure real" follow-up every LPA run
     * needs. Exact integer numerators; one scalar m2. */
-  private def qModularity(s: SparkSession, dir: String): DataFrame = {
+  private def qModularity(s: SparkSession, dir: String): DataFrame = owned { o =>
     val e = custSuppSymE(s, dir).select("src", "dst")
-    val comm = Algos.lpa(e, rounds = 4)
-    Algos.modularity(e, comm)
+    Algos.modularity(e, o(Algos.lpa(e, rounds = 4)))
       .select(col("community"), col("n_members"), col("internal2"),
         col("deg_sum"), e6(col("contrib")).as("contrib_e6"))
       .orderBy(col("community"))

@@ -2,8 +2,9 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.CheckpointBridge
-import org.apache.spark.sql.graft.CheckpointBridge.{AdaptiveHash, materialize}
+import org.apache.spark.sql.graft.CheckpointBridge.{AdaptiveHash, materialize, owned}
+
+import graft.graph.Fixpoint
 
 /** Round-6 sixth wave: sequential-recurrence analytics (EWMA folds),
   * experimentation (CUPED variance reduction), video scene-cut
@@ -687,9 +688,9 @@ object SignalQueries {
     * bounded 3² = 9 paths whatever the degree distribution. That bound
     * is the point at 100 TB: hub vertices cost the same as leaves.
     * Output: per-vertex sampled-2-hop panel. */
-  private def qSampleFanout(s: SparkSession, dir: String): DataFrame = {
+  private def qSampleFanout(s: SparkSession, dir: String): DataFrame = owned { o =>
     import org.apache.spark.sql.expressions.Window
-    val cp = TestGraphs.partCoPairs(Tables(s, dir)).localCheckpoint()
+    val cp = o(TestGraphs.partCoPairs(Tables(s, dir)).localCheckpoint())
     val e = cp.select(col("u").as("src"), col("v").as("dst"))
       .union(cp.select(col("v").as("src"), col("u").as("dst")))
     val h1 = e.withColumn("r", row_number().over(
@@ -734,9 +735,9 @@ object SignalQueries {
     * standard zipWithIndex-style dense id-map, built distributed via
     * [[graft.operators.DistributedRank]] (range-partitioned offset
     * rank — no global window over the vertex list). */
-  private def qNegativeSamples(s: SparkSession, dir: String): DataFrame = {
+  private def qNegativeSamples(s: SparkSession, dir: String): DataFrame = owned { o =>
     import org.apache.spark.sql.expressions.Window
-    val cp = TestGraphs.partCoPairs(Tables(s, dir)).localCheckpoint()
+    val cp = o(TestGraphs.partCoPairs(Tables(s, dir)).localCheckpoint())
     val e = cp.select(col("u").as("src"), col("v").as("dst"))
       .union(cp.select(col("v").as("src"), col("u").as("dst")))
       .localCheckpoint()
@@ -871,22 +872,7 @@ object SignalQueries {
     * extension fan-out is out-degree-bounded in the oriented (acyclic)
     * graph — the same arboricity argument as the triangle pass.
     * Single-row (n_triangles, n_k4) output. */
-  private def qK4(s: SparkSession, dir: String): DataFrame =
-    k4Census(s, dir, batches = 1)
-
-  /** K4 census with the same BOUNDED-SCRATCH batched mode as
-    * [[itemCf]]: every oriented clique is owned by its MIN vertex x
-    * (= a.u of the seed edge), so splitting the `a` side by
-    * `xxhash64(u) % batches` partitions the census exactly — each
-    * batch enumerates the triangles and K4 extensions whose min vertex
-    * hashes to it against the FULL edge list (linear sorts), the
-    * quadratic-ish intermediates (wedges, extension fan-out) drop to
-    * ~1/batches, and each batch reduces to two driver scalars before
-    * the next starts, so spill never accumulates. batches = 1 is the
-    * exact historical single-pass plan (the query path). K4BatchedSpec
-    * asserts batched ≡ unbatched. */
-  private[graft] def k4Census(s: SparkSession, dir: String,
-                              batches: Int): DataFrame = {
+  private def qK4(s: SparkSession, dir: String): DataFrame = {
     // Round-14: the edge list is checkpointed with DECLARED hash(u)
     // partitioning, so the wedge self-join (both sides keyed u) runs
     // with ZERO exchanges, and every join against cp is pinned to a
@@ -902,40 +888,22 @@ object SignalQueries {
     // the old sort-merge would have spilled. PLANS.md r15 records the
     // sizing rule; np (shuffle.partitions) is the at-scale safety valve.
     val cp = materialize(TestGraphs.partCoPairs(Tables(s, dir)), AdaptiveHash("u"))
-    def census(cpA: DataFrame): (DataFrame, DataFrame) = {
-      val t = cpA.as("a")
-        .join(cp.as("b").hint("shuffle_hash"),
-          col("b.u") === col("a.u") && col("b.v") > col("a.v"))
-        .join(cp.as("c").hint("shuffle_hash"),
-          col("c.u") === col("a.v") && col("c.v") === col("b.v"))
-        .select(col("a.u").as("x"), col("a.v").as("y"), col("b.v").as("z"))
-        .localCheckpoint()
-      val ext = t
-        .join(cp.select(col("u").as("z"), col("v").as("d")).hint("shuffle_hash"),
-          Seq("z"))
-        .join(cp.select(col("u").as("x"), col("v").as("d")).hint("shuffle_hash"),
-          Seq("x", "d"), "left_semi")
-        .join(cp.select(col("u").as("y"), col("v").as("d")).hint("shuffle_hash"),
-          Seq("y", "d"), "left_semi")
-      (t, ext)
-    }
-    if (batches <= 1) {
-      val (t, ext) = census(cp)
-      t.agg(count(lit(1)).as("n_triangles"))
-        .crossJoin(ext.agg(count(lit(1)).as("n_k4")))
-    } else {
-      var (nT, nK4) = (0L, 0L)
-      (0 until batches).foreach { b =>
-        val (t, ext) = census(
-          cp.filter(pmod(xxhash64(col("u")), lit(batches)) === b))
-        nT += t.count()
-        nK4 += ext.count()
-        org.apache.spark.sql.graft.CheckpointBridge.free(t)
-      }
-      org.apache.spark.sql.graft.CheckpointBridge.free(cp)
-      import s.implicits._
-      Seq((nT, nK4)).toDF("n_triangles", "n_k4")
-    }
+    val t = cp.as("a")
+      .join(cp.as("b").hint("shuffle_hash"),
+        col("b.u") === col("a.u") && col("b.v") > col("a.v"))
+      .join(cp.as("c").hint("shuffle_hash"),
+        col("c.u") === col("a.v") && col("c.v") === col("b.v"))
+      .select(col("a.u").as("x"), col("a.v").as("y"), col("b.v").as("z"))
+      .localCheckpoint()
+    val ext = t
+      .join(cp.select(col("u").as("z"), col("v").as("d")).hint("shuffle_hash"),
+        Seq("z"))
+      .join(cp.select(col("u").as("x"), col("v").as("d")).hint("shuffle_hash"),
+        Seq("x", "d"), "left_semi")
+      .join(cp.select(col("u").as("y"), col("v").as("d")).hint("shuffle_hash"),
+        Seq("y", "d"), "left_semi")
+    t.agg(count(lit(1)).as("n_triangles"))
+      .crossJoin(ext.agg(count(lit(1)).as("n_k4")))
   }
 
   private val qK4Sql =
@@ -1019,7 +987,7 @@ object SignalQueries {
     * both engines; the final effect ratio is sign-decomposed. The
     * matrix frames are channel²-sized (tiny metadata), never data-sized
     * — the only corpus pass is the journey construction. */
-  private def qMarkovAttribution(s: SparkSession, dir: String): DataFrame = {
+  private def qMarkovAttribution(s: SparkSession, dir: String): DataFrame = owned { o =>
     import org.apache.spark.sql.expressions.Window
     import s.implicits._
     val t = Tables(s, dir)
@@ -1029,49 +997,43 @@ object SignalQueries {
     val ev = ev0.join(fp, Seq("user_id"), "left")
       .filter(col("fts").isNull || col("ts") <= col("fts"))
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val seq0 = ev.withColumn("rn", row_number().over(w))
+    val seq0 = o(ev.withColumn("rn", row_number().over(w))
       .withColumn("nxt", lead(col("event_type"), 1).over(w))
-      .localCheckpoint()
+      .localCheckpoint())
     val tr = seq0.filter(col("rn") === 1)
       .select(lit("start").as("j"), col("event_type").as("k"))
       .unionAll(seq0.filter(col("event_type") =!= "purchase")
         .select(col("event_type").as("j"), coalesce(col("nxt"), lit("null")).as("k")))
-    val cnt = tr.groupBy(col("j"), col("k")).agg(count(lit(1)).as("c"))
-      .localCheckpoint()
+    val cnt = o(tr.groupBy(col("j"), col("k")).agg(count(lit(1)).as("c"))
+      .localCheckpoint())
     val tm = cnt
       .withColumn("rt", sum(col("c")).over(Window.partitionBy(col("j"))))
       .select(col("j"), col("k"), expr("(c * 1000000) div rt").as("prob"))
       .unionAll(Seq(("purchase", "purchase", 1000000L), ("null", "null", 1000000L))
         .toDF("j", "k", "prob"))
-    val vars = cnt.select(col("j").as("v")).filter(col("v") =!= "start").distinct()
+    val vars = o(cnt.select(col("j").as("v")).filter(col("v") =!= "start").distinct()
       .unionAll(Seq("FULL").toDF("v"))
-      .localCheckpoint()
-    val tt = tm.crossJoin(broadcast(vars))
+      .localCheckpoint())
+    val tt = o(tm.crossJoin(broadcast(vars))
       .filter(!(col("j") === col("v") && col("v") =!= "FULL"))
       .select(col("v"), col("j"),
         when(col("k") === col("v") && col("v") =!= "FULL", lit("null"))
           .otherwise(col("k")).as("k"),
         col("prob"))
       .groupBy(col("v"), col("j"), col("k")).agg(sum(col("prob")).as("prob"))
-      .localCheckpoint()
-    var p = vars.select(col("v"), lit("start").as("j"), lit(1000000L).as("val"))
-      .localCheckpoint()
-    var i = 0
-    while (i < 12) {
-      val next = p.join(tt, Seq("v", "j"))
+      .localCheckpoint())
+    // each step is ≤ channels·states rows, checkpointed to keep the
+    // 12-step plan flat
+    val (p, _) = Fixpoint.run(vars.select(col("v"), lit("start").as("j"),
+        lit(1000000L).as("val")).localCheckpoint(), Fixpoint.checkpointing, 12) { (p, _, _) =>
+      p.join(tt, Seq("v", "j"))
         .select(col("v"), col("k").as("j"),
           expr("(val * prob) div 1000000").as("contrib"))
         .groupBy(col("v"), col("j")).agg(sum(col("contrib")).as("val"))
-        .localCheckpoint() // ≤ channels·states rows; keeps the 12-step plan flat
-      CheckpointBridge.free(p)
-      p = next
-      i += 1
     }
-    val pc = p.groupBy(col("v"))
+    val pc = o(p).groupBy(col("v"))
       .agg(coalesce(max(when(col("j") === "purchase", col("val"))), lit(0L)).as("p_conv"))
       .localCheckpoint()
-    // the returned plan reads only pc
-    Seq(p, tt, vars, cnt, seq0).foreach(CheckpointBridge.free)
     val full = pc.filter(col("v") === "FULL").select(col("p_conv").as("p_full_e6"))
     pc.filter(col("v") =!= "FULL").crossJoin(broadcast(full))
       .select(col("v").as("channel"), col("p_full_e6"),
@@ -1145,29 +1107,7 @@ object SignalQueries {
     * per-user pair fan-out is capped at a constant, so a power user
     * can't quadratically explode the shuffle at warehouse scale (the
     * contamination df-cap discipline). */
-  private def qItemCf(s: SparkSession, dir: String): DataFrame =
-    itemCf(s, dir, batches = 1)
-
-  /** Item-CF with a BOUNDED-SCRATCH batched mode (round-12 second-
-    * decade work): the neighbor-intersection class (this kernel, k4,
-    * ktruss, edge_jaccard) tops a single box's scratch between 30× and
-    * 100× on the probe — the sort-merge spill of the intersection
-    * intermediates is LINEAR in data (cluster-scales, no size gate
-    * warranted) but lands on ONE disk in local mode. `batches` > 1
-    * splits the i1 side of the co-occurrence self-join by
-    * `xxhash64(i) % batches` and runs the FULL per-item pipeline
-    * (co-count → popularity-normalized cosine → top-5 window) per
-    * batch SEQUENTIALLY: the window is i1-partitioned and i1 ≡ the
-    * batch key, so batches are independent and exact; popularity is
-    * computed ONCE globally and reused. Peak scratch drops to
-    * ~1/batches of the intersection volume plus one full sort of the
-    * (small, linear) user-item frame per batch; per-batch results
-    * materialize as ≤5 rows/item checkpoints before the next batch
-    * starts, so spill never accumulates across batches. batches = 1 is
-    * the EXACT historical plan (the query path). ItemCfBatchedSpec
-    * asserts batched ≡ unbatched; the ≥67× probe row uses this path. */
-  private[graft] def itemCf(s: SparkSession, dir: String,
-                            batches: Int): DataFrame = {
+  private def qItemCf(s: SparkSession, dir: String): DataFrame = owned { o =>
     import org.apache.spark.sql.expressions.Window
     val t = Tables(s, dir)
     // Round-14: both checkpoints declare hash(u) partitioning (the k4
@@ -1176,45 +1116,28 @@ object SignalQueries {
     // runs with zero exchanges of the user-item frame; the self-join is
     // pinned to a shuffled-hash build (one ui partition per task)
     // instead of sorting both sides.
-    val ui0 = materialize(
+    val ui0 = o(materialize(
       t.orders.join(t.lineitem, col("l_orderkey") === col("o_orderkey"))
         .select(col("o_custkey").as("u"), col("l_partkey").as("i")).distinct(),
-      AdaptiveHash("u"))
+      AdaptiveHash("u")))
     val keep = ui0.groupBy(col("u")).agg(count(lit(1)).as("ni"))
       .filter(col("ni") <= 200).select(col("u"))
     val ui = materialize(ui0.join(keep, Seq("u"), "left_semi"), AdaptiveHash("u"))
-    val pop0 = ui.groupBy(col("i")).agg(count(lit(1)).as("p"))
-    // checkpoint the global popularity only when it is reused across
-    // batches — the batches = 1 plan stays byte-identical to history
-    val pop = if (batches <= 1) pop0 else pop0.localCheckpoint()
-    def topPerBatch(uiA: DataFrame): DataFrame = {
-      val co = uiA.as("a").join(ui.as("b").hint("shuffle_hash"),
-          col("a.u") === col("b.u") && col("a.i") =!= col("b.i"))
-        .groupBy(col("a.i").as("i1"), col("b.i").as("i2"))
-        .agg(count(lit(1)).as("c"))
-      val sim = co
-        .join(pop.select(col("i").as("i1"), col("p").as("p1")), Seq("i1"))
-        .join(pop.select(col("i").as("i2"), col("p").as("p2")), Seq("i2"))
-        .select(col("i1"), col("i2"), col("c"),
-          expr("(c * c * 1000000) div (p1 * p2)").as("cos2_e6"))
-      sim.withColumn("r", row_number().over(
-          Window.partitionBy(col("i1")).orderBy(col("cos2_e6").desc, col("i2"))))
-        .filter(col("r") <= 5)
-        .select(col("i1"), col("i2"), col("c"), col("cos2_e6"))
-    }
-    val ranked =
-      if (batches <= 1) topPerBatch(ui)
-      else {
-        // sequential: each .localCheckpoint() materializes batch b's
-        // ≤5-rows-per-item result (and releases its spill) before
-        // batch b+1's join starts
-        val parts = (0 until batches).map { b =>
-          topPerBatch(ui.filter(pmod(xxhash64(col("i")), lit(batches)) === b))
-            .localCheckpoint()
-        }
-        parts.reduce(_ union _)
-      }
-    ranked.orderBy(col("i1"), col("cos2_e6").desc, col("i2"))
+    val pop = ui.groupBy(col("i")).agg(count(lit(1)).as("p"))
+    val co = ui.as("a").join(ui.as("b").hint("shuffle_hash"),
+        col("a.u") === col("b.u") && col("a.i") =!= col("b.i"))
+      .groupBy(col("a.i").as("i1"), col("b.i").as("i2"))
+      .agg(count(lit(1)).as("c"))
+    val sim = co
+      .join(pop.select(col("i").as("i1"), col("p").as("p1")), Seq("i1"))
+      .join(pop.select(col("i").as("i2"), col("p").as("p2")), Seq("i2"))
+      .select(col("i1"), col("i2"), col("c"),
+        expr("(c * c * 1000000) div (p1 * p2)").as("cos2_e6"))
+    sim.withColumn("r", row_number().over(
+        Window.partitionBy(col("i1")).orderBy(col("cos2_e6").desc, col("i2"))))
+      .filter(col("r") <= 5)
+      .select(col("i1"), col("i2"), col("c"), col("cos2_e6"))
+      .orderBy(col("i1"), col("cos2_e6").desc, col("i2"))
   }
 
   private val qItemCfSql =
@@ -1341,9 +1264,9 @@ object SignalQueries {
     * candidate volume is Σ df² over KEPT fingerprints — capped by
     * construction, never all-pairs. Completes the plagiarism-detection
     * story: select → index → match. */
-  private def qWinnowMatches(s: SparkSession, dir: String): DataFrame = {
+  private def qWinnowMatches(s: SparkSession, dir: String): DataFrame = owned { o =>
     val d = Tables(s, dir).documents
-    val sel = d.select(col("doc_id"), expr(
+    val sel = o(d.select(col("doc_id"), expr(
         """CASE WHEN length(text) < 8 THEN array()
           |ELSE transform(sequence(1, length(text) - 7),
           |p -> concat(md5(substring(text, p, 8)),
@@ -1357,7 +1280,7 @@ object SignalQueries {
       // materialize BEFORE the explode: projection collapse would
       // otherwise inline the hs construction into every generated row,
       // turning the per-doc O(n·w) selection into O(n²·w) md5 work
-      .localCheckpoint()
+      .localCheckpoint())
     val fp = sel.select(col("doc_id"), explode(col("sel32")).as("f"))
     val keep = fp.groupBy(col("f")).agg(count(lit(1)).as("dfc"))
       .filter(col("dfc") <= 50).select(col("f"))

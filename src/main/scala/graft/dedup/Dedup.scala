@@ -2,7 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.CheckpointBridge.{AdaptiveHash, Stats, Tally, materialize}
+import org.apache.spark.sql.graft.CheckpointBridge.{AdaptiveHash, Stats, Tally, materialize, owned}
 
 import graft.text.TextFunctions._
 
@@ -68,18 +68,18 @@ object Dedup {
     * dissimilar degenerate bucket still just yields O(B) candidates that
     * fail exact verification. Detection is ONE fused checkpoint+count
     * job over the bucket-size aggregate; on the empty path (every run at
-    * test scale) the checkpoint is freed immediately and the downstream
-    * plan is EXACTLY the unguarded self-join. On the RARE hot path the
-    * joins reference the CHECKPOINTED hot-key set, so the keys counted
-    * are byte-identical to the keys joined even for a non-deterministic
-    * external input (round-11 advice); that checkpoint is ≤ |banded| /
-    * maxBucket rows and is reclaimed by the ContextCleaner once the
-    * caller drops the plan — a bounded rare-path pin, not a leak. The
-    * anti/star joins against it broadcast under AQE. Star-expanded
+    * test scale) the checkpoint is released and the downstream plan is
+    * EXACTLY the unguarded self-join. On the RARE hot path the joins
+    * reference the CHECKPOINTED hot-key set, so the keys counted are
+    * byte-identical to the keys joined even for a non-deterministic
+    * external input (round-11 advice); that checkpoint (≤ |banded| /
+    * maxBucket rows) is then a leaf of the returned plan and passes to
+    * the caller with it. The anti/star joins against it broadcast under
+    * AQE. Star-expanded
     * bucket counts are logged — a silent cap would read as full recall
     * when it is not. */
   private[graft] def bucketPairs(banded: DataFrame, keys: Seq[String], idCol: String,
-                                 maxBucket: Int, siggCol: String = "sigg"): DataFrame = {
+                                 maxBucket: Int, siggCol: String = "sigg"): DataFrame = owned { o =>
     val kc = keys.map(col)
     def selfJoin(d: DataFrame): DataFrame = d.as("a").join(d.as("b"),
         keys.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _) &&
@@ -91,10 +91,9 @@ object Dedup {
         .filter(col("bsz") > maxBucket)
         .select(kc: _*)
       val (ck, Tally(nHot, _, _)) = materialize(hotKeys, Stats, lit(true))
-      if (nHot == 0) {
-        org.apache.spark.sql.graft.CheckpointBridge.free(ck)
-        selfJoin(banded)
-      } else {
+      o(ck)
+      if (nHot == 0) selfJoin(banded)
+      else {
         logger.warn(s"bucketPairs: star-expanding $nHot over-full bucket(s) " +
           s"(> $maxBucket members each) per full-signature group instead " +
           "of all-pairs expansion")
@@ -132,11 +131,10 @@ object Dedup {
       transform(sequence(lit(0), lit(bands - 1)),
         b => md5(concat_ws("|", slice(s, b * rowsPerBand + 1, lit(rowsPerBand)))))), 1)
 
-  /** Materialize the (small) final pair frame, then release the persisted
-    * signature frame backing it: the signatures are orders of magnitude
-    * larger than the pairs and would otherwise stay cached until the
-    * ContextCleaner happens to collect them — in a long session running
-    * many dedup passes that is an unbounded cache leak.
+  /** Materialize the (small) final pair frame, so that the persisted
+    * signature frame and the candidate checkpoints behind it can be
+    * released: the signatures are orders of magnitude larger than the
+    * pairs.
     *
     * The deterministic output ordering is applied AFTER the checkpoint,
     * over the materialized pair frame: a sort on top of the
@@ -145,12 +143,8 @@ object Dedup {
     * pipeline twice per run (measured 35 s → 18 s on the t=70 exact
     * Jaccard truth pass at sf0.1 once the sample pass ran over
     * checkpointed rows instead). */
-  private def finish(out: DataFrame, cached: DataFrame,
-                     keys: org.apache.spark.sql.Column*): DataFrame = {
-    val m = out.localCheckpoint()
-    cached.unpersist()
-    if (keys.isEmpty) m else m.orderBy(keys: _*)
-  }
+  private def finish(out: DataFrame, keys: org.apache.spark.sql.Column*): DataFrame =
+    out.localCheckpoint().orderBy(keys: _*)
 
   /** Exact duplicate clusters on whitespace/case-normalized text:
     * (content hash, cluster size, canonical = min doc id). */
@@ -208,10 +202,10 @@ object Dedup {
     * most expensive computation in the engine — the persist runs it
     * exactly once. */
   def minhashDupPairs(docs: DataFrame, shingleLen: Int = 8, numHashes: Int = 16,
-                      bands: Int = 4, threshold: Double = 0.3): DataFrame = {
-    val sigs = withMinhash(docs, shingleLen, numHashes)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cands = lshCandidates(sigs, bands, numHashes / bands)
+                      bands: Int = 4, threshold: Double = 0.3): DataFrame = owned { o =>
+    val sigs = o(withMinhash(docs, shingleLen, numHashes)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val cands = o(lshCandidates(sigs, bands, numHashes / bands))
     val sh = sigs.select(col("doc_id"), col("sh"))
     finish(cands
       .join(sh.select(col("doc_id").as("ida"), col("sh").as("sha")), Seq("ida"))
@@ -219,8 +213,7 @@ object Dedup {
       .withColumn("jac", jaccard(col("sha"), col("shb")))
       .filter(col("jac") >= threshold)
       .select(col("ida").as("a"), col("idb").as("b"),
-        graft.sql.Exact.e6(col("jac")).as("jac_e6"))
-      , sigs, col("a"), col("b"))
+        graft.sql.Exact.e6(col("jac")).as("jac_e6")), col("a"), col("b"))
   }
 
   /** Persist a MinHash signature index: the banded (band, bv, doc_id)
@@ -231,9 +224,9 @@ object Dedup {
     * whole-corpus self-join. */
   def writeSignatureIndex(docs: DataFrame, path: String,
                           shingleLen: Int = 8, numHashes: Int = 16,
-                          bands: Int = 4): Unit = {
-    val sigs = withMinhash(docs, shingleLen, numHashes)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+                          bands: Int = 4): Unit = owned { o =>
+    val sigs = o(withMinhash(docs, shingleLen, numHashes)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val rowsPerBand = numHashes / bands
     sigs.select(col("doc_id"),
         posexplode(bandHashes(col("sig"), bands, rowsPerBand))
@@ -241,7 +234,6 @@ object Dedup {
       .write.mode("overwrite").parquet(s"$path/buckets")
     sigs.select(col("doc_id"), col("sh"))
       .write.mode("overwrite").parquet(s"$path/shingles")
-    sigs.unpersist()
   }
 
   /** Probe an increment of new documents against a stored signature
@@ -254,10 +246,10 @@ object Dedup {
     * never self-joined. */
   def incrementalDupPairs(newDocs: DataFrame, indexPath: String,
                           shingleLen: Int = 8, numHashes: Int = 16,
-                          bands: Int = 4, threshold: Double = 0.3): DataFrame = {
+                          bands: Int = 4, threshold: Double = 0.3): DataFrame = owned { o =>
     val spark = newDocs.sparkSession
-    val sigs = withMinhash(newDocs, shingleLen, numHashes)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sigs = o(withMinhash(newDocs, shingleLen, numHashes)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val rowsPerBand = numHashes / bands
     val newBanded = sigs.select(col("doc_id").as("new_id"),
       posexplode(bandHashes(col("sig"), bands, rowsPerBand))
@@ -273,8 +265,7 @@ object Dedup {
       .withColumn("jac", jaccard(col("shn"), col("shi")))
       .filter(col("jac") >= threshold)
       .select(col("new_id"), col("idx_id"),
-        graft.sql.Exact.e6(col("jac")).as("jac_e6"))
-      , sigs, col("new_id"), col("idx_id"))
+        graft.sql.Exact.e6(col("jac")).as("jac_e6")), col("new_id"), col("idx_id"))
   }
 
   /** The incremental dedup ACTION: the increment minus every document
@@ -315,24 +306,23 @@ object Dedup {
     * consumers see reduced multiplicity there; logged). */
   def simhashDupPairs(docs: DataFrame, shingleLen: Int = 8,
                       maxHamming: Int = 1,
-                      maxBucket: Int = DefaultMaxBucket): DataFrame = {
+                      maxBucket: Int = DefaultMaxBucket): DataFrame = owned { o =>
     val numBands = maxHamming + 1
     val bits = 60 / numBands
-    val fp = docs
+    val fp = o(docs
       .select(col("doc_id"), simhash60(shingleSet(col("text"), shingleLen)).as("simhash"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val banded = fp.select(col("doc_id"), col("simhash").as("sigg"),
       posexplode(array((0 until numBands).map(b =>
         shiftright(col("simhash"), b * bits).bitwiseAND(lit((1L << bits) - 1))): _*))
         .as(Seq("band", "bv")))
-    val cands = bucketPairs(banded, Seq("band", "bv"), "doc_id", maxBucket)
+    val cands = o(bucketPairs(banded, Seq("band", "bv"), "doc_id", maxBucket))
     finish(cands
       .join(fp.select(col("doc_id").as("ida"), col("simhash").as("ha")), Seq("ida"))
       .join(fp.select(col("doc_id").as("idb"), col("simhash").as("hb")), Seq("idb"))
       .withColumn("ham", bit_count(col("ha").bitwiseXOR(col("hb"))).cast("long"))
       .filter(col("ham") <= maxHamming)
-      .select(col("ida").as("a"), col("idb").as("b"), col("ham"))
-      , fp, col("a"), col("b"))
+      .select(col("ida").as("a"), col("idb").as("b"), col("ham")), col("a"), col("b"))
   }
 
   /** Canonicalize near-duplicate PAIRS into clusters: connected
@@ -393,14 +383,14 @@ object Dedup {
     * capped bucket is rep↔member stars, clusters are unaffected. */
   def ngramDupPairs(docs: DataFrame, n: Int = 3, threshold: Double = 0.1,
                     blockCol: String = "source",
-                    numHashes: Int = 16, bands: Int = 8): DataFrame = {
+                    numHashes: Int = 16, bands: Int = 8): DataFrame = owned { o =>
     // persisted: candidate join + both verify joins reuse the n-gram
     // sets and minhash signatures (same rationale as minhashDupPairs)
-    val tri = docs.select(col("doc_id"), col(blockCol).as("blk"),
+    val tri = o(docs.select(col("doc_id"), col(blockCol).as("blk"),
       wordNgrams(tokens(col("text")), n).as("tri"))
       .withColumn("sig", minhashSignature(col("tri"), numHashes))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cands = lshCandidates(tri, bands, numHashes / bands, blockCols = Seq("blk"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val cands = o(lshCandidates(tri, bands, numHashes / bands, blockCols = Seq("blk")))
     val sets = tri.select(col("doc_id"), col("tri"))
     finish(cands
       .join(sets.select(col("doc_id").as("ida"), col("tri").as("ta")), Seq("ida"))
@@ -408,8 +398,7 @@ object Dedup {
       .withColumn("jac", jaccard(col("ta"), col("tb")))
       .filter(col("jac") >= threshold)
       .select(col("ida").as("a"), col("idb").as("b"),
-        graft.sql.Exact.e6(col("jac")).as("jac_e6"))
-      , tri, col("a"), col("b"))
+        graft.sql.Exact.e6(col("jac")).as("jac_e6")), col("a"), col("b"))
   }
 
   /** Embedding-cosine near-duplicates: candidate pairs from
@@ -427,20 +416,20 @@ object Dedup {
   def embeddingDupPairs(emb: DataFrame, threshold: Double = 0.95,
                         numPlanes: Int = 64, bands: Int = 8,
                         dim: Int = 64,
-                        maxBucket: Int = DefaultMaxBucket): DataFrame = {
+                        maxBucket: Int = DefaultMaxBucket): DataFrame = owned { o =>
     val s = graft.sim.VectorLSH.signs(numPlanes, dim)
-    val e = emb.select(col("vec_id"), col("embedding"))
+    val e = o(emb.select(col("vec_id"), col("embedding"))
       .withColumn("nrm", sqrt(graft.sim.Similarity.dot(col("embedding"), col("embedding"))))
       .withColumn("bk", graft.sim.VectorLSH.bandBuckets(
         col("embedding"), s, bands, numPlanes / bands))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     // group key = the exact embedding, not the band array: two groups
     // sharing every sign-bit bucket (same orthant) can still be
     // dissimilar under exact cosine, and the star must keep each
     // byte-identical vector group verification-connected
     val banded = e.select(col("vec_id"), xxhash64(col("embedding")).as("sigg"),
       posexplode(col("bk")).as(Seq("band", "bv")))
-    val cands = bucketPairs(banded, Seq("band", "bv"), "vec_id", maxBucket)
+    val cands = o(bucketPairs(banded, Seq("band", "bv"), "vec_id", maxBucket))
     finish(cands
       .join(e.select(col("vec_id").as("ida"), col("embedding").as("ea"),
         col("nrm").as("na")), Seq("ida"))
@@ -450,8 +439,7 @@ object Dedup {
         graft.sim.Similarity.dot(col("ea"), col("eb")) / (col("na") * col("nb")))
       .filter(col("cos") >= threshold)
       .select(col("ida").as("a"), col("idb").as("b"),
-        graft.sql.Exact.e4(col("cos")).as("rcos_e4"))
-      , e, col("a"), col("b"))
+        graft.sql.Exact.e4(col("cos")).as("rcos_e4")), col("a"), col("b"))
   }
 
   // --- content-defined (CDC) chunk dedup --------------------------------
@@ -527,29 +515,26 @@ object Dedup {
     * are dropped before the join, bounding per-chunk blowup exactly as
     * the contamination join bounds hub grams. */
   def cdcDupPairs(docs: DataFrame, threshold: Double = 0.5, maxDf: Int = 1000,
-                  w: Int = 4, div: Int = 13, rem: Int = 12): DataFrame = {
-    val ch = cdcChunks(docs, w, div, rem)
+                  w: Int = 4, div: Int = 13, rem: Int = 12): DataFrame = owned { o =>
+    val ch = o(cdcChunks(docs, w, div, rem)
       .select(col("doc_id"), col("chunk_md5").as("h")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val keep = ch.groupBy(col("h")).agg(count(lit(1)).as("cdf"))
       .filter(col("cdf") <= maxDf).select(col("h"))
-    val chf = ch.join(keep, Seq("h"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val chf = o(ch.join(keep, Seq("h"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val nc = chf.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     val pairs = chf.select(col("h"), col("doc_id").as("ida"))
       .join(chf.select(col("h"), col("doc_id").as("idb")), Seq("h"))
       .filter(col("ida") < col("idb"))
       .groupBy(col("ida"), col("idb")).agg(count(lit(1)).as("shared"))
-    val out = pairs
+    finish(pairs
       .join(nc.select(col("doc_id").as("ida"), col("n").as("na")), Seq("ida"))
       .join(nc.select(col("doc_id").as("idb"), col("n").as("nb")), Seq("idb"))
       .withColumn("ov", col("shared") / least(col("na"), col("nb")))
       .filter(col("ov") >= threshold)
       .select(col("ida").as("a"), col("idb").as("b"), col("shared"),
-        graft.sql.Exact.e6(col("ov")).as("overlap_e6"))
-    val m = out.localCheckpoint()
-    ch.unpersist(); chf.unpersist()
-    m.orderBy(col("a"), col("b"))
+        graft.sql.Exact.e6(col("ov")).as("overlap_e6")), col("a"), col("b"))
   }
 
   /** EXACT token-set Jaccard similarity join with prefix filtering
@@ -580,15 +565,13 @@ object Dedup {
     * zero recall loss; the output (and so the DuckDB oracle, which
     * replays the symmetric candidate set and verifies exactly) is
     * bit-identical because verification is exact either way. */
-  def jaccardJoin(sets: DataFrame, thresholdPct: Int = 80): DataFrame = {
-    // staged5 is EAGER: the token frame and the sorted-token frame are
-    // both checkpoints, materialized during construction (the staging
-    // that the old persist+count() pair approximated — measured 3.5× on
-    // the whole query at sf0.1 when left lazy: 55.7 s vs ~16 s).
-    val (toks, sorted, _, scored, _, shuffled) =
-      jaccardJoinStaged5(sets, thresholdPct)
-    // the token checkpoint feeds only `sorted` — dead once it exists
-    org.apache.spark.sql.graft.CheckpointBridge.free(toks)
+  def jaccardJoin(sets: DataFrame, thresholdPct: Int = 80): DataFrame = owned { o =>
+    // the staging is EAGER: the sorted-token frame and the prefix frame
+    // are both checkpoints, materialized during construction (the
+    // staging that the old persist+count() pair approximated — measured
+    // 3.5× on the whole query at sf0.1 when left lazy: 55.7 s vs ~16 s).
+    // `scored` reads both.
+    val scored = o(jaccardJoinStaged(sets, thresholdPct)._3)
     // Round-14: checkpoint the NARROW scored frame (a, b, na, nb, inter —
     // five BIGINTs per candidate) BEFORE the threshold filter. Applied
     // lazily, Catalyst pushes the threshold predicate through the
@@ -600,14 +583,10 @@ object Dedup {
     // barrier pins exactly one array_intersect per candidate pair; its
     // cost is candidate-count × 40 bytes — the narrowest frame in the
     // whole query, safe to materialize at any scale.
-    val sm = scored.localCheckpoint()
+    val sm = o(scored.localCheckpoint())
     // Threshold + e6 over the materialized narrow frame, then order the
     // (output-sized) survivors.
-    val m = finishJaccard(sm, thresholdPct).localCheckpoint()
-    org.apache.spark.sql.graft.CheckpointBridge.free(sorted)
-    org.apache.spark.sql.graft.CheckpointBridge.free(shuffled)
-    org.apache.spark.sql.graft.CheckpointBridge.free(sm)
-    m.orderBy(col("a"), col("b"))
+    finishJaccard(sm, thresholdPct).localCheckpoint().orderBy(col("a"), col("b"))
   }
 
   /** Threshold + exact-e6 projection over a scored candidate frame
@@ -637,23 +616,11 @@ object Dedup {
     * evaluation per candidate. Query callers use the single-frame wrapper
     * above.
     *
-    * The token checkpoint is freed here: it feeds only `sorted`, which is
-    * already materialized. Two checkpoints stay live for the caller to
-    * release with [[org.apache.spark.sql.graft.CheckpointBridge.free]]
-    * once done: `sorted`, and the prefix checkpoint, which is the only
-    * checkpoint leaf of `cand` (so `free(cand)` releases it). */
+    * The token checkpoint, which feeds only `sorted`, is released on
+    * return; `sorted` and the prefix checkpoint behind `cand` are the
+    * returned frames' leaves. */
   def jaccardJoinStaged(sets: DataFrame, thresholdPct: Int = 80)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val (toks, sorted, cand, scored, out, _) = jaccardJoinStaged5(sets, thresholdPct)
-    org.apache.spark.sql.graft.CheckpointBridge.free(toks)
-    (sorted, cand, scored, out)
-  }
-
-  /** [[jaccardJoinStaged]] plus the internal checkpoints — the token
-    * frame (first element) and the shuffled prefix frame (last) — so
-    * [[jaccardJoin]] can free their blocks as soon as each is dead. */
-  private[graft] def jaccardJoinStaged5(sets: DataFrame, thresholdPct: Int = 80)
-      : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) = {
+      : (DataFrame, DataFrame, DataFrame, DataFrame) = owned { o =>
     val t = thresholdPct.toLong
     // Single-scan token build (r15): lazily, this frame — the corpus
     // scan + shingle kernel + explode — is evaluated TWICE, once under
@@ -668,9 +635,9 @@ object Dedup {
     // materialization (spills to local disk) for a full corpus re-scan +
     // re-shingle; recomputing is never cheaper than one sequential
     // read-back of the narrower (doc_id, tok) frame.
-    val toks = materialize(
+    val toks = o(materialize(
       sets.select(col("doc_id"),
-        explode(array_distinct(col("items"))).as("tok")), AdaptiveHash("tok"))
+        explode(array_distinct(col("items"))).as("tok")), AdaptiveHash("tok")))
     val dfreq = toks.groupBy(col("tok")).agg(count(lit(1)).as("df"))
     // rarest-first order WITHOUT a global rank window: lexicographic
     // (df, token) ordering IS the rank ordering
@@ -770,7 +737,6 @@ object Dedup {
     val scored = cand.join(left, Seq("a")).join(right, Seq("b"))
       .select(col("a"), col("b"), col("na"), col("nb"),
         size(array_intersect(col("ta"), col("tb"))).cast("long").as("inter"))
-    val out = finishJaccard(scored, thresholdPct)
-    (toks, sorted, cand, scored, out, shuffled)
+    (sorted, cand, scored, finishJaccard(scored, thresholdPct))
   }
 }

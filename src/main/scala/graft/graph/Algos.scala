@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.CheckpointBridge.{AdaptiveHash, Hash, Stats, Tally,
-  materialize, free => freeCkpt}
+  materialize, owned, free => freeCkpt}
 import org.apache.spark.storage.StorageLevel
 
 /** The reference's algorithm corpus (giraph-examples, SURVEY §2.9)
@@ -92,12 +92,13 @@ object Algos {
     * on path graphs where plain propagation needs O(diameter) — the
     * difference between 17 and 100,000 shuffles on a 100k-long event
     * chain. Per round: one edge⋈label shuffle + one label self-join. */
-  def wcc(symEdges: DataFrame, opts: PregelOptions = PregelOptions(maxSupersteps = 100)): DataFrame = {
+  def wcc(symEdges: DataFrame,
+          opts: PregelOptions = PregelOptions(maxSupersteps = 100)): DataFrame = owned { o =>
     // e is joined on src every round and f on id (aliased to src) — both
     // carry DECLARED hash partitioning so the m1 join never reshuffles
     // (plain persist/localCheckpoint partitioning is invisible under
     // AQE; see CheckpointBridge.materialize)
-    val e = materialize(symEdges.select("src", "dst"), AdaptiveHash("src"))
+    val e = o(materialize(symEdges.select("src", "dst"), AdaptiveHash("src")))
     val nbrMin0 = e.groupBy(col("src").as("id")).agg(min(col("dst")).as("nm"))
     val f0 = materialize(verticesOf(e).join(nbrMin0, Seq("id"), "left")
         .select(col("id"), col("id").as("f_old"), least(col("id"), col("nm")).as("f")), Stats)
@@ -128,7 +129,6 @@ object Algos {
         .select(col("id"), col("f").as("f_old"),
           least(col("f"), col("m1"), col("gf")).as("f"))
     }
-    freeCkpt(e)
     f.select(col("id"), col("f").as("component"))
   }
 
@@ -218,9 +218,9 @@ object Algos {
     * broadcast scalar (dangling mass); vertex count collected once. */
   def pagerank(edges: DataFrame, iterations: Int,
                damping: Double = 0.85, resetProb: Double = 0.15,
-               opts: PregelOptions = PregelOptions()): DataFrame = {
-    val e = materialize(edges.select("src", "dst"), AdaptiveHash("src"))
-    val v = verticesOf(e).persist(StorageLevel.MEMORY_AND_DISK)
+               opts: PregelOptions = PregelOptions()): DataFrame = owned { o =>
+    val e = o(materialize(edges.select("src", "dst"), AdaptiveHash("src")))
+    val v = o(verticesOf(e).persist(StorageLevel.MEMORY_AND_DISK))
     val n = v.count().toDouble
     val deg = e.groupBy(col("src").as("id"))
       .agg(count(lit(1)).cast("double").as("outdeg"))
@@ -230,7 +230,6 @@ object Algos {
     val res = Pregel.iterate(init, iterations, opts) { (verts, _) =>
       prUpdate(verts, e, n, damping, resetProb)
     }
-    freeCkpt(e); v.unpersist()
     res.select("id", "pr")
   }
 
@@ -267,9 +266,10 @@ object Algos {
     * fixed-iteration [[pagerank]] carries the oracle. */
   def pagerankConverged(edges: DataFrame, maxIters: Int = 64,
                         tol: Double = 1e-8, convergence: String = "sum",
-                        damping: Double = 0.85, resetProb: Double = 0.15): (DataFrame, Int) = {
-    val e = materialize(edges.select("src", "dst"), AdaptiveHash("src"))
-    val v = verticesOf(e).persist(StorageLevel.MEMORY_AND_DISK)
+                        damping: Double = 0.85,
+                        resetProb: Double = 0.15): (DataFrame, Int) = owned { o =>
+    val e = o(materialize(edges.select("src", "dst"), AdaptiveHash("src")))
+    val v = o(verticesOf(e).persist(StorageLevel.MEMORY_AND_DISK))
     val n = v.count().toDouble
     val deg = e.groupBy(col("src").as("id"))
       .agg(count(lit(1)).cast("double").as("outdeg"))
@@ -301,7 +301,6 @@ object Algos {
       prUpdate(prev, e, n, damping, resetProb)
         .join(prev.select(col("id"), col("pr").as("prev_pr")), Seq("id"))
     }
-    freeCkpt(e); v.unpersist()
     (verts.select("id", "pr"), it)
   }
 
@@ -312,9 +311,9 @@ object Algos {
     * callers pass a symmetric graph (every vertex has out-edges). */
   def pagerankWeighted(edges: DataFrame, iterations: Int,
                        damping: Double = 0.85, resetProb: Double = 0.15,
-                       opts: PregelOptions = PregelOptions()): DataFrame = {
-    val e = materialize(edges.select("src", "dst", "w"), AdaptiveHash("src"))
-    val v = verticesOf(e).persist(StorageLevel.MEMORY_AND_DISK)
+                       opts: PregelOptions = PregelOptions()): DataFrame = owned { o =>
+    val e = o(materialize(edges.select("src", "dst", "w"), AdaptiveHash("src")))
+    val v = o(verticesOf(e).persist(StorageLevel.MEMORY_AND_DISK))
     val n = v.count().toDouble
     val wdeg = e.groupBy(col("src").as("id")).agg(sum(col("w")).cast("double").as("wsum"))
     val init = v.join(wdeg, Seq("id"))
@@ -329,7 +328,6 @@ object Algos {
           (lit(resetProb / n) + lit(damping) * coalesce(col("s"), lit(0.0))).as("pr"),
           col("wsum"))
     }
-    freeCkpt(e); v.unpersist()
     res.select("id", "pr")
   }
 
@@ -338,9 +336,9 @@ object Algos {
     * (1-d) returns to the source instead of being spread uniformly. */
   def randomWalkWithRestart(edges: DataFrame, source: Long, iterations: Int,
                             damping: Double = 0.85, resetProb: Double = 0.15,
-                            opts: PregelOptions = PregelOptions()): DataFrame = {
-    val e = materialize(edges.select("src", "dst"), AdaptiveHash("src"))
-    val v = verticesOf(e).persist(StorageLevel.MEMORY_AND_DISK)
+                            opts: PregelOptions = PregelOptions()): DataFrame = owned { o =>
+    val e = o(materialize(edges.select("src", "dst"), AdaptiveHash("src")))
+    val v = o(verticesOf(e).persist(StorageLevel.MEMORY_AND_DISK))
     val deg = e.groupBy(col("src").as("id")).agg(count(lit(1)).cast("double").as("outdeg"))
     val init = v.join(deg, Seq("id"))
       .select(col("id"),
@@ -357,7 +355,6 @@ object Algos {
             lit(damping) * coalesce(col("s"), lit(0.0))).as("pr"),
           col("outdeg"))
     }
-    freeCkpt(e); v.unpersist()
     res.select("id", "pr")
   }
 
@@ -372,19 +369,19 @@ object Algos {
     * the PageRank family). Tagged state is |V|·S rows, hash-checkpointed
     * per round. */
   def rwrMulti(edges: DataFrame, nSources: Int, iterations: Int,
-               damping: Double = 0.85, resetProb: Double = 0.15): DataFrame = {
-    val e = materialize(edges.select("src", "dst"), AdaptiveHash("src"))
+               damping: Double = 0.85, resetProb: Double = 0.15): DataFrame = owned { o =>
+    val e = o(materialize(edges.select("src", "dst"), AdaptiveHash("src")))
     // vertex frame = vertices WITH out-edges, matching the single-source
     // randomWalkWithRestart (inner join with deg) and the oracle's
     // DISTINCT-src CTE: sink (dst-only) vertices hold no walk state in
     // the reference semantics, so they must not emit (sink, tag) rows
-    val v = materialize(e.select(col("src").as("id")).distinct(), AdaptiveHash("id"))
-    val srcs = e.select(col("src")).distinct()
+    val v = o(materialize(e.select(col("src").as("id")).distinct(), AdaptiveHash("id")))
+    val srcs = o(e.select(col("src")).distinct()
       .orderBy(col("src")).limit(nSources)
-      .select(col("src").as("tag")).localCheckpoint()
-    val deg = materialize(
+      .select(col("src").as("tag")).localCheckpoint())
+    val deg = o(materialize(
       e.groupBy(col("src").as("id")).agg(count(lit(1)).cast("double").as("outdeg")),
-      AdaptiveHash("id"))
+      AdaptiveHash("id")))
     val p0 = materialize(
       v.crossJoin(broadcast(srcs))
         .select(col("id"), col("tag"),
@@ -403,9 +400,7 @@ object Algos {
           (when(col("vt.id") === col("vt.tag"), lit(resetProb)).otherwise(lit(0.0)) +
             lit(damping) * coalesce(col("sm.s"), lit(0.0))).as("pr"))
     }
-    val out = p.orderBy(col("tag"), col("id")).localCheckpoint()
-    freeCkpt(p); freeCkpt(v); freeCkpt(e); freeCkpt(deg); freeCkpt(srcs)
-    out
+    o(p).orderBy(col("tag"), col("id")).localCheckpoint()
   }
 
   /** Degree-distribution summary (DirectedGraphStats,
@@ -472,19 +467,30 @@ object Algos {
     * two equi-joins; the intersection itself runs inside whole-stage
     * codegen with NO wedge-sized intermediate — measured 2.4× faster than
     * the wedge self-join on the densest bench graph (sum over edges of
-    * O(out(u)+out(v)) set work vs. materializing every wedge row). */
+    * O(out(u)+out(v)) set work vs. materializing every wedge row).
+    *
+    * The result reads the two checkpoints `o` and `nb`, so they pass to
+    * the caller with it. Both are `Stats` materializations: their
+    * measured sizes fix the joins' build sides at planning, where AQE
+    * picked one or two broadcasts by which shuffle stage finished first
+    * (a job count that flipped from pass to pass). */
   private def edgesWithAdjacency(pairs: DataFrame, deg: DataFrame): DataFrame = {
-    val o = orientByDegree(pairs, deg).select(col("src"), col("dst")).localCheckpoint()
-    // nb is joined twice below; checkpointing it runs the collect_list
-    // aggregation once instead of twice (Spark re-evaluates each side of
-    // a self-join) — this and the checkpointed input pairs reclaimed the
-    // 2× clustering regression flagged in round 2
-    val nb = o.groupBy(col("src").as("id"))
-      .agg(sort_array(collect_list(col("dst"))).as("nbrs"))
-      .localCheckpoint()
+    val (o, nb) = orientedAdjacency(pairs, deg, materialize(_, Stats))
     // inner joins: an edge whose dst has no out-edges closes no triangle
     o.join(nb.select(col("id").as("src"), col("nbrs").as("nu")), Seq("src"))
       .join(nb.select(col("id").as("dst"), col("nbrs").as("nv")), Seq("dst"))
+  }
+
+  /** The degree-oriented edges (src, dst) and each source's sorted
+    * out-neighbor array (id, nbrs), both passed through `checkpoint`. nb
+    * is joined twice by its readers; checkpointing it runs the
+    * collect_list aggregation once instead of twice (Spark re-evaluates
+    * each side of a self-join). */
+  private def orientedAdjacency(pairs: DataFrame, deg: DataFrame,
+                                checkpoint: DataFrame => DataFrame): (DataFrame, DataFrame) = {
+    val o = checkpoint(orientByDegree(pairs, deg).select(col("src"), col("dst")))
+    (o, checkpoint(o.groupBy(col("src").as("id"))
+      .agg(sort_array(collect_list(col("dst"))).as("nbrs"))))
   }
 
   /** Total triangle count over an undirected graph given as canonical
@@ -495,10 +501,10 @@ object Algos {
     * self-join and its broadcast variant on dense graphs).
     * Reference semantics: EX/SimpleTriangleClosingComputation.java (the
     * 2-superstep friends-of-friends exchange). */
-  def triangleCount(pairs: DataFrame): DataFrame = {
+  def triangleCount(pairs: DataFrame): DataFrame = owned { o =>
     // pairs is scanned 3× (degree union + orientation join sides);
     // checkpoint once so derivation cost (often a self-join) isn't re-paid
-    val p = pairs.select(col("u"), col("v")).localCheckpoint()
+    val p = o(pairs.select(col("u"), col("v")).localCheckpoint())
     edgesWithAdjacency(p, pairDegrees(p))
       .select(size(array_intersect(col("nu"), col("nv"))).cast("long").as("c"))
       .agg(coalesce(sum(col("c")), lit(0L)).as("triangles"))
@@ -514,10 +520,10 @@ object Algos {
     * counts equal the unoriented definition and the oracle is unchanged.
     * cc emitted floor-scaled (graft.sql.Exact); degree-1 vertices get
     * cc 0. */
-  def clusteringCoefficient(pairs: DataFrame): DataFrame = {
+  def clusteringCoefficient(pairs: DataFrame): DataFrame = owned { o =>
     // checkpoint once: the pair derivation feeds orientByDegree (3 scans)
     // AND the degree aggregation below — 5 recomputes without this
-    val e = pairs.select(col("u"), col("v")).localCheckpoint()
+    val e = o(pairs.select(col("u"), col("v")).localCheckpoint())
     // degrees are shared by the orientation (2 join sides) and the cc
     // denominator — one aggregation instead of two
     val deg = pairDegrees(e).localCheckpoint()
@@ -546,68 +552,38 @@ object Algos {
     * same degree-oriented adjacency intersection [[triangleCount]] uses:
     * each triangle found at its pivot edge credits its THREE canonical
     * edges through an output-linear 3-row union — never a wedge-sized
-    * intermediate. Self-managed checkpoints (freed before returning the
-    * materialized support frame) so the peeling loop doesn't strand
-    * blocks per round. Returns (u, v, support), support 0-filled.
-    * `batches` > 1 bounds peak spill at ~1/batches of the wedge volume
-    * — the itemCf/k4Census bounded-scratch pattern; results are exact
-    * either way (EdgeSupportBatchedSpec). kTruss and [[edgeJaccard]]
-    * run the single-pass default. */
-  private def edgeSupport0(e: DataFrame,
-                           batches: Int = 1): (DataFrame, Seq[DataFrame]) = {
-    val o = orientByDegree(e, pairDegrees(e))
-      .select(col("src"), col("dst")).localCheckpoint()
-    val nb = o.groupBy(col("src").as("id"))
-      .agg(sort_array(collect_list(col("dst"))).as("nbrs"))
-      .localCheckpoint()
-    def credits(oB: DataFrame): DataFrame = {
-      val tris = oB
-        .join(nb.select(col("id").as("src"), col("nbrs").as("nu")), Seq("src"))
-        .join(nb.select(col("id").as("dst"), col("nbrs").as("nv")), Seq("dst"))
-        .select(col("src"), col("dst"),
-          explode(array_intersect(col("nu"), col("nv"))).as("w"))
-      def edge(a: String, b: String) = tris.select(
-        least(col(a), col(b)).as("u"), greatest(col(a), col(b)).as("v"))
-      edge("src", "dst").union(edge("src", "w")).union(edge("dst", "w"))
-        .groupBy(col("u"), col("v")).agg(count(lit(1)).as("sup"))
-    }
-    // BOUNDED-SCRATCH batched mode (the itemCf/k4Census pattern, see
-    // SignalQueries.itemCf): each triangle is enumerated at exactly one
-    // pivot edge, so splitting the pivot side by xxhash64(src) %
-    // batches partitions the enumeration exactly; per-batch credits are
-    // pre-aggregated (≤ |edges| rows after the groupBy) and CHECKPOINTED
-    // before the next batch's intersection explode starts, so peak
-    // spill is ~1/batches of the wedge volume, and the final pass sums
-    // the edge-linear partials. batches = 1 is the historical
-    // single-pass plan, byte-identical.
-    val (sup, partials) =
-      if (batches <= 1) (credits(o), Nil)
-      else {
-        val parts = (0 until batches).map { b =>
-          credits(o.filter(pmod(xxhash64(col("src")), lit(batches)) === b))
-            .localCheckpoint()
-        }
-        (parts.reduce(_ union _).groupBy(col("u"), col("v"))
-          .agg(sum(col("sup")).as("sup")), parts)
-      }
-    (e.join(sup, Seq("u", "v"), "left")
-      .select(col("u"), col("v"), coalesce(col("sup"), lit(0L)).as("support")),
-      Seq(o, nb) ++ partials)
+    * intermediate. Returns (u, v, support), support 0-filled, as a lazy
+    * plan over `e` and the orientation checkpoints; its callers
+    * materialize it and release the checkpoints, so the peeling loop
+    * strands no blocks per round.
+    *
+    * The orientation checkpoints stay plain AQE-on `localCheckpoint`s.
+    * `Stats` ones, as in [[edgesWithAdjacency]], measured slower here:
+    * +2 jobs on q_graph_ktruss at sf0.001 (its AQE-off support pass
+    * broadcasts every join, one job each), and q_graph_edge_jaccard and
+    * q_graph_local_bridges full output about 1.6× slower at sf0.01. */
+  private def supportPlan(e: DataFrame): DataFrame = {
+    val (o, nb) = orientedAdjacency(e, pairDegrees(e), _.localCheckpoint())
+    val tris = o
+      .join(nb.select(col("id").as("src"), col("nbrs").as("nu")), Seq("src"))
+      .join(nb.select(col("id").as("dst"), col("nbrs").as("nv")), Seq("dst"))
+      .select(col("src"), col("dst"),
+        explode(array_intersect(col("nu"), col("nv"))).as("w"))
+    def edge(a: String, b: String) = tris.select(
+      least(col(a), col(b)).as("u"), greatest(col(a), col(b)).as("v"))
+    val sup = edge("src", "dst").union(edge("src", "w")).union(edge("dst", "w"))
+      .groupBy(col("u"), col("v")).agg(count(lit(1)).as("sup"))
+    e.join(sup, Seq("u", "v"), "left")
+      .select(col("u"), col("v"), coalesce(col("sup"), lit(0L)).as("support"))
   }
 
-  private[graph] def edgeSupport(e: DataFrame,
-                                 batches: Int = 1): DataFrame = {
-    val (out0, tmp) = edgeSupport0(e, batches)
-    val out = out0.localCheckpoint()
-    tmp.foreach(freeCkpt)
-    out
-  }
+  /** [[supportPlan]], checkpointed. */
+  private[graph] def edgeSupport(e: DataFrame): DataFrame =
+    owned(o => o(supportPlan(e)).localCheckpoint())
 
   /** [[edgeSupport]] with a fused predicate count on the checkpoint job. */
-  private def edgeSupportCount(e: DataFrame, pred: Column): (DataFrame, Long) = {
-    val (out0, tmp) = edgeSupport0(e)
-    val (out, Tally(kept, _, _)) = materialize(out0, Stats, pred)
-    tmp.foreach(freeCkpt)
+  private def edgeSupportCount(e: DataFrame, pred: Column): (DataFrame, Long) = owned { o =>
+    val (out, Tally(kept, _, _)) = materialize(o(supportPlan(e)), Stats, pred)
     (out, kept)
   }
 
@@ -624,34 +600,34 @@ object Algos {
     * iterated state is checkpoint-managed; the driver sees only the
     * edge-count scalar. */
   def kTruss(pairs: DataFrame, k: Int,
-             opts: PregelOptions = PregelOptions(maxSupersteps = 40)): DataFrame = {
+             opts: PregelOptions = PregelOptions(maxSupersteps = 40)): DataFrame = owned { o =>
     // measured stats, not plain localCheckpoint: edgeSupport references
     // e three times per round, so estimated stats would compound
     // 3^rounds through the checkpoints (see CheckpointBridge.materialize)
     var e = pairs.select(col("u"), col("v")).transform(materialize(_, Stats))
     var cnt = e.count()
     var step = 0
-    while (step < opts.maxSupersteps) {
+    var stable: Option[DataFrame] = None
+    while (stable.isEmpty && step < opts.maxSupersteps) {
       // fixpoint ⟺ a support pass over the CURRENT edge set drops
       // nothing (filtering on stale supports would exit one round early
       // with under-supported edges still in); the kept-count rides the
       // support checkpoint's own job
       val (sup, keptCnt) = edgeSupportCount(e, col("support") >= k - 2)
-      if (keptCnt == cnt) {
-        freeCkpt(e)
-        return sup.orderBy(col("u"), col("v"))
+      if (keptCnt == cnt) stable = Some(sup)
+      else {
+        val kept = sup.filter(col("support") >= k - 2)
+          .select("u", "v").transform(materialize(_, Stats))
+        freeCkpt(sup); freeCkpt(e)
+        e = kept
+        cnt = keptCnt
+        step += 1
       }
-      val kept = sup.filter(col("support") >= k - 2)
-        .select("u", "v").transform(materialize(_, Stats))
-      freeCkpt(sup); freeCkpt(e)
-      e = kept
-      cnt = keptCnt
-      step += 1
     }
-    // iteration budget exhausted: annotate the partially peeled set
-    val sup = edgeSupport(e)
-    freeCkpt(e)
-    sup.orderBy(col("u"), col("v"))
+    o(e)
+    // without a stable round the budget ran out: annotate the partially
+    // peeled set
+    stable.getOrElse(edgeSupport(e)).orderBy(col("u"), col("v"))
   }
 
   /** Minimum spanning forest via Borůvka: each round every component
@@ -683,9 +659,10 @@ object Algos {
     * fixpoint init. Driver sees one scalar per round plus one per jump.
     * Input canonical pairs (u < v, integral w); output the chosen edges
     * (u, v, w). */
-  def mst(pairs: DataFrame, opts: PregelOptions = PregelOptions(maxSupersteps = 30)): DataFrame = {
+  def mst(pairs: DataFrame,
+          opts: PregelOptions = PregelOptions(maxSupersteps = 30)): DataFrame = owned { o =>
     val s = pairs.sparkSession
-    var edges = pairs.select(col("u"), col("v"), col("w")).distinct().localCheckpoint()
+    val edges = o(pairs.select(col("u"), col("v"), col("w")).distinct().localCheckpoint())
     var comp = verticesOf(edges.select(col("u").as("src"), col("v").as("dst")))
       .select(col("id"), col("id").as("c")).localCheckpoint()
     var chosen: DataFrame = null
@@ -750,14 +727,9 @@ object Algos {
       }
       round += 1
     }
-    freeCkpt(edges)
-    freeCkpt(comp)
+    o(comp)
     if (chosen == null) s.emptyDataFrame
-    else {
-      val out = chosen.orderBy(col("u"), col("v")).localCheckpoint()
-      freeCkpt(chosen)
-      out
-    }
+    else o(chosen).orderBy(col("u"), col("v")).localCheckpoint()
   }
 
   /** Deterministic random-walk corpus: one walk per vertex, `len` steps.
@@ -773,22 +745,20 @@ object Algos {
     * per step ONE equi-join on (src, idx) — walk count × 1 rows joined
     * against the ranked adjacency, no per-vertex neighbor collection.
     * Returns (walk, step, vertex), steps 0..len. */
-  def randomWalks(symEdges: DataFrame, len: Int): DataFrame = {
+  def randomWalks(symEdges: DataFrame, len: Int): DataFrame = owned { o =>
     val e = symEdges.select("src", "dst").distinct()
     val w = Window.partitionBy(col("src")).orderBy(col("dst"))
-    val adj = e.select(col("src"), col("dst"),
-      (row_number().over(w) - lit(1)).cast("long").as("idx")).localCheckpoint()
-    val deg = adj.groupBy(col("src")).agg(count(lit(1)).as("deg")).localCheckpoint()
+    val adj = o(e.select(col("src"), col("dst"),
+      (row_number().over(w) - lit(1)).cast("long").as("idx")).localCheckpoint())
+    val deg = o(adj.groupBy(col("src")).agg(count(lit(1)).as("deg")).localCheckpoint())
     // engine-portable uniform: first 6 md5 hex digits (Corpus.md5Uniform's
     // rule, inlined to keep graph free of the pipeline package)
     def u(c: org.apache.spark.sql.Column) =
       conv(substring(md5(c), 1, 6), 16, 10).cast("long")
-    var cur = verticesOf(e)
-      .select(col("id").as("walk"), col("id").as("cur")).localCheckpoint()
-    // per-step frames stay checkpointed until the FINAL union
-    // materializes (freeing inside the loop would pull blocks out from
-    // under the still-lazy acc — the edgeJaccard lesson)
-    val steps = scala.collection.mutable.ArrayBuffer[DataFrame](cur)
+    // every step frame stays checkpointed until the final union
+    // materializes: the lazy acc reads them all
+    var cur = o(verticesOf(e)
+      .select(col("id").as("walk"), col("id").as("cur")).localCheckpoint())
     var acc = cur.select(col("walk"), lit(0).as("step"), col("cur").as("vertex"))
     for (i <- 1 to len) {
       val nxt = cur.select(col("walk"), col("cur").as("src"))
@@ -799,13 +769,10 @@ object Algos {
         .join(adj, Seq("src", "idx"))
         .select(col("walk"), col("dst").as("cur"))
         .localCheckpoint()
-      acc = acc.union(nxt.select(col("walk"), lit(i).as("step"), col("cur").as("vertex")))
-      steps += nxt
+      acc = acc.union(o(nxt).select(col("walk"), lit(i).as("step"), col("cur").as("vertex")))
       cur = nxt
     }
-    val out = acc.orderBy(col("walk"), col("step")).localCheckpoint()
-    steps.foreach(freeCkpt); freeCkpt(adj); freeCkpt(deg)
-    out
+    acc.orderBy(col("walk"), col("step")).localCheckpoint()
   }
 
   /** Edge-neighborhood Jaccard similarity (link strength): for each
@@ -813,7 +780,7 @@ object Algos {
     * a floor-scaled e6 BIGINT — the triangle-intersection kernel
     * ([[edgeSupport]], arboricity-bounded, no wedge materialization)
     * plus two degree lookups. Top `topK` by (jac desc, u, v). */
-  def edgeJaccard(pairs: DataFrame, topK: Int): DataFrame = {
+  def edgeJaccard(pairs: DataFrame, topK: Int): DataFrame = owned { o =>
     // Checkpoint the input ONCE (the triangleCount discipline): the
     // support pass references the edge frame three times (degree pass,
     // orientation join, 0-fill credits join), and `pairs` is often an
@@ -822,12 +789,11 @@ object Algos {
     // the dominant term of a 17.1× blow-up at the 10× decade
     // (round 11, PLANS.md): three 10×-sized self-join+distinct evaluations,
     // each spilling, where one checkpointed pass suffices.
-    val e = pairs.select(col("u"), col("v")).localCheckpoint()
-    val sup = edgeSupport(e)
+    val sup = o(edgeSupport(o(pairs.select(col("u"), col("v")).localCheckpoint())))
     // degrees from the CHECKPOINTED support frame (same edge set, same
     // rows) — one aggregation over materialized blocks
     val deg = pairDegrees(sup)
-    val out = sup
+    sup
       .join(deg.select(col("id").as("u"), col("d").as("du")), Seq("u"))
       .join(deg.select(col("id").as("v"), col("d").as("dv")), Seq("v"))
       .select(col("u"), col("v"), col("support"),
@@ -836,9 +802,7 @@ object Algos {
           .otherwise(lit(1000000L)).as("jac_e6"))
       .orderBy(col("jac_e6").desc, col("u"), col("v"))
       .limit(topK)
-      .localCheckpoint() // materialize before freeing the support frame
-    freeCkpt(sup); freeCkpt(e)
-    out
+      .localCheckpoint()
   }
 
   /** Double-sweep diameter lower bound (the classic 2-BFS estimator,
@@ -848,13 +812,12 @@ object Algos {
     * eccentricity is the bound. Two [[bfs]] runs + two driver scalars —
     * the whole-graph work is the two BSP sweeps, nothing else. Returns
     * one row (start_id, far_id, diameter_lb). */
-  def doubleSweep(symEdges: DataFrame): DataFrame = {
+  def doubleSweep(symEdges: DataFrame): DataFrame = owned { o =>
     val s = symEdges.sparkSession
     val src = symEdges.agg(min(col("src"))).first().getLong(0)
-    val b1 = bfs(symEdges, Seq(src))
-    val far = b1.orderBy(col("level").desc, col("id")).limit(1)
+    val far = o(bfs(symEdges, Seq(src))).orderBy(col("level").desc, col("id")).limit(1)
       .first().getLong(0)
-    val ecc = bfs(symEdges, Seq(far)).agg(max(col("level"))).first().getLong(0)
+    val ecc = o(bfs(symEdges, Seq(far))).agg(max(col("level"))).first().getLong(0)
     import s.implicits._
     Seq((src, far, ecc)).toDF("start_id", "far_id", "diameter_lb")
   }
@@ -870,18 +833,16 @@ object Algos {
     * Returns (source, ecc, n_reached) — max hop and reach size per
     * source; on a disconnected graph ecc is over the reachable part. */
   def eccentricities(edges: DataFrame, sources: Seq[Long],
-                     maxHops: Int = 64): DataFrame = {
-    val settled = taggedBfs(edges, sources, maxHops)
+                     maxHops: Int = 64): DataFrame = owned { o =>
+    val settled = o(taggedBfs(edges, sources, maxHops))
     // ecc (max), reach size, and the closeness numerator (sum of hop
     // distances) all fall out of the same settled frame — one BFS pays
     // for every distance-based centrality of the source set
-    val out = settled.groupBy(col("tag").as("source"))
+    settled.groupBy(col("tag").as("source"))
       .agg(max(col("level")).as("ecc"), count(lit(1)).as("n_reached"),
         sum(col("level")).as("dist_sum"))
       .orderBy(col("source"))
       .localCheckpoint()
-    freeCkpt(settled)
-    out
   }
 
   /** lcm(1..16): common denominator for the exact harmonic numerator —
@@ -900,9 +861,8 @@ object Algos {
     * e6 floor flipped 805249999 ↔ 805250000 between runs), so hashable
     * outputs must use the numerator, not the double. */
   def harmonicCentrality(edges: DataFrame, sources: Seq[Long],
-                         maxHops: Int = 64): DataFrame = {
-    val settled = taggedBfs(edges, sources, maxHops)
-    val out = settled.groupBy(col("tag").as("source"))
+                         maxHops: Int = 64): DataFrame = owned { o =>
+    o(taggedBfs(edges, sources, maxHops)).groupBy(col("tag").as("source"))
       .agg(sum(when(col("level") > 0, lit(1.0) / col("level"))
         .otherwise(lit(0.0))).as("harmonic"),
         sum(when(col("level") > 0, expr(s"$HarmonicLcm div level"))
@@ -910,8 +870,6 @@ object Algos {
         count(lit(1)).as("n_reached"))
       .orderBy(col("source"))
       .localCheckpoint()
-    freeCkpt(settled)
-    out
   }
 
   /** The shared tagged multi-source BFS behind the distance centralities:
@@ -939,14 +897,13 @@ object Algos {
     * settled∪next re-checkpoint: each frontier stays its own checkpoint
     * and the settled result is their lazy union.
     *
-    * Returns the settled frame as a union of managed checkpoints —
-    * callers MUST freeCkpt it after materializing their aggregate
-    * (freeCkpt walks every LogicalRDD leaf, freeing all levels). */
+    * Returns the settled frame: the lazy union of the per-level
+    * checkpoints. */
   private[graft] def taggedBfs(edges: DataFrame, sources: Seq[Long],
-                               maxHops: Int): DataFrame = {
+                               maxHops: Int): DataFrame = owned { o =>
     val s = edges.sparkSession
     import s.implicits._
-    val e = materialize(Prep.makeSymmetric(edges.select("src", "dst")), AdaptiveHash("src"))
+    val e = o(materialize(Prep.makeSymmetric(edges.select("src", "dst")), AdaptiveHash("src")))
     val src0 = sources.map(x => (x, x, 0L)).toDF("id", "tag", "level")
       .localCheckpoint()
     var frontiers = Vector(src0)
@@ -968,18 +925,15 @@ object Algos {
           val d = if (prev == null) d0
             else d0.join(prev.select("id", "tag"), Seq("id", "tag"), "left_anti")
           val (ck, Tally(n, _, _)) = materialize(d, Stats, lit(true))
-          live = n > 0; ck
+          live = n > 0; o(ck)
         })
       if (live) {
         frontiers :+= next
         prev = frontier
         frontier = next
-      } else {
-        freeCkpt(next)
       }
       h += 1
     }
-    freeCkpt(e)
     frontiers.reduce(_ union _)
   }
 
@@ -1023,27 +977,24 @@ object Algos {
   def neighborhoodFunction(edges: DataFrame, maxH: Int = 4,
                            sampleMod: Long = 151L,
                            maxPairs: Long = sys.env.get("SPARK_GRAFT_MAX_EXACT_PAIRS")
-                             .map(_.toLong).getOrElse(2000000000L)): DataFrame = {
+                             .map(_.toLong).getOrElse(2000000000L)): DataFrame = owned { o =>
     val s = edges.sparkSession
     import s.implicits._
-    val e = materialize(Prep.makeSymmetric(edges.select("src", "dst")), AdaptiveHash("src"))
+    val e = o(materialize(Prep.makeSymmetric(edges.select("src", "dst")), AdaptiveHash("src")))
     // one scalar job: edge count + approximate vertex count → the
     // average degree the per-wave expansion projection prices with
     val dr = e.agg(count(lit(1)).as("m"),
       approx_count_distinct(col("src")).as("n")).first()
     val avgDeg = math.max(1.0, dr.getLong(0).toDouble / math.max(1L, dr.getLong(1)))
-    var frontier = materialize(
+    var frontier = o(materialize(
       verticesOf(e).filter(pmod(col("id"), lit(sampleMod)) === 0L)
-        .select(col("id"), col("id").as("tag"), lit(0L).as("level")), AdaptiveHash("id"))
+        .select(col("id"), col("id").as("tag"), lit(0L).as("level")), AdaptiveHash("id")))
     var prev: DataFrame = null
     var counts = Vector((0L, frontier.count()))
     var lastWave = counts.last._2
     (1 to maxH).foreach { h =>
       val projected = counts.last._2 + (lastWave * avgDeg).toLong
       if (projected > maxPairs) {
-        freeCkpt(frontier)
-        if (prev != null) freeCkpt(prev)
-        freeCkpt(e)
         throw new IllegalStateException(
           s"neighborhoodFunction: projected settled-pair volume ~$projected " +
             s"at hop $h exceeds maxPairs=$maxPairs. Exact N(h) state is " +
@@ -1071,7 +1022,7 @@ object Algos {
           // the materialized blocks exactly (a count() over a cached
           // checkpoint is a metadata-cheap job; the loop is fixed-length,
           // so no barrier is saved by fusing here anyway).
-          val ck = materialize(d, Stats)
+          val ck = o(materialize(d, Stats))
           val n = ck.count()
           lastWave = n
           counts :+= ((h.toLong, counts.last._2 + n)); ck
@@ -1080,9 +1031,6 @@ object Algos {
       prev = frontier
       frontier = next
     }
-    freeCkpt(frontier)
-    if (prev != null) freeCkpt(prev)
-    freeCkpt(e)
     counts.toDF("h", "n_pairs").orderBy(col("h"))
   }
 
@@ -1102,10 +1050,10 @@ object Algos {
     * but an ESTIMATOR: it backs [[neighborhoodFunction]] at scale and is
     * therefore spec-asserted against the exact operator, not
     * oracle-gated. Returns (h, n_pairs_est DOUBLE) for h = 0..maxH. */
-  def anfSketch(symEdges: DataFrame, maxH: Int = 4, numReg: Int = 64): DataFrame = {
+  def anfSketch(symEdges: DataFrame, maxH: Int = 4, numReg: Int = 64): DataFrame = owned { o =>
     val s = symEdges.sparkSession
     import s.implicits._
-    val e = materialize(symEdges.select("src", "dst"), AdaptiveHash("src"))
+    val e = o(materialize(symEdges.select("src", "dst"), AdaptiveHash("src")))
     // register j's initial bitmap: the lowest set bit of a 60-bit md5
     // value (x & -x) — geometric ρ without a count-trailing-zeros builtin
     val seeded = verticesOf(e).select(col("id"),
@@ -1140,7 +1088,7 @@ object Algos {
         .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
           x => x.getField("m")).as("regs"))
     }
-    freeCkpt(cur); freeCkpt(e)
+    o(cur)
     out.toDF("h", "n_pairs_est").orderBy(col("h"))
   }
 
@@ -1158,8 +1106,8 @@ object Algos {
     * one for the colored-neighbor color sets (collect_set is bounded by
     * the color count ≤ Δ+1, not the degree), state one row per vertex.
     * Returns (id, color). */
-  def greedyColoring(symEdges: DataFrame, maxRounds: Int = 64): DataFrame = {
-    val e = materialize(symEdges.select("src", "dst"), AdaptiveHash("src"))
+  def greedyColoring(symEdges: DataFrame, maxRounds: Int = 64): DataFrame = owned { o =>
+    val e = o(materialize(symEdges.select("src", "dst"), AdaptiveHash("src")))
     val init = materialize(verticesOf(e).select(col("id"),
       conv(substring(md5(col("id").cast("string")), 1, 15), 16, 10).cast("long").as("p"),
       lit(null).cast("long").as("color")), AdaptiveHash("id"))
@@ -1191,9 +1139,7 @@ object Algos {
       verts.join(assigned, Seq("id"), "left")
         .select(col("id"), col("p"), coalesce(col("color"), col("newc")).as("color"))
     }
-    val out = verts.select(col("id"), col("color")).orderBy(col("id")).localCheckpoint()
-    freeCkpt(verts); freeCkpt(e)
-    out
+    o(verts).select(col("id"), col("color")).orderBy(col("id")).localCheckpoint()
   }
 
   /** Distributed maximal matching by mutual proposals (the classic BSP
@@ -1205,13 +1151,13 @@ object Algos {
     * priorities, (p, id) tiebreak) → unique fixpoint, oracle-unrollable.
     * Per round: one live-edge⋈priority shuffle + one proposal self-join
     * + one anti-join removal. Returns matched pairs (u, v), u < v. */
-  def maximalMatching(symEdges: DataFrame, maxRounds: Int = 30): DataFrame = {
+  def maximalMatching(symEdges: DataFrame, maxRounds: Int = 30): DataFrame = owned { o =>
     val s = symEdges.sparkSession
     import s.implicits._
-    val e = materialize(symEdges.select("src", "dst"), AdaptiveHash("src"))
-    val prio = materialize(verticesOf(e).select(col("id"),
+    val e = o(materialize(symEdges.select("src", "dst"), AdaptiveHash("src")))
+    val prio = o(materialize(verticesOf(e).select(col("id"),
       conv(substring(md5(col("id").cast("string")), 1, 15), 16, 10).cast("long").as("p")),
-      AdaptiveHash("id"))
+      AdaptiveHash("id")))
     var live = e
     // one ROUND-SIZED checkpoint per round; the matched result is their
     // lazy union. The anti-join partner is only THIS round's mutual
@@ -1231,11 +1177,11 @@ object Algos {
           Window.partitionBy(col("src")).orderBy(col("np").desc, col("dst").desc)))
         .filter(col("rn") === 1)
         .select(col("src"), col("dst"))
-      val mutual = materialize(pick.as("a")
+      val mutual = o(materialize(pick.as("a")
           .join(pick.as("b"),
             col("a.src") === col("b.dst") && col("a.dst") === col("b.src"))
           .filter(col("a.src") < col("a.dst"))
-          .select(col("a.src").as("u"), col("a.dst").as("v")), Stats)
+          .select(col("a.src").as("u"), col("a.dst").as("v")), Stats))
       rounds :+= mutual
       // dup endpoints are harmless on the anti-join's build side — no
       // distinct pass needed
@@ -1250,10 +1196,9 @@ object Algos {
       liveCount = nextLiveCount
       round += 1
     }
-    val out = (Seq.empty[(Long, Long)].toDF("u", "v") +: rounds)
+    o(live)
+    (Seq.empty[(Long, Long)].toDF("u", "v") +: rounds)
       .reduce(_ union _).orderBy(col("u")).localCheckpoint()
-    rounds.foreach(freeCkpt); freeCkpt(live); freeCkpt(prio); freeCkpt(e)
-    out
   }
 
   /** ½-approximation maximum-WEIGHT matching by mutual heaviest-edge
@@ -1265,10 +1210,10 @@ object Algos {
     * Deterministic (weight then id tiebreak) with a SHARED fixed round
     * cap, so the oracle's unroll reproduces the exact pair set even
     * before full maximality. Returns (u, v, w) matched pairs. */
-  def maxWeightMatching(symEdges: DataFrame, maxRounds: Int = 12): DataFrame = {
+  def maxWeightMatching(symEdges: DataFrame, maxRounds: Int = 12): DataFrame = owned { o =>
     val s = symEdges.sparkSession
     import s.implicits._
-    var live = materialize(symEdges.select("src", "dst", "w"), AdaptiveHash("src"))
+    var live = o(materialize(symEdges.select("src", "dst", "w"), AdaptiveHash("src")))
     // round-sized checkpoints + current-round-endpoints anti-join — same
     // rationale as [[maximalMatching]] (live inductively excludes every
     // earlier round's matched endpoints)
@@ -1281,11 +1226,11 @@ object Algos {
           Window.partitionBy(col("src")).orderBy(col("w").desc, col("dst").desc)))
         .filter(col("rn") === 1)
         .select(col("src"), col("dst"), col("w"))
-      val mutual = materialize(pick.as("a")
+      val mutual = o(materialize(pick.as("a")
           .join(pick.as("b"),
             col("a.src") === col("b.dst") && col("a.dst") === col("b.src"))
           .filter(col("a.src") < col("a.dst"))
-          .select(col("a.src").as("u"), col("a.dst").as("v"), col("a.w").as("w")), Stats)
+          .select(col("a.src").as("u"), col("a.dst").as("v"), col("a.w").as("w")), Stats))
       rounds :+= mutual
       val mv = mutual.select(col("u").as("id"))
         .union(mutual.select(col("v").as("id")))
@@ -1298,10 +1243,9 @@ object Algos {
       liveCount = nextLiveCount
       round += 1
     }
-    val out = (Seq.empty[(Long, Long, Long)].toDF("u", "v", "w") +: rounds)
+    o(live)
+    (Seq.empty[(Long, Long, Long)].toDF("u", "v", "w") +: rounds)
       .reduce(_ union _).orderBy(col("u")).localCheckpoint()
-    rounds.foreach(freeCkpt); freeCkpt(live)
-    out
   }
 
   /** HITS hubs & authorities (Kleinberg 1999, public algorithm) on a
@@ -1317,8 +1261,8 @@ object Algos {
     * Scale: per round two edge⋈score shuffles (one per direction) + two
     * scalar aggs; iterated state is one row per vertex, checkpointed
     * with declared hash(id) layout. Returns (id, auth, hub) doubles. */
-  def hits(edges: DataFrame, iterations: Int): DataFrame = {
-    val e = materialize(edges.select("src", "dst"), AdaptiveHash("src"))
+  def hits(edges: DataFrame, iterations: Int): DataFrame = owned { o =>
+    val e = o(materialize(edges.select("src", "dst"), AdaptiveHash("src")))
     // (r15: a hash(dst)-declared edge twin for the hub pull was tried
     // and REVERTED — jobs 71 → 89: at bench scale the measured-stats
     // edge frame broadcasts into that join anyway, so the declared
@@ -1327,7 +1271,7 @@ object Algos {
     // exchange this would remove only exists past the broadcast
     // threshold, where the salsa-style eo/ei twins are the shape to
     // copy if hits iterations ever grow.)
-    val v = materialize(verticesOf(e), AdaptiveHash("id"))
+    val v = o(materialize(verticesOf(e), AdaptiveHash("id")))
     var h = materialize(v.select(col("id"), lit(1.0).as("h")), AdaptiveHash("id"))
     var a: DataFrame = null
     var i = 0
@@ -1361,12 +1305,10 @@ object Algos {
       a = aN
       i += 1
     }
-    val out = a.join(h, Seq("id"))
+    o(a).join(o(h), Seq("id"))
       .select(col("id"), col("a").as("auth"), col("h").as("hub"))
       .orderBy(col("id"))
       .localCheckpoint()
-    freeCkpt(a); freeCkpt(h); freeCkpt(v); freeCkpt(e)
-    out
   }
 
   /** Time-respecting (temporal) reachability: earliest-arrival times
@@ -1379,10 +1321,10 @@ object Algos {
     * recurrence — the unrolled oracle matches round-for-round even
     * short of the fixpoint, as Bracha-Toueg). Same shuffle shape as
     * [[sssp]]: per round one arr⋈edges join + a min agg. */
-  def temporalReach(edges: DataFrame, source: Long, rounds: Int): DataFrame = {
+  def temporalReach(edges: DataFrame, source: Long, rounds: Int): DataFrame = owned { o =>
     val s = edges.sparkSession
     import s.implicits._
-    val e = materialize(edges.select("src", "dst", "t"), AdaptiveHash("src"))
+    val e = o(materialize(edges.select("src", "dst", "t"), AdaptiveHash("src")))
     var a = Seq((source, 0L)).toDF("id", "arr").localCheckpoint()
     var i = 0
     while (i < rounds) {
@@ -1395,7 +1337,6 @@ object Algos {
       a = next
       i += 1
     }
-    freeCkpt(e)
     a.orderBy(col("id"))
   }
 
@@ -1426,12 +1367,12 @@ object Algos {
     * edges are symmetrized internally (the round-11 taggedBfs guard;
     * idempotent on already-symmetric input). */
   def betweenness(edges: DataFrame, sources: Seq[Long],
-                  maxHops: Int = 32): DataFrame = {
+                  maxHops: Int = 32): DataFrame = owned { o =>
     val s = edges.sparkSession
     import s.implicits._
-    val e = materialize(Prep.makeSymmetric(edges.select("src", "dst")), AdaptiveHash("src"))
-    val src0 = sources.map(x => (x, x, 0L, 1L)).toDF("id", "tag", "level", "sigma")
-      .localCheckpoint()
+    val e = o(materialize(Prep.makeSymmetric(edges.select("src", "dst")), AdaptiveHash("src")))
+    val src0 = o(sources.map(x => (x, x, 0L, 1L)).toDF("id", "tag", "level", "sigma")
+      .localCheckpoint())
     // one checkpoint PER LEVEL (levels(h) holds exactly the level-h
     // rows): the forward anti-joins use the [[taggedBfs]] undirected
     // two-frontier rule — a candidate expanded from frontier h can only
@@ -1465,14 +1406,12 @@ object Algos {
             else d0.join(prev.select("id", "tag"), Seq("id", "tag"), "left_anti")
           val (ck, Tally(n, _, _)) = materialize(d.select(col("id"), col("tag"),
               lit((h + 1).toLong).as("level"), col("sigma")), Stats, lit(true))
-          live = n > 0; ck
+          live = n > 0; o(ck)
         })
       if (live) {
         levels :+= next
         prev = frontier
         frontier = next
-      } else {
-        freeCkpt(next)
       }
       h += 1
     }
@@ -1497,19 +1436,15 @@ object Algos {
         .agg(sum((col("sigma").cast("double") / col("sigma_w"))
           * (lit(1.0) + col("delta_w"))).as("delta"))
         .localCheckpoint()
-      perLevel += dl
+      perLevel += o(dl)
       deltaUp = dl
       l -= 1
     }
-    val out =
-      (if (perLevel.isEmpty) deltaUp
-       else perLevel.reduce(_ unionByName _))
-        .groupBy(col("id")).agg(sum(col("delta")).as("bc"))
-        .orderBy(col("id"))
-        .localCheckpoint()
-    perLevel.foreach(freeCkpt)
-    levels.foreach(freeCkpt); freeCkpt(e)
-    out
+    (if (perLevel.isEmpty) deltaUp
+     else perLevel.reduce(_ unionByName _))
+      .groupBy(col("id")).agg(sum(col("delta")).as("bc"))
+      .orderBy(col("id"))
+      .localCheckpoint()
   }
 
   /** Degree assortativity (Newman 2002, public formula): the Pearson
@@ -1555,10 +1490,10 @@ object Algos {
     * integer counts and m2 is ONE driver scalar, so both engines divide
     * identical operands — deterministic to the e6 floor. Two shuffles:
     * members⋈degrees and the double label join on the edge list. */
-  def modularity(symEdges: DataFrame, communities: DataFrame): DataFrame = {
+  def modularity(symEdges: DataFrame, communities: DataFrame): DataFrame = owned { o =>
     // the edge list is scanned three times (m2, degrees, label join) —
     // checkpoint so an expensive upstream derivation runs once
-    val e = symEdges.select("src", "dst").localCheckpoint()
+    val e = o(symEdges.select("src", "dst").localCheckpoint())
     val m2 = e.count().toDouble // driver scalar (master-collects-scalars)
     val deg = e.groupBy(col("src").as("id")).agg(count(lit(1)).as("d"))
     val cd = communities.join(deg, Seq("id"), "left")
@@ -1570,15 +1505,13 @@ object Algos {
       .join(communities.select(col("id").as("dst"), col("community").as("cd2")), Seq("dst"))
       .filter(col("cs") === col("cd2"))
       .groupBy(col("cs").as("community")).agg(count(lit(1)).as("internal2"))
-    val out = cd.join(ie, Seq("community"), "left")
+    cd.join(ie, Seq("community"), "left")
       .select(col("community"), col("n_members"),
         coalesce(col("internal2"), lit(0L)).as("internal2"), col("deg_sum"),
         (coalesce(col("internal2"), lit(0L)) / lit(m2)
           - (col("deg_sum") / lit(m2)) * (col("deg_sum") / lit(m2))).as("contrib"))
       .orderBy(col("community"))
-      .localCheckpoint() // materialize before freeing the edge checkpoint
-    freeCkpt(e)
-    out
+      .localCheckpoint()
   }
 
   /** Synchronous label-propagation community detection: every round each
@@ -1598,8 +1531,8 @@ object Algos {
     * per-vertex sort. Iterated state is one (id, lbl) row per vertex,
     * checkpoint-managed with declared hash(id) partitioning so the
     * per-round joins never reshuffle the label frame. */
-  def lpa(symEdges: DataFrame, rounds: Int): DataFrame = {
-    val e = materialize(symEdges.select("src", "dst"), AdaptiveHash("src"))
+  def lpa(symEdges: DataFrame, rounds: Int): DataFrame = owned { o =>
+    val e = o(materialize(symEdges.select("src", "dst"), AdaptiveHash("src")))
     val init = materialize(verticesOf(e).select(col("id"), col("id").as("lbl")), AdaptiveHash("id"))
     val (l, _) = Fixpoint.run(init, Fixpoint.materializing(AdaptiveHash("id")), rounds) {
         (l, _, _) =>
@@ -1614,7 +1547,6 @@ object Algos {
       l.join(pick, Seq("id"), "left")
         .select(col("id"), coalesce(col("nl"), col("lbl")).as("lbl"))
     }
-    freeCkpt(e)
     l.withColumnRenamed("lbl", "community")
   }
 
@@ -1688,9 +1620,9 @@ object Algos {
     * shuffle shape, state one row per vertex. */
   def katz(edges: DataFrame, rounds: Int, attenDiv: Long = 4096L,
            scale: Long = 1000000L,
-           opts: PregelOptions = PregelOptions()): DataFrame = {
-    val e = materialize(edges.select("src", "dst"), AdaptiveHash("src"))
-    val v = verticesOf(e).persist(StorageLevel.MEMORY_AND_DISK)
+           opts: PregelOptions = PregelOptions()): DataFrame = owned { o =>
+    val e = o(materialize(edges.select("src", "dst"), AdaptiveHash("src")))
+    val v = o(verticesOf(e).persist(StorageLevel.MEMORY_AND_DISK))
     val init = v.withColumn("x", lit(scale))
     val res = Pregel.iterate(init, rounds, opts) { (verts, _) =>
       val sums = verts.join(e, col("id") === col("src"))
@@ -1699,7 +1631,6 @@ object Algos {
         .select(col("id"),
           (lit(scale) + expr(s"coalesce(s, 0L) div $attenDiv")).as("x"))
     }
-    freeCkpt(e); v.unpersist()
     res.select(col("id"), col("x").as("katz_scaled"))
   }
 
@@ -1717,21 +1648,20 @@ object Algos {
     * flat only because the core reach converges in O(1) waves.) A
     * vertex reaching AND reached by the core is in the core SCC by
     * definition, so the four classes partition the vertex set. */
-  def bowtie(edges: DataFrame, opts: PregelOptions = PregelOptions()): DataFrame = {
-    val e = materialize(edges.select("src", "dst"), AdaptiveHash("src"))
-    val comp = scc(e, opts)
+  def bowtie(edges: DataFrame, opts: PregelOptions = PregelOptions()): DataFrame = owned { o =>
+    val e = o(materialize(edges.select("src", "dst"), AdaptiveHash("src")))
+    val comp = o(scc(e, opts))
     val core = comp.groupBy(col("comp")).agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("comp")).limit(1).select(col("comp"))
-    val coreSet = comp.join(broadcast(core), Seq("comp")).select(col("id"))
-      .localCheckpoint()
-    freeCkpt(comp) // scc's per-round checkpoints: nothing reads them past coreSet
+    val coreSet = o(comp.join(broadcast(core), Seq("comp")).select(col("id"))
+      .localCheckpoint())
 
     // Int.MaxValue: bow-tie classification is a TRUE fixpoint (a vertex
     // 51 hops up a tendril is still "in") — reachable's per-wave fused
     // convergence count makes the unbounded loop exact and job-minimal,
     // and its size-gated hint keeps the SCC-sized wave-1 frontier off
     // the broadcast path (code-review r10 findings 2+3)
-    val fwd = reachable(coreSet, e, Int.MaxValue)
+    val fwd = o(reachable(coreSet, e, Int.MaxValue))
     // The backward reach joins the TRANSPOSED edges on "src" every wave.
     // A plain projection of `e` carries e's declared hash(original src)
     // partitioning — which is hash(dst) of the reversed frame, the WRONG
@@ -1739,10 +1669,10 @@ object Algos {
     // (round-10 verdict, minor finding). Re-materializing through
     // AdaptiveHash declares hash(new src): one extra checkpoint job buys
     // exchange-free edge sides on all large-frontier waves.
-    val rev = materialize(
-      e.select(col("dst").as("src"), col("src").as("dst")), AdaptiveHash("src"))
-    val bwd = reachable(coreSet, rev, Int.MaxValue)
-    val out = verticesOf(e)
+    val rev = o(materialize(
+      e.select(col("dst").as("src"), col("src").as("dst")), AdaptiveHash("src")))
+    val bwd = o(reachable(coreSet, rev, Int.MaxValue))
+    verticesOf(e)
       .join(coreSet.withColumnRenamed("id", "cid"), col("id") === col("cid"), "left")
       .join(bwd.withColumnRenamed("id", "bid"), col("id") === col("bid"), "left")
       .join(fwd.withColumnRenamed("id", "fid"), col("id") === col("fid"), "left")
@@ -1752,11 +1682,6 @@ object Algos {
           .when(col("fid").isNotNull, lit("out"))
           .otherwise(lit("other")).as("cls"))
       .localCheckpoint()
-    freeCkpt(e); freeCkpt(rev)
-    if (!(fwd eq coreSet)) freeCkpt(fwd)
-    if (!(bwd eq coreSet)) freeCkpt(bwd)
-    freeCkpt(coreSet)
-    out
   }
 
   /** Maximal independent set, deterministic id-priority variant of the
@@ -1765,15 +1690,15 @@ object Algos {
     * enters the set when its id is smaller than every still-undecided
     * neighbor; its neighbors then leave. st: 0=undecided, 1=in, 2=out. */
   def independentSet(symEdges: DataFrame,
-                     opts: PregelOptions = PregelOptions(maxSupersteps = 40)): DataFrame = {
-    val e = symEdges.select("src", "dst").repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+                     opts: PregelOptions = PregelOptions(maxSupersteps = 40)): DataFrame = owned { o =>
+    val e = o(symEdges.select("src", "dst").repartition(col("src"))
+      .persist(StorageLevel.MEMORY_AND_DISK))
     val init = verticesOf(e).select(col("id"), lit(0).as("st"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val undecided = Fixpoint.counted(init.count())
     // the undecided-count rides the checkpoint job (fused accumulator)
     val (verts, _) = Fixpoint.run(init, Fixpoint.materializing(Stats, col("st") === 0),
-        opts.maxSupersteps, initOwned = false, start = Some(undecided),
+        opts.maxSupersteps, start = Some(undecided),
         continue = _.tally.count > 0) { (verts, _, _) =>
       val unk = verts.filter(col("st") === 0)
       val minNbr = e.join(unk.select(col("id").as("dst")), Seq("dst"))
@@ -1792,7 +1717,6 @@ object Algos {
             .when(col("is_out") === 1, lit(2))
             .otherwise(lit(0)).as("st"))
     }
-    e.unpersist()
     verts.select(col("id"), (col("st") === 1).cast("int").as("in_set"))
   }
 
@@ -1825,9 +1749,9 @@ object Algos {
     * analog is EX/BrachaTouegDeadlockComputation.java (the OR/N-of-M
     * model); the AND model is the classic wait-for special case.
     * Returns (id, deadlocked INT). */
-  def deadlock(edges: DataFrame, opts: PregelOptions = PregelOptions()): DataFrame = {
+  def deadlock(edges: DataFrame, opts: PregelOptions = PregelOptions()): DataFrame = owned { o =>
     val e = edges.select("src", "dst")
-    val comp = scc(e, opts)
+    val comp = o(scc(e, opts))
     val sizes = comp.groupBy(col("comp")).agg(count(lit(1)).as("sz"))
     val cyclic = comp.join(sizes, Seq("comp")).filter(col("sz") >= 2).select(col("id"))
       .union(e.filter(col("src") === col("dst")).select(col("src").as("id")))
@@ -1837,11 +1761,9 @@ object Algos {
     // reachability (one small job per wave) instead of a full-vertex
     // Pregel loop — the reach is monotone-set, so the frontier shape
     // applies exactly.
-    val reversed = e.select(col("dst").as("src"), col("src").as("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val reversed = o(e.select(col("dst").as("src"), col("src").as("dst"))
+      .persist(StorageLevel.MEMORY_AND_DISK))
     val dl = reachable(cyclic, reversed, opts.maxSupersteps)
-    reversed.unpersist()
-    freeCkpt(comp) // scc's per-round checkpoints: reachable's seed frame read them eagerly
     verticesOf(e)
       .join(dl.withColumn("d", lit(1)), Seq("id"), "left")
       .select(col("id"), coalesce(col("d") === 1, lit(false)).cast("int").as("deadlocked"))
@@ -1874,21 +1796,22 @@ object Algos {
     *
     * Returns (id, notified INT, free INT); the initiator is deadlocked
     * iff its free = 0. */
-  def brachaToueg(edges: DataFrame, initiator: Long, rounds: Int = 20): DataFrame = {
+  def brachaToueg(edges: DataFrame, initiator: Long,
+                  rounds: Int = 20): DataFrame = owned { o =>
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = edges.select(col("src"), col("dst"), col("tag"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val e = o(edges.select(col("src"), col("dst"), col("tag"))
+      .persist(StorageLevel.MEMORY_AND_DISK))
     // one endpoint pass yields every id set the algorithm needs (vertex
     // universe, request holders, wait targets) — one aggregation job
     // instead of three distincts + a union
-    val ends = e.select(explode(array(
+    val ends = o(e.select(explode(array(
         struct(col("src").as("id"), lit(true).as("s")),
         struct(col("dst").as("id"), lit(false).as("s")))).as("x"))
       .select(col("x.id").as("id"), col("x.s").as("s"))
       .groupBy(col("id"))
       .agg(bool_or(col("s")).as("is_src"), bool_or(!col("s")).as("is_dst"))
-      .localCheckpoint()
+      .localCheckpoint())
     val srcIds = ends.filter(col("is_src")).select("id")
     val dstIds = ends.filter(col("is_dst")).select("id")
     val verts = ends.select("id")
@@ -1900,9 +1823,9 @@ object Algos {
     // f_{rounds-1} after the loop. In a bipartite request graph (the
     // common shape: clients waiting on resource holders) this shrinks the
     // per-round state to the resource core — here 588k edges → 4k.
-    val eCore = e.join(broadcast(dstIds.select(col("id").as("src"))),
+    val eCore = o(e.join(broadcast(dstIds.select(col("id").as("src"))),
         Seq("src"), "left_semi")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .persist(StorageLevel.MEMORY_AND_DISK))
     val ePeeled = e.join(broadcast(dstIds.select(col("id").as("src"))),
       Seq("src"), "left_anti")
     // the initiator may itself be a pure source; its out-edges still fire
@@ -1912,7 +1835,7 @@ object Algos {
     // ≤ `rounds` hops, in delta-frontier form (see [[reachable]]) — the
     // same n_i recurrence the oracle's unrolled CTEs replay, one small
     // job per wave instead of a full-vertex-frame Pregel superstep.
-    val notified = reachable(Seq(initiator).toDF("id"), eNotify, rounds)
+    val notified = o(reachable(Seq(initiator).toDF("id"), eNotify, rounds))
     // Phase 2 — GRANT cascade to fixpoint, delta-frontier form: instead
     // of re-aggregating every (src, tag) group against the full free set
     // each round, keep a per-(src, tag) unmet-target counter and
@@ -1923,9 +1846,9 @@ object Algos {
     // targets(src,tag) ⊆ free_{i-1}} — because free grows monotonically,
     // frontiers are disjoint, and (src, dst) pairs are unique (one edge =
     // one request), so every edge decrements its group exactly once.
-    val f0 = notified
+    val f0 = o(notified
       .join(srcIds, Seq("id"), "left_anti")
-      .localCheckpoint()
+      .localCheckpoint())
     var frontier: DataFrame = f0
     var freed = Vector[DataFrame](f0) // disjoint by construction
     // cnt holds one (src, tag, unmet) row per still-unsatisfied request
@@ -1940,12 +1863,10 @@ object Algos {
     // decrement, and newly-freed frames are frontier-sized — explicit
     // broadcast hints keep every per-round join shuffle-free on the big
     // side (checkpoint leaves have no stats for Catalyst to see that).
-    var cnt = eCore.groupBy(col("src"), col("tag")).agg(count(lit(1)).as("unmet"))
-      .localCheckpoint()
     // every checkpointed counter frame stays referenced by that round's
-    // lazy `newly` filter in `freed` until the output materializes — track
-    // them and drop all blocks after the final localCheckpoint below
-    val spentFrames = scala.collection.mutable.ArrayBuffer[DataFrame](ends, f0, cnt)
+    // lazy `newly` filter in `freed` until the output materializes
+    var cnt = o(eCore.groupBy(col("src"), col("tag")).agg(count(lit(1)).as("unmet"))
+      .localCheckpoint())
     var granting = true
     var i = 0
     while (granting && i < rounds) {
@@ -1958,11 +1879,10 @@ object Algos {
         val dec = eCore.join(broadcast(frontier.select(col("id").as("dst"))),
             Seq("dst"), "left_semi")
           .groupBy(col("src"), col("tag")).agg(count(lit(1)).as("d"))
-        val cntNext = cnt.join(broadcast(dec), Seq("src", "tag"), "left")
+        val cntNext = o(cnt.join(broadcast(dec), Seq("src", "tag"), "left")
           .select(col("src"), col("tag"),
             (col("unmet") - coalesce(col("d"), lit(0L))).as("unmet"))
-          .localCheckpoint()
-        spentFrames += cntNext
+          .localCheckpoint())
         val newly = cntNext.filter(col("unmet") === 0)
           .select(col("src").as("id"))
         cnt = cntNext.filter(col("unmet") > 0)
@@ -1997,21 +1917,13 @@ object Algos {
           .filter(col("ok")).select(col("src").as("id"))
         (freed :+ peeledFree).reduce(_ union _).distinct()
       }
-    // materialize the (vertex-sized) result once, THEN release every
-    // intermediate: the persisted edge frames are still needed by the
-    // peeled-requester join above, and the per-round counter checkpoints
-    // by the `freed` filters — freeing them before this point would
-    // either force a recompute or strand dead blocks in the cache
-    val out = verts
+    verts
       .join(notified.withColumn("nn", lit(1)), Seq("id"), "left")
       .join(free.withColumn("ff", lit(1)), Seq("id"), "left")
       .select(col("id"),
         coalesce(col("nn"), lit(0)).cast("int").as("notified"),
         coalesce(col("ff"), lit(0)).cast("int").as("free"))
       .localCheckpoint()
-    e.unpersist(); eCore.unpersist()
-    spentFrames.foreach(freeCkpt) // all direct checkpoints (see free's doc)
-    out
   }
 
   /** Strongly connected components via forward-backward coloring (the
@@ -2024,7 +1936,7 @@ object Algos {
     * vertices form SCC(r) (labeled r = max id in the SCC) and leave the
     * graph. Outer rounds ≤ #distinct SCC "levels"; all per-round work is
     * joins/aggs — nothing driver-side but scalar counts. */
-  def scc(edges: DataFrame, opts: PregelOptions = PregelOptions()): DataFrame = {
+  def scc(edges: DataFrame, opts: PregelOptions = PregelOptions()): DataFrame = owned { o =>
     val spark = edges.sparkSession
     import spark.implicits._
     // localCheckpoint (not persist) across OUTER rounds: persist keeps
@@ -2126,7 +2038,7 @@ object Algos {
       remEdges = newEdges
       round += 1
     }
-    freeCkpt(remVerts); freeCkpt(remEdges)
+    o(remVerts); o(remEdges)
     (Seq.empty[(Long, Long)].toDF("id", "comp") +: assignedRounds)
       .reduce(_ union _)
   }
@@ -2141,9 +2053,9 @@ object Algos {
     * joins to annotate edges, then a ≤|ks|-way fan-out of edge/vertex
     * frames into |ks|·2 counting rows — no per-k rescan of the input.
     * φ is emitted floor-scaled e6; thresholds with N_k < 2 report 0. */
-  def richClub(pairs: DataFrame, ks: Seq[Long]): DataFrame = {
-    val e = pairs.select(col("u"), col("v")).localCheckpoint()
-    val deg = pairDegrees(e).localCheckpoint()
+  def richClub(pairs: DataFrame, ks: Seq[Long]): DataFrame = owned { o =>
+    val e = o(pairs.select(col("u"), col("v")).localCheckpoint())
+    val deg = o(pairDegrees(e).localCheckpoint())
     val kArr = array(ks.map(lit): _*)
     val ek = e
       .join(deg.select(col("id").as("u"), col("d").as("du")), Seq("u"))
@@ -2155,17 +2067,12 @@ object Algos {
       .select(explode(kArr).as("k"), col("d"))
       .filter(col("d") > col("k"))
       .groupBy(col("k")).agg(count(lit(1)).as("n_k"))
-    // materialize the (≤|ks|-row) result BEFORE freeing the inputs it
-    // reads — freeCkpt on a frame a lazy plan still references would
-    // drop blocks out from under the eventual evaluation
-    val out = nk.join(ek, Seq("k"), "left")
+    nk.join(ek, Seq("k"), "left")
       .select(col("k"), col("n_k"), coalesce(col("e_k"), lit(0L)).as("e_k"),
         when(col("n_k") >= 2,
           expr("(e_k * 2000000) div (n_k * (n_k - 1))")).otherwise(lit(0L))
           .cast("long").as("phi_e6"))
       .localCheckpoint()
-    freeCkpt(e); freeCkpt(deg)
-    out
   }
 
   /** Local-bridge census: a local bridge is an edge whose endpoints have
@@ -2175,16 +2082,13 @@ object Algos {
     * (degree-oriented triangle credit, output-linear — never a wedge
     * intermediate), so the census costs exactly one support computation.
     * Returns one row: edge count, bridge count, floor-scaled share. */
-  def localBridgeStats(pairs: DataFrame): DataFrame = {
-    val sup = edgeSupport(pairs.select(col("u"), col("v")).localCheckpoint())
-    val out = sup.agg(
+  def localBridgeStats(pairs: DataFrame): DataFrame = owned { o =>
+    o(edgeSupport(o(pairs.select(col("u"), col("v")).localCheckpoint()))).agg(
       count(lit(1)).as("n_edges"),
       sum(when(col("support") === 0L, 1L).otherwise(0L)).cast("long").as("n_bridges"))
       .select(col("n_edges"), col("n_bridges"),
         expr("(n_bridges * 1000000) div n_edges").as("pct_e6"))
-      .localCheckpoint() // one row; materialize before freeing the input
-    freeCkpt(sup)
-    out
+      .localCheckpoint()
   }
 
   /** Iterative leaf-trimming (the k=2 onion): for `rounds` fixed
@@ -2200,7 +2104,7 @@ object Algos {
     * on the shrinking edge frame; iterated state is checkpoint-managed;
     * the driver sees only per-round counts. Fixed round count keeps the
     * oracle an exact unroll. */
-  def leafPeelCounts(edges: DataFrame, rounds: Int): DataFrame = {
+  def leafPeelCounts(edges: DataFrame, rounds: Int): DataFrame = owned { o =>
     val s = edges.sparkSession
     import s.implicits._
     var e = edges.select(col("src"), col("dst")).localCheckpoint()
@@ -2223,8 +2127,8 @@ object Algos {
       freeCkpt(e); freeCkpt(verts); freeCkpt(peeled)
       e = pe; verts = pv
     }
-    counts += ((0L, verts.count()))
-    freeCkpt(e); freeCkpt(verts)
+    counts += ((0L, o(verts).count()))
+    o(e)
     counts.result().toDF("round", "n_vertices")
   }
 
@@ -2238,8 +2142,8 @@ object Algos {
     * combine (here: customers pivot, supplier-pair keys ≤ |S|²).
     * Output one row: left/right vertex counts, wedge count, butterflies.
     * All exact integers. */
-  def butterflyCount(edges: DataFrame): DataFrame = {
-    val e = edges.select(col("l"), col("r")).distinct().localCheckpoint()
+  def butterflyCount(edges: DataFrame): DataFrame = owned { o =>
+    val e = o(edges.select(col("l"), col("r")).distinct().localCheckpoint())
     val nl = e.select(col("l")).distinct().count()
     val nr = e.select(col("r")).distinct().count()
     val wedges = e.groupBy(col("l")).agg(count(lit(1)).as("d"))
@@ -2250,12 +2154,10 @@ object Algos {
       .agg(count(lit(1)).as("c"))
     val bf = rp.agg(coalesce(sum(expr("(c * (c - 1)) div 2")), lit(0L))
       .cast("long").as("n_butterflies"))
-    val out = wedges.crossJoin(bf)
+    wedges.crossJoin(bf)
       .select(lit(nl).as("n_left"), lit(nr).as("n_right"),
         col("n_wedges"), col("n_butterflies"))
       .localCheckpoint()
-    freeCkpt(e)
-    out
   }
 
   /** Joint degree matrix in log₂ buckets: every edge lands in the cell
@@ -2263,10 +2165,10 @@ object Algos {
     * low≤high — the assortativity panel itemized (who links to whom, by
     * degree class). Bitlength identity keeps it libm-free and
     * engine-exact. Output ≤ ⌈log₂ d_max⌉² rows whatever the input. */
-  def jointDegreeMatrix(pairs: DataFrame): DataFrame = {
-    val e = pairs.select(col("u"), col("v")).localCheckpoint()
+  def jointDegreeMatrix(pairs: DataFrame): DataFrame = owned { o =>
+    val e = o(pairs.select(col("u"), col("v")).localCheckpoint())
     val deg = pairDegrees(e)
-    val out = e
+    e
       .join(deg.select(col("id").as("u"), col("d").as("du")), Seq("u"))
       .join(deg.select(col("id").as("v"), col("d").as("dv")), Seq("v"))
       .select((length(bin(col("du"))) - 1).cast("long").as("bu0"),
@@ -2274,9 +2176,7 @@ object Algos {
       .select(least(col("bu0"), col("bv0")).as("b_lo"),
         greatest(col("bu0"), col("bv0")).as("b_hi"))
       .groupBy(col("b_lo"), col("b_hi")).agg(count(lit(1)).as("cnt"))
-      .localCheckpoint() // ≤ log²(d_max) rows; materialize, then free
-    freeCkpt(e)
-    out
+      .localCheckpoint() // ≤ log²(d_max) rows
   }
 
   /** SALSA (Lempel–Moran): the random-walk cousin of [[hits]] — each
@@ -2292,15 +2192,15 @@ object Algos {
     *
     * Scale: identical to [[hits]] — per round two edge⋈score shuffles +
     * two broadcast scalar sums; degree frames computed once. */
-  def salsa(edges: DataFrame, iterations: Int): DataFrame = {
+  def salsa(edges: DataFrame, iterations: Int): DataFrame = owned { o =>
     val e0 = edges.select("src", "dst")
     val odeg = e0.groupBy(col("src")).agg(count(lit(1)).cast("double").as("od"))
     val ideg = e0.groupBy(col("dst")).agg(count(lit(1)).cast("double").as("idg"))
     // degree-annotated edge frames, built ONCE: the per-round joins then
     // touch only (edge ⋈ score) — same per-round shuffle budget as hits
-    val eo = materialize(e0.join(odeg, Seq("src")), AdaptiveHash("src"))
-    val ei = materialize(e0.join(ideg, Seq("dst")), AdaptiveHash("dst"))
-    val v = materialize(verticesOf(e0), AdaptiveHash("id"))
+    val eo = o(materialize(e0.join(odeg, Seq("src")), AdaptiveHash("src")))
+    val ei = o(materialize(e0.join(ideg, Seq("dst")), AdaptiveHash("dst")))
+    val v = o(materialize(verticesOf(e0), AdaptiveHash("id")))
     var h = materialize(v.select(col("id"), lit(1.0).as("h")), AdaptiveHash("id"))
     var a: DataFrame = null
     var i = 0
@@ -2329,11 +2229,9 @@ object Algos {
       a = aN
       i += 1
     }
-    val out = a.join(h, Seq("id"))
+    o(a).join(o(h), Seq("id"))
       .select(col("id"), col("a").as("auth"), col("h").as("hub"))
       .orderBy(col("id"))
       .localCheckpoint()
-    freeCkpt(a); freeCkpt(h); freeCkpt(v); freeCkpt(eo); freeCkpt(ei)
-    out
   }
 }

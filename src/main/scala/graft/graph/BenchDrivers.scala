@@ -4,6 +4,7 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CheckpointBridge.owned
 
 /** Messaging / aggregator stress drivers — the reference's benchmark
   * family that exercises the BSP plumbing rather than an algorithm:
@@ -34,7 +35,7 @@ object BenchDrivers {
       symEdges: DataFrame,
       supersteps: Int,
       msgsPerVertex: Int,
-      payloadBytes: Int): DataFrame = {
+      payloadBytes: Int): DataFrame = owned { o =>
     val spark = symEdges.sparkSession
     val verts = symEdges.select(col("src").as("id"))
       .union(symEdges.select(col("dst").as("id"))).distinct()
@@ -42,7 +43,7 @@ object BenchDrivers {
         lit(true).as("active"))
 
     val stats = ArrayBuffer.empty[(Int, Long, Long)]
-    val res = Pregel.run(
+    o(Pregel.run(
       verts,
       symEdges.select("src", "dst"),
       // rank each vertex's neighbors by md5(src:dst) and send to the
@@ -68,8 +69,7 @@ object BenchDrivers {
         aggregatorWriter = Some((step, vals) => stats.synchronized {
           stats += ((step,
             vals("msgs").asInstanceOf[Long], vals("bytes").asInstanceOf[Long]))
-        })))
-    res.unpersist()
+        }))))
     import spark.implicits._
     stats.sortBy(_._1).toSeq.toDF("superstep", "msgs", "bytes")
   }
@@ -83,7 +83,7 @@ object BenchDrivers {
   def aggregatorStress(
       symEdges: DataFrame,
       supersteps: Int,
-      nAggs: Int): DataFrame = {
+      nAggs: Int): DataFrame = owned { o =>
     val spark = symEdges.sparkSession
     val verts = symEdges.select(col("src").as("id"))
       .union(symEdges.select(col("dst").as("id"))).distinct()
@@ -93,7 +93,7 @@ object BenchDrivers {
     val aggs = (0 until nAggs).map { k =>
       s"agg_$k" -> sum(col("id") * lit(k + 1L))
     }.toMap[String, org.apache.spark.sql.Column]
-    val res = Pregel.run(
+    o(Pregel.run(
       verts,
       symEdges.select("src", "dst"),
       sendMsg = j => j.select(col("dst").as("id"), lit(1L).as("m")),
@@ -107,8 +107,7 @@ object BenchDrivers {
           vals.foreach { case (n, v) =>
             rows += ((step, n, v.asInstanceOf[Long]))
           }
-        })))
-    res.unpersist()
+        }))))
     import spark.implicits._
     rows.sortBy(r => (r._1, r._2)).toSeq.toDF("superstep", "agg_name", "value")
   }

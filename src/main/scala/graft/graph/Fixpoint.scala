@@ -20,14 +20,13 @@ import org.apache.spark.sql.graft.CheckpointBridge.{Layout, Tally}
   * never stops early, and a true zero reads as zero. The metric is loop
   * control and must never become result data.
   *
-  * Ownership: a superseded round state is a barrier product and is freed
-  * at the RDD level (`CheckpointBridge.free`). So is the init when the
-  * loop owns it (`initOwned`, the default: a `materialize` or
-  * `localCheckpoint` product made for the loop). A persisted init
-  * (`initOwned = false`, e.g. Pregel's persisted copy of the caller's
-  * vertices) is only `unpersist`-ed, because its plan leaves may be
-  * checkpoints someone else owns. The final state is returned unfreed:
-  * it is the caller's to free.
+  * Ownership: the loop owns its init and every round state, and frees
+  * each one through `CheckpointBridge.free` once a round supersedes it: a
+  * barrier product or a checkpointed init at the RDD level, a persisted
+  * init (e.g. Pregel's persisted copy of the caller's vertices) by
+  * `unpersist` only, because its plan leaves may be checkpoints someone
+  * else owns. The final state is returned unfreed: it is the caller's,
+  * typically handed to the caller's `CheckpointBridge.owned` scope.
   */
 object Fixpoint {
 
@@ -45,6 +44,11 @@ object Fixpoint {
     * by a job of its own. */
   def counted(n: Long): Tally =
     Tally(n, n.toDouble, if (n > 0) 1.0 else Double.NegativeInfinity)
+
+  /** A plain eager `df.localCheckpoint()`: planned adaptively, with the
+    * plan's estimated stats, for the small fixed-round loops whose plans
+    * were tuned on it. */
+  val checkpointing: Barrier = (df, _) => (df.localCheckpoint(), Unmeasured)
 
   /** The default barrier: `materialize(df, layout)`. */
   def materializing(layout: Layout): Barrier =
@@ -65,19 +69,17 @@ object Fixpoint {
     * @return the final state and the number of rounds run
     */
   def run(init: DataFrame, barrier: Barrier, maxRounds: Int,
-          initOwned: Boolean = true, start: Option[Tally] = None,
+          start: Option[Tally] = None,
           firstRound: Int = 0, continue: Round => Boolean = _ => true)(
       step: (DataFrame, Int, Tally) => DataFrame): (DataFrame, Int) = {
     var state = init
-    var owned = initOwned
     var tally = start.getOrElse(Unmeasured)
     var round = firstRound
     var go = start.forall(_.count > 0)
     while (go && round < maxRounds) {
       val (next, t) = barrier(step(state, round, tally), round)
       go = continue(Round(round, next, t, tally))
-      if (owned) CheckpointBridge.free(state) else state.unpersist()
-      owned = true
+      CheckpointBridge.free(state)
       state = next
       tally = t
       round += 1

@@ -98,7 +98,7 @@ object Pregel {
     *                   `min(col("msg"))` — the MessageCombiner
     * @param vprog      (vertices, combinedMsgs(id, msg)) → new vertex frame
     *                   with the same schema incl. a fresh `active` column
-    * @return the converged vertex frame (caller should select/unpersist)
+    * @return the converged vertex frame; it and its checkpoint are the caller's
     */
   def run(
       vertices: DataFrame,
@@ -106,8 +106,7 @@ object Pregel {
       sendMsg: DataFrame => DataFrame,
       combineMsg: Column,
       vprog: (DataFrame, DataFrame) => DataFrame,
-      opts: PregelOptions = PregelOptions()): DataFrame = {
-
+      opts: PregelOptions = PregelOptions()): DataFrame = CheckpointBridge.owned { o =>
     val spark = vertices.sparkSession
     // Declared-partitioning checkpoints (CheckpointBridge): under AQE a
     // plain localCheckpoint/persist loses its partitioning (the adaptive
@@ -117,13 +116,13 @@ object Pregel {
     // the vprog join are exchange-free on these sides — the one-shuffle-
     // per-superstep (combined messages only) contract, enforced by the
     // CheckpointBridgeSpec plan assertion.
-    val e = CheckpointBridge.materialize(edges.toDF(), AdaptiveHash("src"))
+    val e = o(CheckpointBridge.materialize(edges.toDF(), AdaptiveHash("src")))
 
     val resumed = resumePoint(spark, opts)
     val init = resumed.map(_._2).getOrElse(vertices).persist(StorageLevel.MEMORY_AND_DISK)
     val active = init.filter(col("active")).count()
-    val (out, _) = Fixpoint.run(init, materialize(opts, Some(col("active"))),
-        opts.maxSupersteps, initOwned = false, start = Some(Fixpoint.counted(active)),
+    Fixpoint.run(init, materialize(opts, Some(col("active"))),
+        opts.maxSupersteps, start = Some(Fixpoint.counted(active)),
         firstRound = resumed.map(_._1 + 1).getOrElse(0),
         continue = r => { afterSuperstep(r, opts); r.tally.count > 0 }) { (verts, step, _) =>
       opts.onBeforeSuperstep(verts, step)
@@ -135,9 +134,7 @@ object Pregel {
       // one driver barrier per superstep, not two.
       vprog(verts, sendMsg(verts.filter(col("active")).join(e, col("id") === col("src")))
         .groupBy("id").agg(combineMsg.as("msg")))
-    }
-    CheckpointBridge.free(e)
-    out
+    }._1
   }
 
   /** [[run]] with NO MessageCombiner — the reference's default mode:
@@ -181,7 +178,7 @@ object Pregel {
     val resumed = resumePoint(vertices.sparkSession, opts)
     val init = resumed.map(_._2).getOrElse(vertices).persist(StorageLevel.MEMORY_AND_DISK)
     init.count()
-    Fixpoint.run(init, materialize(opts, None), iterations, initOwned = false,
+    Fixpoint.run(init, materialize(opts, None), iterations,
         firstRound = resumed.map(_._1 + 1).getOrElse(0),
         continue = r => { afterSuperstep(r, opts); master(r.state, r.index) }) { (verts, i, _) =>
       opts.onBeforeSuperstep(verts, i)

@@ -16,10 +16,12 @@ final case class JobSpan(id: Int, ms: Long, tasks: Int, stages: Int, site: Strin
 
 /** One query as [[Recorder.measure]] saw it. `rows` is what the action
   * returned: its row count, or -1 when the action counts no rows or threw
-  * (the cause is then in `error`). */
+  * (the cause is then in `error`). `stranded` is what
+  * [[Recorder.measureQuery]] counted, -1 otherwise. */
 final case class Measurement(seconds: Double, rows: Long, gcMs: Long, jobs: Int,
                              tasks: Long, maxTaskMs: Long, meanTaskMs: Double,
-                             jobSpans: Seq[JobSpan], error: Option[Throwable]) {
+                             jobSpans: Seq[JobSpan], error: Option[Throwable],
+                             stranded: Int = -1) {
   def ok: Boolean = error.isEmpty
 }
 
@@ -69,7 +71,24 @@ final class Recorder(spark: SparkSession) extends AutoCloseable {
     * A throw is caught and kept in `error` so one failing query cannot end
     * a suite run. Counters are read after the listener drain, and then
     * [[Recorder.cleanup]] runs; both lie outside the timed window. */
-  def measure(action: => Long): Measurement = {
+  def measure(action: => Long): Measurement = record(action, () => -1)
+
+  /** [[measure]] of `action` over the frame `query` builds, also counting
+    * the persistent RDDs the query stranded: those it left after the
+    * action beyond the ones its result reads, counted before the cleanup.
+    * With the ContextCleaner on (`spark.cleaner.referenceTracking`), a
+    * garbage collection during the query can reclaim a stranded RDD
+    * before it is counted. */
+  def measureQuery(query: => DataFrame)(action: DataFrame => Long): Measurement = {
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val before = persisted
+    var df: Option[DataFrame] = None
+    record({ val d = query; df = Some(d); action(d) }, () => df.fold(-1) { d =>
+      (persisted -- before -- CheckpointBridge.rddsOf(d).map(_.id)).size
+    })
+  }
+
+  private def record(action: => Long, stranded: () => Int): Measurement = {
     CheckpointBridge.drainListeners(spark)
     spans.clear(); tasks.set(0); taskSum.set(0); taskMax.set(0)
     val g0 = Recorder.gcMs()
@@ -81,7 +100,7 @@ final class Recorder(spark: SparkSession) extends AutoCloseable {
     val jobList = spans.values.asScala.map(_._2).toSeq.sortBy(_.id)
     val n = tasks.get()
     val m = Measurement(seconds, rows, gc, jobList.size, n, taskMax.get(),
-      if (n == 0) 0.0 else taskSum.get().toDouble / n, jobList, error)
+      if (n == 0) 0.0 else taskSum.get().toDouble / n, jobList, error, stranded())
     Recorder.cleanup(spark)
     m
   }

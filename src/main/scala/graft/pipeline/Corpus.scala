@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CheckpointBridge.owned
 
 import graft.text.TextFunctions._
 
@@ -65,28 +66,26 @@ object Corpus {
     * vocabulary-sized (small); the window partitions by doc (no skew —
     * per-doc token counts are bounded). */
   def tfIdfTopK(docs: DataFrame, k: Int, idCol: String = "doc_id",
-                textCol: String = "text"): DataFrame = {
+                textCol: String = "text"): DataFrame = owned { o =>
     // persisted: Catalyst does not dedupe shared subtrees, so without
     // this the explode+groupBy (the corpus-wide pass) would run twice —
     // once feeding the df aggregation, once feeding the join
-    val tf = docs.select(col(idCol).as("doc_id"),
+    val tf = o(docs.select(col(idCol).as("doc_id"),
         explode(tokens(col(textCol))).as("token"))
       .groupBy(col("doc_id"), col("token")).agg(count(lit(1)).as("tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val df = tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
     // count over a zero-column projection of the source — metadata-cheap
     val n = docs.agg(count(lit(1)).as("n_docs"))
     val w = Window.partitionBy(col("doc_id"))
       .orderBy(col("score_e6").desc, col("token"))
-    val out = tf.join(df, Seq("token"))
+    tf.join(df, Seq("token"))
       .crossJoin(broadcast(n))
       .select(col("doc_id"), col("token"), col("tf"),
         idiv(col("tf") * col("n_docs") * lit(1000000L), col("df")).as("score_e6"))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .localCheckpoint()
-    tf.unpersist()
-    out
   }
 
   /** Corpus vocabulary: every token with its total occurrence count and
@@ -310,7 +309,7 @@ object Corpus {
     * what the DuckDB oracle replays in closed form — a hash match
     * proves the kernel's greedy walk equals the declarative form. */
   def bpeTrain(docs: DataFrame, numMerges: Int,
-               textCol: String = "text"): DataFrame = {
+               textCol: String = "text"): DataFrame = owned { o =>
     val spark = docs.sparkSession
     import spark.implicits._
     var words = docs.select(explode(tokens(col(textCol))).as("w"))
@@ -342,7 +341,7 @@ object Corpus {
         r += 1
       }
     }
-    org.apache.spark.sql.graft.CheckpointBridge.free(words)
+    o(words)
     merges.result().toDF()
   }
 
@@ -387,12 +386,12 @@ object Corpus {
     * broadcast scalar total, one per-doc aggregation. All map-side
     * combinable; nothing driver-side. */
   def surprisalScore(docs: DataFrame, idCol: String = "doc_id",
-                     textCol: String = "text"): DataFrame = {
-    val toks = docs.select(col(idCol), explode(tokens(col(textCol))).as("tok"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+                     textCol: String = "text"): DataFrame = owned { o =>
+    val toks = o(docs.select(col(idCol), explode(tokens(col(textCol))).as("tok"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val counts = toks.groupBy(col("tok")).agg(count(lit(1)).as("c"))
     val total = counts.agg(sum(col("c")).as("t"))
-    val out = toks.join(counts, Seq("tok"))
+    toks.join(counts, Seq("tok"))
       .crossJoin(broadcast(total))
       .select(col(idCol), (length(bin(expr("t div c"))) - 1).cast("long").as("bits"))
       .groupBy(col(idCol))
@@ -400,8 +399,6 @@ object Corpus {
       .select(col(idCol), col("n_tokens"), col("total_bits"),
         idiv(col("total_bits") * lit(1000000L), col("n_tokens")).as("bits_per_token_e6"))
       .localCheckpoint()
-    toks.unpersist()
-    out
   }
 
   /** Bigram-LM surprisal: per bigram instance floor(log2(P(b|a)⁻¹)) bits
@@ -413,24 +410,22 @@ object Corpus {
     * agg and the score join both read it), bigram-vocab equi-join,
     * per-doc agg. */
   def bigramSurprisalScore(docs: DataFrame, idCol: String = "doc_id",
-                           textCol: String = "text"): DataFrame = {
-    val bg = docs.select(col(idCol), tokens(col(textCol)).as("t"))
+                           textCol: String = "text"): DataFrame = owned { o =>
+    val bg = o(docs.select(col(idCol), tokens(col(textCol)).as("t"))
       .filter(size(col("t")) >= 2)
       .select(col(idCol), explode(expr(
         "transform(sequence(0, size(t) - 2), i -> struct(t[i] AS a, t[i + 1] AS b))")).as("p"))
       .select(col(idCol), col("p.a").as("a"), col("p.b").as("b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val cbig = bg.groupBy(col("a"), col("b")).agg(count(lit(1)).as("cb"))
     val cpre = cbig.groupBy(col("a")).agg(sum(col("cb")).as("cp"))
-    val out = bg.join(cbig, Seq("a", "b")).join(cpre, Seq("a"))
+    bg.join(cbig, Seq("a", "b")).join(cpre, Seq("a"))
       .select(col(idCol), (length(bin(expr("cp div cb"))) - 1).cast("long").as("bits"))
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_bigrams"), sum(col("bits")).as("total_bits"))
       .select(col(idCol), col("n_bigrams"), col("total_bits"),
         idiv(col("total_bits") * lit(1000000L), col("n_bigrams")).as("bits_per_bigram_e6"))
       .localCheckpoint()
-    bg.unpersist()
-    out
   }
 
   // --- train/eval contamination ----------------------------------------
@@ -448,7 +443,7 @@ object Corpus {
     * aggregation and the final argmax is a window over eval docs. */
   def contamination(corpus: DataFrame, evalDocs: DataFrame, n: Int = 3,
                     maxDf: Int = 1000, idCol: String = "doc_id",
-                    textCol: String = "text"): DataFrame = {
+                    textCol: String = "text"): DataFrame = owned { o =>
     // grams travel as 60-bit md5 fingerprints, not strings: every
     // downstream shuffle (the df groupBy, the two joins, the overlap
     // aggregation) keys on 8 bytes instead of a ~25-byte UTF8 gram.
@@ -462,8 +457,8 @@ object Corpus {
     // persisted: the hub-gram df aggregation AND the overlap join both
     // read the corpus gram explode — the query's dominant pass; Catalyst
     // does not dedupe shared subtrees (same rationale as tfIdfTopK)
-    val cg = grams(corpus, "train_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val cg = o(grams(corpus, "train_id")
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     // drop hub grams by training-side document frequency
     val rare = cg.groupBy(col("gk")).agg(count(lit(1)).as("df"))
       .filter(col("df") <= maxDf).select("gk")
@@ -477,15 +472,13 @@ object Corpus {
     val w = Window.partitionBy(col("eval_id"))
       .orderBy(col("shared").desc, col("train_id"))
     // eval-sized output materialized, corpus-sized cache released
-    val out = overlap
+    overlap
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .join(evalSize, Seq("eval_id"))
       .select(col("eval_id"), col("train_id"), col("shared"),
         idiv(col("shared") * lit(1000000L), col("n_grams")).as("overlap_e6"))
       .localCheckpoint()
-    cg.unpersist()
-    out
   }
 
   /** Per-stratum mixing stats: doc count, token count, and each stratum's
@@ -538,34 +531,30 @@ object Corpus {
     * hash-match across engines. Weights and shares are exact scaled
     * BIGINTs; the share denominator is a broadcast scalar. */
   def temperatureWeights(docs: DataFrame, stratumCol: String = "source",
-                         textCol: String = "text"): DataFrame = {
-    val per = docs.groupBy(col(stratumCol))
+                         textCol: String = "text"): DataFrame = owned { o =>
+    val per = o(docs.groupBy(col(stratumCol))
       .agg(sum(tokenCount(col(textCol))).as("n_tokens"))
       .withColumn("w_e3", floor(sqrt(col("n_tokens").cast("double")) * lit(1000.0)).cast("long"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val tot = per.agg(sum(col("w_e3")).as("wsum"))
-    val out = per.crossJoin(broadcast(tot))
+    per.crossJoin(broadcast(tot))
       .select(col(stratumCol), col("n_tokens"), col("w_e3"),
         idiv(col("w_e3") * lit(1000000L), col("wsum")).as("share_e6"))
       .localCheckpoint()
-    per.unpersist()
-    out
   }
 
   def mixingStats(docs: DataFrame, stratumCol: String = "source",
-                  textCol: String = "text"): DataFrame = {
+                  textCol: String = "text"): DataFrame = owned { o =>
     // persisted: `tot` and the final join both read `per`; unpersisted,
     // the full corpus-scan aggregation would run twice
-    val per = docs.groupBy(col(stratumCol))
+    val per = o(docs.groupBy(col(stratumCol))
       .agg(count(lit(1)).as("n_docs"), sum(tokenCount(col(textCol))).as("n_tokens"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val tot = per.agg(sum(col("n_tokens")).as("total_tokens"))
-    val out = per.crossJoin(broadcast(tot))
+    per.crossJoin(broadcast(tot))
       .select(col(stratumCol), col("n_docs"), col("n_tokens"),
         idiv(col("n_tokens") * lit(1000000L), col("total_tokens")).as("share_e6"))
       .localCheckpoint()
-    per.unpersist()
-    out
   }
 
   // --- collocations (PMI) ----------------------------------------------
@@ -644,11 +633,11 @@ object Corpus {
     * score = deg/freq — words that appear in dense company score high.
     * The position self-join is per-doc and window-bounded: |tokens|·2w
     * rows, never doc². Exact integers (e6 ratio). */
-  def rakeKeywords(docs: DataFrame, window: Int = 2, topK: Int = 20): DataFrame = {
-    val toks = docs.select(col("doc_id"),
+  def rakeKeywords(docs: DataFrame, window: Int = 2, topK: Int = 20): DataFrame = owned { o =>
+    val toks = o(docs.select(col("doc_id"),
         posexplode(tokens(col("text"))).as(Seq("p", "tok")))
       .select(col("doc_id"), col("p").cast("long").as("p"), col("tok"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val a = toks.select(col("doc_id"), col("p").as("pa"), col("tok"))
     val b = toks.select(col("doc_id"), col("p").as("pb"))
     val deg = a.join(b, Seq("doc_id"))
@@ -656,13 +645,11 @@ object Corpus {
         && abs(col("pa") - col("pb")) <= window.toLong)
       .groupBy(col("tok")).agg(count(lit(1)).as("deg"))
     val freq = toks.groupBy(col("tok")).agg(count(lit(1)).as("freq"))
-    val out = deg.join(freq, Seq("tok"))
+    deg.join(freq, Seq("tok"))
       .select(col("tok"), col("deg"), col("freq"),
         idiv(col("deg") * lit(1000000L), col("freq")).as("score_e6"))
       .orderBy(col("score_e6").desc, col("tok")).limit(topK)
       .localCheckpoint()
-    toks.unpersist()
-    out
   }
 
   // --- DSIR-style importance scores ------------------------------------
@@ -680,12 +667,12 @@ object Corpus {
     * Scale shape: ONE explode feeds both count passes (persisted); the
     * bucket ratio table is `buckets` rows — broadcast; per-doc scoring
     * is a map-side-combined agg. No vocabulary state, no driver data. */
-  def dsirScores(docs: DataFrame, isTarget: Column, buckets: Int = 64): DataFrame = {
-    val toks = docs.select(col("doc_id"), isTarget.as("tgt"),
+  def dsirScores(docs: DataFrame, isTarget: Column, buckets: Int = 64): DataFrame = owned { o =>
+    val toks = o(docs.select(col("doc_id"), isTarget.as("tgt"),
         explode(tokens(col("text"))).as("tok"))
       .select(col("doc_id"), col("tgt"),
         pmod(md5Uniform(col("tok")), lit(buckets.toLong)).as("b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val cnt = toks.groupBy(col("b")).agg(
       count(lit(1)).as("c_all"),
       count(when(col("tgt"), lit(1))).as("c_tgt"))
@@ -694,14 +681,12 @@ object Corpus {
       .select(col("b"), idiv(
         (col("c_tgt") + 1L) * (col("n_all") + lit(buckets.toLong)) * lit(1000000L),
         (col("c_all") + 1L) * (col("n_tgt") + lit(buckets.toLong))).as("ratio_e6"))
-    val out = toks.join(broadcast(ratio), Seq("b"))
+    toks.join(broadcast(ratio), Seq("b"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_tokens"), sum(col("ratio_e6")).cast("long").as("rsum"))
       .select(col("doc_id"), col("n_tokens"),
         idiv(col("rsum"), col("n_tokens")).as("score_e6"))
       .localCheckpoint()
-    toks.unpersist()
-    out
   }
 
   // --- Luhn-validated PII detection ------------------------------------
@@ -747,24 +732,24 @@ object Corpus {
     * set comes from one map-side-combined distinct-doc count, and the
     * per-doc rollup is a fingerprint equi-join — never doc×doc. The
     * gram explode is persisted once and feeds both passes. */
-  def dupSpans(docs: DataFrame, n: Int = 10): DataFrame = {
+  def dupSpans(docs: DataFrame, n: Int = 10): DataFrame = owned { o =>
     // repartition by gk BEFORE persisting: both consumers cluster on gk
     // (the dup-gram groupBy and the back-join), so the persisted frame
     // carries the partitioning they need and the gram explode shuffles
     // ONCE instead of once per consumer
-    val g = docs.select(col("doc_id"),
+    val g = o(docs.select(col("doc_id"),
         explode(wordNgramsAll(tokens(col("text")), n)).as("gram"))
       .select(col("doc_id"),
         conv(substring(md5(col("gram")), 1, 15), 16, 10).cast("long").as("gk"))
       .repartition(col("gk"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     // "≥ 2 distinct docs" as min≠max — two scalar partials instead of a
     // per-gram distinct-set build (countDistinct's internal expand)
     val dup = g.groupBy(col("gk"))
       .agg(min(col("doc_id")).as("mn"), max(col("doc_id")).as("mx"))
       .filter(col("mn") =!= col("mx"))
       .select(col("gk"), lit(1L).as("is_dup"))
-    val out = g.join(dup, Seq("gk"), "left")
+    g.join(dup, Seq("gk"), "left")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_windows"),
         sum(coalesce(col("is_dup"), lit(0L))).cast("long").as("n_dup"))
@@ -772,8 +757,6 @@ object Corpus {
       .select(col("doc_id"), col("n_windows"), col("n_dup"),
         idiv(col("n_dup") * lit(1000000L), col("n_windows")).as("dup_frac_e6"))
       .localCheckpoint()
-    g.unpersist()
-    out
   }
 
   /** The cut pass completing [[dupSpans]]' detect→cut contract: a token
@@ -783,14 +766,14 @@ object Corpus {
     * size accounting a span-excision rewrite ships with. The cover
     * expansion is n rows per duplicated window INSTANCE (bounded by
     * dup-window volume, not corpus volume). */
-  def dupSpanCut(docs: DataFrame, n: Int = 10): DataFrame = {
+  def dupSpanCut(docs: DataFrame, n: Int = 10): DataFrame = owned { o =>
     // same single-shuffle discipline as [[dupSpans]]
-    val g = docs.select(col("doc_id"),
+    val g = o(docs.select(col("doc_id"),
         posexplode(wordNgramsAll(tokens(col("text")), n)).as(Seq("pos0", "gram")))
       .select(col("doc_id"), (col("pos0") + 1).cast("long").as("i"),
         conv(substring(md5(col("gram")), 1, 15), 16, 10).cast("long").as("gk"))
       .repartition(col("gk"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val dup = g.groupBy(col("gk"))
       .agg(min(col("doc_id")).as("mn"), max(col("doc_id")).as("mx"))
       .filter(col("mn") =!= col("mx"))
@@ -804,14 +787,12 @@ object Corpus {
           .as("p"))
       .groupBy(col("doc_id"), col("n_tokens"))
       .agg(countDistinct(col("p")).as("n_cut"))
-    val out = nTok.join(cut.select(col("doc_id"), col("n_cut")), Seq("doc_id"), "left")
+    nTok.join(cut.select(col("doc_id"), col("n_cut")), Seq("doc_id"), "left")
       .select(col("doc_id"), col("n_tokens"),
         coalesce(col("n_cut"), lit(0L)).as("n_cut"))
       .withColumn("kept_frac_e6",
         idiv((col("n_tokens") - col("n_cut")) * lit(1000000L), col("n_tokens")))
       .localCheckpoint()
-    g.unpersist()
-    out
   }
 
   // --- Gopher-rule quality panel ---------------------------------------

@@ -3,7 +3,9 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CheckpointBridge.owned
 
+import graft.graph.Fixpoint
 import graft.sim.Similarity
 import graft.text.TextFunctions.tokens
 
@@ -89,21 +91,18 @@ object Retrieval {
     * touches the driver — it flows as a broadcast frame into the
     * second stage. One corpus explode (persisted) feeds both stages. */
   def prfExpand(docs: DataFrame, seed: Seq[String], fbDocs: Int,
-                nExpand: Int, k: Int): DataFrame = {
+                nExpand: Int, k: Int): DataFrame = owned { o =>
     val s = docs.sparkSession
     import s.implicits._
-    val toks = docs.select(col("doc_id"), explode(tokens(col("text"))).as("token"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val toks = o(docs.select(col("doc_id"), explode(tokens(col("text"))).as("token"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val top1 = bm25WithTerms(toks, seed.toDF("token"), fbDocs).select(col("doc_id"))
     val expansion = toks.join(broadcast(top1), Seq("doc_id"))
       .filter(!col("token").isin(seed: _*))
       .groupBy(col("token")).agg(count(lit(1)).as("c"))
       .orderBy(col("c").desc, col("token")).limit(nExpand)
       .select(col("token"))
-    val out = bm25WithTerms(toks, seed.toDF("token").unionByName(expansion), k)
-      .localCheckpoint()
-    toks.unpersist()
-    out
+    bm25WithTerms(toks, seed.toDF("token").unionByName(expansion), k).localCheckpoint()
   }
 
   /** Hybrid sparse+dense retrieval via reciprocal-rank fusion over CUT
@@ -174,14 +173,14 @@ object Retrieval {
     * the greedy loop is k driver rounds over the nCand-row candidate
     * frame with only picked IDs (k scalars) held on the driver.
     */
-  def mmrRerank(emb: DataFrame, queryVecId: Long, nCand: Int, k: Int): DataFrame = {
+  def mmrRerank(emb: DataFrame, queryVecId: Long, nCand: Int, k: Int): DataFrame = owned { o =>
     val qv = emb.filter(col("vec_id") === queryVecId)
       .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
-    val cand = Similarity.bruteTopK(
+    val cand = o(Similarity.bruteTopK(
         emb.select(col("vec_id"), col("embedding")), qv, nCand)
       .select(col("n_id").as("vec_id"), col("rcos_e4").as("rel_e4"))
       .join(emb.select(col("vec_id"), col("embedding")), Seq("vec_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     var picked = Vector.empty[(Long, Long, Long, Int)] // (vec_id, rel_e4, mmr, step)
     (1 to k).foreach { step =>
       val pickedIds = picked.map(_._1)
@@ -204,7 +203,6 @@ object Retrieval {
       val row = scored.orderBy(col("mmr").desc, col("vec_id")).limit(1).collect()(0)
       picked :+= ((row.getLong(0), row.getLong(1), row.getLong(2), step))
     }
-    cand.unpersist()
     val s = emb.sparkSession
     import s.implicits._
     picked.toDF("vec_id", "rel_e4", "mmr", "step")
@@ -294,7 +292,7 @@ object Retrieval {
     * (doc, pos+1) builds the edge list; each round is one equi-join +
     * groupBy over a ≤vocab²-edge frame (vocab is a constant), with the
     * per-round frame checkpointed. */
-  def textRank(docs: DataFrame, vocab: Int, iters: Int, topK: Int): DataFrame = {
+  def textRank(docs: DataFrame, vocab: Int, iters: Int, topK: Int): DataFrame = owned { o =>
     val pos = docs.select(col("doc_id"),
       posexplode(tokens(col("text"))).as(Seq("pos", "token")))
     val top = pos.groupBy(col("token")).agg(count(lit(1)).as("c"))
@@ -308,31 +306,24 @@ object Retrieval {
       .select(least(col("a.token"), col("b.token")).as("u"),
         greatest(col("a.token"), col("b.token")).as("v"))
       .distinct()
-    val edges = pairs.select(col("u").as("src"), col("v").as("dst"))
+    val edges = o(pairs.select(col("u").as("src"), col("v").as("dst"))
       .union(pairs.select(col("v").as("src"), col("u").as("dst")))
-      .localCheckpoint()
+      .localCheckpoint())
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    var pr = deg.select(col("src").as("token"), lit(1000000L).as("pr"))
-      .localCheckpoint()
-    (0 until iters).foreach { _ =>
-      val prev = pr
+    val (pr, _) = Fixpoint.run(deg.select(col("src").as("token"), lit(1000000L).as("pr"))
+        .localCheckpoint(), Fixpoint.checkpointing, iters) { (pr, _, _) =>
       val contrib = edges
         .join(deg, Seq("src"))
         .join(pr.select(col("token").as("src"), col("pr")), Seq("src"))
         .select(col("dst").as("token"), expr("pr div deg").as("c"))
         .groupBy(col("token")).agg(sum(col("c")).cast("long").as("s"))
-      pr = pr.select(col("token")).join(contrib, Seq("token"), "left")
+      pr.select(col("token")).join(contrib, Seq("token"), "left")
         .select(col("token"),
           (lit(150000L) + expr("(850 * coalesce(s, 0)) div 1000")).as("pr"))
-        .localCheckpoint()
-      org.apache.spark.sql.graft.CheckpointBridge.free(prev)
     }
-    val out = pr.orderBy(col("pr").desc, col("token")).limit(topK)
+    o(pr).orderBy(col("pr").desc, col("token")).limit(topK)
       .select(col("token"), col("pr").as("textrank_e6"))
       .orderBy(col("textrank_e6").desc, col("token"))
       .localCheckpoint()
-    org.apache.spark.sql.graft.CheckpointBridge.free(pr)
-    org.apache.spark.sql.graft.CheckpointBridge.free(edges)
-    out
   }
 }

@@ -3,7 +3,9 @@ package graft.sim
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.CheckpointBridge.{Stats, materialize}
+import org.apache.spark.sql.graft.CheckpointBridge.{Stats, materialize, owned}
+
+import graft.graph.Fixpoint
 
 /** Similarity search over embedding columns (Array[Float]).
   *
@@ -94,18 +96,11 @@ object Similarity {
           Window.partitionBy(col("vec_id")).orderBy(col("rc").desc, col("cid"))))
         .filter(col("rn") === 1)
         .select(col("vec_id"), col("embedding"), col("cid").as("cluster"))
-    var cent = c.orderBy(col("vec_id")).limit(k)
+    val cent0 = c.orderBy(col("vec_id")).limit(k)
       .select(col("vec_id").as("cid"), col("embedding").as("cv"))
       .localCheckpoint()
-    (0 until iters).foreach { _ =>
-      val prev = cent
-      cent = centroids(assign(cent), "cluster")
-        .select(col("cluster").as("cid"), col("cv"))
-        .localCheckpoint()
-      // new centroid checkpoint is materialized; the superseded round's
-      // blocks are dead (RDD-level free — Dataset.unpersist can't see
-      // localCheckpoint blocks)
-      org.apache.spark.sql.graft.CheckpointBridge.free(prev)
+    val (cent, _) = Fixpoint.run(cent0, Fixpoint.checkpointing, iters) { (cent, _, _) =>
+      centroids(assign(cent), "cluster").select(col("cluster").as("cid"), col("cv"))
     }
     assign(cent).select(col("vec_id"), col("cluster"))
   }
@@ -401,8 +396,8 @@ object Similarity {
     * "huge" LogicalRDD default that forces sort-merge — the round-5
     * lesson). */
   def semanticDupPairs(corpus: DataFrame, k: Int, iters: Int,
-                       thresholdE4: Long): DataFrame = {
-    val assigned = kmeansAssign(corpus, k, iters)
+                       thresholdE4: Long): DataFrame = owned { o =>
+    val assigned = o(kmeansAssign(corpus, k, iters))
     val withC = materialize(
       corpus.select(col("vec_id"), col("embedding"))
         .join(assigned, Seq("vec_id")), Stats)
@@ -445,9 +440,9 @@ object Similarity {
     * (dim, q_id, overlap), overlap ∈ [0, k] exact integers; the full
     * dimension is included as the overlap = k control row. */
   def matryoshkaOverlap(corpus: DataFrame, queries: DataFrame,
-                        dims: Seq[Int], fullDim: Int, k: Int): DataFrame = {
-    val full = bruteTopK(corpus, queries, k).select(col("q_id"), col("n_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+                        dims: Seq[Int], fullDim: Int, k: Int): DataFrame = owned { o =>
+    val full = o(bruteTopK(corpus, queries, k).select(col("q_id"), col("n_id"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val overlaps = (dims :+ fullDim).distinct.sorted.map { d =>
       val c = corpus.select(col("vec_id"),
         slice(col("embedding"), 1, d).as("embedding"))
@@ -457,9 +452,7 @@ object Similarity {
         .groupBy(col("q_id")).agg(count(lit(1)).as("overlap"))
         .select(lit(d.toLong).as("dim"), col("q_id"), col("overlap"))
     }.reduce(_ unionByName _)
-    val out = overlaps.orderBy(col("dim"), col("q_id")).localCheckpoint()
-    full.unpersist()
-    out
+    overlaps.orderBy(col("dim"), col("q_id")).localCheckpoint()
   }
 
   /** Cluster-blocked kNN-graph construction: for a deterministic
@@ -562,41 +555,28 @@ object Similarity {
     * (a broadcast-sized fixpoint, whatever the corpus size). The
     * dominant eigendirection is the drift axis embedding monitors
     * project onto. */
-  def powerIteration(corpus: DataFrame, dim: Int, rounds: Int): DataFrame = {
+  def powerIteration(corpus: DataFrame, dim: Int, rounds: Int): DataFrame = owned { o =>
     val spark = corpus.sparkSession
-    val cov = covarianceUpper(corpus, dim)
+    val cov = o(covarianceUpper(corpus, dim)
       .select(col("j").as("i"), col("k").as("j2"),
         expr("if(cov_num < 0, -((-cov_num) div 1048576), cov_num div 1048576)").as("c"))
-      .localCheckpoint()
-    val full = cov.union(
+      .localCheckpoint())
+    val full = o(cov.union(
         cov.filter(col("i") =!= col("j2"))
           .select(col("j2").as("i"), col("i").as("j2"), col("c")))
-      .localCheckpoint()
-    var x = spark.range(dim).select(col("id").as("j2"), lit(1024L).as("x"))
-    var r = 0
-    while (r < rounds) {
-      val prev = x
+      .localCheckpoint())
+    // each iterate is d rows, checkpointed to keep the unrolled plan flat
+    val (x, _) = Fixpoint.run(spark.range(dim).select(col("id").as("j2"), lit(1024L).as("x")),
+        Fixpoint.checkpointing, rounds) { (x, _, _) =>
       val w = full.join(x, Seq("j2"))
         .groupBy(col("i")).agg(sum(col("c") * col("x")).as("w"))
       val m = w.agg(max(abs(col("w"))).as("m"))
-      x = w.crossJoin(broadcast(m))
+      w.crossJoin(broadcast(m))
         .select(col("i").as("j2"),
           expr("if(w < 0, -((-w) * 1024 div m), (w * 1024) div m)").as("x"))
-        .localCheckpoint() // d rows; keeps the unrolled plan flat
-      // release the superseded iterate (round 0's prev is the un-
-      // checkpointed range seed — free is a no-op there); without this
-      // the d-row blocks accumulate across rounds and callers
-      if (r > 0) org.apache.spark.sql.graft.CheckpointBridge.free(prev)
-      r += 1
     }
-    // materialize the final result BEFORE freeing its inputs (the salsa
-    // localCheckpoint + freeCkpt discipline), then release cov/full
-    val out = x.select(col("j2").cast("long").as("dim"), col("x").as("comp"))
+    o(x).select(col("j2").cast("long").as("dim"), col("x").as("comp"))
       .orderBy(col("dim"))
       .localCheckpoint()
-    org.apache.spark.sql.graft.CheckpointBridge.free(x)
-    org.apache.spark.sql.graft.CheckpointBridge.free(full)
-    org.apache.spark.sql.graft.CheckpointBridge.free(cov)
-    out
   }
 }

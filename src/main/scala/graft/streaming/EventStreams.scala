@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CheckpointBridge.owned
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Structured-Streaming surface. The reference has no streaming at all
@@ -163,15 +164,17 @@ object EventStreams {
       // materialize BEFORE the write: the merge reads the same files the
       // dynamic overwrite is about to replace — a lazy plan would race
       // its own deletes
-      val merged = latest.unionByName(existing)
-        .withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn")
-        .localCheckpoint()
-      val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try merged.write.mode("overwrite").partitionBy("bucket").parquet(path)
-      finally prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+      owned { o =>
+        val merged = o(latest.unionByName(existing)
+          .withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn")
+          .localCheckpoint())
+        val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
+        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        try merged.write.mode("overwrite").partitionBy("bucket").parquet(path)
+        finally prev match {
+          case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
+          case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+        }
       }
     }
 

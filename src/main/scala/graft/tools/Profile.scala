@@ -9,13 +9,19 @@ import graft.obs.{Measurement, Recorder}
 /** The one profiling entry point: runs named declared queries on one local
   * session and prints what [[graft.obs.Recorder]] measured of each, per
   * pass: the full-output time (the bench's timed action), the `count()`
-  * time and row count, jobs, tasks, max/mean task ms, GC ms, and one line
-  * per job (id, ms, tasks/stages, first graft call site).
+  * time and row count, jobs, tasks, max/mean task ms, GC ms, the number of
+  * persistent RDDs the full-output run stranded (left behind beyond those
+  * its result reads), and one line per job (id, ms, tasks/stages, first
+  * graft call site).
   *
   * {{{
   * SPARK_GRAFT_SF_DIR=<sf dir> SPARK_GRAFT_CPUS=4 SPARK_GRAFT_PASSES=2 \
-  *   tools/jrun.sh graft.tools.Profile [--explain] [--copies N] query ...
+  *   tools/jrun.sh [-Dspark.cleaner.referenceTracking=false] graft.tools.Profile \
+  *   [--explain] [--copies N] query ...
   * }}}
+  *
+  * The JVM flag turns the ContextCleaner off, so that no garbage
+  * collection reclaims a stranded RDD before it is counted.
   *
   *  - `--explain` prints each query's formatted physical plan instead of
   *    running it (iterative queries still run the checkpoints their plan
@@ -73,7 +79,7 @@ object Profile {
     try o.queries.flatMap(q => (1 to passes).flatMap { pass =>
       val rows = dirs.map { case (n, dir) =>
         val fn = SparkEntry.queries(q)
-        val r = Row(q, pass, n, recorder.measure(Recorder.fullOutput(fn(spark, dir))),
+        val r = Row(q, pass, n, recorder.measureQuery(fn(spark, dir))(Recorder.fullOutput),
           recorder.measure(fn(spark, dir).count()))
         report(r, out)
         r
@@ -95,7 +101,7 @@ object Profile {
       case None =>
         out(f"$head full=${m.seconds}%.3fs count=${r.count.seconds}%.3fs " +
           f"rows=${r.count.rows} jobs=${m.jobs} tasks=${m.tasks} maxTask=${m.maxTaskMs}ms " +
-          f"meanTask=${m.meanTaskMs}%.1fms gc=${m.gcMs}ms")
+          f"meanTask=${m.meanTaskMs}%.1fms gc=${m.gcMs}ms stranded=${m.stranded}")
         m.jobSpans.foreach(j =>
           out(f"  JOB ${j.id}%5d ${j.ms}%7dms ${j.tasks}t/${j.stages}s ${j.site}"))
     }

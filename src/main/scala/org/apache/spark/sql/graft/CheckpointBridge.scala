@@ -7,12 +7,16 @@ import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partition
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{BooleanType, DoubleType, NumericType}
+import org.apache.spark.storage.{RDDBlockId, StorageLevel}
 
 /** The one materialization barrier of graft's iterative and staged
   * plans: [[materialize]] eagerly checkpoints a frame, declares its
   * layout and measured size, and can fuse a metric into the same job.
-  * [[free]] releases such a frame, [[sizeOf]] reads its size, and
-  * [[drainListeners]] flushes the listener bus.
+  * [[owned]] is the scope that owns such frames: what its body hands to
+  * the [[Owner]] is released when the block exits, save the RDDs the
+  * returned frames still read, which pass to the caller. [[free]]
+  * releases one frame, [[sizeOf]] reads its size, and [[drainListeners]]
+  * flushes the listener bus.
   */
 object CheckpointBridge {
 
@@ -68,29 +72,75 @@ object CheckpointBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(clone, df.queryExecution.logical)
   }
 
-  /** Release the storage behind a superseded frame, whichever way it was
-    * materialized. `Dataset.unpersist` only clears CacheManager entries
-    * (`.persist`/`.cache`); a `localCheckpoint()`-ed frame is backed by a
-    * raw persistent RDD inside a [[LogicalRDD]] leaf that the CacheManager
-    * never sees — verified empirically: after `df.localCheckpoint();
-    * df.unpersist(true)`, `sc.getPersistentRDDs` still holds the blocks.
-    * Iterative loops that keep only the latest checkpoint must free the
-    * superseded one at the RDD level or blocks pile up until the
-    * ContextCleaner happens to collect them.
+  /** Release the storage behind a frame that is never read again. A
+    * CacheManager-cached frame (`.persist`/`.cache`) is only
+    * `unpersist`-ed: its plan leaves may be checkpoints someone else
+    * owns. Any other frame releases the raw persistent RDDs of its
+    * [[LogicalRDD]] leaves, which `Dataset.unpersist` never touches (after
+    * `df.localCheckpoint(); df.unpersist(true)`, `sc.getPersistentRDDs`
+    * still holds the blocks). RDDs already at `StorageLevel.NONE` are
+    * skipped. A free fires no job.
     *
-    * MUST only be called on frames that are never read again, and only on
-    * frames that are DIRECT `localCheckpoint()` products (their single
-    * plan leaf is their own RDD): a localCheckpoint has truncated lineage,
-    * so freed blocks are unrecoverable — and calling this on a frame whose
-    * plan merely *contains* someone else's checkpoint leaf would free that
-    * caller-owned data too.
+    * Only for frames whose every checkpoint leaf the caller owns (a
+    * `materialize` or `localCheckpoint` product, or a callee's result it
+    * took over): a localCheckpoint has truncated lineage, so freed blocks
+    * are unrecoverable, and a frame that merely reads someone else's
+    * checkpoint would free that data too. Outside loops, prefer
+    * [[owned]] to a hand-placed free.
     */
-  def free(df: Dataset[_]): Unit = {
-    df.unpersist(false)
-    df.queryExecution.analyzed.collectLeaves().foreach {
-      case l: LogicalRDD => l.rdd.unpersist(false)
-      case _ => ()
+  def free(df: Dataset[_]): Unit = release(df, _ => true)
+
+  /** [[free]] restricted to the leaf RDDs `mine` accepts. */
+  private def release(df: Dataset[_], mine: org.apache.spark.rdd.RDD[_] => Boolean): Unit =
+    if (df.storageLevel != StorageLevel.NONE) df.unpersist(false)
+    else rddsOf(df).foreach { r =>
+      if (mine(r) && r.getStorageLevel != StorageLevel.NONE) r.unpersist(false)
     }
+
+  /** The RDDs behind `df`'s [[LogicalRDD]] leaves, subqueries included. */
+  def rddsOf(df: Dataset[_]): Seq[org.apache.spark.rdd.RDD[_]] =
+    df.queryExecution.analyzed.collectWithSubqueries { case l: LogicalRDD => l.rdd }
+
+  /** The frames an [[owned]] block releases when it exits. */
+  final class Owner private[CheckpointBridge] (private[CheckpointBridge] val floor: Int) {
+    private[CheckpointBridge] var frames = List.empty[Dataset[_]]
+    /** Take `df` over; it is returned unchanged. */
+    def apply[T <: Dataset[_]](df: T): T = { frames ::= df; df }
+  }
+
+  /** Run `body` with an [[Owner]] and release every frame it took over
+    * when the block exits, whether it returns or throws: a cached frame by
+    * `unpersist`, any other by the persistent RDDs of its checkpoint
+    * leaves that were created inside the block. So a frame that also
+    * reads the caller's checkpoints (a callee's lazy result over the
+    * caller's input) can be taken over without touching them. On return,
+    * the RDDs that the returned frames (a frame, or frames inside a tuple)
+    * still read pass to the caller instead.
+    *
+    * {{{
+    * def f(edges: DataFrame): DataFrame = owned { o =>
+    *   val e = o(materialize(edges, AdaptiveHash("src")))
+    *   val v = o(verticesOf(e).persist())
+    *   step(e, v).localCheckpoint() // e and v are released here
+    * }
+    * }}}
+    */
+  def owned[T](body: Owner => T): T = {
+    // RDD ids only grow: every RDD this block creates has a larger id
+    val o = new Owner(org.apache.spark.SparkContext.getActive.fold(-1)(_.newRddId()))
+    def exit(returned: Seq[Dataset[_]]): Unit = {
+      val keep = returned.flatMap(rddsOf).map(_.id).toSet
+      o.frames.foreach(release(_, r => r.id > o.floor && !keep(r.id)))
+    }
+    val out = try body(o) catch { case e: Throwable => exit(Nil); throw e }
+    exit(framesIn(out))
+    out
+  }
+
+  private def framesIn(x: Any): Seq[Dataset[_]] = x match {
+    case d: Dataset[_] => Seq(d)
+    case p: Product => p.productIterator.flatMap(framesIn).toSeq
+    case _ => Nil
   }
 
   private val MetricCol = "__graft_metric"
@@ -228,8 +278,7 @@ object CheckpointBridge {
         (firstLeaf(exec.outputPartitioning), exec.outputOrdering)
       case None => (UnknownPartitioning(rdd.getNumPartitions), Nil)
     }
-    val stats = spark.sparkContext.getRDDStorageInfo.find(_.id == rdd.id)
-      .map(i => Statistics(sizeInBytes = BigInt(i.memSize + i.diskSize).max(1)))
+    val stats = blockBytes(rdd.id).map(b => Statistics(sizeInBytes = BigInt(b).max(1)))
     val declared = org.apache.spark.sql.classic.Dataset.ofRows(spark,
       new LogicalRDD(output, rdd, partitioning, ordering, false, None)(spark, stats, None))
     (if (synthetic) declared.drop(MetricCol) else declared, tally.value)
@@ -266,10 +315,21 @@ object CheckpointBridge {
     * not a materialized RDD. */
   def sizeOf(df: Dataset[_]): Long =
     df.queryExecution.analyzed.collectLeaves().collectFirst {
-      case l: LogicalRDD =>
-        df.sparkSession.sparkContext.getRDDStorageInfo.find(_.id == l.rdd.id)
-          .map(i => i.memSize + i.diskSize).getOrElse(-1L)
+      case l: LogicalRDD => blockBytes(l.rdd.id).getOrElse(-1L)
     }.getOrElse(-1L)
+
+  /** The mem + disk bytes of `rddId`'s blocks, None when it has none. Read
+    * from the block manager master, which every block is reported to
+    * before its task ends, so the sum is complete once the materializing
+    * job returns; `SparkContext.getRDDStorageInfo` reads the app-status
+    * store instead, which the asynchronous listener bus fills later. */
+  private def blockBytes(rddId: Int): Option[Long] = {
+    val sizes = org.apache.spark.SparkEnv.get.blockManager.master.getStorageStatus
+      .flatMap(_.rddBlocks.collect {
+        case (RDDBlockId(id, _), st) if id == rddId => st.memSize + st.diskSize
+      })
+    Option.when(sizes.nonEmpty)(sizes.sum)
+  }
 
   /** Block until the listener bus has delivered all queued events —
     * needed by anything reading SparkListener-fed counters (job counts

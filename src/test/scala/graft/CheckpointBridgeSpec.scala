@@ -181,7 +181,10 @@ class CheckpointBridgeSpec extends SparkSpec {
   /** Each routine that checkpoints internally must release every block
     * it creates, save those of the frame it returns: a long-lived session
     * otherwise accumulates blocks until the ContextCleaner happens to
-    * collect them. */
+    * collect them. The rows are the loop drivers and staged Jaccard on
+    * small fixtures, then every iterative and dedup query (`q_graph_*`,
+    * `q_dedup_*`, `q_item_cf`, `q_winnow_matches`) at sf0.001 through its
+    * full output, as Bench runs it. */
   test("leak invariant: loops and staged Jaccard strand no checkpoint") {
     import spark.implicits._
     import graft.graph.{Algos, Prep}
@@ -219,19 +222,53 @@ class CheckpointBridgeSpec extends SparkSpec {
         val (sorted, cand, scored, out) = graft.dedup.Dedup.jaccardJoinStaged(sets, 50)
         Seq(sorted, cand, scored, out)
       }))
-    cases.foreach { case (name, run) =>
-      val before = persisted
-      val frames = run()
-      // hold every RDD persisted by now: a stranded checkpoint that is
-      // strongly reachable cannot be collected by the ContextCleaner, so
-      // a leak cannot hide behind a timely garbage collection
-      val held = spark.sparkContext.getPersistentRDDs
-      assert((frames.last.count() > 0L) == (name != noMerge), name)
-      // release what the caller owns: each frame's checkpoint leaves
+    val queries = SparkEntry.queries.keys.toSeq.sorted.filter(q =>
+      q.startsWith("q_graph_") || q.startsWith("q_dedup_") ||
+        q == "q_item_cf" || q == "q_winnow_matches")
+    assert(queries.size == 86, queries)
+    val sf = "/root/testdata/sf0.001"
+    // hold every RDD persisted by the start of each job: a stranded
+    // checkpoint that is strongly reachable cannot be collected by the
+    // ContextCleaner, so a leak cannot hide behind a garbage collection
+    // during the query
+    val held = java.util.concurrent.ConcurrentHashMap.newKeySet[org.apache.spark.rdd.RDD[_]]()
+    val pin = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        spark.sparkContext.getPersistentRDDs.values.foreach(held.add); ()
+      }
+    }
+    val stranded = Seq.newBuilder[String]
+    // release what the caller owns (each result frame's checkpoint
+    // leaves), then record and drop whatever else the row left behind
+    def check(name: String, before: Set[Int],
+              frames: Seq[org.apache.spark.sql.DataFrame]): Unit = {
+      CheckpointBridge.drainListeners(spark)
       frames.foreach(CheckpointBridge.free)
       val leaked = persisted -- before
-      assert(leaked.isEmpty, s"$name stranded persistent RDDs $leaked")
-      java.lang.ref.Reference.reachabilityFence(held)
+      if (leaked.nonEmpty) {
+        stranded += s"$name (${leaked.size})"
+        leaked.foreach(id => spark.sparkContext.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
+      }
+      held.clear()
     }
+    val t0 = System.nanoTime()
+    spark.sparkContext.addSparkListener(pin)
+    try {
+      cases.foreach { case (name, run) =>
+        val before = persisted
+        val frames = run()
+        assert((frames.last.count() > 0L) == (name != noMerge), name)
+        check(name, before, frames)
+      }
+      queries.foreach { q =>
+        val before = persisted
+        val df = SparkEntry.queries(q)(spark, sf)
+        graft.obs.Recorder.fullOutput(df)
+        check(q, before, Seq(df))
+      }
+    } finally spark.sparkContext.removeSparkListener(pin)
+    info(f"${cases.size + queries.size} rows in ${(System.nanoTime() - t0) / 1e9}%.0f s")
+    val leaks = stranded.result()
+    assert(leaks.isEmpty, s"${leaks.size} rows stranded persistent RDDs: ${leaks.mkString(", ")}")
   }
 }

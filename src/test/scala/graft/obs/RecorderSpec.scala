@@ -31,6 +31,21 @@ class RecorderSpec extends SparkSpec {
     } finally rec.close()
   }
 
+  test("measureQuery counts the checkpoints a query strands, not those its result reads") {
+    val rec = new Recorder(spark)
+    try {
+      // held, so that the ContextCleaner cannot reclaim it before the count
+      var stranded: org.apache.spark.sql.DataFrame = null
+      val m = rec.measureQuery {
+        stranded = spark.range(10).toDF().localCheckpoint()
+        spark.range(5).toDF().localCheckpoint()
+      }(_.count())
+      assert(m.ok && m.rows == 5L && m.stranded == 1, m)
+      java.lang.ref.Reference.reachabilityFence(stranded)
+      assert(rec.measure(spark.range(3).count()).stranded == -1)
+    } finally rec.close()
+  }
+
   test("a throwing action is recorded as a failure, not a fast success") {
     val rec = new Recorder(spark)
     try {

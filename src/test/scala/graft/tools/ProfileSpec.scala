@@ -14,6 +14,7 @@ class ProfileSpec extends SparkSpec {
       assert(r.full.ok && r.count.ok, r)
       assert(r.count.rows == SparkEntry.queries(r.query)(spark, sf).count(), r)
       assert(r.count.rows > 0 && r.full.jobs > 0, r)
+      assert(r.full.stranded == 0 && r.count.stranded == -1, r)
     }
     assert(lines.result().count(_.startsWith("PROFILE ")) == 2)
   }
