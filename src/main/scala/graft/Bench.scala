@@ -1,8 +1,10 @@
 package graft
 object Bench {
   /** One query's bench record: full-output seconds (negative on failure),
-    * jobs and GC ms of that run, and the `count()` seconds. */
-  private final case class Timed(name: String, s: Double, jobs: Int, gcMs: Long, countS: Double)
+    * the frame-build seconds inside them, jobs and GC ms of that run, and
+    * the `count()` seconds. */
+  private final case class Timed(name: String, s: Double, buildS: Double, jobs: Int, gcMs: Long,
+                                 countS: Double)
 
   /** Run settings shared with graft.tools.Profile. The driver's contract:
     * honor SPARK_GRAFT_CPUS verbatim (it runs the bench at a lower width
@@ -31,7 +33,7 @@ object Bench {
       // actual tables: the suite runs name-sorted, so whichever query
       // sorts first (q01_agg) otherwise absorbs the page-in/JIT cost of
       // the entire scan path (measured 4.6x inflation in round 4)
-      spark.read.parquet(s"$sfDir/lineitem.parquet")
+      Tables.parquet(spark, s"$sfDir/lineitem.parquet")
         .groupBy("l_returnflag").agg(sum("l_quantity"), avg("l_extendedprice")).count()
       // the dedup family's per-row md5 kernels (MinhashSignature, the
       // Simhash expression behind both simhash32 and simhash60, and
@@ -63,7 +65,7 @@ object Bench {
       .map { case (name, fn) =>
         // the timed action is the query's full output, the rows Verify
         // writes: a count() lets Catalyst prune per-row kernels away
-        val m = recorder.measure(graft.obs.Recorder.fullOutput(fn(spark, sfDir)))
+        val m = recorder.measureQuery(fn(spark, sfDir))(graft.obs.Recorder.fullOutput)
         // the old count() time, kept for one round next to the new one;
         // measured after the timed window, with its own jobs uncounted
         val c = recorder.measure(fn(spark, sfDir).count())
@@ -71,7 +73,7 @@ object Bench {
         // time and log it. (Round 5 silently recorded 20 analysis-time
         // failures as 0.06-0.13s "successes", hiding a full breakage.)
         m.error.foreach(e => System.err.println(s"[bench] $name FAILED: ${e.getMessage}"))
-        Timed(name, if (m.ok) m.seconds else -m.seconds, m.jobs, m.gcMs,
+        Timed(name, if (m.ok) m.seconds else -m.seconds, m.buildSeconds, m.jobs, m.gcMs,
           if (c.ok) c.seconds else -c.seconds)
       }
     var lastCompact = ""
@@ -84,10 +86,10 @@ object Bench {
       def obj(v: Timed => String) =
         results.map(t => "\"" + t.name + "\":" + v(t)).mkString("{", ",", "}")
       // deterministic per-query job counts (the adjudication metric for
-      // wall-time deltas — see graft.obs.Recorder); reported as the
-      // (time, jobs, gc_ms) TRIPLE of the pass that won on wall time
-      val (qs, js, gs, cs) = (obj(t => f(t.s)), obj(_.jobs.toString),
-        obj(_.gcMs.toString), obj(t => f(t.countS)))
+      // wall-time deltas — see graft.obs.Recorder); reported with the
+      // build seconds and GC ms of the pass that won on wall time
+      val (qs, bs, js, gs, cs) = (obj(t => f(t.s)), obj(t => f(t.buildS)),
+        obj(_.jobs.toString), obj(_.gcMs.toString), obj(t => f(t.countS)))
       // total sums SUCCESSFUL queries only; failures (negative entries)
       // are surfaced in an explicit errors list so they never read fast.
       val total = results.map(_.s).filter(_ >= 0).sum
@@ -98,7 +100,7 @@ object Bench {
       // adjudication) and must be readable off the artifact itself
       // (round-13 advice), not reconstructed from session logs.
       val line =
-        s"""{"metric":"total","value":${f(total)},"unit":"sec","cpus":$cpus,"n_passes":$nPasses,"pass_totals":$passes,"n_err":${errs.size},"errors":${errs.mkString("[", ",", "]")},"sf":"$sfDir","local_dir":"${LocalScratch.resolved}","queries":$qs,"jobs":$js,"gc_ms":$gs,"count_s":$cs}"""
+        s"""{"metric":"total","value":${f(total)},"unit":"sec","cpus":$cpus,"n_passes":$nPasses,"pass_totals":$passes,"n_err":${errs.size},"errors":${errs.mkString("[", ",", "]")},"sf":"$sfDir","local_dir":"${LocalScratch.resolved}","queries":$qs,"build_s":$bs,"jobs":$js,"gc_ms":$gs,"count_s":$cs}"""
       println(line)
       // Belt-and-braces: also persist the full line to a file the judge
       // can read even if the stdout capture clips. Both files are named
@@ -134,8 +136,8 @@ object Bench {
     (2 to nPasses).foreach { _ =>
       val p = runPass()
       totals :+= p.map(_.s).filter(_ >= 0).sum
-      // per-query min on wall time, with (time, jobs, gc_ms) kept as a
-      // TRIPLE from the pass that won — independent mins could pair pass
+      // per-query min on wall time, with (time, build, jobs, gc_ms) kept
+      // together from the pass that won — independent mins could pair pass
       // A's time with pass B's job count (notably: a pass that FAILED
       // early has fewer jobs, and that count must never annotate a
       // healthy pass's time — round-11 advice). An error in any pass keeps

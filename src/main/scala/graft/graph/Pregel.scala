@@ -218,17 +218,19 @@ object Pregel {
     * when given. On the configured cadence with a checkpoint dir set, a
     * *restartable* parquet snapshot (`<dir>/step_<N>`) is read straight
     * back (the write is the materializing action; the read-back plan is a
-    * bare scan — both reliable and resumable, unlike `RDD.checkpoint`
-    * files which die with the SparkContext), and the count is a second
-    * job over it. Otherwise a declared-hash(id) checkpoint: AQE-off with
-    * the count fused into its one job when counting, adaptive for the
-    * fixed-iteration loops, whose frames carry no `active` column. */
+    * bare scan with the written frame's schema — both reliable and
+    * resumable, unlike `RDD.checkpoint` files which die with the
+    * SparkContext), and the count is a second job over it. Otherwise a
+    * declared-hash(id) checkpoint: AQE-off with the count fused into its
+    * one job when counting, adaptive for the fixed-iteration loops, whose
+    * frames carry no `active` column. */
   private def materialize(opts: PregelOptions, active: Option[Column]): Fixpoint.Barrier =
     (df, step) => opts.checkpointDir match {
       case Some(dir) if (step + 1) % opts.checkpointEvery == 0 =>
         val path = s"$dir/step_$step"
         df.write.mode("overwrite").parquet(path)
-        val back = df.sparkSession.read.parquet(path)
+        // the schema is the one just written: no inference job
+        val back = df.sparkSession.read.schema(df.schema).parquet(path)
         (back, active.fold(Fixpoint.Unmeasured)(a => Fixpoint.counted(back.filter(a).count())))
       case _ => active match {
         case Some(a) => CheckpointBridge.materialize(df, Hash("id"), a)

@@ -16,12 +16,14 @@ final case class JobSpan(id: Int, ms: Long, tasks: Int, stages: Int, site: Strin
 
 /** One query as [[Recorder.measure]] saw it. `rows` is what the action
   * returned: its row count, or -1 when the action counts no rows or threw
-  * (the cause is then in `error`). `stranded` is what
-  * [[Recorder.measureQuery]] counted, -1 otherwise. */
+  * (the cause is then in `error`). `stranded` and `buildSeconds` are what
+  * [[Recorder.measureQuery]] counted, -1 otherwise: `buildSeconds` is the
+  * part of `seconds` spent building the query's frame (resolving its
+  * tables, planning, and any eager checkpoints), before its action ran. */
 final case class Measurement(seconds: Double, rows: Long, gcMs: Long, jobs: Int,
                              tasks: Long, maxTaskMs: Long, meanTaskMs: Double,
                              jobSpans: Seq[JobSpan], error: Option[Throwable],
-                             stranded: Int = -1) {
+                             stranded: Int = -1, buildSeconds: Double = -1) {
   def ok: Boolean = error.isEmpty
 }
 
@@ -73,19 +75,27 @@ final class Recorder(spark: SparkSession) extends AutoCloseable {
     * [[Recorder.cleanup]] runs; both lie outside the timed window. */
   def measure(action: => Long): Measurement = record(action, () => -1)
 
-  /** [[measure]] of `action` over the frame `query` builds, also counting
-    * the persistent RDDs the query stranded: those it left after the
-    * action beyond the ones its result reads, counted before the cleanup.
-    * With the ContextCleaner on (`spark.cleaner.referenceTracking`), a
-    * garbage collection during the query can reclaim a stranded RDD
-    * before it is counted. */
+  /** [[measure]] of `action` over the frame `query` builds, also timing
+    * the build apart (`buildSeconds`) and counting the persistent RDDs the
+    * query stranded: those it left after the action beyond the ones its
+    * result reads, counted before the cleanup. With the ContextCleaner on
+    * (`spark.cleaner.referenceTracking`), a garbage collection during the
+    * query can reclaim a stranded RDD before it is counted. */
   def measureQuery(query: => DataFrame)(action: DataFrame => Long): Measurement = {
     def persisted = spark.sparkContext.getPersistentRDDs.keySet
     val before = persisted
     var df: Option[DataFrame] = None
-    record({ val d = query; df = Some(d); action(d) }, () => df.fold(-1) { d =>
+    var buildSeconds = -1.0
+    val m = record({
+      val t0 = System.nanoTime()
+      val d = query
+      buildSeconds = (System.nanoTime() - t0) / 1e9
+      df = Some(d)
+      action(d)
+    }, () => df.fold(-1) { d =>
       (persisted -- before -- CheckpointBridge.rddsOf(d).map(_.id)).size
     })
+    m.copy(buildSeconds = buildSeconds)
   }
 
   private def record(action: => Long, stranded: () => Int): Measurement = {
@@ -127,10 +137,13 @@ object Recorder {
     * eating storage memory from later queries. The `System.gc()` lets the
     * GC-triggered ContextCleaner reclaim dead broadcasts, accumulators and
     * shuffle files, which a large, rarely collected heap would otherwise
-    * keep for the whole run. */
+    * keep for the whole run. The unpersist blocks until the blocks are
+    * gone: the ContextCleaner removes a collected checkpoint RDD again,
+    * and a removal still in flight would race it and log an ERROR for a
+    * block the other one already dropped. */
   def cleanup(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
     System.gc()
   }
 

@@ -8,11 +8,11 @@ import graft.obs.{Measurement, Recorder}
 
 /** The one profiling entry point: runs named declared queries on one local
   * session and prints what [[graft.obs.Recorder]] measured of each, per
-  * pass: the full-output time (the bench's timed action), the `count()`
-  * time and row count, jobs, tasks, max/mean task ms, GC ms, the number of
-  * persistent RDDs the full-output run stranded (left behind beyond those
-  * its result reads), and one line per job (id, ms, tasks/stages, first
-  * graft call site).
+  * pass: the full-output time (the bench's timed action) and the part of
+  * it spent building the query's frame, the `count()` time and row count,
+  * jobs, tasks, max/mean task ms, GC ms, the number of persistent RDDs the
+  * full-output run stranded (left behind beyond those its result reads),
+  * and one line per job (id, ms, tasks/stages, first graft call site).
   *
   * {{{
   * SPARK_GRAFT_SF_DIR=<sf dir> SPARK_GRAFT_CPUS=4 SPARK_GRAFT_PASSES=2 \
@@ -99,7 +99,7 @@ object Profile {
     (m.error ++ r.count.error).headOption match {
       case Some(e) => out(s"$head FAILED: ${e.getMessage}")
       case None =>
-        out(f"$head full=${m.seconds}%.3fs count=${r.count.seconds}%.3fs " +
+        out(f"$head full=${m.seconds}%.3fs build=${m.buildSeconds}%.3fs count=${r.count.seconds}%.3fs " +
           f"rows=${r.count.rows} jobs=${m.jobs} tasks=${m.tasks} maxTask=${m.maxTaskMs}ms " +
           f"meanTask=${m.meanTaskMs}%.1fms gc=${m.gcMs}ms stranded=${m.stranded}")
         m.jobSpans.foreach(j =>

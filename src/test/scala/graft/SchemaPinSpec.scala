@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
 
 /** Pins the ENGINE-VISIBLE schema of every driver-generated testdata
@@ -18,13 +19,38 @@ class SchemaPinSpec extends SparkSpec {
 
   private def raw(name: String) = spark.read.parquet(s"$dir/$name.parquet")
 
-  private def pin(name: String, expected: (String, DataType)*): Unit =
+  /** The table as queries read it: through [[Tables]] and its
+    * per-session resolution ([[Tables.parquet]]). */
+  private val served: Map[String, Tables => DataFrame] = Map(
+    "region" -> (_.region), "nation" -> (_.nation), "customer" -> (_.customer),
+    "supplier" -> (_.supplier), "part" -> (_.part), "orders" -> (_.orders),
+    "lineitem" -> (_.lineitem), "events" -> (_.events), "documents" -> (_.documents),
+    "embeddings" -> (_.embeddings))
+
+  /** Pins the raw read of `name` to `expected`, and what [[Tables]]
+    * serves, on a session's first read (a resolution) and its second (a
+    * reuse), to `expected` with `events.ts` normalized to BIGINT. */
+  private def pin(name: String, expected: (String, DataType)*): Unit = {
+    def names(df: DataFrame) = df.schema.map(f => f.name -> f.dataType)
     test(s"raw parquet schema: $name") {
       assume(have, s"$dir not present")
-      val got = raw(name).schema.map(f => f.name -> f.dataType)
-      assert(got === expected.toSeq,
+      assert(names(raw(name)) === expected.toSeq,
         s"engine-visible schema of $name.parquet drifted — audit every query reading it")
     }
+    test(s"Tables-served schema, first and second read: $name") {
+      assume(have, s"$dir not present")
+      val want = expected.map {
+        case ("ts", _) if name == "events" => "ts" -> LongType
+        case f => f
+      }
+      // a new session, so that its first read resolves the table afresh
+      val tables = Tables(spark.newSession(), dir)
+      Seq("first", "second").foreach { read =>
+        assert(names(served(name)(tables)) === want,
+          s"Tables serves $name with another schema on the $read read")
+      }
+    }
+  }
 
   pin("region", "r_regionkey" -> IntegerType, "r_name" -> StringType)
   pin("nation", "n_nationkey" -> IntegerType, "n_name" -> StringType,

@@ -46,6 +46,18 @@ class RecorderSpec extends SparkSpec {
     } finally rec.close()
   }
 
+  test("measureQuery times the frame build apart from the action") {
+    val rec = new Recorder(spark)
+    try {
+      val m = rec.measureQuery { Thread.sleep(300); spark.range(10).toDF() } { df =>
+        Thread.sleep(300); df.count()
+      }
+      assert(m.ok && m.rows == 10L, m)
+      assert(m.buildSeconds >= 0.3 && m.seconds - m.buildSeconds >= 0.3, m)
+      assert(rec.measure(spark.range(3).count()).buildSeconds == -1)
+    } finally rec.close()
+  }
+
   test("a throwing action is recorded as a failure, not a fast success") {
     val rec = new Recorder(spark)
     try {

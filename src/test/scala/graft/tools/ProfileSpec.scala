@@ -15,8 +15,11 @@ class ProfileSpec extends SparkSpec {
       assert(r.count.rows == SparkEntry.queries(r.query)(spark, sf).count(), r)
       assert(r.count.rows > 0 && r.full.jobs > 0, r)
       assert(r.full.stranded == 0 && r.count.stranded == -1, r)
+      assert(r.full.buildSeconds >= 0 && r.full.buildSeconds <= r.full.seconds, r)
     }
-    assert(lines.result().count(_.startsWith("PROFILE ")) == 2)
+    val profiles = lines.result().filter(_.startsWith("PROFILE "))
+    assert(profiles.size == 2)
+    assert(profiles.forall(_.matches(""".* full=[0-9.]+s build=[0-9.]+s count=.*""")), profiles)
   }
 
   test("--explain prints the physical plan") {
