@@ -55,7 +55,7 @@ object Algos {
         seeds.select(col("id")).distinct().withColumn("fresh", lit(true)), Stats,
         col("fresh"))
     Fixpoint.run(seeded, Fixpoint.materializing(Stats, col("fresh")), maxHops,
-        start = Some(seededFresh), continue = _.tally.count > 0) { (reached, _, fresh) =>
+        start = Some(seededFresh), continue = Fixpoint.whileCounting) { (reached, _, fresh) =>
       reached.select(col("id"), lit(false).as("cand"))
         .union(edges
           .join(hint(reached.filter(col("fresh")).select(col("id").as("src")), fresh.count),
@@ -119,7 +119,7 @@ object Algos {
     // (fused accumulator — one driver barrier per round, not two)
     val (f, _) = Fixpoint.run(f0,
         Fixpoint.materializing(if (smallV) Stats else Hash("id"), col("f") < col("f_old")),
-        opts.maxSupersteps, continue = _.tally.count > 0) { (f, _, _) =>
+        opts.maxSupersteps, continue = Fixpoint.whileCounting) { (f, _, _) =>
       // f carries a stale f_old column from round 1 on; the joins project it away
       val m1 = e.join(f.select(col("id").as("src"), col("f").as("fs")), Seq("src"))
         .groupBy(col("dst").as("id")).agg(min(col("fs")).as("m1"))
@@ -296,7 +296,8 @@ object Algos {
       case "rmse"            => t => math.sqrt(t.sum / n)
     }
     val (verts, it) = Fixpoint.run(init, Fixpoint.materializing(Hash("id"), rowMetric),
-        maxIters, continue = r => delta(r.tally) >= tol) { (verts, _, _) =>
+        maxIters, continue = (r: Fixpoint.Round[DataFrame]) => delta(r.tally) >= tol) {
+        (verts, _, _) =>
       val prev = verts.select("id", "pr", "outdeg")
       prUpdate(prev, e, n, damping, resetProb)
         .join(prev.select(col("id"), col("pr").as("prev_pr")), Seq("id"))
@@ -663,12 +664,12 @@ object Algos {
           opts: PregelOptions = PregelOptions(maxSupersteps = 30)): DataFrame = owned { o =>
     val s = pairs.sparkSession
     val edges = o(pairs.select(col("u"), col("v"), col("w")).distinct().localCheckpoint())
-    var comp = verticesOf(edges.select(col("u").as("src"), col("v").as("dst")))
+    val comp0 = verticesOf(edges.select(col("u").as("src"), col("v").as("dst")))
       .select(col("id"), col("id").as("c")).localCheckpoint()
-    var chosen: DataFrame = null
-    var merges = 1L
-    var round = 0
-    while (merges > 0 && round < opts.maxSupersteps) {
+    // state: (component label per vertex, the chosen edges so far)
+    val ((comp, chosen), _) = Fixpoint.run((comp0, Option.empty[DataFrame]),
+        Fixpoint.inStep[(DataFrame, Option[DataFrame])], opts.maxSupersteps,
+        continue = Fixpoint.whileCounting) { case (state @ (comp, chosen), _, _) => owned { r =>
       val lab = edges
         .join(comp.select(col("id").as("u"), col("c").as("cu")), Seq("u"))
         .join(comp.select(col("id").as("v"), col("c").as("cv")), Seq("v"))
@@ -677,7 +678,8 @@ object Algos {
       // 4th struct field rides along without affecting which edge wins
       // ((w, u, v) is unique per row — edges are distinct), exactly the
       // oracle's rn=1 over ORDER BY w, u, v (its mp_r CTE). One fused
-      // checkpoint serves the chosen-edge rows AND the pointer table.
+      // checkpoint serves the chosen-edge rows AND the pointer table; its
+      // row count is the round's merge count.
       val m0 = lab.select(col("cu").as("comp"),
           struct(col("w"), col("u"), col("v"), col("cv").as("p")).as("e"))
         .union(lab.select(col("cv").as("comp"),
@@ -685,14 +687,12 @@ object Algos {
         .groupBy(col("comp")).agg(min(col("e")).as("m"))
         .select(col("comp"), col("m.u").as("u"), col("m.v").as("v"),
           col("m.w").as("w"), col("m.p").as("par"))
-      val mm = {
-        val (ck, Tally(n, _, _)) = materialize(m0, Stats, lit(true))
-        merges = n; ck
-      }
-      if (merges > 0) {
+      val (mm, merges) = materialize(m0, Stats, lit(true))
+      r(mm)
+      if (merges.count == 0) (state, merges)
+      else {
         val cand = mm.select(col("u"), col("v"), col("w")).distinct()
-        val acc = if (chosen == null) cand.localCheckpoint()
-          else chosen.union(cand).localCheckpoint()
+        val acc = chosen.fold(cand)(_.union(cand)).localCheckpoint()
         // root the 2-cycles: par(par(c)) == c ⟹ root := min(c, par(c));
         // every par value is itself a live component with a chosen edge,
         // so the self-join is total (inner is exact — oracle q_r_0)
@@ -708,28 +708,22 @@ object Algos {
         // count rides each checkpoint job)
         val (f, _) = Fixpoint.run(rooted,
             Fixpoint.materializing(Stats, col("par") =!= col("p_old")), Int.MaxValue,
-            continue = _.tally.count > 0) { (g0, _, _) =>
+            continue = Fixpoint.whileCounting) { (g0, _, _) =>
           val g = g0.drop("p_old")
           g.as("a").join(g.as("b"), col("b.comp") === col("a.par"))
             .select(col("a.comp").as("comp"), col("a.par").as("p_old"),
               col("b.par").as("par"))
         }
+        r(f)
         val nextComp = comp.join(f.select(col("comp").as("c"), col("par")),
             Seq("c"), "left")
           .select(col("id"), coalesce(col("par"), col("c")).as("c"))
           .localCheckpoint()
-        freeCkpt(comp); freeCkpt(f); freeCkpt(mm)
-        if (chosen != null) freeCkpt(chosen)
-        comp = nextComp
-        chosen = acc
-      } else {
-        freeCkpt(mm)
+        ((nextComp, Some(acc)), merges)
       }
-      round += 1
-    }
+    }}
     o(comp)
-    if (chosen == null) s.emptyDataFrame
-    else o(chosen).orderBy(col("u"), col("v")).localCheckpoint()
+    chosen.fold(s.emptyDataFrame)(o(_).orderBy(col("u"), col("v")).localCheckpoint())
   }
 
   /** Deterministic random-walk corpus: one walk per vertex, `len` steps.
@@ -906,35 +900,34 @@ object Algos {
     val e = o(materialize(Prep.makeSymmetric(edges.select("src", "dst")), AdaptiveHash("src")))
     val src0 = sources.map(x => (x, x, 0L)).toDF("id", "tag", "level")
       .localCheckpoint()
-    var frontiers = Vector(src0)
-    var frontier = src0
-    var prev: DataFrame = null
-    var h = 0
-    var live = true
-    while (live && h < maxHops) {
-      // min-combine BEFORE the anti-joins: the partial agg collapses the
-      // |frontier|·deg expansion map-side, so the anti-joins only ever
-      // see ≤ |distinct (id, tag)| rows (same fix as
-      // [[neighborhoodFunction]]; measured 10× there at sf0.1)
-      val next = frontier.select(col("id").as("src"), col("tag"), col("level"))
-        .join(e, Seq("src"))
-        .select(col("dst").as("id"), col("tag"), (col("level") + 1L).as("level"))
-        .groupBy(col("id"), col("tag")).agg(min(col("level")).as("level"))
-        .join(frontier.select("id", "tag"), Seq("id", "tag"), "left_anti")
-        .transform(d0 => {
-          val d = if (prev == null) d0
-            else d0.join(prev.select("id", "tag"), Seq("id", "tag"), "left_anti")
-          val (ck, Tally(n, _, _)) = materialize(d, Stats, lit(true))
-          live = n > 0; o(ck)
-        })
-      if (live) {
-        frontiers :+= next
-        prev = frontier
-        frontier = next
-      }
-      h += 1
-    }
-    frontiers.reduce(_ union _)
+    // state: the per-level checkpoints; a wave that reaches nothing ends
+    // the loop and is not kept
+    Fixpoint.run(Vector(src0), Fixpoint.inStep[Vector[DataFrame]], maxHops,
+        continue = Fixpoint.whileCounting) { (levels, _, _) =>
+      val (ck, t) = materialize(wave(e, levels.last, levels.dropRight(1).lastOption,
+        "level", col("level") + 1L, min(col("level"))), Stats, lit(true))
+      o(ck)
+      (if (t.count > 0) levels :+ ck else levels, t)
+    }._1.reduce(_ union _)
+  }
+
+  /** One wave of a tagged multi-source BFS on a symmetric edge frame `e`
+    * under the undirected frontier rule ([[taggedBfs]]): the (id, tag)
+    * rows one hop past `frontier` that are in neither `frontier` nor
+    * `prev`, the frontier before it, each carrying column `v`, the
+    * `combine` of `hop` (over the expanded rows) per (id, tag).
+    * Combining BEFORE the anti-joins lets the partial aggregate collapse
+    * the |frontier|·deg expansion map-side, so the anti-joins only ever
+    * see ≤ |distinct (id, tag)| rows (measured 10× on
+    * [[neighborhoodFunction]] at sf0.1). */
+  private def wave(e: DataFrame, frontier: DataFrame, prev: Option[DataFrame],
+                   v: String, hop: Column, combine: Column): DataFrame = {
+    val next = frontier.select(col("id").as("src"), col("tag"), col(v))
+      .join(e, Seq("src"))
+      .select(col("dst").as("id"), col("tag"), hop.as(v))
+      .groupBy(col("id"), col("tag")).agg(combine.as(v))
+      .join(frontier.select("id", "tag"), Seq("id", "tag"), "left_anti")
+    prev.fold(next)(p => next.join(p.select("id", "tag"), Seq("id", "tag"), "left_anti"))
   }
 
   /** Exact neighborhood function N(h) over a deterministic 1/sampleMod
@@ -970,14 +963,12 @@ object Algos {
     * pre-combine row bill that actually spills) on top of the settled
     * total, and fails FAST with an actionable message naming
     * [[anfSketch]] when the projection crosses `maxPairs` (default
-    * 2·10⁹ pairs ≈ 50 GB of shuffle state; env override
-    * SPARK_GRAFT_MAX_EXACT_PAIRS). The projection adds ONE scalar job
+    * 2·10⁹ pairs ≈ 50 GB of shuffle state). The projection adds ONE scalar job
     * (a count+approx_count_distinct aggregate over the checkpointed
     * edge frame) to the whole query. */
   def neighborhoodFunction(edges: DataFrame, maxH: Int = 4,
                            sampleMod: Long = 151L,
-                           maxPairs: Long = sys.env.get("SPARK_GRAFT_MAX_EXACT_PAIRS")
-                             .map(_.toLong).getOrElse(2000000000L)): DataFrame = owned { o =>
+                           maxPairs: Long = 2000000000L): DataFrame = owned { o =>
     val s = edges.sparkSession
     import s.implicits._
     val e = o(materialize(Prep.makeSymmetric(edges.select("src", "dst")), AdaptiveHash("src")))
@@ -986,13 +977,16 @@ object Algos {
     val dr = e.agg(count(lit(1)).as("m"),
       approx_count_distinct(col("src")).as("n")).first()
     val avgDeg = math.max(1.0, dr.getLong(0).toDouble / math.max(1L, dr.getLong(1)))
-    var frontier = o(materialize(
+    val frontier0 = o(materialize(
       verticesOf(e).filter(pmod(col("id"), lit(sampleMod)) === 0L)
         .select(col("id"), col("id").as("tag"), lit(0L).as("level")), AdaptiveHash("id")))
-    var prev: DataFrame = null
-    var counts = Vector((0L, frontier.count()))
-    var lastWave = counts.last._2
-    (1 to maxH).foreach { h =>
+    // cumulative N(h); the last wave is its last increment
+    var counts = Vector((0L, frontier0.count()))
+    // state: (frontier, the frontier before it); round h is hop h
+    Fixpoint.run((frontier0, Option.empty[DataFrame]),
+        Fixpoint.inStep[(DataFrame, Option[DataFrame])], maxH + 1,
+        firstRound = 1) { case ((frontier, prev), h, _) =>
+      val lastWave = counts.last._2 - counts.dropRight(1).lastOption.fold(0L)(_._2)
       val projected = counts.last._2 + (lastWave * avgDeg).toLong
       if (projected > maxPairs) {
         throw new IllegalStateException(
@@ -1003,33 +997,15 @@ object Algos {
             "(constant per-vertex FM registers, spec-asserted against " +
             "this operator), or raise maxPairs / sampleMod.")
       }
-      // AGGREGATE BEFORE THE ANTI-JOINS: the raw expansion is
-      // |frontier|·deg rows (∼ pairs·avgdeg ≈ 400M at sf0.1 over the
-      // run); the min-combine's map-side partial agg collapses it to
-      // ≤ |distinct (id, tag)| BEFORE anything shuffles or sorts.
-      // Anti-joining first sort-merges the full expansion — measured
-      // 224s vs ~20s for this exact query at sf0.1.
-      val next = frontier.select(col("id").as("src"), col("tag"), col("level"))
-        .join(e, Seq("src"))
-        .select(col("dst").as("id"), col("tag"), (col("level") + 1L).as("level"))
-        .groupBy(col("id"), col("tag")).agg(min(col("level")).as("level"))
-        .join(frontier.select("id", "tag"), Seq("id", "tag"), "left_anti")
-        .transform(d0 => {
-          val d = if (prev == null) d0
-            else d0.join(prev.select("id", "tag"), Seq("id", "tag"), "left_anti")
-          // This count is RESULT data, not loop control: the fused
-          // accumulator is at-least-once under task retries, so recount
-          // the materialized blocks exactly (a count() over a cached
-          // checkpoint is a metadata-cheap job; the loop is fixed-length,
-          // so no barrier is saved by fusing here anyway).
-          val ck = o(materialize(d, Stats))
-          val n = ck.count()
-          lastWave = n
-          counts :+= ((h.toLong, counts.last._2 + n)); ck
-        })
-      if (prev != null) freeCkpt(prev)
-      prev = frontier
-      frontier = next
+      // This count is RESULT data, not loop control: the fused
+      // accumulator is at-least-once under task retries, so recount the
+      // materialized blocks exactly (a count() over a cached checkpoint
+      // is a metadata-cheap job; the loop is fixed-length, so no barrier
+      // is saved by fusing here anyway).
+      val ck = o(materialize(wave(e, frontier, prev, "level", col("level") + 1L,
+        min(col("level"))), Stats))
+      counts :+= ((h.toLong, counts.last._2 + ck.count()))
+      ((ck, Some(frontier)), Fixpoint.Unmeasured)
     }
     counts.toDF("h", "n_pairs").orderBy(col("h"))
   }
@@ -1077,7 +1053,9 @@ object Algos {
       .agg(sum(col("est"))).first().getDouble(0)
     var out = Vector((0L, estimate(init)))
     val (cur, _) = Fixpoint.run(init, Fixpoint.materializing(AdaptiveHash("id")), maxH,
-        continue = r => { out :+= ((r.index + 1L, estimate(r.state))); true }) { (cur, _, _) =>
+        continue = (r: Fixpoint.Round[DataFrame]) => {
+          out :+= ((r.index + 1L, estimate(r.state))); true
+        }) { (cur, _, _) =>
       cur.select(col("id").as("src"), col("regs"))
         .join(e, Seq("src"))
         .select(col("dst").as("id"), posexplode(col("regs")).as(Seq("pos", "m")))
@@ -1113,7 +1091,7 @@ object Algos {
       lit(null).cast("long").as("color")), AdaptiveHash("id"))
     val uncolored = Fixpoint.counted(init.filter(col("color").isNull).count())
     val (verts, _) = Fixpoint.run(init, Fixpoint.materializing(Hash("id"), col("color").isNull),
-        maxRounds, start = Some(uncolored), continue = _.tally.count > 0) { (verts, _, _) =>
+        maxRounds, start = Some(uncolored), continue = Fixpoint.whileCounting) { (verts, _, _) =>
       val st = verts.select(col("id").as("dst"), col("p").as("np"), col("color").as("nc"))
       // strongest uncolored neighbor per vertex ((p, id) order)
       val nbrMax = e.join(st, Seq("dst"))
@@ -1158,47 +1136,8 @@ object Algos {
     val prio = o(materialize(verticesOf(e).select(col("id"),
       conv(substring(md5(col("id").cast("string")), 1, 15), 16, 10).cast("long").as("p")),
       AdaptiveHash("id")))
-    var live = e
-    // one ROUND-SIZED checkpoint per round; the matched result is their
-    // lazy union. The anti-join partner is only THIS round's mutual
-    // endpoints: live already excludes every earlier round's endpoints
-    // inductively, so anti-joining the full (growing) matched set was
-    // redundant work that broadcasts at test scale but flips to a
-    // per-round ball exchange past the threshold (the taggedBfs r10
-    // cliff class) — and the matched∪mutual re-checkpoint per round
-    // (O(rounds·matched) writes) disappears with it.
-    var rounds = Vector.empty[DataFrame]
-    var round = 0
-    var liveCount = live.count()
-    while (liveCount > 0 && round < maxRounds) {
-      val pick = live
-        .join(prio.select(col("id").as("dst"), col("p").as("np")), Seq("dst"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy(col("src")).orderBy(col("np").desc, col("dst").desc)))
-        .filter(col("rn") === 1)
-        .select(col("src"), col("dst"))
-      val mutual = o(materialize(pick.as("a")
-          .join(pick.as("b"),
-            col("a.src") === col("b.dst") && col("a.dst") === col("b.src"))
-          .filter(col("a.src") < col("a.dst"))
-          .select(col("a.src").as("u"), col("a.dst").as("v")), Stats))
-      rounds :+= mutual
-      // dup endpoints are harmless on the anti-join's build side — no
-      // distinct pass needed
-      val mv = mutual.select(col("u").as("id"))
-        .union(mutual.select(col("v").as("id")))
-      val (nextLive, Tally(nextLiveCount, _, _)) = materialize(
-        live.join(mv.withColumnRenamed("id", "src"), Seq("src"), "left_anti")
-          .join(mv.withColumnRenamed("id", "dst"), Seq("dst"), "left_anti")
-          .select(col("src"), col("dst")), Hash("src"), lit(true))
-      if (round > 0) freeCkpt(live)
-      live = nextLive
-      liveCount = nextLiveCount
-      round += 1
-    }
-    o(live)
-    (Seq.empty[(Long, Long)].toDF("u", "v") +: rounds)
-      .reduce(_ union _).orderBy(col("u")).localCheckpoint()
+    mutualProposals(e, Seq.empty[(Long, Long)].toDF("u", "v"), maxRounds, col("np").desc)(
+      _.join(prio.select(col("id").as("dst"), col("p").as("np")), Seq("dst")))
   }
 
   /** ½-approximation maximum-WEIGHT matching by mutual heaviest-edge
@@ -1213,39 +1152,55 @@ object Algos {
   def maxWeightMatching(symEdges: DataFrame, maxRounds: Int = 12): DataFrame = owned { o =>
     val s = symEdges.sparkSession
     import s.implicits._
-    var live = o(materialize(symEdges.select("src", "dst", "w"), AdaptiveHash("src")))
-    // round-sized checkpoints + current-round-endpoints anti-join — same
-    // rationale as [[maximalMatching]] (live inductively excludes every
-    // earlier round's matched endpoints)
+    mutualProposals(o(materialize(symEdges.select("src", "dst", "w"), AdaptiveHash("src"))),
+      Seq.empty[(Long, Long, Long)].toDF("u", "v", "w"), maxRounds, col("w").desc)(identity)
+  }
+
+  /** The mutual-proposal rounds behind both matchings, over the live
+    * edge frame (src, dst, carried columns…): every live vertex picks its
+    * first live edge by (`order`, dst desc) over `candidates(live)`,
+    * mutual picks marry, and their endpoints leave `live`. `none` is the
+    * empty result, (u, v, carried columns…); the result is the union of
+    * the per-round matched frames, ordered by u.
+    *
+    * Each round's matched frame is its own ROUND-SIZED checkpoint and the
+    * result their lazy union. The anti-join partner is only THIS round's
+    * mutual endpoints: live already excludes every earlier round's
+    * endpoints inductively, so anti-joining the full (growing) matched
+    * set was redundant work that broadcasts at test scale but flips to a
+    * per-round ball exchange past the threshold (the taggedBfs r10 cliff
+    * class) — and the matched∪mutual re-checkpoint per round
+    * (O(rounds·matched) writes) disappears with it. */
+  private def mutualProposals(live0: DataFrame, none: DataFrame, maxRounds: Int, order: Column)(
+      candidates: DataFrame => DataFrame): DataFrame = owned { o =>
+    val carried = none.columns.drop(2).toSeq
+    val edge = (Seq("src", "dst") ++ carried).map(col)
     var rounds = Vector.empty[DataFrame]
-    var round = 0
-    var liveCount = live.count()
-    while (liveCount > 0 && round < maxRounds) {
-      val pick = live
+    val (live, _) = Fixpoint.run(live0, Fixpoint.materializing(Hash("src"), lit(true)),
+        maxRounds, start = Some(Fixpoint.counted(live0.count())),
+        continue = Fixpoint.whileCounting) { (live, _, _) =>
+      val pick = candidates(live)
         .withColumn("rn", row_number().over(
-          Window.partitionBy(col("src")).orderBy(col("w").desc, col("dst").desc)))
+          Window.partitionBy(col("src")).orderBy(order, col("dst").desc)))
         .filter(col("rn") === 1)
-        .select(col("src"), col("dst"), col("w"))
+        .select(edge: _*)
       val mutual = o(materialize(pick.as("a")
           .join(pick.as("b"),
             col("a.src") === col("b.dst") && col("a.dst") === col("b.src"))
           .filter(col("a.src") < col("a.dst"))
-          .select(col("a.src").as("u"), col("a.dst").as("v"), col("a.w").as("w")), Stats))
+          .select(Seq(col("a.src").as("u"), col("a.dst").as("v")) ++
+            carried.map(c => col(s"a.$c").as(c)): _*), Stats))
       rounds :+= mutual
+      // dup endpoints are harmless on the anti-join's build side — no
+      // distinct pass needed
       val mv = mutual.select(col("u").as("id"))
         .union(mutual.select(col("v").as("id")))
-      val (nextLive, Tally(nextLiveCount, _, _)) = materialize(
-        live.join(mv.withColumnRenamed("id", "src"), Seq("src"), "left_anti")
-          .join(mv.withColumnRenamed("id", "dst"), Seq("dst"), "left_anti")
-          .select(col("src"), col("dst"), col("w")), Hash("src"), lit(true))
-      if (round > 0) freeCkpt(live)
-      live = nextLive
-      liveCount = nextLiveCount
-      round += 1
+      live.join(mv.withColumnRenamed("id", "src"), Seq("src"), "left_anti")
+        .join(mv.withColumnRenamed("id", "dst"), Seq("dst"), "left_anti")
+        .select(edge: _*)
     }
     o(live)
-    (Seq.empty[(Long, Long, Long)].toDF("u", "v", "w") +: rounds)
-      .reduce(_ union _).orderBy(col("u")).localCheckpoint()
+    (none +: rounds).reduce(_ union _).orderBy(col("u")).localCheckpoint()
   }
 
   /** HITS hubs & authorities (Kleinberg 1999, public algorithm) on a
@@ -1271,41 +1226,48 @@ object Algos {
     // exchange this would remove only exists past the broadcast
     // threshold, where the salsa-style eo/ei twins are the shape to
     // copy if hits iterations ever grow.)
-    val v = o(materialize(verticesOf(e), AdaptiveHash("id")))
-    var h = materialize(v.select(col("id"), lit(1.0).as("h")), AdaptiveHash("id"))
-    var a: DataFrame = null
-    var i = 0
-    while (i < iterations) {
+    linkAnalysis(e, e, o(materialize(verticesOf(e), AdaptiveHash("id"))), iterations,
+      col("h"), col("a"))
+  }
+
+  /** The fixed-iteration L1-normalized link analysis behind [[hits]] and
+    * [[salsa]] over the vertex frame `v`, with state (hub, authority):
+    * per round the authority of v sums `toAuth` over the out-edges
+    * (src, dst, …) `eo` into v, from h(src); the hub of u sums `toHub`
+    * over the in-edges `ei` out of u, from the new a(dst); each is
+    * L1-normalized and materialized in turn. Returns (id, auth, hub). */
+  private def linkAnalysis(eo: DataFrame, ei: DataFrame, v: DataFrame, iterations: Int,
+                           toAuth: Column, toHub: Column): DataFrame = owned { o =>
+    val h0 = materialize(v.select(col("id"), lit(1.0).as("h")), AdaptiveHash("id"))
+    val ((h, a), _) = Fixpoint.run((h0, Option.empty[DataFrame]),
+        Fixpoint.inStep[(DataFrame, Option[DataFrame])], iterations) { case ((h, _), _, _) =>
       val araw = v.join(
-          e.join(h.select(col("id").as("src"), col("h")), Seq("src"))
-            .groupBy(col("dst").as("id")).agg(sum(col("h")).as("x")),
+          eo.join(h.select(col("id").as("src"), col("h")), Seq("src"))
+            .groupBy(col("dst").as("id")).agg(sum(toAuth).as("x")),
           Seq("id"), "left")
         .select(col("id"), coalesce(col("x"), lit(0.0)).as("a"))
       // (r15: a lazy-aN half-iteration fusion was tried here and
-      // REVERTED — jobs 71 → 118 with wall up: under the adaptive
-      // AdaptiveHash layout the chained plan re-materializes each internal exchange
-      // as its own AQE stage job and rebuilds the normalization
-      // broadcasts per reference, costing more driver jobs than the
-      // checkpoint it saved. Per-half-iteration materialization stands,
-      // consistent with the r13 WaveBatch and r14 textrank findings.)
+      // REVERTED — hits jobs 71 → 118, salsa 97 → 126, with wall up:
+      // under the adaptive AdaptiveHash layout the chained plan
+      // re-materializes each internal exchange as its own AQE stage job
+      // and rebuilds the normalization broadcasts per reference, costing
+      // more driver jobs than the checkpoint it saved.
+      // Per-half-iteration materialization stands, consistent with the
+      // r13 WaveBatch and r14 textrank findings.)
       val aN = materialize(
         araw.crossJoin(broadcast(araw.agg(sum(col("a")).as("s"))))
           .select(col("id"), (col("a") / col("s")).as("a")), AdaptiveHash("id"))
       val hraw = v.join(
-          e.join(aN.select(col("id").as("dst"), col("a")), Seq("dst"))
-            .groupBy(col("src").as("id")).agg(sum(col("a")).as("x")),
+          ei.join(aN.select(col("id").as("dst"), col("a")), Seq("dst"))
+            .groupBy(col("src").as("id")).agg(sum(toHub).as("x")),
           Seq("id"), "left")
         .select(col("id"), coalesce(col("x"), lit(0.0)).as("h"))
       val hN = materialize(
         hraw.crossJoin(broadcast(hraw.agg(sum(col("h")).as("s"))))
           .select(col("id"), (col("h") / col("s")).as("h")), AdaptiveHash("id"))
-      freeCkpt(h)
-      if (a != null) freeCkpt(a)
-      h = hN
-      a = aN
-      i += 1
+      ((hN, Some(aN)), Fixpoint.Unmeasured)
     }
-    o(a).join(o(h), Seq("id"))
+    o(a.get).join(o(h), Seq("id"))
       .select(col("id"), col("a").as("auth"), col("h").as("hub"))
       .orderBy(col("id"))
       .localCheckpoint()
@@ -1325,19 +1287,13 @@ object Algos {
     val s = edges.sparkSession
     import s.implicits._
     val e = o(materialize(edges.select("src", "dst", "t"), AdaptiveHash("src")))
-    var a = Seq((source, 0L)).toDF("id", "arr").localCheckpoint()
-    var i = 0
-    while (i < rounds) {
+    Fixpoint.run(Seq((source, 0L)).toDF("id", "arr").localCheckpoint(),
+        Fixpoint.checkpointing, rounds) { (a, _, _) =>
       val cand = a.select(col("id").as("src"), col("arr"))
         .join(e, Seq("src")).filter(col("t") >= col("arr"))
         .select(col("dst").as("id"), col("t").as("arr"))
-      val next = a.union(cand).groupBy(col("id"))
-        .agg(min(col("arr")).as("arr")).localCheckpoint()
-      freeCkpt(a)
-      a = next
-      i += 1
-    }
-    a.orderBy(col("id"))
+      a.union(cand).groupBy(col("id")).agg(min(col("arr")).as("arr"))
+    }._1.orderBy(col("id"))
   }
 
   /** Source-sampled betweenness centrality (Brandes 2001, public
@@ -1384,64 +1340,39 @@ object Algos {
     // backward pass then indexes its level slices DIRECTLY instead of
     // filtering the ball twice per level, and max(level) is
     // driver-known (one fewer scalar job).
-    var levels = Vector(src0)
-    var frontier = src0
-    var prev: DataFrame = null
-    var h = 0
-    var live = true
-    while (live && h < maxHops) {
-      // sigma-combine BEFORE the anti-joins (map-side partial agg
-      // collapses the |frontier|·deg expansion): dropping a settled
-      // (id, tag) group before or after the sum is equivalent — every
-      // contribution to a NEW vertex comes from frontier h by the BFS
-      // level invariant.
-      val next = frontier.select(col("id").as("src"), col("tag"), col("sigma"))
-        .join(e, Seq("src"))
-        .select(col("dst").as("id"), col("tag"), col("sigma"))
-        .groupBy(col("id"), col("tag"))
-        .agg(sum(col("sigma")).as("sigma"))
-        .join(frontier.select("id", "tag"), Seq("id", "tag"), "left_anti")
-        .transform(d0 => {
-          val d = if (prev == null) d0
-            else d0.join(prev.select("id", "tag"), Seq("id", "tag"), "left_anti")
-          val (ck, Tally(n, _, _)) = materialize(d.select(col("id"), col("tag"),
-              lit((h + 1).toLong).as("level"), col("sigma")), Stats, lit(true))
-          live = n > 0; o(ck)
-        })
-      if (live) {
-        levels :+= next
-        prev = frontier
-        frontier = next
+    val levels = Fixpoint.run(Vector(src0), Fixpoint.inStep[Vector[DataFrame]], maxHops,
+        continue = Fixpoint.whileCounting) { (levels, h, _) =>
+      // sigma-combine BEFORE the anti-joins: dropping a settled (id, tag)
+      // group before or after the sum is equivalent — every contribution
+      // to a NEW vertex comes from frontier h by the BFS level invariant.
+      val (ck, t) = materialize(wave(e, levels.last, levels.dropRight(1).lastOption,
+          "sigma", col("sigma"), sum(col("sigma")))
+        .select(col("id"), col("tag"), lit((h + 1).toLong).as("level"), col("sigma")),
+        Stats, lit(true))
+      o(ck)
+      (if (t.count > 0) levels :+ ck else levels, t)
+    }._1
+    // backward accumulation, deepest level first: each level's (id, tag,
+    // delta) rows fold from those of the level below it (empty below
+    // the deepest level)
+    val deltas = (levels.length - 2 to 1 by -1)
+      .scanLeft(s.emptyDataset[(Long, Long, Double)].toDF("id", "tag", "delta")) { (deltaUp, l) =>
+        val up = levels(l + 1)
+          .select(col("id").as("w_id"), col("tag").as("tag_w"), col("sigma").as("sigma_w"))
+          .join(deltaUp.select(col("id").as("w_id"), col("tag").as("tag_w"), col("delta")),
+            Seq("w_id", "tag_w"), "left")
+          .select(col("w_id"), col("tag_w"), col("sigma_w"),
+            coalesce(col("delta"), lit(0.0)).as("delta_w"))
+        o(levels(l)
+          .select(col("id"), col("tag"), col("sigma"))
+          .join(e, col("id") === col("src"))
+          .join(up, col("dst") === col("w_id") && col("tag") === col("tag_w"))
+          .groupBy(col("id"), col("tag"))
+          .agg(sum((col("sigma").cast("double") / col("sigma_w"))
+            * (lit(1.0) + col("delta_w"))).as("delta"))
+          .localCheckpoint())
       }
-      h += 1
-    }
-    val maxLevel = levels.length - 1
-    // backward accumulation, deepest level first; deltaUp carries the
-    // (id, tag, delta) rows of level l+1 (empty at the deepest level)
-    var deltaUp = s.emptyDataset[(Long, Long, Double)].toDF("id", "tag", "delta")
-    val perLevel = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var l = maxLevel - 1
-    while (l >= 1) {
-      val up = levels(l + 1)
-        .select(col("id").as("w_id"), col("tag").as("tag_w"), col("sigma").as("sigma_w"))
-        .join(deltaUp.select(col("id").as("w_id"), col("tag").as("tag_w"), col("delta")),
-          Seq("w_id", "tag_w"), "left")
-        .select(col("w_id"), col("tag_w"), col("sigma_w"),
-          coalesce(col("delta"), lit(0.0)).as("delta_w"))
-      val dl = levels(l)
-        .select(col("id"), col("tag"), col("sigma"))
-        .join(e, col("id") === col("src"))
-        .join(up, col("dst") === col("w_id") && col("tag") === col("tag_w"))
-        .groupBy(col("id"), col("tag"))
-        .agg(sum((col("sigma").cast("double") / col("sigma_w"))
-          * (lit(1.0) + col("delta_w"))).as("delta"))
-        .localCheckpoint()
-      perLevel += o(dl)
-      deltaUp = dl
-      l -= 1
-    }
-    (if (perLevel.isEmpty) deltaUp
-     else perLevel.reduce(_ unionByName _))
+    deltas.drop(1).reduceOption(_ unionByName _).getOrElse(deltas.head)
       .groupBy(col("id")).agg(sum(col("delta")).as("bc"))
       .orderBy(col("id"))
       .localCheckpoint()
@@ -1699,7 +1630,7 @@ object Algos {
     // the undecided-count rides the checkpoint job (fused accumulator)
     val (verts, _) = Fixpoint.run(init, Fixpoint.materializing(Stats, col("st") === 0),
         opts.maxSupersteps, start = Some(undecided),
-        continue = _.tally.count > 0) { (verts, _, _) =>
+        continue = Fixpoint.whileCounting) { (verts, _, _) =>
       val unk = verts.filter(col("st") === 0)
       val minNbr = e.join(unk.select(col("id").as("dst")), Seq("dst"))
         .groupBy(col("src").as("id")).agg(min(col("dst")).as("min_unk_nbr"))
@@ -1732,7 +1663,8 @@ object Algos {
     // once a round drops no edge
     val (e, _) = Fixpoint.run(init, Fixpoint.materializing(Stats, lit(true)),
         opts.maxSupersteps, start = Some(edgeCount),
-        continue = r => r.tally.count != r.prev.count && r.tally.count > 0) { (e, _, _) =>
+        continue = (r: Fixpoint.Round[DataFrame]) =>
+          r.tally.count != r.prev.count && r.tally.count > 0) { (e, _, _) =>
       val keep = e.groupBy(col("src")).agg(count(lit(1)).as("d"))
         .filter(col("d") >= k).select(col("src").as("id"))
       e.join(keep.select(col("id").as("src")), Seq("src"), "left_semi")
@@ -1948,17 +1880,20 @@ object Algos {
     // (reproduced by IndependentOracleSpec's many-round tangle fixture).
     // Checkpointing truncates the plan per round — the repo's own
     // iterate-eagerly rule, applied to the outer loop too.
-    var remEdges = edges.select("src", "dst").transform(materialize(_, Stats))
-    var remVerts = verticesOf(remEdges).transform(materialize(_, Stats))
-    var remaining = remVerts.count()
+    val remEdges0 = edges.select("src", "dst").transform(materialize(_, Stats))
+    val remVerts0 = verticesOf(remEdges0).transform(materialize(_, Stats))
     // per-round assigned sets stay their OWN checkpoints and the result
     // is their lazy union (taggedBfs r10 discipline): the old
     // result∪assigned re-checkpoint wrote the growing result ball every
     // round — O(rounds·|V|) churn that buys nothing, since the rounds'
     // sets are disjoint by construction.
     var assignedRounds = Vector.empty[DataFrame]
-    var round = 0
-    while (remaining > 0 && round < 64) {
+    // state: (remaining vertices, remaining edges); the tally is the
+    // remaining vertex count
+    val ((remVerts, remEdges), _) = Fixpoint.run((remVerts0, remEdges0),
+        Fixpoint.inStep[(DataFrame, DataFrame)], 64,
+        start = Some(Fixpoint.counted(remVerts0.count())),
+        continue = Fixpoint.whileCounting) { case ((remVerts, remEdges), _, _) => owned { r =>
       // (1) forward max-id color propagation to fixpoint, with pointer
       // jumping: color(v) = max id that reaches v. If w = color(v)
       // (w reaches v) and x = color(w) (x reaches w) then x reaches v,
@@ -1972,7 +1907,7 @@ object Algos {
           remVerts.select(col("id"), col("id").as("f_old"), col("id").as("lbl"))
             .transform(materialize(_, Stats)),
           Fixpoint.materializing(Stats, col("lbl") > col("f_old")), opts.maxSupersteps,
-          continue = _.tally.count > 0) { (f, _, _) =>
+          continue = Fixpoint.whileCounting) { (f, _, _) =>
         val m1 = remEdges
           .join(f.select(col("id").as("src"), col("lbl").as("ls")), Seq("src"))
           .groupBy(col("dst").as("id")).agg(max(col("ls")).as("m1"))
@@ -1982,8 +1917,11 @@ object Algos {
           .select(col("id"), col("lbl").as("f_old"),
             greatest(col("lbl"), col("m1"), col("gf")).as("lbl"))
       }
-      val colors = f.select(col("id"), col("lbl").as("color"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      // f, its persisted copy colors, colored and swept are this round's
+      // temporaries
+      r(f)
+      val colors = r(f.select(col("id"), col("lbl").as("color"))
+        .persist(StorageLevel.MEMORY_AND_DISK))
       // (2) backward sweep within same-color subgraph, seeded at roots.
       // Within one color class every vertex carries the same color c and
       // the unique root is vertex c itself, so the swept label IS the
@@ -1999,45 +1937,30 @@ object Algos {
       // saved edge-side exchanges never materialized (1.48× at the 10×
       // decade either way; bowtie's reversed frame is the case where
       // the trade DOES pay — its seed is the giant core every time).
-      val colored = remEdges
+      val colored = r(remEdges
         .join(colors.select(col("id").as("src"), col("color").as("c_src")), Seq("src"))
         .join(colors.select(col("id").as("dst"), col("color").as("c_dst")), Seq("dst"))
         .filter(col("c_src") === col("c_dst"))
         // reversed: membership flows from dst (closer to root) to src
         .select(col("dst").as("src"), col("src").as("dst"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .persist(StorageLevel.MEMORY_AND_DISK))
       val roots = colors.filter(col("id") === col("color")).select(col("id"))
-      val swept = reachable(roots, colored, opts.maxSupersteps)
+      val swept = r(reachable(roots, colored, opts.maxSupersteps))
       val assigned = swept
         .join(colors, Seq("id"))
         .select(col("id"), col("color").as("comp"))
         .transform(materialize(_, Stats))
-      freeCkpt(swept)
-      colored.unpersist()
       assignedRounds :+= assigned
       // remainder-count fused into the remainder checkpoint job
-      val (newVerts, Tally(nRemaining, _, _)) = materialize(
+      val (newVerts, remaining) = materialize(
           remVerts.join(assigned.select("id"), Seq("id"), "left_anti"), Stats, lit(true))
       val newEdges = remEdges
         .join(newVerts.select(col("id").as("src")), Seq("src"), "left_semi")
         .join(newVerts.select(col("id").as("dst")), Seq("dst"), "left_semi")
         .select("src", "dst")
         .transform(materialize(_, Stats))
-      remaining = nRemaining
-      // new remainder frames are materialized — the superseded round's
-      // remainder checkpoints are dead now; `assigned` stays live as
-      // part of the result union until the caller materializes it
-      freeCkpt(remVerts); freeCkpt(remEdges)
-      colors.unpersist()
-      // the color fixpoint's final checkpoint backs `colors`; once the
-      // persisted copy is dropped nothing reads it again — without this
-      // each outer round stranded one vertex-frame of blocks (r15 leak
-      // fix; the inner loop only frees SUPERSEDED f's)
-      freeCkpt(f)
-      remVerts = newVerts
-      remEdges = newEdges
-      round += 1
-    }
+      ((newVerts, newEdges), remaining)
+    }}
     o(remVerts); o(remEdges)
     (Seq.empty[(Long, Long)].toDF("id", "comp") +: assignedRounds)
       .reduce(_ union _)
@@ -2107,26 +2030,27 @@ object Algos {
   def leafPeelCounts(edges: DataFrame, rounds: Int): DataFrame = owned { o =>
     val s = edges.sparkSession
     import s.implicits._
-    var e = edges.select(col("src"), col("dst")).localCheckpoint()
-    var verts = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct().localCheckpoint()
+    val e0 = edges.select(col("src"), col("dst")).localCheckpoint()
+    val verts0 = e0.select(col("src").as("id"))
+      .union(e0.select(col("dst").as("id"))).distinct().localCheckpoint()
     val counts = Seq.newBuilder[(Long, Long)]
-    (1 to rounds).foreach { r =>
+    // state: (edges, vertices); round r is peel round r
+    val ((e, verts), _) = Fixpoint.run((e0, verts0), Fixpoint.inStep[(DataFrame, DataFrame)],
+        rounds + 1, firstRound = 1) { case ((e, verts), r, _) => owned { rs =>
       val deg = e.groupBy(col("src").as("id")).agg(count(lit(1)).as("d"))
       // the peel size is RESULT data (not loop control — the round count
       // is fixed), so count the materialized blocks exactly rather than
       // ride an at-least-once accumulator that task retries can inflate
-      val peeled = materialize(verts.join(deg, Seq("id"), "left")
+      val peeled = rs(materialize(verts.join(deg, Seq("id"), "left")
           .filter(coalesce(col("d"), lit(0L)) <= 1)
-          .select(col("id")), Stats)
+          .select(col("id")), Stats))
       counts += ((r.toLong, peeled.count()))
       val pv = verts.join(peeled, Seq("id"), "left_anti").localCheckpoint()
       val pe = e.join(peeled.select(col("id").as("src")), Seq("src"), "left_anti")
         .join(peeled.select(col("id").as("dst")), Seq("dst"), "left_anti")
         .select(col("src"), col("dst")).localCheckpoint()
-      freeCkpt(e); freeCkpt(verts); freeCkpt(peeled)
-      e = pe; verts = pv
-    }
+      ((pe, pv), Fixpoint.Unmeasured)
+    }}
     counts += ((0L, o(verts).count()))
     o(e)
     counts.result().toDF("round", "n_vertices")
@@ -2200,38 +2124,7 @@ object Algos {
     // touch only (edge ⋈ score) — same per-round shuffle budget as hits
     val eo = o(materialize(e0.join(odeg, Seq("src")), AdaptiveHash("src")))
     val ei = o(materialize(e0.join(ideg, Seq("dst")), AdaptiveHash("dst")))
-    val v = o(materialize(verticesOf(e0), AdaptiveHash("id")))
-    var h = materialize(v.select(col("id"), lit(1.0).as("h")), AdaptiveHash("id"))
-    var a: DataFrame = null
-    var i = 0
-    while (i < iterations) {
-      val araw = v.join(
-          eo.join(h.select(col("id").as("src"), col("h")), Seq("src"))
-            .groupBy(col("dst").as("id")).agg(sum(col("h") / col("od")).as("x")),
-          Seq("id"), "left")
-        .select(col("id"), coalesce(col("x"), lit(0.0)).as("a"))
-      // (r15: lazy-aN fusion tried and REVERTED here too — jobs 97 → 126;
-      // see [[hits]] for the mechanism)
-      val aN = materialize(
-        araw.crossJoin(broadcast(araw.agg(sum(col("a")).as("s"))))
-          .select(col("id"), (col("a") / col("s")).as("a")), AdaptiveHash("id"))
-      val hraw = v.join(
-          ei.join(aN.select(col("id").as("dst"), col("a")), Seq("dst"))
-            .groupBy(col("src").as("id")).agg(sum(col("a") / col("idg")).as("x")),
-          Seq("id"), "left")
-        .select(col("id"), coalesce(col("x"), lit(0.0)).as("h"))
-      val hN = materialize(
-        hraw.crossJoin(broadcast(hraw.agg(sum(col("h")).as("s"))))
-          .select(col("id"), (col("h") / col("s")).as("h")), AdaptiveHash("id"))
-      freeCkpt(h)
-      if (a != null) freeCkpt(a)
-      h = hN
-      a = aN
-      i += 1
-    }
-    o(a).join(o(h), Seq("id"))
-      .select(col("id"), col("a").as("auth"), col("h").as("hub"))
-      .orderBy(col("id"))
-      .localCheckpoint()
+    linkAnalysis(eo, ei, o(materialize(verticesOf(e0), AdaptiveHash("id"))), iterations,
+      col("h") / col("od"), col("a") / col("idg"))
   }
 }

@@ -124,7 +124,9 @@ object Pregel {
     Fixpoint.run(init, materialize(opts, Some(col("active"))),
         opts.maxSupersteps, start = Some(Fixpoint.counted(active)),
         firstRound = resumed.map(_._1 + 1).getOrElse(0),
-        continue = r => { afterSuperstep(r, opts); r.tally.count > 0 }) { (verts, step, _) =>
+        continue = (r: Fixpoint.Round[DataFrame]) => {
+          afterSuperstep(r, opts); r.tally.count > 0
+        }) { (verts, step, _) =>
       opts.onBeforeSuperstep(verts, step)
       // the barrier is an eager checkpoint: it materializes AND truncates
       // the logical plan; without it the plan tree grows exponentially
@@ -180,7 +182,9 @@ object Pregel {
     init.count()
     Fixpoint.run(init, materialize(opts, None), iterations,
         firstRound = resumed.map(_._1 + 1).getOrElse(0),
-        continue = r => { afterSuperstep(r, opts); master(r.state, r.index) }) { (verts, i, _) =>
+        continue = (r: Fixpoint.Round[DataFrame]) => {
+          afterSuperstep(r, opts); master(r.state, r.index)
+        }) { (verts, i, _) =>
       opts.onBeforeSuperstep(verts, i)
       step(verts, i)
     }._1
@@ -202,7 +206,7 @@ object Pregel {
     * superstep frame: the configured aggregators are evaluated and their
     * scalars handed to the writer (one extra aggregation job per
     * superstep, only when aggregators are set), then `onSuperstep` runs. */
-  private def afterSuperstep(r: Fixpoint.Round, opts: PregelOptions): Unit = {
+  private def afterSuperstep(r: Fixpoint.Round[DataFrame], opts: PregelOptions): Unit = {
     opts.aggregatorWriter.foreach { w =>
       if (opts.aggregators.nonEmpty) {
         val exprs = opts.aggregators.toSeq.map { case (nm, c) => c.as(nm) }

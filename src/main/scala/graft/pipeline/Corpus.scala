@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.CheckpointBridge.owned
 
+import graft.graph.Fixpoint
 import graft.text.TextFunctions._
 
 /** Corpus-level training-data-pipeline operators: repetition filtering,
@@ -312,15 +313,13 @@ object Corpus {
                textCol: String = "text"): DataFrame = owned { o =>
     val spark = docs.sparkSession
     import spark.implicits._
-    var words = docs.select(explode(tokens(col(textCol))).as("w"))
+    val words0 = docs.select(explode(tokens(col(textCol))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
       .select(col("cnt"), split(col("w"), "").as("sym"))
       .localCheckpoint()
-    val merges = Seq.newBuilder[BpeMerge]
-    var r = 0
-    var live = true
-    while (r < numMerges && live) {
-      val best = words.filter(size(col("sym")) >= 2)
+    // (lhs, rhs, count) of the most frequent adjacent pair, if any
+    def best(words: DataFrame): Option[(String, String, Long)] =
+      words.filter(size(col("sym")) >= 2)
         .select(col("cnt"),
           explode(expr("transform(sequence(0, size(sym) - 2), " +
             "i -> struct(sym[i] AS l, sym[i + 1] AS r))")).as("p"))
@@ -328,18 +327,21 @@ object Corpus {
         .agg(sum(col("cnt")).as("c"))
         .orderBy(col("c").desc, col("l"), col("r"))
         .limit(1).collect()
-      if (best.isEmpty) live = false
-      else {
-        val (a, b, c) = (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
+        .headOption.map(b => (b.getString(0), b.getString(1), b.getLong(2)))
+    val merges = Seq.newBuilder[BpeMerge]
+    // the next round's pair, looked up after each rewrite while merges
+    // remain to be made
+    var pair = if (numMerges > 0) best(words0) else None
+    val (words, _) = Fixpoint.run(words0, Fixpoint.checkpointing, numMerges,
+        start = Some(Fixpoint.counted(pair.size)),
+        continue = (r: Fixpoint.Round[DataFrame]) =>
+          r.index + 1 < numMerges && { pair = best(r.state); pair.nonEmpty }) {
+      (words, r, _) =>
+        val (a, b, c) = pair.get
         merges += BpeMerge(r, a, b, c)
-        val prev = words
-        words = words.as[(Long, Seq[String])]
+        words.as[(Long, Seq[String])]
           .map { case (cnt, sym) => (cnt, mergePair(sym, a, b)) }
           .toDF("cnt", "sym")
-          .localCheckpoint()
-        org.apache.spark.sql.graft.CheckpointBridge.free(prev)
-        r += 1
-      }
     }
     o(words)
     merges.result().toDF()

@@ -114,8 +114,8 @@ object CheckpointBridge {
     * leaves that were created inside the block. So a frame that also
     * reads the caller's checkpoints (a callee's lazy result over the
     * caller's input) can be taken over without touching them. On return,
-    * the RDDs that the returned frames (a frame, or frames inside a tuple)
-    * still read pass to the caller instead.
+    * the RDDs that the returned frames ([[framesIn]] the result) still
+    * read pass to the caller instead.
     *
     * {{{
     * def f(edges: DataFrame): DataFrame = owned { o =>
@@ -128,17 +128,28 @@ object CheckpointBridge {
   def owned[T](body: Owner => T): T = {
     // RDD ids only grow: every RDD this block creates has a larger id
     val o = new Owner(org.apache.spark.SparkContext.getActive.fold(-1)(_.newRddId()))
-    def exit(returned: Seq[Dataset[_]]): Unit = {
-      val keep = returned.flatMap(rddsOf).map(_.id).toSet
-      o.frames.foreach(release(_, r => r.id > o.floor && !keep(r.id)))
+    val out = try body(o) catch {
+      case e: Throwable => releaseBut(o.frames, Nil, _.id > o.floor); throw e
     }
-    val out = try body(o) catch { case e: Throwable => exit(Nil); throw e }
-    exit(framesIn(out))
+    releaseBut(o.frames, out, _.id > o.floor)
     out
   }
 
-  private def framesIn(x: Any): Seq[Dataset[_]] = x match {
+  /** Release `frames` like [[free]], sparing the leaf RDDs that `kept`
+    * still reads and those `mine` rejects: the rule by which an [[owned]]
+    * block lets go of what it took over, and a `graft.graph.Fixpoint`
+    * round of the state it superseded. */
+  def releaseBut(frames: Seq[Dataset[_]], kept: Any,
+                 mine: org.apache.spark.rdd.RDD[_] => Boolean = _ => true): Unit = {
+    val keep = framesIn(kept).flatMap(rddsOf).map(_.id).toSet
+    frames.foreach(release(_, r => mine(r) && !keep(r.id)))
+  }
+
+  /** The frames in `x`: a frame, or the frames inside a tuple, an
+    * `Option` or a `Seq`, nested to any depth. */
+  def framesIn(x: Any): Seq[Dataset[_]] = x match {
     case d: Dataset[_] => Seq(d)
+    case i: Iterable[_] => i.iterator.flatMap(framesIn).toSeq
     case p: Product => p.productIterator.flatMap(framesIn).toSeq
     case _ => Nil
   }

@@ -216,6 +216,23 @@ class CheckpointBridgeSpec extends SparkSpec {
       "bowtie via reachable" -> (() => Seq(Algos.bowtie(waitFor))),
       "mst" -> (() => Seq(Algos.mst(pairs))),
       noMerge -> (() => Seq(Algos.mst(Seq((1L, 1L, 1L)).toDF("u", "v", "w")))),
+      "hits" -> (() => Seq(Algos.hits(waitFor, 3))),
+      "salsa" -> (() => Seq(Algos.salsa(waitFor, 3))),
+      "maximalMatching" -> (() => Seq(Algos.maximalMatching(e))),
+      "maxWeightMatching" -> (() =>
+        Seq(Algos.maxWeightMatching(e.withColumn("w", col("src") * col("dst"))))),
+      "temporalReach" -> (() =>
+        Seq(Algos.temporalReach(waitFor.withColumn("t", col("src")), 1L, 3))),
+      "leafPeelCounts" -> (() => Seq(Algos.leafPeelCounts(e, 3))),
+      "betweenness" -> (() => Seq(Algos.betweenness(e, Seq(1L, 4L)))),
+      "bpeTrain" -> (() => Seq(graft.pipeline.Corpus.bpeTrain(
+        Seq("abab abc", "aab bab", "abc").toDF("text"), 3))),
+      // a throwing row returns no frame
+      "neighborhoodFunction over its size gate" -> (() => {
+        intercept[IllegalStateException](
+          Algos.neighborhoodFunction(e, maxH = 4, sampleMod = 1L, maxPairs = 5L))
+        Nil
+      }),
       "q_markov_attribution" -> (() =>
         Seq(graft.Queries.all("q_markov_attribution")(spark, "/root/testdata/sf0.001"))),
       "jaccardJoinStaged" -> (() => {
@@ -257,7 +274,7 @@ class CheckpointBridgeSpec extends SparkSpec {
       cases.foreach { case (name, run) =>
         val before = persisted
         val frames = run()
-        assert((frames.last.count() > 0L) == (name != noMerge), name)
+        frames.lastOption.foreach(f => assert((f.count() > 0L) == (name != noMerge), name))
         check(name, before, frames)
       }
       queries.foreach { q =>
