@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.pipeline.Corpus
 import graft.text.TextFunctions
-import graft.text.TextFunctions.{alphaCount, langId, qualityScore, tokenCount, wordHits}
+import graft.text.TextFunctions.{alphaCount, langId, qualityScore, tokenCount, tokensSql, wordHits}
 
 /** Corpus-pipeline query corpus (round-4 surface): repetition filtering,
   * TF-IDF keywords, vocabulary, deterministic stratified sampling, PII
@@ -15,8 +15,6 @@ import graft.text.TextFunctions.{alphaCount, langId, qualityScore, tokenCount, w
   * BIGINT integer division `//`, no floats anywhere).
   */
 object CorpusQueries {
-
-  private def tokSql(c: String = "text") = s"regexp_split_to_array(trim($c), '\\s+')"
 
   /** DuckDB twin of Corpus.md5Uniform limited to `h`'s first 6 hex
     * digits: digit-by-digit base-16 accumulation (strpos on the hex
@@ -32,7 +30,7 @@ object CorpusQueries {
     Corpus.repetitionStats(Tables(s, dir).documents).orderBy(col("doc_id"))
 
   private val qTextRepetitionSql =
-    s"""WITH toks AS MATERIALIZED (SELECT doc_id, ${tokSql()} AS tok FROM documents),
+    s"""WITH toks AS MATERIALIZED (SELECT doc_id, $tokensSql AS tok FROM documents),
        |g AS MATERIALIZED (SELECT doc_id, concat_ws(' ', tok[CAST(i AS INT)], tok[CAST(i + 1 AS INT)]) AS gram
        |FROM toks, unnest(range(1, greatest(len(tok) - 1, 1) + 1)) AS t(i)),
        |c AS MATERIALIZED (SELECT doc_id, gram, COUNT(*) AS cnt FROM g GROUP BY 1, 2)
@@ -50,7 +48,7 @@ object CorpusQueries {
       .orderBy(col("doc_id"), col("score_e6").desc, col("token"))
 
   private val qTfidfSql =
-    s"""WITH toks AS MATERIALIZED (SELECT doc_id, unnest(${tokSql()}) AS token FROM documents),
+    s"""WITH toks AS MATERIALIZED (SELECT doc_id, unnest($tokensSql) AS token FROM documents),
        |tf AS MATERIALIZED (SELECT doc_id, token, COUNT(*) AS tf FROM toks GROUP BY 1, 2),
        |df AS MATERIALIZED (SELECT token, COUNT(*) AS df FROM tf GROUP BY 1),
        |n AS (SELECT COUNT(*) AS n_docs FROM documents)
@@ -68,7 +66,7 @@ object CorpusQueries {
     Corpus.vocabulary(Tables(s, dir).documents, topN = 100)
 
   private val qVocabSql =
-    s"""WITH toks AS MATERIALIZED (SELECT doc_id, unnest(${tokSql()}) AS token FROM documents)
+    s"""WITH toks AS MATERIALIZED (SELECT doc_id, unnest($tokensSql) AS token FROM documents)
        |SELECT token, COUNT(*) AS cnt, COUNT(DISTINCT doc_id) AS n_docs
        |FROM toks GROUP BY token ORDER BY cnt DESC, token LIMIT 100""".stripMargin.replace('\n', ' ')
 
@@ -164,7 +162,7 @@ object CorpusQueries {
 
   private val qPackChunksSql =
     s"""WITH b AS (SELECT doc_id, source,
-       |CAST(len(${tokSql()}) AS BIGINT) AS n_tokens FROM documents),
+       |CAST(len($tokensSql) AS BIGINT) AS n_tokens FROM documents),
        |r AS (SELECT doc_id, source, n_tokens,
        |SUM(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
        |ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_tokens AS strt FROM b)
@@ -179,7 +177,7 @@ object CorpusQueries {
 
   private val qMixStatsSql =
     s"""WITH b AS MATERIALIZED (SELECT source, COUNT(*) AS n_docs,
-       |CAST(SUM(len(${tokSql()})) AS BIGINT) AS n_tokens
+       |CAST(SUM(len($tokensSql)) AS BIGINT) AS n_tokens
        |FROM documents GROUP BY source)
        |SELECT source, n_docs, n_tokens,
        |CAST((n_tokens * 1000000) // (SELECT CAST(SUM(n_tokens) AS BIGINT) FROM b) AS BIGINT) AS share_e6
@@ -217,11 +215,11 @@ object CorpusQueries {
     val sw = qfStop.map(w => s"'$w'").mkString(", ")
     val profs = TextFunctions.langProfiles.map { case (name, ws) =>
       val l = ws.map(w => s"'$w'").mkString(", ")
-      s"CAST(len(list_filter(${tokSql()}, t -> t IN ($l))) AS BIGINT) AS s_$name"
+      s"CAST(len(list_filter($tokensSql, t -> t IN ($l))) AS BIGINT) AS s_$name"
     }.mkString(", ")
     s"""WITH b AS MATERIALIZED (SELECT doc_id, source,
-       |CAST(len(list_filter(${tokSql()}, t -> t IN ($sw))) AS BIGINT) AS n_stop,
-       |CAST(len(${tokSql()}) AS BIGINT) AS n_tokens,
+       |CAST(len(list_filter($tokensSql, t -> t IN ($sw))) AS BIGINT) AS n_stop,
+       |CAST(len($tokensSql) AS BIGINT) AS n_tokens,
        |CAST(length(regexp_replace(text, '[^a-z]', '', 'g')) AS BIGINT) AS n_alpha,
        |CAST(length(text) AS BIGINT) AS n_len, $profs FROM documents),
        |sig AS MATERIALIZED (SELECT doc_id, source, n_tokens,
@@ -229,7 +227,7 @@ object CorpusQueries {
        |+ 0.2 * (n_alpha / n_len)) * 1000000) AS BIGINT) AS score_e6,
        |CASE WHEN s_en >= s_de AND s_en >= s_fr THEN 'en'
        |WHEN s_de >= s_fr THEN 'de' ELSE 'fr' END AS pred_lang FROM b),
-       |toks AS MATERIALIZED (SELECT doc_id, ${tokSql()} AS tok FROM documents),
+       |toks AS MATERIALIZED (SELECT doc_id, $tokensSql AS tok FROM documents),
        |g AS MATERIALIZED (SELECT doc_id, concat_ws(' ', tok[CAST(i AS INT)], tok[CAST(i + 1 AS INT)]) AS gram
        |FROM toks, unnest(range(1, greatest(len(tok) - 1, 1) + 1)) AS t(i)),
        |c AS MATERIALIZED (SELECT doc_id, gram, COUNT(*) AS cnt FROM g GROUP BY 1, 2),
@@ -255,8 +253,8 @@ object CorpusQueries {
 
   private val qContaminationSql =
     s"""WITH g0 AS MATERIALIZED (SELECT doc_id, unnest(list_distinct(
-       |list_transform(range(1, greatest(len(${tokSql()}) - 2, 1) + 1),
-       |i -> concat_ws(' ', ${tokSql()}[i], ${tokSql()}[i+1], ${tokSql()}[i+2])))) AS gram
+       |list_transform(range(1, greatest(len($tokensSql) - 2, 1) + 1),
+       |i -> concat_ws(' ', $tokensSql[i], $tokensSql[i+1], $tokensSql[i+2])))) AS gram
        |FROM documents),
        |g AS MATERIALIZED (SELECT doc_id,
        |CAST(('0x' || substring(md5(gram), 1, 15)) AS BIGINT) AS gk FROM g0),
@@ -311,7 +309,7 @@ object CorpusQueries {
     s"""WITH w0 AS MATERIALIZED (SELECT cnt,
        |list_transform(range(1, length(w) + 1), i -> w[CAST(i AS INT)]) AS sym FROM (
        |SELECT w, CAST(COUNT(*) AS BIGINT) AS cnt FROM (
-       |SELECT unnest(${tokSql()}) AS w FROM documents) q GROUP BY w) g),
+       |SELECT unnest($tokensSql) AS w FROM documents) q GROUP BY w) g),
        |$rounds
        |SELECT CAST(t AS INT) AS rank, l AS lhs, r AS rhs,
        |CAST(c AS BIGINT) AS pair_cnt FROM ($union) ORDER BY rank""".stripMargin.replace('\n', ' ')
@@ -359,10 +357,10 @@ object CorpusQueries {
     s"""w0 AS MATERIALIZED (SELECT w, cnt,
        |list_transform(range(1, length(w) + 1), i -> w[CAST(i AS INT)]) AS sym FROM (
        |SELECT w, CAST(COUNT(*) AS BIGINT) AS cnt FROM (
-       |SELECT unnest(${tokSql()}) AS w FROM documents) q GROUP BY w) g),
+       |SELECT unnest($tokensSql) AS w FROM documents) q GROUP BY w) g),
        |$rounds,
        |dt AS MATERIALIZED (SELECT doc_id, i, ts[CAST(i AS INT)] AS w FROM (
-       |SELECT doc_id, ${tokSql()} AS ts FROM documents) qd,
+       |SELECT doc_id, $tokensSql AS ts FROM documents) qd,
        |unnest(range(1, len(ts) + 1)) AS ut(i)),
        |agg AS (SELECT dt.doc_id, flatten(list(wv.sym ORDER BY dt.i)) AS pieces
        |FROM dt JOIN w$n wv ON wv.w = dt.w GROUP BY dt.doc_id)""".stripMargin.replace('\n', ' ')
@@ -416,7 +414,7 @@ object CorpusQueries {
     Corpus.surprisalScore(Tables(s, dir).documents).orderBy(col("doc_id"))
 
   private val qTextSurprisalSql =
-    s"""WITH tk AS MATERIALIZED (SELECT doc_id, unnest(${tokSql()}) AS tok FROM documents),
+    s"""WITH tk AS MATERIALIZED (SELECT doc_id, unnest($tokensSql) AS tok FROM documents),
        |cnt AS MATERIALIZED (SELECT tok, COUNT(*) AS c FROM tk GROUP BY tok),
        |tot AS (SELECT COUNT(*) AS t FROM tk),
        |sc AS (SELECT tk.doc_id,
@@ -434,7 +432,7 @@ object CorpusQueries {
   private val qTextBigramSurprisalSql =
     s"""WITH bt AS MATERIALIZED (SELECT doc_id, t[CAST(i AS INT)] AS a,
        |t[CAST(i + 1 AS INT)] AS b FROM (
-       |SELECT doc_id, ${tokSql()} AS t FROM documents) q,
+       |SELECT doc_id, $tokensSql AS t FROM documents) q,
        |unnest(range(1, len(t))) AS ut(i) WHERE len(t) >= 2),
        |cb AS MATERIALIZED (SELECT a, b, COUNT(*) AS cb FROM bt GROUP BY a, b),
        |cp AS MATERIALIZED (SELECT a, SUM(cb) AS cp FROM cb GROUP BY a),
@@ -471,7 +469,7 @@ object CorpusQueries {
   }
 
   private val qTopkCmsSql = graft.functions.Sketches.cmsEstimatesSql(
-    s"(SELECT unnest(${tokSql()}) AS token FROM documents) z", "token",
+    s"(SELECT unnest($tokensSql) AS token FROM documents) z", "token",
     topN = 10, d = 3, w = 256)
 
   // --- hashed linear classifier / inverted index / temperature mix -----
@@ -483,7 +481,7 @@ object CorpusQueries {
     Corpus.hashedLinearScore(Tables(s, dir).documents).orderBy(col("doc_id"))
 
   private val qQualityClassifierSql =
-    s"""WITH t AS (SELECT doc_id, unnest(${tokSql()}) AS tok FROM documents),
+    s"""WITH t AS (SELECT doc_id, unnest($tokensSql) AS tok FROM documents),
        |w AS (SELECT doc_id, (${hex6Sql("md5(tok)")} % 1024) % 17 - 8 AS w FROM t)
        |SELECT doc_id, CAST(SUM(w) AS BIGINT) AS score, COUNT(*) AS n_tokens,
        |CASE WHEN SUM(w) >= 0 THEN 1 ELSE 0 END AS positive
@@ -495,7 +493,7 @@ object CorpusQueries {
     Corpus.invertedIndex(Tables(s, dir).documents, topN = 25)
 
   private val qIndexPostingsSql =
-    s"""WITH t AS (SELECT DISTINCT doc_id, unnest(${tokSql()}) AS token FROM documents),
+    s"""WITH t AS (SELECT DISTINCT doc_id, unnest($tokensSql) AS token FROM documents),
        |df AS (SELECT token, COUNT(*) AS n_docs FROM t GROUP BY token),
        |capped AS (SELECT token, doc_id FROM (
        |SELECT token, doc_id, ROW_NUMBER() OVER (PARTITION BY token ORDER BY doc_id) AS rn
@@ -514,7 +512,7 @@ object CorpusQueries {
 
   private val qMixTemperatureSql =
     s"""WITH b AS MATERIALIZED (SELECT source,
-       |CAST(SUM(len(${tokSql()})) AS BIGINT) AS n_tokens
+       |CAST(SUM(len($tokensSql)) AS BIGINT) AS n_tokens
        |FROM documents GROUP BY source),
        |w AS MATERIALIZED (SELECT source, n_tokens,
        |CAST(FLOOR(sqrt(CAST(n_tokens AS DOUBLE)) * 1000) AS BIGINT) AS w_e3 FROM b)
@@ -528,7 +526,7 @@ object CorpusQueries {
     Corpus.collocations(Tables(s, dir).documents, minCount = 5L, topK = 100)
 
   private val qCollocationsSql =
-    s"""WITH toks AS MATERIALIZED (SELECT ${tokSql()} AS tok FROM documents),
+    s"""WITH toks AS MATERIALIZED (SELECT $tokensSql AS tok FROM documents),
        |uni AS MATERIALIZED (SELECT u.t AS tok, COUNT(*) AS c FROM toks, unnest(tok) AS u(t) GROUP BY 1),
        |g AS MATERIALIZED (SELECT concat_ws(' ', tok[CAST(i AS INT)], tok[CAST(i + 1 AS INT)]) AS gram
        |FROM toks, unnest(range(1, greatest(len(tok) - 1, 1) + 1)) AS t(i)),
@@ -550,7 +548,7 @@ object CorpusQueries {
       .orderBy(col("doc_id"), col("bucket"))
 
   private val qFeatureHashSql =
-    s"""WITH d AS (SELECT doc_id, ${tokSql()} AS tok FROM documents WHERE doc_id % 10 = 0),
+    s"""WITH d AS (SELECT doc_id, $tokensSql AS tok FROM documents WHERE doc_id % 10 = 0),
        |t AS (SELECT doc_id, u.t AS tok FROM d, unnest(tok) AS u(t)),
        |b AS (SELECT doc_id, ${hex6Sql("md5(tok)")} % 256 AS bucket FROM t)
        |SELECT doc_id, bucket, COUNT(*) AS cnt FROM b GROUP BY 1, 2
@@ -625,8 +623,8 @@ object CorpusQueries {
 
   private val qPipelineE2eSql =
     s"""WITH t AS MATERIALIZED (SELECT doc_id, source, text,
-       |CAST(len(${tokSql()}) AS BIGINT) AS n_tok,
-       |CAST(len(list_distinct(${tokSql()})) AS BIGINT) AS n_uniq
+       |CAST(len($tokensSql) AS BIGINT) AS n_tok,
+       |CAST(len(list_distinct($tokensSql)) AS BIGINT) AS n_uniq
        |FROM documents),
        |q AS (SELECT * FROM t WHERE n_tok >= 20 AND n_uniq * 10 >= n_tok * 3),
        |dd AS (SELECT * FROM q QUALIFY
@@ -658,7 +656,7 @@ object CorpusQueries {
   }
 
   private val qTextZipfSql =
-    s"""WITH toks AS MATERIALIZED (SELECT unnest(${tokSql()}) AS token FROM documents),
+    s"""WITH toks AS MATERIALIZED (SELECT unnest($tokensSql) AS token FROM documents),
        |c AS (SELECT token, COUNT(*) AS cnt FROM toks GROUP BY 1),
        |r AS (SELECT token, cnt,
        |CAST(ROW_NUMBER() OVER (ORDER BY cnt DESC, token) AS BIGINT) AS rank
@@ -687,7 +685,7 @@ object CorpusQueries {
 
   private val qTextHapaxSql =
     s"""WITH tf AS MATERIALIZED (SELECT source, u.t AS tok, COUNT(*) AS c
-       |FROM (SELECT source, ${tokSql()} AS tk FROM documents) d, unnest(tk) AS u(t)
+       |FROM (SELECT source, $tokensSql AS tk FROM documents) d, unnest(tk) AS u(t)
        |GROUP BY 1, 2),
        |a AS (SELECT source, CAST(SUM(c) AS BIGINT) AS n_tokens, COUNT(*) AS n_types,
        |COUNT(*) FILTER (WHERE c = 1) AS n_hapax FROM tf GROUP BY 1)
@@ -705,7 +703,7 @@ object CorpusQueries {
     Corpus.dupSpans(Tables(s, dir).documents, n = 10).orderBy(col("doc_id"))
 
   private val qDedupSpansSql =
-    s"""WITH t AS MATERIALIZED (SELECT doc_id, ${tokSql()} AS tok FROM documents),
+    s"""WITH t AS MATERIALIZED (SELECT doc_id, $tokensSql AS tok FROM documents),
        |g0 AS MATERIALIZED (SELECT doc_id, concat_ws(' ',
        |${(0 until 10).map(o => s"tok[CAST(i + $o AS INT)]").mkString(", ")}) AS gram
        |FROM t, unnest(range(1, greatest(len(tok) - 9, 1) + 1)) AS u(i)),
@@ -726,7 +724,7 @@ object CorpusQueries {
     Corpus.dupSpanCut(Tables(s, dir).documents, n = 10).orderBy(col("doc_id"))
 
   private val qDedupSpansCutSql =
-    s"""WITH t AS MATERIALIZED (SELECT doc_id, ${tokSql()} AS tok FROM documents),
+    s"""WITH t AS MATERIALIZED (SELECT doc_id, $tokensSql AS tok FROM documents),
        |g0 AS MATERIALIZED (SELECT doc_id, CAST(i AS BIGINT) AS i, concat_ws(' ',
        |${(0 until 10).map(o => s"tok[CAST(i + $o AS INT)]").mkString(", ")}) AS gram
        |FROM t, unnest(range(1, greatest(len(tok) - 9, 1) + 1)) AS u(i)),
@@ -751,7 +749,7 @@ object CorpusQueries {
     Corpus.gopherRules(Tables(s, dir).documents).orderBy(col("doc_id"))
 
   private val qQualityGopherSql =
-    s"""WITH t AS (SELECT doc_id, ${tokSql()} AS tok FROM documents),
+    s"""WITH t AS (SELECT doc_id, $tokensSql AS tok FROM documents),
        |b AS (SELECT doc_id, CAST(len(tok) AS BIGINT) AS n_words,
        |CAST(list_sum(list_transform(tok, x -> length(x))) AS BIGINT) AS sum_len,
        |CAST(len(list_intersect(list_distinct(tok),
@@ -773,7 +771,7 @@ object CorpusQueries {
     Corpus.entropyPanel(Tables(s, dir).documents).orderBy(col("source"))
 
   private val qTextEntropySql =
-    s"""WITH tk AS MATERIALIZED (SELECT source, unnest(${tokSql()}) AS tok FROM documents),
+    s"""WITH tk AS MATERIALIZED (SELECT source, unnest($tokensSql) AS tok FROM documents),
        |tf AS MATERIALIZED (SELECT source, tok, COUNT(*) AS c FROM tk GROUP BY 1, 2),
        |tot AS (SELECT source, CAST(SUM(c) AS BIGINT) AS t FROM tf GROUP BY 1),
        |b AS (SELECT tf.source, tf.c, tot.t,
@@ -800,7 +798,7 @@ object CorpusQueries {
   }
 
   private val qTextBurstinessSql =
-    s"""WITH tk AS MATERIALIZED (SELECT doc_id, unnest(${tokSql()}) AS tok FROM documents),
+    s"""WITH tk AS MATERIALIZED (SELECT doc_id, unnest($tokensSql) AS tok FROM documents),
        |tf AS (SELECT tok, COUNT(*) AS cf, COUNT(DISTINCT doc_id) AS df FROM tk GROUP BY 1),
        |n AS (SELECT COUNT(*) AS n_docs FROM documents)
        |SELECT tok, cf, df,
@@ -816,7 +814,7 @@ object CorpusQueries {
   private val qTextRakeSql =
     s"""WITH tk AS MATERIALIZED (SELECT doc_id, CAST(u.i - 1 AS BIGINT) AS p,
        |arr[CAST(u.i AS INT)] AS tok FROM
-       |(SELECT doc_id, ${tokSql()} AS arr FROM documents) d,
+       |(SELECT doc_id, $tokensSql AS arr FROM documents) d,
        |unnest(range(1, len(arr) + 1)) AS u(i)),
        |deg AS (SELECT a.tok, COUNT(*) AS deg FROM tk a JOIN tk b
        |ON a.doc_id = b.doc_id AND a.p <> b.p AND abs(a.p - b.p) <= 2
@@ -839,7 +837,7 @@ object CorpusQueries {
   private val qDsirScoresSql =
     s"""WITH toks AS MATERIALIZED (SELECT doc_id, tgt,
        |${hex6Sql("md5(token)")} % 64 AS b FROM (
-       |SELECT doc_id, lang = 'en' AS tgt, unnest(${tokSql()}) AS token FROM documents) z),
+       |SELECT doc_id, lang = 'en' AS tgt, unnest($tokensSql) AS token FROM documents) z),
        |cnt AS MATERIALIZED (SELECT b, COUNT(*) AS c_all,
        |COUNT(*) FILTER (WHERE tgt) AS c_tgt FROM toks GROUP BY 1),
        |tot AS (SELECT CAST(SUM(c_all) AS BIGINT) AS n_all,

@@ -15,15 +15,13 @@ import org.apache.spark.sql.SparkSession
   * (there the heartbeat IS the liveness signal — see GraftRunner's
   * SPARK_MASTER branch, which does not apply this). */
 object LocalLiveness {
-  /** The 600 s default also delays RPC ask timeouts that inherit
-    * spark.network.timeout, so a genuinely wedged local run takes up
-    * to 10 min to be declared dead (ADVICE r12) — acceptable for the
-    * unattended profile/bench/driver runs this guards, but interactive
-    * dev runs can dial it back via SPARK_GRAFT_NETWORK_TIMEOUT
-    * (any Spark duration string, e.g. "120s"). */
+  /** A fixed 600 s network timeout (60 s heartbeats). It also delays
+    * RPC ask timeouts that inherit spark.network.timeout, so a genuinely
+    * wedged local run takes up to 10 min to be declared dead (ADVICE
+    * r12) — acceptable for the unattended Bench, Verify and Profile runs
+    * this guards. */
   def widen(b: SparkSession.Builder): SparkSession.Builder =
-    b.config("spark.network.timeout",
-        sys.env.getOrElse("SPARK_GRAFT_NETWORK_TIMEOUT", "600s"))
+    b.config("spark.network.timeout", "600s")
       .config("spark.executor.heartbeatInterval", "60s")
 
   /** The one local session builder of the Bench, Verify and Profile

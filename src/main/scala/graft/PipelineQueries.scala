@@ -23,8 +23,6 @@ object PipelineQueries {
   private val shSql =
     "list_distinct(list_transform(range(1, greatest(length(text)-7, 1)+1), i -> substring(text, i, 8)))"
 
-  private def tokSql(c: String = "text") = s"regexp_split_to_array(trim($c), '\\s+')"
-
   // text analysis -------------------------------------------------------
 
   private def qTextStats(s: SparkSession, dir: String): DataFrame = {
@@ -39,8 +37,8 @@ object PipelineQueries {
 
   private val qTextStatsSql =
     s"""SELECT doc_id,
-       |CAST(len(${tokSql()}) AS BIGINT) AS n_tokens,
-       |CAST(len(list_distinct(${tokSql()})) AS BIGINT) AS n_uniq,
+       |CAST(len($tokensSql) AS BIGINT) AS n_tokens,
+       |CAST(len(list_distinct($tokensSql)) AS BIGINT) AS n_uniq,
        |CAST(length(regexp_replace(text, '[^a-z]', '', 'g')) AS BIGINT) AS n_alpha,
        |CAST(length(text) AS BIGINT) AS n_len
        |FROM documents ORDER BY doc_id""".stripMargin.replace('\n', ' ')
@@ -58,7 +56,7 @@ object PipelineQueries {
 
   private val qTextBpeSql =
     s"""SELECT doc_id,
-       |CAST(len(${tokSql()}) AS BIGINT) AS ws_tokens,
+       |CAST(len($tokensSql) AS BIGINT) AS ws_tokens,
        |CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\\s]')) AS BIGINT) AS bpe_tokens,
        |CAST(len(regexp_extract_all(text, '[^A-Za-z0-9\\s]')) AS BIGINT) AS punct_cnt
        |FROM documents ORDER BY doc_id""".stripMargin.replace('\n', ' ')
@@ -78,8 +76,8 @@ object PipelineQueries {
   private val qTextQualitySql = {
     val sw = stopWords.map(w => s"'$w'").mkString(", ")
     s"""WITH b AS (SELECT doc_id,
-       |CAST(len(list_filter(${tokSql()}, t -> t IN ($sw))) AS BIGINT) AS n_stop,
-       |CAST(len(${tokSql()}) AS BIGINT) AS n_tokens,
+       |CAST(len(list_filter($tokensSql, t -> t IN ($sw))) AS BIGINT) AS n_stop,
+       |CAST(len($tokensSql) AS BIGINT) AS n_tokens,
        |CAST(length(regexp_replace(text, '[^a-z]', '', 'g')) AS BIGINT) AS n_alpha,
        |CAST(length(text) AS BIGINT) AS n_len FROM documents)
        |SELECT doc_id, n_stop, n_tokens,
@@ -102,7 +100,7 @@ object PipelineQueries {
   private val qTextLangidSql = {
     val profs = langProfiles.map { case (name, ws) =>
       val l = ws.map(w => s"'$w'").mkString(", ")
-      s"CAST(len(list_filter(${tokSql()}, t -> t IN ($l))) AS BIGINT) AS s_$name"
+      s"CAST(len(list_filter($tokensSql, t -> t IN ($l))) AS BIGINT) AS s_$name"
     }.mkString(", ")
     s"""WITH b AS (SELECT doc_id, $profs FROM documents)
        |SELECT doc_id, s_en, s_de, s_fr,
@@ -136,7 +134,7 @@ object PipelineQueries {
   private val qLangConfusionSql = {
     val profs = langProfiles.map { case (name, ws) =>
       val l = ws.map(w => s"'$w'").mkString(", ")
-      s"CAST(len(list_filter(${tokSql()}, t -> t IN ($l))) AS BIGINT) AS s_$name"
+      s"CAST(len(list_filter($tokensSql, t -> t IN ($l))) AS BIGINT) AS s_$name"
     }.mkString(", ")
     s"""WITH b AS (SELECT doc_id, lang, $profs FROM documents),
        |p AS (SELECT lang,
@@ -382,8 +380,8 @@ object PipelineQueries {
 
   private val qDedupNgramSql =
     s"""WITH tri AS MATERIALIZED (SELECT doc_id, source AS blk,
-       |list_distinct(list_transform(range(1, greatest(len(${tokSql()}) - 2, 1) + 1),
-       |i -> concat_ws(' ', ${tokSql()}[i], ${tokSql()}[i+1], ${tokSql()}[i+2]))) AS tri
+       |list_distinct(list_transform(range(1, greatest(len($tokensSql) - 2, 1) + 1),
+       |i -> concat_ws(' ', $tokensSql[i], $tokensSql[i+1], $tokensSql[i+2]))) AS tri
        |FROM documents),
        |hp AS MATERIALIZED (SELECT doc_id, blk, tri, list_transform(tri, s ->
        |flatten(list_transform(range(0, 4), a ->
@@ -1435,7 +1433,7 @@ object PipelineQueries {
     * trusting its blocking. Shifted-silhouette s' = s+1 keeps every
     * integer division non-negative (truncate vs floor agreement). */
   private def qEmbSilhouette(s: SparkSession, dir: String): DataFrame =
-    Similarity.silhouette(Tables(s, dir).embeddings, "label")
+    Similarity.silhouette(Tables(s, dir).embeddings)
       .orderBy(col("label"))
 
   private val qEmbSilhouetteSql =

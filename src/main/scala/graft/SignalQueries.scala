@@ -1,10 +1,11 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.CheckpointBridge.{AdaptiveHash, materialize, owned}
 
 import graft.graph.Fixpoint
+import graft.sql.Exact.e6
 
 /** Round-6 sixth wave: sequential-recurrence analytics (EWMA folds),
   * experimentation (CUPED variance reduction), video scene-cut
@@ -22,8 +23,6 @@ import graft.graph.Fixpoint
 object SignalQueries {
 
   private val DayUs = 86400000000L
-
-  private def e6(c: Column): Column = floor(c * 1000000).cast("long")
 
   // ------------------------------------------------------------------
   // q_ewma_daily — integer EWMA over the per-type daily revenue series

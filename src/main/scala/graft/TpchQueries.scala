@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sql.Exact.e2
+import graft.sql.Exact.{e2, idiv}
 
 /** The remaining classic TPC-H query shapes, adapted to the reduced
   * test schema (no partsupp table, no commit/receipt dates, no
@@ -33,9 +33,6 @@ import graft.sql.Exact.e2
   * positive-balance cent total: bal_cents · n_pos > Σ pos_cents.
   */
 object TpchQueries {
-
-  private def idiv(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-    ((a - pmod(a, b)) / b).cast("long")
 
   // --- Q4: priority count of orders with a late shipment (EXISTS) -----
 

@@ -71,12 +71,12 @@ object Blocks {
   /** StripingUtils (BLOCK/library/striping/StripingUtils.java): split the
     * work into k id-hash stripes processed independently and re-unioned —
     * caps the peak footprint of an expensive step at 1/k of the frame. */
-  def striped(k: Int, idCol: String = "id")(s: Step): Step = df => {
+  def striped(k: Int)(s: Step): Step = df => {
     // materialize the input once: each stripe filters the SAME frame, so
     // without this an expensive upstream would be re-derived k times
     val base = df.localCheckpoint()
     (0 until k).map(i =>
-        s(base.filter(pmod(hash(col(idCol)), lit(k)) === i)))
+        s(base.filter(pmod(hash(col("id")), lit(k)) === i)))
       .reduce(_ unionByName _)
   }
 

@@ -18,6 +18,11 @@ import graft.text.TextFunctions._
   * every banding family funnels through [[bucketPairs]], which
   * star-expands buckets over `maxBucket` members instead of all-pairs
   * expanding them — the degenerate-boilerplate-bucket guard.
+  *
+  * Input schema: the document operators read the corpus by fixed column
+  * names, those of the [[graft.Tables]] `documents` table — `doc_id
+  * BIGINT`, `text STRING`, plus `source STRING` ([[ngramDupPairs]]'
+  * blocking key) and `n_chars BIGINT` ([[keepBestPerCluster]]' score).
   */
 object Dedup {
 
@@ -57,7 +62,7 @@ object Dedup {
     * piece to bound peak message volume). Over-full buckets are
     * STAR-EXPANDED, not dropped, and since round 12 the stars are PER
     * FULL-SIGNATURE GROUP: within a hot bucket, members pair with the
-    * min id of their (bucket, `siggCol`) group, and the group reps pair
+    * min id of their (bucket, `sigg`) group, and the group reps pair
     * with the bucket's overall min rep — O(B + #groups) = O(B) candidate
     * rows. Starring per signature group instead of per bucket closes the
     * round-11 mixed-bucket recall hole: two DISTINCT duplicate groups
@@ -79,7 +84,7 @@ object Dedup {
     * bucket counts are logged — a silent cap would read as full recall
     * when it is not. */
   private[graft] def bucketPairs(banded: DataFrame, keys: Seq[String], idCol: String,
-                                 maxBucket: Int, siggCol: String = "sigg"): DataFrame = owned { o =>
+                                 maxBucket: Int): DataFrame = owned { o =>
     val kc = keys.map(col)
     def selfJoin(d: DataFrame): DataFrame = d.as("a").join(d.as("b"),
         keys.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _) &&
@@ -100,12 +105,12 @@ object Dedup {
         val hot = banded.join(ck, keys)
         // min id per (bucket, full signature) group: signature-identical
         // subgroups each get their own verification-passing star
-        val greps = hot.groupBy(kc :+ col(siggCol): _*)
+        val greps = hot.groupBy(kc :+ col("sigg"): _*)
           .agg(min(col(idCol)).as("grep"))
         // group reps star around the bucket's overall min rep so a
         // genuinely-uniform hot bucket stays transitively connected
         val breps = greps.groupBy(kc: _*).agg(min(col("grep")).as("brep"))
-        val starWithin = hot.join(greps, keys :+ siggCol)
+        val starWithin = hot.join(greps, keys :+ "sigg")
           .filter(col(idCol) =!= col("grep"))
           .select(col("grep").as("ida"), col(idCol).as("idb"))
         val starAcross = greps.join(breps, keys)
@@ -148,17 +153,15 @@ object Dedup {
 
   /** Exact duplicate clusters on whitespace/case-normalized text:
     * (content hash, cluster size, canonical = min doc id). */
-  def exactClusters(docs: DataFrame, idCol: String = "doc_id",
-                    textCol: String = "text"): DataFrame =
-    docs.select(col(idCol),
-        md5(lower(regexp_replace(trim(col(textCol)), "\\s+", " "))).as("h"))
+  def exactClusters(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"),
+        md5(lower(regexp_replace(trim(col("text")), "\\s+", " "))).as("h"))
       .groupBy(col("h"))
-      .agg(count(lit(1)).as("dup_cnt"), min(col(idCol)).as("canonical"))
+      .agg(count(lit(1)).as("dup_cnt"), min(col("doc_id")).as("canonical"))
 
   /** Per-doc MinHash signature + shingle set. */
-  def withMinhash(docs: DataFrame, shingleLen: Int, numHashes: Int,
-                  idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    docs.select(col(idCol), shingleSet(col(textCol), shingleLen).as("sh"))
+  def withMinhash(docs: DataFrame, shingleLen: Int, numHashes: Int): DataFrame =
+    docs.select(col("doc_id"), shingleSet(col("text"), shingleLen).as("sh"))
       .withColumn("sig", minhashSignature(col("sh"), numHashes))
 
   /** LSH banding: one row per (doc, band) with the band's hash; candidate
@@ -173,17 +176,16 @@ object Dedup {
     * hot-key set is checkpointed before the anti/star joins, so the
     * guard is consistent even when `withSig` is not persisted. */
   def lshCandidates(withSig: DataFrame, bands: Int, rowsPerBand: Int,
-                    idCol: String = "doc_id",
                     blockCols: Seq[String] = Nil,
                     maxBucket: Int = DefaultMaxBucket): DataFrame = {
     val banded = withSig.select(
-      (col(idCol) +: blockCols.map(col)) :+
+      (col("doc_id") +: blockCols.map(col)) :+
         // full-signature group key for hot-bucket star expansion; pruned
         // away by Catalyst everywhere the guard does not fire
         (xxhash64(col("sig")).as("sigg"): org.apache.spark.sql.Column) :+
         posexplode(bandHashes(col("sig"), bands, rowsPerBand))
           .as(Seq("band", "bv")): _*)
-    bucketPairs(banded, Seq("band", "bv") ++ blockCols, idCol, maxBucket)
+    bucketPairs(banded, Seq("band", "bv") ++ blockCols, "doc_id", maxBucket)
   }
 
   /** Full MinHash-LSH near-dup pipeline: candidates verified by true
@@ -271,11 +273,10 @@ object Dedup {
   /** The incremental dedup ACTION: the increment minus every document
     * that duplicates something already in the index — what actually gets
     * appended to the standing corpus each day. */
-  def dropIndexedDuplicates(newDocs: DataFrame, indexPath: String,
-                            idCol: String = "doc_id"): DataFrame = {
+  def dropIndexedDuplicates(newDocs: DataFrame, indexPath: String): DataFrame = {
     val dupIds = incrementalDupPairs(newDocs, indexPath)
-      .select(col("new_id").as(idCol)).distinct()
-    newDocs.join(dupIds, Seq(idCol), "left_anti")
+      .select(col("new_id").as("doc_id")).distinct()
+    newDocs.join(dupIds, Seq("doc_id"), "left_anti")
   }
 
   /** Per-doc 32-bit SimHash fingerprints. */
@@ -344,12 +345,11 @@ object Dedup {
     * corpus broadcasts when it fits and falls back to a shuffle join when
     * the dup rate makes it genuinely large — no hint, AQE decides from
     * the measured size. */
-  def dropDuplicateDocs(docs: DataFrame, pairs: DataFrame,
-                        idCol: String = "doc_id"): DataFrame = {
+  def dropDuplicateDocs(docs: DataFrame, pairs: DataFrame): DataFrame = {
     val losers = dupClusters(pairs)
       .filter(col("id") =!= col("canonical"))
-      .select(col("id").as(idCol))
-    docs.join(losers, Seq(idCol), "left_anti")
+      .select(col("id").as("doc_id"))
+    docs.join(losers, Seq("doc_id"), "left_anti")
   }
 
   /** Retention-policy variant of [[dropDuplicateDocs]]: per multi-member
@@ -359,11 +359,9 @@ object Dedup {
     * combinable); one members⋈scores join + one per-cluster agg on top of
     * the cluster pass. Returns (cluster, n_members, kept_doc,
     * kept_score) for clusters of size ≥ 2, ordered by cluster. */
-  def keepBestPerCluster(docs: DataFrame, pairs: DataFrame,
-                         idCol: String = "doc_id",
-                         scoreCol: String = "n_chars"): DataFrame = {
+  def keepBestPerCluster(docs: DataFrame, pairs: DataFrame): DataFrame = {
     dupClusters(pairs)
-      .join(docs.select(col(idCol).as("id"), col(scoreCol).as("score")), Seq("id"))
+      .join(docs.select(col("doc_id").as("id"), col("n_chars").as("score")), Seq("id"))
       .groupBy(col("canonical").as("cluster"))
       .agg(count(lit(1)).as("n_members"),
         max(struct(col("score"), col("id"))).as("m"))
@@ -382,11 +380,10 @@ object Dedup {
     * full-signature group ([[bucketPairs]]): pair-level output inside a
     * capped bucket is rep↔member stars, clusters are unaffected. */
   def ngramDupPairs(docs: DataFrame, n: Int = 3, threshold: Double = 0.1,
-                    blockCol: String = "source",
                     numHashes: Int = 16, bands: Int = 8): DataFrame = owned { o =>
     // persisted: candidate join + both verify joins reuse the n-gram
     // sets and minhash signatures (same rationale as minhashDupPairs)
-    val tri = o(docs.select(col("doc_id"), col(blockCol).as("blk"),
+    val tri = o(docs.select(col("doc_id"), col("source").as("blk"),
       wordNgrams(tokens(col("text")), n).as("tri"))
       .withColumn("sig", minhashSignature(col("tri"), numHashes))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
@@ -487,11 +484,10 @@ object Dedup {
     * inexpressible as a window), but state never crosses rows, so it
     * parallelizes perfectly and nothing shuffles. */
   def cdcChunks(docs: DataFrame, w: Int = 4, div: Int = 13, rem: Int = 12,
-                minLen: Int = 1, maxLen: Int = Int.MaxValue,
-                idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+                minLen: Int = 1, maxLen: Int = Int.MaxValue): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs.select(col(idCol).cast("long"), col(textCol)).as[(Long, String)]
+    docs.select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
       .flatMap { case (id, text) =>
         val md = graft.functions.MinhashSignature.digest.get()
         var s = 1

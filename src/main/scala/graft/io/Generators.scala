@@ -1,7 +1,9 @@
 package graft.io
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.sql.Exact.idiv
 
 /** Deterministic synthetic graph generators, mirroring the reference's
   * benchmark inputs (SURVEY §2.1):
@@ -19,10 +21,6 @@ import org.apache.spark.sql.functions._
   * and embarrassingly parallel from `spark.range`.
   */
 object Generators {
-
-  /** Exact integer division on BIGINT columns (quotients < 2^53). */
-  private def idiv(a: Column, b: Long): Column =
-    ((a - pmod(a, lit(b))) / lit(b)).cast("long")
 
   /** Uniform random digraph: n vertices, d out-edges each. Self-loops are
     * remapped (within the local range for local draws) rather than
@@ -48,9 +46,9 @@ object Generators {
       // Clamp P ≤ n so every range partition is non-empty (size ≥ 1);
       // P > n would make pmod(hash, 0) null for the empty ranges.
       val P = math.max(1L, math.min(numPartitions.toLong, n))
-      val p = idiv(col("src") * P, n)
-      val pStart = idiv(p * n + P - 1, P)        // ceil(p·n/P)
-      val pEnd = idiv((p + 1) * n + P - 1, P)    // ceil((p+1)·n/P)
+      val p = idiv(col("src") * P, lit(n))
+      val pStart = idiv(p * n + P - 1, lit(P))   // ceil(p·n/P)
+      val pEnd = idiv((p + 1) * n + P - 1, lit(P)) // ceil((p+1)·n/P)
       val size = pEnd - pStart
       val isLocal = pmod(xxhash64(col("src"), col("i"), lit(seed + 1)), lit(1000L)) <
         localRatioPermille

@@ -91,10 +91,9 @@ object GraphFormats {
     * (CORE/io/formats/IdWithValueTextOutputFormat.java:40-100):
     * `id<TAB>value` per line, sorted by id for stable file hashes. */
   def writeIdWithValue(vertices: DataFrame, path: String,
-                       idCol: String = "id", valueCol: String = "value",
                        delimiter: String = "\t"): Unit =
-    vertices.orderBy(col(idCol))
-      .select(concat_ws(delimiter, col(idCol), col(valueCol)).as("value"))
+    vertices.orderBy(col("id"))
+      .select(concat_ws(delimiter, col("id"), col("value")).as("value"))
       .write.mode("overwrite").text(path)
 
   /** AdjacencyListTextVertexOutputFormat: full adjacency line round-trip. */

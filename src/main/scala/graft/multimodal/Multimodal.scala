@@ -16,6 +16,10 @@ import org.apache.spark.sql.functions._
   * JNI/FFI) slot into the same partition-local kernel; the Spark-side
   * contract (schema, encoders, partition batching, column pruning before
   * the heavy kernel) is unchanged by the codec choice.
+  *
+  * Input schema: every media kernel reads `doc_id BIGINT` and `payload
+  * BINARY` by those fixed names (the frames the `documentsAs*` adapters
+  * below build).
   */
 object Multimodal {
 
@@ -27,6 +31,14 @@ object Multimodal {
 
   /** Raw payload row: id + opaque bytes. */
   final case class MediaRow(doc_id: Long, payload: Array[Byte])
+
+  /** The pruned (doc_id, payload) rows every media kernel maps over: the
+    * scan reads only those two columns (check ReadSchema in explain). */
+  private def mediaRows(media: DataFrame): Dataset[MediaRow] = {
+    val spark = media.sparkSession
+    import spark.implicits._
+    media.select("doc_id", "payload").as[MediaRow]
+  }
 
   private def md5Hex(bytes: Array[Byte]): String =
     MessageDigest.getInstance("MD5").digest(bytes)
@@ -76,14 +88,11 @@ object Multimodal {
   }
 
   /** Decode a binary payload column into typed metadata. Runs as a
-    * partition-local map over the pruned (id, payload) projection — the
-    * scan reads only those two columns (check ReadSchema in explain). */
-  def decodeMeta(media: DataFrame, idCol: String = "doc_id",
-                 payloadCol: String = "payload"): Dataset[MediaMeta] = {
+    * partition-local map over the pruned (doc_id, payload) projection. */
+  def decodeMeta(media: DataFrame): Dataset[MediaMeta] = {
     val spark = media.sparkSession
     import spark.implicits._
-    media.select(col(idCol).as("doc_id"), col(payloadCol).as("payload"))
-      .as[MediaRow]
+    mediaRows(media)
       .mapPartitions { it =>
         // per-partition init (real codecs are expensive to construct)
         it.map { r =>
@@ -176,12 +185,10 @@ object Multimodal {
 
   /** Decode a WAV payload column into typed audio metadata — same
     * partition-local batch shape as [[decodeMeta]]. */
-  def decodeWavMeta(media: DataFrame, idCol: String = "doc_id",
-                    payloadCol: String = "payload"): Dataset[WavMeta] = {
+  def decodeWavMeta(media: DataFrame): Dataset[WavMeta] = {
     val spark = media.sparkSession
     import spark.implicits._
-    media.select(col(idCol).as("doc_id"), col(payloadCol).as("payload"))
-      .as[MediaRow]
+    mediaRows(media)
       .mapPartitions(_.map { r =>
         decodeWav(r.payload) match {
           case Some((ch, rate, bits, db)) =>
@@ -204,12 +211,10 @@ object Multimodal {
     * total and max, exact integers. Unparseable payloads and
     * unsupported bit depths are kept and flagged −1, never dropped
     * ([[MediaMeta]]'s contract). */
-  def wavSampleStats(media: DataFrame, idCol: String = "doc_id",
-                     payloadCol: String = "payload"): Dataset[WavSampleStats] = {
+  def wavSampleStats(media: DataFrame): Dataset[WavSampleStats] = {
     val spark = media.sparkSession
     import spark.implicits._
-    media.select(col(idCol).as("doc_id"), col(payloadCol).as("payload"))
-      .as[MediaRow]
+    mediaRows(media)
       .mapPartitions(_.map { r =>
         decodeWavFull(r.payload) match {
           case Some((_, _, bits, dOff, db)) if bits == 16 || bits == 8 =>
@@ -242,13 +247,10 @@ object Multimodal {
     * emitting (Σ|a|, n) — the front half of a voice-activity detector.
     * Unparseable payloads emit zero rows; callers restore the sentinel
     * contract with a LEFT JOIN onto the id spine. */
-  def wavFrameEnergies(media: DataFrame, frameSize: Int = 8,
-                       idCol: String = "doc_id",
-                       payloadCol: String = "payload"): DataFrame = {
+  def wavFrameEnergies(media: DataFrame, frameSize: Int = 8): DataFrame = {
     val spark = media.sparkSession
     import spark.implicits._
-    media.select(col(idCol).as("doc_id"), col(payloadCol).as("payload"))
-      .as[MediaRow]
+    mediaRows(media)
       .flatMap { r =>
         decodeWavFull(r.payload) match {
           case Some((_, _, bits, dOff, db)) if bits == 16 || bits == 8 =>
@@ -307,13 +309,10 @@ object Multimodal {
     * `stride`-th frame's (idx, w, h, byte offset). One output row per
     * sampled frame — the explode shape of video frame extraction, with
     * the sizes actually computed from the parsed headers. */
-  def sampleVideoFrames(media: DataFrame, stride: Int = 2,
-                        idCol: String = "doc_id",
-                        payloadCol: String = "payload"): DataFrame = {
+  def sampleVideoFrames(media: DataFrame, stride: Int = 2): DataFrame = {
     val spark = media.sparkSession
     import spark.implicits._
-    media.select(col(idCol).as("doc_id"), col(payloadCol).as("payload"))
-      .as[MediaRow]
+    mediaRows(media)
       .flatMap { r =>
         val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Int, Int, Int, Long)]
         var off = 0L
@@ -339,13 +338,10 @@ object Multimodal {
     * feature-extraction step a scene-cut detector needs. Truncated
     * frames (header claims more pixels than remain) are dropped, ending
     * the walk — the corrupt-row contract. One output row per frame. */
-  def videoFrameStats(media: DataFrame,
-                      idCol: String = "doc_id",
-                      payloadCol: String = "payload"): DataFrame = {
+  def videoFrameStats(media: DataFrame): DataFrame = {
     val spark = media.sparkSession
     import spark.implicits._
-    media.select(col(idCol).as("doc_id"), col(payloadCol).as("payload"))
-      .as[MediaRow]
+    mediaRows(media)
       .flatMap { r =>
         val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Int, Int, Int, Long, Long)]
         var off = 0
@@ -400,12 +396,10 @@ object Multimodal {
   final case class PixelStats(doc_id: Long, n_px_bytes: Long, sum_px: Long,
                               min_px: Int, max_px: Int)
 
-  def pixelStats(media: DataFrame, idCol: String = "doc_id",
-                 payloadCol: String = "payload"): Dataset[PixelStats] = {
+  def pixelStats(media: DataFrame): Dataset[PixelStats] = {
     val spark = media.sparkSession
     import spark.implicits._
-    media.select(col(idCol).as("doc_id"), col(payloadCol).as("payload"))
-      .as[MediaRow]
+    mediaRows(media)
       .mapPartitions(_.map { r =>
         decodePpmAt(r.payload, 0) match {
           case Some((_, _, _, hdrLen)) =>
@@ -428,6 +422,25 @@ object Multimodal {
       })
   }
 
+  /** The cell pass the three image hashes share: split the `n` pixel
+    * bytes after a `hdrLen`-byte header into `cells` contiguous ranges
+    * (cell(i) = i·cells div n) and return each range's byte-value sum
+    * and byte count. `n` must be positive. */
+  private def cellSums(payload: Array[Byte], hdrLen: Int,
+                       cells: Int): (Array[Long], Array[Long]) = {
+    val n = payload.length - hdrLen
+    val sums = new Array[Long](cells)
+    val cnts = new Array[Long](cells)
+    var i = 0
+    while (i < n) {
+      val c = (i.toLong * cells / n).toInt
+      sums(c) += payload(hdrLen + i) & 0xff
+      cnts(c) += 1
+      i += 1
+    }
+    (sums, cnts)
+  }
+
   /** Perceptual average-hash (aHash) of a P6 payload: the pixel stream
     * is split into `cells` contiguous ranges (cell(i) = i·cells div n —
     * the 1-D analogue of the classic 8×8 grid), and cell c's bit is set
@@ -443,31 +456,18 @@ object Multimodal {
     * the other media kernels). */
   final case class AHash(doc_id: Long, n_px: Long, ahash: Long)
 
-  def averageHash(media: DataFrame, cells: Int = 60,
-                  idCol: String = "doc_id",
-                  payloadCol: String = "payload"): Dataset[AHash] = {
+  def averageHash(media: DataFrame, cells: Int = 60): Dataset[AHash] = {
     val spark = media.sparkSession
     import spark.implicits._
-    media.select(col(idCol).as("doc_id"), col(payloadCol).as("payload"))
-      .as[MediaRow]
+    mediaRows(media)
       .mapPartitions(_.map { r =>
         decodePpmAt(r.payload, 0) match {
           case Some((_, _, _, hdrLen)) =>
             val n = r.payload.length - hdrLen
             if (n <= 0) AHash(r.doc_id, 0L, -1L)
             else {
-              val sums = new Array[Long](cells)
-              val cnts = new Array[Long](cells)
-              var total = 0L
-              var i = 0
-              while (i < n) {
-                val v = r.payload(hdrLen + i) & 0xff
-                val c = (i.toLong * cells / n).toInt
-                sums(c) += v
-                cnts(c) += 1
-                total += v
-                i += 1
-              }
+              val (sums, cnts) = cellSums(r.payload, hdrLen, cells)
+              val total = sums.sum
               var hash = 0L
               var c = 0
               while (c < cells) {
@@ -488,29 +488,17 @@ object Multimodal {
     * brightness, dHash on local slope, so the pair catches both
     * brightness-shift and gradient-flip near-dups). Exact-integer rule
     * (cross-multiplied means); corrupt payloads keep the −1 sentinel. */
-  def differenceHash(media: DataFrame, cells: Int = 61,
-                     idCol: String = "doc_id",
-                     payloadCol: String = "payload"): DataFrame = {
+  def differenceHash(media: DataFrame, cells: Int = 61): DataFrame = {
     val spark = media.sparkSession
     import spark.implicits._
-    media.select(col(idCol).as("doc_id"), col(payloadCol).as("payload"))
-      .as[MediaRow]
+    mediaRows(media)
       .mapPartitions(_.map { r =>
         decodePpmAt(r.payload, 0) match {
           case Some((_, _, _, hdrLen)) =>
             val n = r.payload.length - hdrLen
             if (n <= 0) (r.doc_id, 0L, -1L)
             else {
-              val sums = new Array[Long](cells)
-              val cnts = new Array[Long](cells)
-              var i = 0
-              while (i < n) {
-                val v = r.payload(hdrLen + i) & 0xff
-                val c = (i.toLong * cells / n).toInt
-                sums(c) += v
-                cnts(c) += 1
-                i += 1
-              }
+              val (sums, cnts) = cellSums(r.payload, hdrLen, cells)
               var hash = 0L
               var c = 0
               while (c < cells - 1) {
@@ -550,28 +538,18 @@ object Multimodal {
     * (which [[averageHash]] partially is) AND to low-frequency noise.
     * Pure BIGINT after the class-init cosine table; sentinels follow
     * [[pixelStats]]. */
-  def perceptualHash(media: DataFrame, idCol: String = "doc_id",
-                     payloadCol: String = "payload"): Dataset[PHash] = {
+  def perceptualHash(media: DataFrame): Dataset[PHash] = {
     val spark = media.sparkSession
     import spark.implicits._
     val coef = phashCoef
-    media.select(col(idCol).as("doc_id"), col(payloadCol).as("payload"))
-      .as[MediaRow]
+    mediaRows(media)
       .mapPartitions(_.map { r =>
         decodePpmAt(r.payload, 0) match {
           case Some((_, _, _, hdrLen)) =>
             val n = r.payload.length - hdrLen
             if (n <= 0) PHash(r.doc_id, 0L, -1L)
             else {
-              val sums = new Array[Long](PhashCells)
-              val cnts = new Array[Long](PhashCells)
-              var i = 0
-              while (i < n) {
-                val c = (i.toLong * PhashCells / n).toInt
-                sums(c) += r.payload(hdrLen + i) & 0xff
-                cnts(c) += 1
-                i += 1
-              }
+              val (sums, cnts) = cellSums(r.payload, hdrLen, PhashCells)
               val mu = Array.tabulate(PhashCells)(c =>
                 if (cnts(c) > 0) sums(c) * 1024L / cnts(c) else 0L)
               val f = Array.tabulate(PhashCoeffs) { k =>
@@ -599,13 +577,10 @@ object Multimodal {
     * production pipeline swaps for a SIMD/codec one; the Spark contract
     * is unchanged). Payloads without full pixel data (or unparseable)
     * pass through with a null output payload. */
-  def resizeNearest(media: DataFrame, newW: Int, newH: Int,
-                    idCol: String = "doc_id",
-                    payloadCol: String = "payload"): DataFrame = {
+  def resizeNearest(media: DataFrame, newW: Int, newH: Int): DataFrame = {
     val spark = media.sparkSession
     import spark.implicits._
-    media.select(col(idCol).as("doc_id"), col(payloadCol).as("payload"))
-      .as[MediaRow]
+    mediaRows(media)
       .map { r =>
         val out = decodePpmAt(r.payload, 0) match {
           case Some((w, h, mv, hdrLen))
@@ -654,12 +629,10 @@ object Multimodal {
     * occupied bins are emitted, and a payload with no pixel bytes
     * (empty or corrupt) emits no rows — histogram consumers join back
     * onto the catalogue when absence matters. */
-  def pixelHistogram(media: DataFrame, idCol: String = "doc_id",
-                     payloadCol: String = "payload"): Dataset[PixelHist] = {
+  def pixelHistogram(media: DataFrame): Dataset[PixelHist] = {
     val spark = media.sparkSession
     import spark.implicits._
-    media.select(col(idCol).as("doc_id"), col(payloadCol).as("payload"))
-      .as[MediaRow]
+    mediaRows(media)
       .flatMap { r =>
         decodePpmAt(r.payload, 0) match {
           case Some((_, _, _, hdrLen)) =>

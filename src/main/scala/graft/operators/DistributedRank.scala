@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.sql.Exact.idiv
+
 /** Distributed total-order ranking without a single-partition sort.
   *
   * `row_number()/ntile()/running-sum` over `Window.orderBy(...)` with no
@@ -156,14 +158,12 @@ object DistributedRank {
     * extra row (identical in Spark and DuckDB). `rn` must be the 1-based
     * global row number; returns the BIGINT bucket number. */
   def ntileFromRank(rn: Column, total: Long, n: Int): Column = {
-    // integer floor-div on non-negative BIGINTs (Column./ is double):
-    def idiv(a: Column, b: Long): Column = ((a - pmod(a, lit(b))) / lit(b)).cast("long")
     val q = total / n
     val r = total % n
     val big = q + 1
-    if (q == 0L) idiv(rn - 1, big) + 1 // fewer rows than buckets
-    else when(rn <= lit(r * big), idiv(rn - 1, big) + 1)
-      .otherwise(lit(r) + idiv(rn - lit(r * big) - 1, q) + 1)
+    if (q == 0L) idiv(rn - 1, lit(big)) + 1 // fewer rows than buckets
+    else when(rn <= lit(r * big), idiv(rn - 1, lit(big)) + 1)
+      .otherwise(lit(r) + idiv(rn - lit(r * big) - 1, lit(q)) + 1)
   }
 
   /** `df` plus an NTILE(`n`) BIGINT `bucketCol` over the total order

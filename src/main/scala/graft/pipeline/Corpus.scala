@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.CheckpointBridge.owned
 
 import graft.graph.Fixpoint
+import graft.sql.Exact.idiv
 import graft.text.TextFunctions._
 
 /** Corpus-level training-data-pipeline operators: repetition filtering,
@@ -17,16 +18,12 @@ import graft.text.TextFunctions._
   * packer, which is inherently a sequential per-block scan). All float
   * outputs are floor-scaled BIGINTs or exact integer division so a DuckDB
   * oracle hash-matches.
+  *
+  * Input schema: every operator reads the corpus by fixed column names —
+  * `doc_id BIGINT`, `text STRING` and, for the per-stratum and per-block
+  * operators, `source STRING` (the [[graft.Tables]] `documents` table).
   */
 object Corpus {
-
-  /** Exact BIGINT integer division (DuckDB's `//`): (a - a mod b) is an
-    * exact multiple of b, and a correctly-rounded double division whose
-    * true quotient is an integer ≤ 2^53 returns it exactly — so the two
-    * engines agree bit-for-bit, unlike floor(a / b) where the double
-    * quotient can round across an integer boundary. */
-  private def idiv(a: Column, b: Column): Column =
-    ((a - pmod(a, b)) / b).cast("long")
 
   // --- repetition signals (the Gopher-style repetition filters) --------
 
@@ -39,10 +36,9 @@ object Corpus {
     * Scale shape: explode → two-level groupBy. The (doc_id, gram) partial
     * aggregation is map-side combined by Catalyst; nothing is ever
     * collected per-doc into one row except the final O(1) stats. */
-  def repetitionStats(docs: DataFrame, idCol: String = "doc_id",
-                      textCol: String = "text"): DataFrame = {
-    val grams = docs.select(col(idCol).as("doc_id"),
-        explode(wordNgramsAll(tokens(col(textCol)), 2)).as("gram"))
+  def repetitionStats(docs: DataFrame): DataFrame = {
+    val grams = docs.select(col("doc_id"),
+        explode(wordNgramsAll(tokens(col("text")), 2)).as("gram"))
       .groupBy(col("doc_id"), col("gram")).agg(count(lit(1)).as("cnt"))
     grams.groupBy(col("doc_id"))
       .agg(sum(col("cnt")).as("n_grams"),
@@ -66,13 +62,12 @@ object Corpus {
     * → broadcast-joined scalar N → per-doc top-k window. The df frame is
     * vocabulary-sized (small); the window partitions by doc (no skew —
     * per-doc token counts are bounded). */
-  def tfIdfTopK(docs: DataFrame, k: Int, idCol: String = "doc_id",
-                textCol: String = "text"): DataFrame = owned { o =>
+  def tfIdfTopK(docs: DataFrame, k: Int): DataFrame = owned { o =>
     // persisted: Catalyst does not dedupe shared subtrees, so without
     // this the explode+groupBy (the corpus-wide pass) would run twice —
     // once feeding the df aggregation, once feeding the join
-    val tf = o(docs.select(col(idCol).as("doc_id"),
-        explode(tokens(col(textCol))).as("token"))
+    val tf = o(docs.select(col("doc_id"),
+        explode(tokens(col("text"))).as("token"))
       .groupBy(col("doc_id"), col("token")).agg(count(lit(1)).as("tf"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val df = tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
@@ -93,9 +88,8 @@ object Corpus {
     * document frequency, ranked by count (ties by token). One explode +
     * one aggregation — the vocabulary-building pass a BPE trainer or a
     * mixing dashboard runs first. */
-  def vocabulary(docs: DataFrame, topN: Int, idCol: String = "doc_id",
-                 textCol: String = "text"): DataFrame =
-    docs.select(col(idCol).as("doc_id"), explode(tokens(col(textCol))).as("token"))
+  def vocabulary(docs: DataFrame, topN: Int): DataFrame =
+    docs.select(col("doc_id"), explode(tokens(col("text"))).as("token"))
       .groupBy(col("token"))
       .agg(count(lit(1)).as("cnt"), count_distinct(col("doc_id")).as("n_docs"))
       .orderBy(col("cnt").desc, col("token"))
@@ -117,11 +111,10 @@ object Corpus {
     * per-partition embarrassingly parallel (no RNG state, no seed
     * coordination across executors, and adding columns or re-partitioning
     * can never change membership). */
-  def stratifiedSample(docs: DataFrame, idCol: String = "doc_id",
-                       stratumCol: String = "source"): DataFrame = {
-    val digit = conv(substring(md5(col(stratumCol)), 1, 1), 16, 10).cast("long")
+  def stratifiedSample(docs: DataFrame): DataFrame = {
+    val digit = conv(substring(md5(col("source")), 1, 1), 16, 10).cast("long")
     val rate = lit(50L) + lit(50L) * digit
-    val u = pmod(md5Uniform(concat(col(idCol).cast("string"), lit(":"), col(stratumCol))),
+    val u = pmod(md5Uniform(concat(col("doc_id").cast("string"), lit(":"), col("source"))),
       lit(1000L))
     // keep EVERY payload column: the sampled frame must stay composable
     // with the downstream corpus ops (a membership list without text
@@ -139,10 +132,9 @@ object Corpus {
     * properties are identical: membership is a pure function of the row,
     * the window is the only shuffle, and re-running or re-partitioning
     * can never change the chosen set. Hash ties broken by id. */
-  def sampleExactK(docs: DataFrame, k: Int, idCol: String = "doc_id",
-                   stratumCol: String = "source"): DataFrame = {
-    val u = md5Uniform(concat(col(idCol).cast("string"), lit(":"), col(stratumCol)))
-    val w = Window.partitionBy(col(stratumCol)).orderBy(u, col(idCol))
+  def sampleExactK(docs: DataFrame, k: Int): DataFrame = {
+    val u = md5Uniform(concat(col("doc_id").cast("string"), lit(":"), col("source")))
+    val w = Window.partitionBy(col("source")).orderBy(u, col("doc_id"))
     docs.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") <= k)
       .drop("__rn")
@@ -156,11 +148,10 @@ object Corpus {
     * because ^(1/w) needs libm pow — the documented cross-engine trap).
     * Same determinism contract as [[stratifiedSample]]: membership is a
     * pure function of the row, re-runnable, partition-independent. */
-  def weightedSample(docs: DataFrame, k: Int, weightCol: String,
-                     idCol: String = "doc_id"): DataFrame = {
+  def weightedSample(docs: DataFrame, k: Int, weightCol: String): DataFrame = {
     docs.withColumn("priority",
-        idiv(md5Uniform(col(idCol).cast("string")) * lit(1000000L), col(weightCol)))
-      .orderBy(col("priority"), col(idCol))
+        idiv(md5Uniform(col("doc_id").cast("string")) * lit(1000000L), col(weightCol)))
+      .orderBy(col("priority"), col("doc_id"))
       .limit(k)
   }
 
@@ -177,15 +168,14 @@ object Corpus {
     * wants: how much was removed, and a stable content id for the clean
     * text). Pure codegen'd expressions — regex scans run inside
     * whole-stage codegen, no UDFs. */
-  def piiScrub(docs: DataFrame, idCol: String = "doc_id",
-               textCol: String = "text"): DataFrame = {
+  def piiScrub(docs: DataFrame): DataFrame = {
     val scrubbed = regexp_replace(
-      regexp_replace(col(textCol), EmailPattern, "<EMAIL>"),
+      regexp_replace(col("text"), EmailPattern, "<EMAIL>"),
       IdRunPattern, "<ID>")
-    docs.select(col(idCol),
-      size(regexp_extract_all(col(textCol), lit(EmailPattern), lit(0))).cast("long")
+    docs.select(col("doc_id"),
+      size(regexp_extract_all(col("text"), lit(EmailPattern), lit(0))).cast("long")
         .as("n_emails"),
-      size(regexp_extract_all(col(textCol), lit(IdRunPattern), lit(0))).cast("long")
+      size(regexp_extract_all(col("text"), lit(IdRunPattern), lit(0))).cast("long")
         .as("n_id_runs"),
       md5(scrubbed).as("scrubbed_md5"))
   }
@@ -198,16 +188,15 @@ object Corpus {
     * codegen'd regex/replace chain (the tag pattern is RE2-compatible,
     * so the DuckDB oracle replays it verbatim); returns per-doc tag
     * count and the cleaned text + md5. */
-  def stripMarkup(docs: DataFrame, idCol: String = "doc_id",
-                  textCol: String = "text"): DataFrame = {
+  def stripMarkup(docs: DataFrame): DataFrame = {
     val unescaped = Seq("&lt;" -> "<", "&gt;" -> ">", "&quot;" -> "\"",
       "&#39;" -> "'", "&amp;" -> "&")
-      .foldLeft(regexp_replace(col(textCol), TagPattern, " ")) {
+      .foldLeft(regexp_replace(col("text"), TagPattern, " ")) {
         case (c, (e, ch)) => replace(c, lit(e), lit(ch))
       }
     val cleaned = trim(regexp_replace(unescaped, "\\s+", " "))
-    docs.select(col(idCol),
-      size(regexp_extract_all(col(textCol), lit(TagPattern), lit(0))).cast("long")
+    docs.select(col("doc_id"),
+      size(regexp_extract_all(col("text"), lit(TagPattern), lit(0))).cast("long")
         .as("n_tags"),
       length(cleaned).cast("long").as("clean_len"),
       md5(cleaned).as("clean_md5"))
@@ -222,14 +211,13 @@ object Corpus {
     * arithmetic — one shuffle on the block key, exact integers, scales to
     * any corpus where single blocks fit a partition's window (block =
     * source/shard, the natural packing unit). */
-  def chunkPack(docs: DataFrame, budget: Long, idCol: String = "doc_id",
-                blockCol: String = "source", textCol: String = "text"): DataFrame = {
-    val w = Window.partitionBy(col(blockCol)).orderBy(col(idCol))
+  def chunkPack(docs: DataFrame, budget: Long): DataFrame = {
+    val w = Window.partitionBy(col("source")).orderBy(col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    docs.select(col(idCol), col(blockCol), tokenCount(col(textCol)).as("n_tokens"))
+    docs.select(col("doc_id"), col("source"), tokenCount(col("text")).as("n_tokens"))
       .withColumn("run", sum(col("n_tokens")).over(w))
       .withColumn("start", col("run") - col("n_tokens"))
-      .select(col(idCol), col(blockCol), col("n_tokens"),
+      .select(col("doc_id"), col("source"), col("n_tokens"),
         idiv(col("start"), lit(budget)).as("chunk"),
         pmod(col("start"), lit(budget)).cast("long").as("offset"))
   }
@@ -247,12 +235,11 @@ object Corpus {
     * same pattern as sessionization. (A window function can't express
     * it: the bin boundary depends on the running *remainder*, which
     * resets data-dependently.) */
-  def greedyPack(docs: DataFrame, budget: Long, idCol: String = "doc_id",
-                 blockCol: String = "source", textCol: String = "text"): Dataset[PackedDoc] = {
+  def greedyPack(docs: DataFrame, budget: Long): Dataset[PackedDoc] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs.select(col(idCol).cast("long").as("doc_id"), col(blockCol).as("block"),
-        tokenCount(col(textCol)).as("n_tokens"))
+    docs.select(col("doc_id").cast("long").as("doc_id"), col("source").as("block"),
+        tokenCount(col("text")).as("n_tokens"))
       .repartition(col("block"))
       .sortWithinPartitions(col("block"), col("doc_id"))
       .as[(Long, String, Long)]
@@ -309,11 +296,10 @@ object Corpus {
     * (overlapping matches only arise in equal-symbol runs), which is
     * what the DuckDB oracle replays in closed form — a hash match
     * proves the kernel's greedy walk equals the declarative form. */
-  def bpeTrain(docs: DataFrame, numMerges: Int,
-               textCol: String = "text"): DataFrame = owned { o =>
+  def bpeTrain(docs: DataFrame, numMerges: Int): DataFrame = owned { o =>
     val spark = docs.sparkSession
     import spark.implicits._
-    val words0 = docs.select(explode(tokens(col(textCol))).as("w"))
+    val words0 = docs.select(explode(tokens(col("text"))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
       .select(col("cnt"), split(col("w"), "").as("sym"))
       .localCheckpoint()
@@ -352,13 +338,12 @@ object Corpus {
     * merges — the tokenizer a trained BPE vocabulary ships as. Per-row
     * kernel (the merge replay is sequential per word by definition);
     * the merge table is closure-tiny (numMerges rows). Returns
-    * (idCol, pieces array) one row per document, pieces in document
+    * (doc_id, pieces array) one row per document, pieces in document
     * order. */
-  def bpeEncode(docs: DataFrame, merges: Seq[(String, String)],
-                idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def bpeEncode(docs: DataFrame, merges: Seq[(String, String)]): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs.select(col(idCol).cast("long"), col(textCol)).as[(Long, String)]
+    docs.select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
       .map { case (id, text) =>
         val pieces = text.trim.split("\\s+").toSeq.flatMap { wd =>
           var sym: Seq[String] = wd.split("").toSeq
@@ -366,7 +351,7 @@ object Corpus {
           sym
         }
         (id, pieces)
-      }.toDF(idCol, "pieces")
+      }.toDF("doc_id", "pieces")
   }
 
   // --- LM-style quality scoring ----------------------------------------
@@ -387,18 +372,17 @@ object Corpus {
     * join both read it), a vocab-sized equi-join ON the token, a
     * broadcast scalar total, one per-doc aggregation. All map-side
     * combinable; nothing driver-side. */
-  def surprisalScore(docs: DataFrame, idCol: String = "doc_id",
-                     textCol: String = "text"): DataFrame = owned { o =>
-    val toks = o(docs.select(col(idCol), explode(tokens(col(textCol))).as("tok"))
+  def surprisalScore(docs: DataFrame): DataFrame = owned { o =>
+    val toks = o(docs.select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val counts = toks.groupBy(col("tok")).agg(count(lit(1)).as("c"))
     val total = counts.agg(sum(col("c")).as("t"))
     toks.join(counts, Seq("tok"))
       .crossJoin(broadcast(total))
-      .select(col(idCol), (length(bin(expr("t div c"))) - 1).cast("long").as("bits"))
-      .groupBy(col(idCol))
+      .select(col("doc_id"), (length(bin(expr("t div c"))) - 1).cast("long").as("bits"))
+      .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_tokens"), sum(col("bits")).as("total_bits"))
-      .select(col(idCol), col("n_tokens"), col("total_bits"),
+      .select(col("doc_id"), col("n_tokens"), col("total_bits"),
         idiv(col("total_bits") * lit(1000000L), col("n_tokens")).as("bits_per_token_e6"))
       .localCheckpoint()
   }
@@ -411,21 +395,20 @@ object Corpus {
     * both engines). Scale: one guarded explode (persisted — the count
     * agg and the score join both read it), bigram-vocab equi-join,
     * per-doc agg. */
-  def bigramSurprisalScore(docs: DataFrame, idCol: String = "doc_id",
-                           textCol: String = "text"): DataFrame = owned { o =>
-    val bg = o(docs.select(col(idCol), tokens(col(textCol)).as("t"))
+  def bigramSurprisalScore(docs: DataFrame): DataFrame = owned { o =>
+    val bg = o(docs.select(col("doc_id"), tokens(col("text")).as("t"))
       .filter(size(col("t")) >= 2)
-      .select(col(idCol), explode(expr(
+      .select(col("doc_id"), explode(expr(
         "transform(sequence(0, size(t) - 2), i -> struct(t[i] AS a, t[i + 1] AS b))")).as("p"))
-      .select(col(idCol), col("p.a").as("a"), col("p.b").as("b"))
+      .select(col("doc_id"), col("p.a").as("a"), col("p.b").as("b"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val cbig = bg.groupBy(col("a"), col("b")).agg(count(lit(1)).as("cb"))
     val cpre = cbig.groupBy(col("a")).agg(sum(col("cb")).as("cp"))
     bg.join(cbig, Seq("a", "b")).join(cpre, Seq("a"))
-      .select(col(idCol), (length(bin(expr("cp div cb"))) - 1).cast("long").as("bits"))
-      .groupBy(col(idCol))
+      .select(col("doc_id"), (length(bin(expr("cp div cb"))) - 1).cast("long").as("bits"))
+      .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_bigrams"), sum(col("bits")).as("total_bits"))
-      .select(col(idCol), col("n_bigrams"), col("total_bits"),
+      .select(col("doc_id"), col("n_bigrams"), col("total_bits"),
         idiv(col("total_bits") * lit(1000000L), col("n_bigrams")).as("bits_per_bigram_e6"))
       .localCheckpoint()
   }
@@ -444,8 +427,7 @@ object Corpus {
     * blowup; the per-(eval, train) overlap count is a map-side-combined
     * aggregation and the final argmax is a window over eval docs. */
   def contamination(corpus: DataFrame, evalDocs: DataFrame, n: Int = 3,
-                    maxDf: Int = 1000, idCol: String = "doc_id",
-                    textCol: String = "text"): DataFrame = owned { o =>
+                    maxDf: Int = 1000): DataFrame = owned { o =>
     // grams travel as 60-bit md5 fingerprints, not strings: every
     // downstream shuffle (the df groupBy, the two joins, the overlap
     // aggregation) keys on 8 bytes instead of a ~25-byte UTF8 gram.
@@ -453,7 +435,7 @@ object Corpus {
     // identically (the oracle replays the same md5 prefix), and at
     // 2^-60 per pair it is noise next to the n-gram heuristic itself.
     def grams(df: DataFrame, as: String) =
-      df.select(col(idCol).as(as), explode(wordNgrams(tokens(col(textCol)), n)).as("gram"))
+      df.select(col("doc_id").as(as), explode(wordNgrams(tokens(col("text")), n)).as("gram"))
         .select(col(as),
           conv(substring(md5(col("gram")), 1, 15), 16, 10).cast("long").as("gk"))
     // persisted: the hub-gram df aggregation AND the overlap join both
@@ -465,8 +447,8 @@ object Corpus {
     val rare = cg.groupBy(col("gk")).agg(count(lit(1)).as("df"))
       .filter(col("df") <= maxDf).select("gk")
     val eg = grams(evalDocs, "eval_id")
-    val evalSize = evalDocs.select(col(idCol).as("eval_id"),
-      size(wordNgrams(tokens(col(textCol)), n)).cast("long").as("n_grams"))
+    val evalSize = evalDocs.select(col("doc_id").as("eval_id"),
+      size(wordNgrams(tokens(col("text")), n)).cast("long").as("n_grams"))
     val overlap = eg.join(rare, Seq("gk"))
       .join(cg, Seq("gk"))
       .groupBy(col("eval_id"), col("train_id"))
@@ -483,9 +465,6 @@ object Corpus {
       .localCheckpoint()
   }
 
-  /** Per-stratum mixing stats: doc count, token count, and each stratum's
-    * exact share of the corpus' tokens (e6) — the table a data-mixing
-    * config is derived from. */
   /** fastText-shaped hashed linear document scorer: token → md5 bucket →
     * weight lookup → per-doc weight sum + threshold. The weight table
     * here is a deterministic stand-in (w(b) = (b mod 17) − 8, a pure
@@ -494,9 +473,8 @@ object Corpus {
     * identical plan shape. All integer, all codegen'd: explode → two
     * column expressions → one map-side-combined agg; the model-scoring
     * pass a 100 TB quality filter runs is exactly this shape. */
-  def hashedLinearScore(docs: DataFrame, buckets: Int = 1024,
-                        idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    docs.select(col(idCol).as("doc_id"), explode(tokens(col(textCol))).as("tok"))
+  def hashedLinearScore(docs: DataFrame, buckets: Int = 1024): DataFrame =
+    docs.select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
       .withColumn("w", pmod(md5Uniform(col("tok")), lit(buckets.toLong)) % lit(17L) - lit(8L))
       .groupBy(col("doc_id"))
       .agg(sum(col("w")).as("score"), count(lit(1)).as("n_tokens"))
@@ -508,10 +486,9 @@ object Corpus {
     * applied BEFORE any per-token collection (window rank ≤ cap), so no
     * executor ever materializes a hub token's full posting list — the
     * unbounded collect_set spelling dies on stopwords at 100 TB. */
-  def invertedIndex(docs: DataFrame, topN: Int, postingCap: Int = 20,
-                    idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def invertedIndex(docs: DataFrame, topN: Int, postingCap: Int = 20): DataFrame = {
     val t = docs
-      .select(col(idCol).as("doc_id"), explode(tokens(col(textCol))).as("token"))
+      .select(col("doc_id"), explode(tokens(col("text"))).as("token"))
       .distinct()
     val df = t.groupBy(col("token")).agg(count(lit(1)).as("n_docs"))
     val capped = t.withColumn("rn", row_number().over(
@@ -532,29 +509,30 @@ object Corpus {
     * surprisalScore's integer-log design) — floor-scaled √ is safe to
     * hash-match across engines. Weights and shares are exact scaled
     * BIGINTs; the share denominator is a broadcast scalar. */
-  def temperatureWeights(docs: DataFrame, stratumCol: String = "source",
-                         textCol: String = "text"): DataFrame = owned { o =>
-    val per = o(docs.groupBy(col(stratumCol))
-      .agg(sum(tokenCount(col(textCol))).as("n_tokens"))
+  def temperatureWeights(docs: DataFrame): DataFrame = owned { o =>
+    val per = o(docs.groupBy(col("source"))
+      .agg(sum(tokenCount(col("text"))).as("n_tokens"))
       .withColumn("w_e3", floor(sqrt(col("n_tokens").cast("double")) * lit(1000.0)).cast("long"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val tot = per.agg(sum(col("w_e3")).as("wsum"))
     per.crossJoin(broadcast(tot))
-      .select(col(stratumCol), col("n_tokens"), col("w_e3"),
+      .select(col("source"), col("n_tokens"), col("w_e3"),
         idiv(col("w_e3") * lit(1000000L), col("wsum")).as("share_e6"))
       .localCheckpoint()
   }
 
-  def mixingStats(docs: DataFrame, stratumCol: String = "source",
-                  textCol: String = "text"): DataFrame = owned { o =>
+  /** Per-stratum mixing stats: doc count, token count, and each stratum's
+    * exact share of the corpus' tokens (e6) — the table a data-mixing
+    * config is derived from. */
+  def mixingStats(docs: DataFrame): DataFrame = owned { o =>
     // persisted: `tot` and the final join both read `per`; unpersisted,
     // the full corpus-scan aggregation would run twice
-    val per = o(docs.groupBy(col(stratumCol))
-      .agg(count(lit(1)).as("n_docs"), sum(tokenCount(col(textCol))).as("n_tokens"))
+    val per = o(docs.groupBy(col("source"))
+      .agg(count(lit(1)).as("n_docs"), sum(tokenCount(col("text"))).as("n_tokens"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val tot = per.agg(sum(col("n_tokens")).as("total_tokens"))
     per.crossJoin(broadcast(tot))
-      .select(col(stratumCol), col("n_docs"), col("n_tokens"),
+      .select(col("source"), col("n_docs"), col("n_tokens"),
         idiv(col("n_tokens") * lit(1000000L), col("total_tokens")).as("share_e6"))
       .localCheckpoint()
   }
@@ -573,11 +551,10 @@ object Corpus {
     * a 100 TB vocabulary outgrows the driver) + one broadcast scalar
     * N. Overflow bound: c_xy·N·10⁶ needs c_xy·N < 9·10¹² — at larger
     * corpora swap the literal to DECIMAL(38) (documented, same plan). */
-  def collocations(docs: DataFrame, minCount: Long, topK: Int,
-                   textCol: String = "text"): DataFrame = {
-    val toks = docs.select(explode(tokens(col(textCol))).as("tok"))
+  def collocations(docs: DataFrame, minCount: Long, topK: Int): DataFrame = {
+    val toks = docs.select(explode(tokens(col("text"))).as("tok"))
     val uni = toks.groupBy(col("tok")).agg(count(lit(1)).as("c"))
-    val bi = docs.select(explode(wordNgramsAll(tokens(col(textCol)), 2)).as("gram"))
+    val bi = docs.select(explode(wordNgramsAll(tokens(col("text")), 2)).as("gram"))
       .groupBy(col("gram")).agg(count(lit(1)).as("c_xy"))
     val n = bi.agg(sum(col("c_xy")).as("n_bi"))
     bi.filter(col("c_xy") >= minCount)
@@ -602,9 +579,8 @@ object Corpus {
     * is the matching scoring pass). Pure codegen'd columns: explode →
     * pmod(md5, m) → one map-side-combined agg; no vocabulary state at
     * all, which is the whole point at 100 TB. */
-  def hashFeatures(docs: DataFrame, buckets: Int = 256,
-                   idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    docs.select(col(idCol).as("doc_id"), explode(tokens(col(textCol))).as("tok"))
+  def hashFeatures(docs: DataFrame, buckets: Int = 256): DataFrame =
+    docs.select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
       .select(col("doc_id"), pmod(md5Uniform(col("tok")), lit(buckets.toLong)).as("bucket"))
       .groupBy(col("doc_id"), col("bucket")).agg(count(lit(1)).as("cnt"))
 
@@ -699,8 +675,8 @@ object Corpus {
     * checksum-valid counts per doc — the standard false-positive filter
     * a PII scrubber runs before redacting. Pure integer fold per
     * candidate, codegen'd, shuffle-free. */
-  def luhnScan(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    val cands = regexp_extract_all(col(textCol), lit("[0-9]{16}"), lit(0))
+  def luhnScan(docs: DataFrame): DataFrame = {
+    val cands = regexp_extract_all(col("text"), lit("[0-9]{16}"), lit(0))
     // Luhn sum via index fold: position i (1-based from the LEFT of a
     // 16-digit run) is even-from-the-right exactly when i is odd
     val luhnOk = (s: Column) => {

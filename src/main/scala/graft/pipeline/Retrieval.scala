@@ -7,6 +7,7 @@ import org.apache.spark.sql.graft.CheckpointBridge.owned
 
 import graft.graph.Fixpoint
 import graft.sim.Similarity
+import graft.sql.Exact.idiv
 import graft.text.TextFunctions.tokens
 
 /** Sparse (BM25), dense (cosine) and hybrid retrieval over the corpus —
@@ -23,9 +24,6 @@ import graft.text.TextFunctions.tokens
   * operation bit-for-bit (no float appears anywhere).
   */
 object Retrieval {
-
-  private def idiv(a: Column, b: Column): Column =
-    ((a - pmod(a, b)) / b).cast("long")
 
   /** BM25 document scores for a bag-of-terms query.
     *

@@ -461,11 +461,10 @@ object Similarity {
     * the candidate generator SemDeDup/graph-ANN builds start from).
     * Per-pair cost is cluster-bounded: Σ |sample ∩ cluster|·|cluster|,
     * never corpus². Output (vec_id, n_id, rcos_e4) ranked per vector. */
-  def knnGraph(corpus: DataFrame, k: Int, sampleMod: Long = 20L,
-               clusterCol: String = "label"): DataFrame = {
+  def knnGraph(corpus: DataFrame, k: Int, sampleMod: Long = 20L): DataFrame = {
     val sample = corpus.filter(pmod(col("vec_id"), lit(sampleMod)) === 0L)
-      .select(col(clusterCol), col("vec_id").as("q_id"), col("embedding").as("qv"))
-    corpus.join(sample, Seq(clusterCol))
+      .select(col("label"), col("vec_id").as("q_id"), col("embedding").as("qv"))
+    corpus.join(sample, Seq("label"))
       .filter(col("vec_id") =!= col("q_id"))
       .withColumn("rcos_e4", graft.sql.Exact.e4(cosine(col("qv"), col("embedding"))))
       .withColumn("rn", row_number().over(
@@ -517,21 +516,21 @@ object Similarity {
     * agree only there; the shift is lossless to compare/rank). Distance
     * is 10⁶ − floor-e6 cosine against [[centroids]]' floor-scaled means.
     * One centroid pass + one broadcast join; per-label outputs. */
-  def silhouette(corpus: DataFrame, clusterCol: String = "label"): DataFrame = {
-    val cent = centroids(corpus, clusterCol)
-      .select(col(clusterCol).as("c"), col("cv"))
+  def silhouette(corpus: DataFrame): DataFrame = {
+    val cent = centroids(corpus)
+      .select(col("label").as("c"), col("cv"))
     val perVec = corpus.join(broadcast(cent), lit(true))
       .withColumn("dist",
         lit(1000000L) - graft.sql.Exact.e6(cosine(col("embedding"), col("cv"))))
-      .groupBy(col("vec_id"), col(clusterCol))
+      .groupBy(col("vec_id"), col("label"))
       .agg(
-        min(when(col("c") === col(clusterCol), col("dist"))).as("a"),
-        min(when(col("c") =!= col(clusterCol), col("dist"))).as("b"))
+        min(when(col("c") === col("label"), col("dist"))).as("a"),
+        min(when(col("c") =!= col("label"), col("dist"))).as("b"))
       .withColumn("mx", greatest(col("a"), col("b")))
       .withColumn("s_shift_e6",
         when(col("mx") > 0,
           expr("((b - a + mx) * 1000000) div mx")).otherwise(lit(1000000L)))
-    perVec.groupBy(col(clusterCol))
+    perVec.groupBy(col("label"))
       .agg(count(lit(1)).as("n"),
         expr("sum(s_shift_e6) div count(1)").as("mean_sil_shift_e6"),
         min(col("s_shift_e6")).as("min_sil_shift_e6"),

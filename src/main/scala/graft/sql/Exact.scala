@@ -22,6 +22,14 @@ object Exact {
   def e4(c: Column): Column = floorScale(c, 10000L)
   def e6(c: Column): Column = floorScale(c, 1000000L)
 
+  /** Exact BIGINT floor division (DuckDB's `//`): (a - a mod b) is an
+    * exact multiple of b, and a correctly-rounded double division whose
+    * true quotient is an integer ≤ 2^53 returns it exactly — so the two
+    * engines agree bit-for-bit, unlike floor(a / b) where the double
+    * quotient can round across an integer boundary. */
+  def idiv(a: Column, b: Column): Column =
+    ((a - pmod(a, b)) / b).cast("long")
+
   /** SQL twin for the oracle side. */
   def sqlFloorScale(expr: String, scale: Long): String =
     s"CAST(FLOOR(($expr) * $scale) AS BIGINT)"

@@ -23,6 +23,9 @@ object TextFunctions {
   /** Whitespace tokenization. */
   def tokens(c: Column): Column = split(trim(c), "\\s+")
 
+  /** The oracle-side twin of [[tokens]] over the `text` column (DuckDB). */
+  val tokensSql: String = "regexp_split_to_array(trim(text), '\\s+')"
+
   /** BPE-ish pre-tokenization pattern (letter runs | single digits |
     * single non-alnum-non-space) — ASCII-only so the Java-regex and
     * RE2 (DuckDB) dialects agree. */

@@ -182,9 +182,10 @@ class CheckpointBridgeSpec extends SparkSpec {
     * it creates, save those of the frame it returns: a long-lived session
     * otherwise accumulates blocks until the ContextCleaner happens to
     * collect them. The rows are the loop drivers and staged Jaccard on
-    * small fixtures, then every iterative and dedup query (`q_graph_*`,
-    * `q_dedup_*`, `q_item_cf`, `q_winnow_matches`) at sf0.001 through its
-    * full output, as Bench runs it. */
+    * small fixtures, then every iterative, dedup, text and media query
+    * (`q_graph_*`, `q_dedup_*`, `q_text_*`, `q_multimodal_*`, every
+    * [[CorpusQueries]] entry, `q_item_cf`, `q_winnow_matches`) at sf0.001
+    * through its full output, as Bench runs it. */
   test("leak invariant: loops and staged Jaccard strand no checkpoint") {
     import spark.implicits._
     import graft.graph.{Algos, Prep}
@@ -240,9 +241,9 @@ class CheckpointBridgeSpec extends SparkSpec {
         Seq(sorted, cand, scored, out)
       }))
     val queries = SparkEntry.queries.keys.toSeq.sorted.filter(q =>
-      q.startsWith("q_graph_") || q.startsWith("q_dedup_") ||
-        q == "q_item_cf" || q == "q_winnow_matches")
-    assert(queries.size == 86, queries)
+      Seq("q_graph_", "q_dedup_", "q_text_", "q_multimodal_").exists(q.startsWith) ||
+        CorpusQueries.all.contains(q) || q == "q_item_cf" || q == "q_winnow_matches")
+    assert(queries.size == 140, queries)
     val sf = "/root/testdata/sf0.001"
     // hold every RDD persisted by the start of each job: a stranded
     // checkpoint that is strongly reachable cannot be collected by the
