@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.CheckpointBridge.owned
@@ -35,8 +35,7 @@ object AnalyticsQueries {
     * windowed-aggregate superstep pattern
     * (giraph-core/src/main/java/org/apache/giraph/aggregators — here a
     * declarative two-agg pipeline Catalyst can push partials through. */
-  private def qTrailingDau(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qTrailingDau(t: Tables): DataFrame = {
     val userDay = t.events
       .select(expr(s"ts div $DayUs").as("day"), col("user_id")).distinct()
     val dau1 = userDay.groupBy(col("day"))
@@ -78,8 +77,7 @@ object AnalyticsQueries {
     * per-partition running sum + broadcast partition offsets — handles
     * the negative −1 deltas via per-partition value totals). Top-10
     * ties broken by earliest instant. */
-  private def qPeakConcurrency(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qPeakConcurrency(t: Tables): DataFrame = {
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     val sess = t.events
       .withColumn("prev", lag(col("ts"), 1).over(w))
@@ -135,9 +133,8 @@ object AnalyticsQueries {
     * is engine-exact; double→string is not), the law's irrational masses
     * enter as shared literals, and the deviation is an integer
     * difference of e6 masses. One groupBy(9 rows) + one broadcast join. */
-  private def qBenford(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    val law = s.createDataFrame(benfordE6).toDF("digit", "benford_e6")
+  private def qBenford(t: Tables): DataFrame = {
+    val law = t.spark.createDataFrame(benfordE6).toDF("digit", "benford_e6")
     val counts = t.orders
       .select(floor(col("o_totalprice") * 100).cast("long").as("cents"))
       .filter(col("cents") > 0)
@@ -180,8 +177,7 @@ object AnalyticsQueries {
     * (max mean-shift evidence). Day frame is tiny (one row per day), so
     * the global window is free; the heavy lift is the one groupBy over
     * events, which is a plain two-phase count. */
-  private def qChangepointCusum(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qChangepointCusum(t: Tables): DataFrame = {
     val daily = t.events.groupBy(expr(s"ts div $DayUs").as("day"))
       .agg(count(lit(1)).as("cnt"))
     val tot = daily.agg(count(lit(1)).as("n_days"), sum(col("cnt")).as("total"))
@@ -219,8 +215,7 @@ object AnalyticsQueries {
     * engine, so the grid is bit-identical by construction. pct within
     * each dow row is the floor-scaled share. ≤ 168 output rows whatever
     * the input size; one groupBy. */
-  private def qHourlyHeatmap(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qHourlyHeatmap(t: Tables): DataFrame =
     t.events
       .select(expr(s"((ts div $DayUs) + 4) % 7").as("dow"),
         expr(s"(ts div $HourUs) % 24").as("hour"))
@@ -230,7 +225,6 @@ object AnalyticsQueries {
       .select(col("dow"), col("hour"), col("cnt"),
         expr("(cnt * 1000000) div dow_total").as("pct_dow_e6"))
       .orderBy(col("dow"), col("hour"))
-  }
 
   private val qHourlyHeatmapSql =
     s"""WITH g AS (SELECT (epoch_us(ts) // $DayUs + 4) % 7 AS dow,
@@ -251,8 +245,7 @@ object AnalyticsQueries {
     * NTILE over the unique (wsum, week) order. The discretized string is
     * what a motif/anomaly miner consumes downstream. Week frame is tiny;
     * the only big pass is the daily groupBy. */
-  private def qSaxSymbols(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qSaxSymbols(t: Tables): DataFrame = {
     val weekly = t.events
       .groupBy(expr(s"(ts div $DayUs) div 7").as("week"))
       .agg(count(lit(1)).as("wsum"),
@@ -279,8 +272,8 @@ object AnalyticsQueries {
   private val RichClubKs = Seq(1L, 2L, 4L, 8L, 16L, 32L)
 
   /** [[graft.graph.Algos.richClub]] over part co-purchase pairs. */
-  private def qRichClub(s: SparkSession, dir: String): DataFrame =
-    graph.Algos.richClub(TestGraphs.partCoPairs(Tables(s, dir)), RichClubKs)
+  private def qRichClub(t: Tables): DataFrame =
+    graph.Algos.richClub(TestGraphs.partCoPairs(t), RichClubKs)
       .orderBy(col("k"))
 
   private val qRichClubSql = {
@@ -304,8 +297,8 @@ object AnalyticsQueries {
     * neighbor) edge census. Oracle finds triangle edges by the direct
     * wedge join — an INDEPENDENT formulation of "has a common
     * neighbor", so support bookkeeping bugs can't self-confirm. */
-  private def qLocalBridges(s: SparkSession, dir: String): DataFrame =
-    graph.Algos.localBridgeStats(TestGraphs.partCoPairs(Tables(s, dir)))
+  private def qLocalBridges(t: Tables): DataFrame =
+    graph.Algos.localBridgeStats(TestGraphs.partCoPairs(t))
 
   private val qLocalBridgesSql =
     s"""WITH cp AS MATERIALIZED (${TestGraphs.partCoPairsSql}),
@@ -320,8 +313,8 @@ object AnalyticsQueries {
        |FROM tot CROSS JOIN te""".stripMargin.replace('\n', ' ')
 
   /** [[graft.graph.Algos.jointDegreeMatrix]] in log₂ buckets. */
-  private def qDegreeMatrix(s: SparkSession, dir: String): DataFrame =
-    graph.Algos.jointDegreeMatrix(TestGraphs.partCoPairs(Tables(s, dir)))
+  private def qDegreeMatrix(t: Tables): DataFrame =
+    graph.Algos.jointDegreeMatrix(TestGraphs.partCoPairs(t))
       .orderBy(col("b_lo"), col("b_hi"))
 
   private val qDegreeMatrixSql =
@@ -346,8 +339,8 @@ object AnalyticsQueries {
     * users exploits: each TYPE collapses to its first-seen batch (one
     * min-agg), so "distinct types to date" is a running sum of
     * first-occurrence counts — never a growing distinct state. */
-  private def qTextHeaps(s: SparkSession, dir: String): DataFrame = {
-    val toks = Tables(s, dir).documents
+  private def qTextHeaps(t: Tables): DataFrame = {
+    val toks = t.documents
       .select(expr("doc_id div 50").as("b"),
         explode(graft.text.TextFunctions.tokens(col("text"))).as("token"))
     val perB = toks.groupBy(col("b")).agg(count(lit(1)).as("n_toks"))
@@ -386,8 +379,8 @@ object AnalyticsQueries {
     * giraph-examples' triangle closing). The expansion is seeded from
     * ONLY the 20 sources (semi-join before the hop join), so the
     * wedge work is 20 adjacency lists, not the whole graph's. */
-  private def qTwoHop(s: SparkSession, dir: String): DataFrame = {
-    val e = TestGraphs.custSuppSym(Tables(s, dir)).select(col("src"), col("dst"))
+  private def qTwoHop(t: Tables): DataFrame = {
+    val e = TestGraphs.custSuppSym(t).select(col("src"), col("dst"))
       .localCheckpoint()
     val top = e.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
       .orderBy(col("deg").desc, col("id")).limit(20)
@@ -431,8 +424,7 @@ object AnalyticsQueries {
     * truncating `div` and flooring `//` agree only on non-negative
     * operands — the constant shift is lossless to compare). The
     * negative-lag count doubles as the ships-before-ordered DQ alarm. */
-  private def qFulfillmentLag(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qFulfillmentLag(t: Tables): DataFrame =
     t.lineitem.join(t.orders, col("l_orderkey") === col("o_orderkey"))
       .select(col("o_orderpriority"),
         expr("datediff(CAST(l_shipdate AS DATE), CAST(o_orderdate AS DATE))")
@@ -446,7 +438,6 @@ object AnalyticsQueries {
         col("n_negative"),
         expr("(sum_shift * 1000000) div n").as("mean_shift_e6"))
       .orderBy(col("o_orderpriority"))
-  }
 
   private val qFulfillmentLagSql =
     """WITH l AS (SELECT o_orderpriority,
@@ -472,8 +463,7 @@ object AnalyticsQueries {
     * summation order can't matter), shares are e6 floor divisions, and
     * HHI = Σ share² lands on the e12 scale. Two aggregations plus a
     * broadcast-sized nation join. */
-  private def qHhi(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qHhi(t: Tables): DataFrame = {
     val rev = t.lineitem
       .select(col("l_suppkey"),
         floor(col("l_extendedprice") * (lit(1) - col("l_discount")) * 100)
@@ -514,9 +504,9 @@ object AnalyticsQueries {
 
   /** [[graft.graph.Algos.leafPeelCounts]] over the symmetric
     * customer–supplier graph: 6 fixed peel rounds, oracle unrolled. */
-  private def qGraphPeel(s: SparkSession, dir: String): DataFrame =
+  private def qGraphPeel(t: Tables): DataFrame =
     graph.Algos.leafPeelCounts(
-      TestGraphs.custSuppSym(Tables(s, dir)).select("src", "dst"), PeelRounds)
+      TestGraphs.custSuppSym(t).select("src", "dst"), PeelRounds)
       .orderBy(col("round"))
 
   private val qGraphPeelSql = {
@@ -556,8 +546,8 @@ object AnalyticsQueries {
     * triangles from [[graft.graph.Algos.triangleCount]]'s oriented
     * intersection. The oracle counts triangles by the independent
     * 3-way-join formulation. */
-  private def qTransitivity(s: SparkSession, dir: String): DataFrame = {
-    val p = TestGraphs.partCoPairs(Tables(s, dir)).localCheckpoint()
+  private def qTransitivity(t: Tables): DataFrame = {
+    val p = TestGraphs.partCoPairs(t).localCheckpoint()
     val tri = graph.Algos.triangleCount(p)
     val wedges = p.select(col("u").as("id")).union(p.select(col("v").as("id")))
       .groupBy(col("id")).agg(count(lit(1)).as("d"))
@@ -588,8 +578,8 @@ object AnalyticsQueries {
     * growth team reads daily. Dedup to (type, user) FIRST (the
     * trailing-DAU identity), then one self-join keyed on user; with T
     * types the per-user fanout is ≤ T², a constant. */
-  private def qAudienceOverlap(s: SparkSession, dir: String): DataFrame = {
-    val tu = Tables(s, dir).events
+  private def qAudienceOverlap(t: Tables): DataFrame = {
+    val tu = t.events
       .select(col("event_type"), col("user_id")).distinct().localCheckpoint()
     val sizes = tu.groupBy(col("event_type")).agg(count(lit(1)).as("n"))
     val inter = tu.as("a").join(tu.as("b"),
@@ -631,9 +621,8 @@ object AnalyticsQueries {
     * deployment would widen to DECIMAL.) The interpolation step uses
     * sign·(|Δrev|·offset div span) so every integer division sees
     * non-negative operands (truncate/floor agreement). */
-  private def qInterpolate(s: SparkSession, dir: String): DataFrame = {
+  private def qInterpolate(t: Tables): DataFrame = {
     val enc = 10000000000000L
-    val t = Tables(s, dir)
     val daily = t.orders
       .select(expr("CAST(o_orderdate AS DATE)").as("d"),
         floor(col("o_totalprice") * 100).cast("long").as("cents"))
@@ -699,8 +688,8 @@ object AnalyticsQueries {
   /** Per-source sentence statistics under a shared [.!?]+ segmentation
     * (ASCII-only, so the Java and RE2 regex dialects agree): document
     * and sentence counts, floor-e6 mean sentences per document, max. */
-  private def qTextSentences(s: SparkSession, dir: String): DataFrame =
-    Tables(s, dir).documents
+  private def qTextSentences(t: Tables): DataFrame =
+    t.documents
       .select(col("source"),
         size(filter(split(col("text"), "[.!?]+"),
           seg => length(trim(seg)) > 0)).cast("long").as("ns"))
@@ -732,8 +721,8 @@ object AnalyticsQueries {
     * then a top-max(k) cut via orderBy+limit (TakeOrderedAndProject —
     * the type frame is ≪ corpus but still Heaps-grows with it, so no
     * unbounded rank window) and a rank within the 1000-row cut. */
-  private def qVocabCoverage(s: SparkSession, dir: String): DataFrame = {
-    val tf = Tables(s, dir).documents
+  private def qVocabCoverage(t: Tables): DataFrame = {
+    val tf = t.documents
       .select(explode(graft.text.TextFunctions.tokens(col("text"))).as("token"))
       .groupBy(col("token")).agg(count(lit(1)).as("c"))
     val tot = tf.agg(sum(col("c")).cast("long").as("total"))
@@ -779,8 +768,8 @@ object AnalyticsQueries {
     * oracle recomputes them independently via transitive-closure
     * squaring ([[graft.sql.OracleGen.sccSql]]) and replays the
     * contraction joins. */
-  private def qCondensation(s: SparkSession, dir: String): DataFrame = owned { o =>
-    val e = o(TestGraphs.waitFor(Tables(s, dir)).localCheckpoint())
+  private def qCondensation(t: Tables): DataFrame = owned { o =>
+    val e = o(TestGraphs.waitFor(t).localCheckpoint())
     val comp = o(graph.Algos.scc(e)).localCheckpoint()
     val ce = e
       .join(comp.select(col("id").as("src"), col("comp").as("c1")), Seq("src"))
@@ -829,8 +818,7 @@ object AnalyticsQueries {
     * anywhere; value is positive in this corpus so every division sees
     * non-negative operands. Reference day = max event day (broadcast
     * scalar). */
-  private def qDecayScore(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qDecayScore(t: Tables): DataFrame = {
     val ev = t.events.select(col("user_id"),
       expr(s"ts div $DayUs").as("day"),
       floor(col("value") * 100).cast("long").as("cents"))
@@ -867,8 +855,7 @@ object AnalyticsQueries {
     * map-side combine collapses). Butterflies are the bipartite
     * clustering signal — co-purchase cohesion without projecting the
     * graph. */
-  private def qButterflies(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qButterflies(t: Tables): DataFrame = {
     val e = t.orders.join(t.lineitem, col("o_orderkey") === col("l_orderkey"))
       .select(col("o_custkey").as("l"), col("l_suppkey").as("r"))
     graph.Algos.butterflyCount(e)
@@ -899,8 +886,7 @@ object AnalyticsQueries {
     * both engines (the q_corr_matrix discipline — IEEE ÷ and √ are
     * correctly rounded, so identical inputs give identical bits).
     * Means are reported as exact integer e6 ratios. */
-  private def qAbTtest(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qAbTtest(t: Tables): DataFrame = {
     val ev = t.events.select(
       pmod(graft.pipeline.Corpus.md5Uniform(col("user_id").cast("string")),
         lit(2L)).as("arm"),
@@ -953,8 +939,8 @@ object AnalyticsQueries {
     * decomposition. Each rung is one [[graft.graph.Algos.kCore]]
     * fixpoint (converged; the oracle unrolls 16 peel rounds, trailing
     * rounds no-ops). sum_deg counts symmetric edge ends (2·edges). */
-  private def qCoreLadder(s: SparkSession, dir: String): DataFrame = owned { o =>
-    val e = o(TestGraphs.custSuppSym(Tables(s, dir)).select("src", "dst")
+  private def qCoreLadder(t: Tables): DataFrame = owned { o =>
+    val e = o(TestGraphs.custSuppSym(t).select("src", "dst")
       .localCheckpoint())
     CoreLadderKs.map { k =>
       graph.Algos.kCore(e, k.toInt)
@@ -989,8 +975,8 @@ object AnalyticsQueries {
     * the "is this graph more clustered than chance" question. Exact
     * integer degree sums, one shared double formula at the end, obs/exp
     * ratio floor-e6. */
-  private def qNullModel(s: SparkSession, dir: String): DataFrame = {
-    val p = TestGraphs.partCoPairs(Tables(s, dir)).localCheckpoint()
+  private def qNullModel(t: Tables): DataFrame = {
+    val p = TestGraphs.partCoPairs(t).localCheckpoint()
     val tri = graph.Algos.triangleCount(p)
     val degSums = p.select(col("u").as("id")).union(p.select(col("v").as("id")))
       .groupBy(col("id")).agg(count(lit(1)).as("d"))
@@ -1030,8 +1016,8 @@ object AnalyticsQueries {
     * wedge is closure-checked by one semi-join against the canonical
     * pair set, and the estimate ships beside exact 3·Δ/W so the error
     * is measured, not assumed. */
-  private def qWedgeSample(s: SparkSession, dir: String): DataFrame = {
-    val p = TestGraphs.partCoPairs(Tables(s, dir)).localCheckpoint()
+  private def qWedgeSample(t: Tables): DataFrame = {
+    val p = TestGraphs.partCoPairs(t).localCheckpoint()
     val sym = p.select(col("u").as("c"), col("v").as("n"))
       .union(p.select(col("v").as("c"), col("u").as("n")))
     val sampled = sym.filter(
@@ -1088,9 +1074,9 @@ object AnalyticsQueries {
   /** [[graft.graph.Algos.maxWeightMatching]] on the weighted
     * customer–supplier graph; the oracle unrolls the same 12
     * mutual-heaviest-proposal rounds. */
-  private def qMwm(s: SparkSession, dir: String): DataFrame =
+  private def qMwm(t: Tables): DataFrame =
     graph.Algos.maxWeightMatching(
-      TestGraphs.custSuppSym(Tables(s, dir)).select("src", "dst", "w"),
+      TestGraphs.custSuppSym(t).select("src", "dst", "w"),
       maxRounds = MwmRounds)
 
   private val qMwmSql = {
@@ -1126,8 +1112,7 @@ object AnalyticsQueries {
     * of q_cohort's retention triangle. Cents floored per EVENT before
     * any sum (the Exact rule); cohort sizes ride along so the per-user
     * normalization is an exact integer division. */
-  private def qCohortLtv(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qCohortLtv(t: Tables): DataFrame = {
     val ev = t.events.select(col("user_id"), col("event_type"),
       expr(s"(ts div $DayUs) div 7").as("week"),
       floor(col("value") * 100).cast("long").as("cents"))
@@ -1176,8 +1161,8 @@ object AnalyticsQueries {
     * and the floor-log2 bits-per-token number a data mix is tuned by.
     * bits = ⌊log₂((T+V)/(c+1))⌋ via the bitlength identity (c = train
     * count, 0 for OOV; V = train vocab) — zero libm, hash-exact. */
-  private def qLmHeldout(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables(s, dir).documents
+  private def qLmHeldout(t: Tables): DataFrame = {
+    val docs = t.documents
     val split = pmod(graft.pipeline.Corpus.md5Uniform(col("doc_id").cast("string")),
       lit(100L))
     val toks = docs.select(col("doc_id"),
@@ -1231,8 +1216,8 @@ object AnalyticsQueries {
     * zero division) — top-10 drifted dimensions. Swap the parity split
     * for yesterday/today snapshots and this is the production
     * distribution-shift alarm. */
-  private def qEmbDrift(s: SparkSession, dir: String): DataFrame = {
-    val q = Tables(s, dir).embeddings.select(
+  private def qEmbDrift(t: Tables): DataFrame = {
+    val q = t.embeddings.select(
       pmod(col("vec_id"), lit(2L)).as("half"),
       posexplode(transform(col("embedding"),
         x => floor(x.cast("double") * lit(16384.0)).cast("long"))).as(Seq("j", "qv")))
@@ -1279,8 +1264,8 @@ object AnalyticsQueries {
     * (user, dollars) with the time window as a residual predicate, so
     * the pair space is bounded by per-(user, amount) multiplicity.
     * Top-10 most-duplicated amounts. */
-  private def qDupPayments(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables(s, dir).events
+  private def qDupPayments(t: Tables): DataFrame = {
+    val e = t.events
       .filter(col("event_type") === "purchase")
       .select(col("event_id"), col("user_id"),
         floor(col("value")).cast("long").as("dollars"), col("ts"))
@@ -1324,8 +1309,8 @@ object AnalyticsQueries {
     * persisted once; per-day work ∝ increment + component-graph size).
     * Reference analogue: the mutable-graph recompute avoidance that
     * motivates giraph's SimpleMutateGraphComputation family. */
-  private def qWccIncremental(s: SparkSession, dir: String): DataFrame = owned { o =>
-    val ce = o(TestGraphs.custSupp(Tables(s, dir)).select(col("src"), col("dst"))
+  private def qWccIncremental(t: Tables): DataFrame = owned { o =>
+    val ce = o(TestGraphs.custSupp(t).select(col("src"), col("dst"))
       .localCheckpoint())
     val split = pmod(graft.pipeline.Corpus.md5Uniform(
       concat_ws(":", col("src"), col("dst"))), lit(5L))
@@ -1355,73 +1340,39 @@ object AnalyticsQueries {
   // registry
   // ------------------------------------------------------------------
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_trailing_dau"     -> (qTrailingDau _),
-    "q_peak_concurrency" -> (qPeakConcurrency _),
-    "q_benford"          -> (qBenford _),
-    "q_changepoint"      -> (qChangepointCusum _),
-    "q_hourly_heatmap"   -> (qHourlyHeatmap _),
-    "q_sax_symbols"      -> (qSaxSymbols _),
-    "q_graph_rich_club"  -> (qRichClub _),
-    "q_graph_local_bridges" -> (qLocalBridges _),
-    "q_graph_degree_matrix" -> (qDegreeMatrix _),
-    "q_text_heaps"       -> (qTextHeaps _),
-    "q_graph_2hop"       -> (qTwoHop _),
-    "q_fulfillment_lag"  -> (qFulfillmentLag _),
-    "q_hhi"              -> (qHhi _),
-    "q_graph_peel"       -> (qGraphPeel _),
-    "q_graph_transitivity" -> (qTransitivity _),
-    "q_audience_overlap" -> (qAudienceOverlap _),
-    "q_interpolate"      -> (qInterpolate _),
-    "q_text_sentences"   -> (qTextSentences _),
-    "q_vocab_coverage"   -> (qVocabCoverage _),
-    "q_graph_condensation" -> (qCondensation _),
-    "q_decay_score"      -> (qDecayScore _),
-    "q_graph_butterflies" -> (qButterflies _),
-    "q_ab_ttest"         -> (qAbTtest _),
-    "q_graph_core_ladder" -> (qCoreLadder _),
-    "q_graph_null_model" -> (qNullModel _),
-    "q_graph_wedge_sample" -> (qWedgeSample _),
-    "q_graph_mwm"        -> (qMwm _),
-    "q_cohort_ltv"       -> (qCohortLtv _),
-    "q_lm_heldout"       -> (qLmHeldout _),
-    "q_emb_drift"        -> (qEmbDrift _),
-    "q_dup_payments"     -> (qDupPayments _),
-    "q_graph_wcc_incremental" -> (qWccIncremental _))
-
-  val oracles: Map[String, String] = Map(
-    "q_trailing_dau"     -> qTrailingDauSql,
-    "q_peak_concurrency" -> qPeakConcurrencySql,
-    "q_benford"          -> qBenfordSql,
-    "q_changepoint"      -> qChangepointCusumSql,
-    "q_hourly_heatmap"   -> qHourlyHeatmapSql,
-    "q_sax_symbols"      -> qSaxSymbolsSql,
-    "q_graph_rich_club"  -> qRichClubSql,
-    "q_graph_local_bridges" -> qLocalBridgesSql,
-    "q_graph_degree_matrix" -> qDegreeMatrixSql,
-    "q_text_heaps"       -> qTextHeapsSql,
-    "q_graph_2hop"       -> qTwoHopSql,
-    "q_fulfillment_lag"  -> qFulfillmentLagSql,
-    "q_hhi"              -> qHhiSql,
-    "q_graph_peel"       -> qGraphPeelSql,
-    "q_graph_transitivity" -> qTransitivitySql,
-    "q_audience_overlap" -> qAudienceOverlapSql,
-    "q_interpolate"      -> qInterpolateSql,
-    "q_text_sentences"   -> qTextSentencesSql,
-    "q_vocab_coverage"   -> qVocabCoverageSql,
-    "q_graph_condensation" -> qCondensationSql,
-    "q_decay_score"      -> qDecayScoreSql,
-    "q_graph_butterflies" -> qButterfliesSql,
-    "q_ab_ttest"         -> qAbTtestSql,
-    "q_graph_core_ladder" -> qCoreLadderSql,
-    "q_graph_null_model" -> qNullModelSql,
-    "q_graph_wedge_sample" -> qWedgeSampleSql,
-    "q_graph_mwm"        -> qMwmSql,
-    "q_cohort_ltv"       -> qCohortLtvSql,
-    "q_lm_heldout"       -> qLmHeldoutSql,
-    "q_emb_drift"        -> qEmbDriftSql,
-    "q_dup_payments"     -> qDupPaymentsSql,
+  val queries: Seq[Query] = Seq(
+    Query("q_trailing_dau", qTrailingDau, qTrailingDauSql),
+    Query("q_peak_concurrency", qPeakConcurrency, qPeakConcurrencySql),
+    Query("q_benford", qBenford, qBenfordSql),
+    Query("q_changepoint", qChangepointCusum, qChangepointCusumSql),
+    Query("q_hourly_heatmap", qHourlyHeatmap, qHourlyHeatmapSql),
+    Query("q_sax_symbols", qSaxSymbols, qSaxSymbolsSql),
+    Query("q_graph_rich_club", qRichClub, qRichClubSql),
+    Query("q_graph_local_bridges", qLocalBridges, qLocalBridgesSql),
+    Query("q_graph_degree_matrix", qDegreeMatrix, qDegreeMatrixSql),
+    Query("q_text_heaps", qTextHeaps, qTextHeapsSql),
+    Query("q_graph_2hop", qTwoHop, qTwoHopSql),
+    Query("q_fulfillment_lag", qFulfillmentLag, qFulfillmentLagSql),
+    Query("q_hhi", qHhi, qHhiSql),
+    Query("q_graph_peel", qGraphPeel, qGraphPeelSql),
+    Query("q_graph_transitivity", qTransitivity, qTransitivitySql),
+    Query("q_audience_overlap", qAudienceOverlap, qAudienceOverlapSql),
+    Query("q_interpolate", qInterpolate, qInterpolateSql),
+    Query("q_text_sentences", qTextSentences, qTextSentencesSql),
+    Query("q_vocab_coverage", qVocabCoverage, qVocabCoverageSql),
+    Query("q_graph_condensation", qCondensation, qCondensationSql),
+    Query("q_decay_score", qDecayScore, qDecayScoreSql),
+    Query("q_graph_butterflies", qButterflies, qButterfliesSql),
+    Query("q_ab_ttest", qAbTtest, qAbTtestSql),
+    Query("q_graph_core_ladder", qCoreLadder, qCoreLadderSql),
+    Query("q_graph_null_model", qNullModel, qNullModelSql),
+    Query("q_graph_wedge_sample", qWedgeSample, qWedgeSampleSql),
+    Query("q_graph_mwm", qMwm, qMwmSql),
+    Query("q_cohort_ltv", qCohortLtv, qCohortLtvSql),
+    Query("q_lm_heldout", qLmHeldout, qLmHeldoutSql),
+    Query("q_emb_drift", qEmbDrift, qEmbDriftSql),
+    Query("q_dup_payments", qDupPayments, qDupPaymentsSql),
     // the full-graph replay: a hash match proves incremental == recompute
-    "q_graph_wcc_incremental" -> graft.sql.OracleGen.labelPropSql(
-      TestGraphs.custSuppSymSql, 12, isMin = true, "component"))
+    Query("q_graph_wcc_incremental", qWccIncremental, graft.sql.OracleGen.labelPropSql(
+      TestGraphs.custSuppSymSql, 12, isMin = true, "component")))
 }

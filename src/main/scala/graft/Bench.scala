@@ -1,4 +1,7 @@
 package graft
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 object Bench {
   /** One query's bench record: full-output seconds (negative on failure),
     * the frame-build seconds inside them, and jobs and GC ms of that run. */
@@ -12,9 +15,17 @@ object Bench {
   def cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
   def passes: Int = sys.env.getOrElse("SPARK_GRAFT_PASSES", "2").toInt.max(1)
 
+  /** The queries to run, name-sorted: those SPARK_GRAFT_ONLY names
+    * (comma-separated), else all of them. Shared with graft.Verify; an
+    * unknown name throws. */
+  def selected: Seq[(String, (SparkSession, String) => DataFrame)] =
+    Queries.select(sys.env.get("SPARK_GRAFT_ONLY")
+      .fold(Queries.all.keys.toSeq)(_.split(",").toSeq).distinct.sorted)
+
   def main(args: Array[String]): Unit = {
     val sfDir = Bench.sfDir
     val cpus = Bench.cpus
+    val selected = Bench.selected
     val spark = LocalScratch.fast(LocalLiveness.local(cpus)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // per-query jobs and GC ms next to seconds: the adjudication channels
@@ -54,22 +65,19 @@ object Bench {
         .select((sum(length(element_at(col("sig"), 1))) + bit_xor(col("s60"))).as("w"))
         .first()
     }
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     // name-sorted: a stable, documented order makes per-query times
     // comparable across rounds (Map hash order reshuffles whenever the
     // query set changes, moving JIT/GC position effects between queries)
-    def runPass(): Seq[Timed] = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) =>
-        // the timed action is the query's full output, the rows Verify
-        // writes: a count() lets Catalyst prune per-row kernels away
-        val m = recorder.measureQuery(fn(spark, sfDir))(graft.obs.Recorder.fullOutput)
-        // A failed query must be UN-MASKABLE: record a NEGATIVE elapsed
-        // time and log it. (Round 5 silently recorded 20 analysis-time
-        // failures as 0.06-0.13s "successes", hiding a full breakage.)
-        m.error.foreach(e => System.err.println(s"[bench] $name FAILED: ${e.getMessage}"))
-        Timed(name, if (m.ok) m.seconds else -m.seconds, m.buildSeconds, m.jobs, m.gcMs)
-      }
+    def runPass(): Seq[Timed] = selected.map { case (name, fn) =>
+      // the timed action is the query's full output, the rows Verify
+      // writes: a count() lets Catalyst prune per-row kernels away
+      val m = recorder.measureQuery(fn(spark, sfDir))(graft.obs.Recorder.fullOutput)
+      // A failed query must be UN-MASKABLE: record a NEGATIVE elapsed
+      // time and log it. (Round 5 silently recorded 20 analysis-time
+      // failures as 0.06-0.13s "successes", hiding a full breakage.)
+      m.error.foreach(e => System.err.println(s"[bench] $name FAILED: ${e.getMessage}"))
+      Timed(name, if (m.ok) m.seconds else -m.seconds, m.buildSeconds, m.jobs, m.gcMs)
+    }
     var lastCompact = ""
     // Round to ms: full double reprs pushed the round-4 line past what the
     // harness captured whole (BENCH_r04 `total` arrived truncated

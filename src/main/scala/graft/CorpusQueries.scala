@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -26,8 +26,8 @@ object CorpusQueries {
 
   // --- repetition -------------------------------------------------------
 
-  private def qTextRepetition(s: SparkSession, dir: String): DataFrame =
-    Corpus.repetitionStats(Tables(s, dir).documents).orderBy(col("doc_id"))
+  private def qTextRepetition(t: Tables): DataFrame =
+    Corpus.repetitionStats(t.documents).orderBy(col("doc_id"))
 
   private val qTextRepetitionSql =
     s"""WITH toks AS MATERIALIZED (SELECT doc_id, $tokensSql AS tok FROM documents),
@@ -42,8 +42,8 @@ object CorpusQueries {
 
   // --- TF-IDF keywords --------------------------------------------------
 
-  private def qTfidf(s: SparkSession, dir: String): DataFrame =
-    Corpus.tfIdfTopK(Tables(s, dir).documents, k = 3)
+  private def qTfidf(t: Tables): DataFrame =
+    Corpus.tfIdfTopK(t.documents, k = 3)
       .drop("rank")
       .orderBy(col("doc_id"), col("score_e6").desc, col("token"))
 
@@ -62,8 +62,8 @@ object CorpusQueries {
 
   // --- vocabulary -------------------------------------------------------
 
-  private def qVocab(s: SparkSession, dir: String): DataFrame =
-    Corpus.vocabulary(Tables(s, dir).documents, topN = 100)
+  private def qVocab(t: Tables): DataFrame =
+    Corpus.vocabulary(t.documents, topN = 100)
 
   private val qVocabSql =
     s"""WITH toks AS MATERIALIZED (SELECT doc_id, unnest($tokensSql) AS token FROM documents)
@@ -72,8 +72,8 @@ object CorpusQueries {
 
   // --- stratified sampling ----------------------------------------------
 
-  private def qSampleStratified(s: SparkSession, dir: String): DataFrame =
-    Corpus.stratifiedSample(Tables(s, dir).documents)
+  private def qSampleStratified(t: Tables): DataFrame =
+    Corpus.stratifiedSample(t.documents)
       .select(col("doc_id"), col("source"), col("rate_permille"))
       .orderBy(col("doc_id"))
 
@@ -86,8 +86,8 @@ object CorpusQueries {
        |FROM b WHERE u < rate_permille ORDER BY doc_id""".stripMargin.replace('\n', ' ')
 
   /** Exact-K deterministic sample: 12 docs per source, md5-ranked. */
-  private def qSampleTopK(s: SparkSession, dir: String): DataFrame =
-    Corpus.sampleExactK(Tables(s, dir).documents, k = 12)
+  private def qSampleTopK(t: Tables): DataFrame =
+    Corpus.sampleExactK(t.documents, k = 12)
       .select(col("doc_id"), col("source"))
       .orderBy(col("doc_id"))
 
@@ -110,8 +110,8 @@ object CorpusQueries {
           lit("@example.com ref 99"), col("doc_id").cast("string"), lit("00")))
         .otherwise(col("text")).as("text"))
 
-  private def qPiiScrub(s: SparkSession, dir: String): DataFrame =
-    Corpus.piiScrub(planted(Tables(s, dir).documents)).orderBy(col("doc_id"))
+  private def qPiiScrub(t: Tables): DataFrame =
+    Corpus.piiScrub(planted(t.documents)).orderBy(col("doc_id"))
 
   private val qPiiScrubSql =
     s"""WITH p AS (SELECT doc_id, CASE WHEN doc_id % 5 = 0
@@ -130,8 +130,8 @@ object CorpusQueries {
   /** The synthetic corpus carries no markup, so tags + escaped entities
     * are planted on every 4th doc in BOTH engines (the PII-scrub
     * pattern): the strip chain is exercised on real matches. */
-  private def qTextMarkup(s: SparkSession, dir: String): DataFrame = {
-    val planted = Tables(s, dir).documents.select(col("doc_id"),
+  private def qTextMarkup(t: Tables): DataFrame = {
+    val planted = t.documents.select(col("doc_id"),
       when(pmod(col("doc_id"), lit(4L)) === 0,
         concat(lit("<p class=\"x\">"), col("text"),
           lit("</p> <a href=\"y\">link&amp;here &lt;tag&gt;</a>")))
@@ -157,8 +157,8 @@ object CorpusQueries {
 
   // --- sequence packing -------------------------------------------------
 
-  private def qPackChunks(s: SparkSession, dir: String): DataFrame =
-    Corpus.chunkPack(Tables(s, dir).documents, budget = 512).orderBy(col("doc_id"))
+  private def qPackChunks(t: Tables): DataFrame =
+    Corpus.chunkPack(t.documents, budget = 512).orderBy(col("doc_id"))
 
   private val qPackChunksSql =
     s"""WITH b AS (SELECT doc_id, source,
@@ -172,8 +172,8 @@ object CorpusQueries {
 
   // --- mixing stats -----------------------------------------------------
 
-  private def qMixStats(s: SparkSession, dir: String): DataFrame =
-    Corpus.mixingStats(Tables(s, dir).documents).orderBy(col("source"))
+  private def qMixStats(t: Tables): DataFrame =
+    Corpus.mixingStats(t.documents).orderBy(col("source"))
 
   private val qMixStatsSql =
     s"""WITH b AS MATERIALIZED (SELECT source, COUNT(*) AS n_docs,
@@ -192,8 +192,8 @@ object CorpusQueries {
     * predicted language en; report per-source kept doc/token counts.
     * Composes the quality, repetition, and lang-id signals in one plan —
     * each a codegen'd column expression, joined on doc_id. */
-  private def qQualityFilter(s: SparkSession, dir: String): DataFrame = {
-    val d = Tables(s, dir).documents
+  private def qQualityFilter(t: Tables): DataFrame = {
+    val d = t.documents
     val sig = d.select(col("doc_id"), col("source"),
         wordHits(col("text"), qfStop).as("n_stop"),
         tokenCount(col("text")).as("n_tokens"),
@@ -245,8 +245,8 @@ object CorpusQueries {
   /** Eval set = the 20 lowest doc ids (a stand-in benchmark); corpus =
     * the rest. For each eval doc: the most-overlapping training doc by
     * shared distinct word 3-grams. */
-  private def qContamination(s: SparkSession, dir: String): DataFrame = {
-    val d = Tables(s, dir).documents
+  private def qContamination(t: Tables): DataFrame = {
+    val d = t.documents
     Corpus.contamination(d.filter(col("doc_id") >= 20), d.filter(col("doc_id") < 20))
       .orderBy(col("eval_id"))
   }
@@ -281,8 +281,8 @@ object CorpusQueries {
     * only arise in equal-symbol runs, where the rule keeps every even
     * offset). A hash match proves the kernel's greedy walk round-for-
     * round. */
-  private def qBpeTrain(s: SparkSession, dir: String): DataFrame =
-    Corpus.bpeTrain(Tables(s, dir).documents, numMerges = 10).orderBy(col("rank"))
+  private def qBpeTrain(t: Tables): DataFrame =
+    Corpus.bpeTrain(t.documents, numMerges = 10).orderBy(col("rank"))
 
   private val qBpeTrainSql = {
     val n = 10
@@ -321,8 +321,8 @@ object CorpusQueries {
     * the merges over every document's token stream in order, so the
     * md5'd piece stream matches only if both the trainer and the encoder
     * agree round-for-round, word-for-word. */
-  private def qBpeEncode(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables(s, dir).documents
+  private def qBpeEncode(t: Tables): DataFrame = {
+    val docs = t.documents
     val merges = Corpus.bpeTrain(docs, numMerges = 10).orderBy(col("rank"))
       .collect().map(r => (r.getString(1), r.getString(2))).toSeq
     Corpus.bpeEncode(docs, merges)
@@ -377,8 +377,8 @@ object CorpusQueries {
     * domain (high fertility = the vocabulary fragments that domain).
     * Runs the full 10-merge train→encode chain; word counts come from
     * the SAME token stream the encoder consumes. */
-  private def qBpeFertility(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables(s, dir).documents
+  private def qBpeFertility(t: Tables): DataFrame = {
+    val docs = t.documents
     val merges = Corpus.bpeTrain(docs, numMerges = 10).orderBy(col("rank"))
       .collect().map(r => (r.getString(1), r.getString(2))).toSeq
     val enc = Corpus.bpeEncode(docs, merges)
@@ -410,8 +410,8 @@ object CorpusQueries {
     * instance floor(log2(T/c)) bits via bitlength(T div c) − 1 —
     * `length(bin(x)) − 1` in both engines, so the oracle hash-matches
     * with no libm ln()/log2() anywhere (the documented ulp trap). */
-  private def qTextSurprisal(s: SparkSession, dir: String): DataFrame =
-    Corpus.surprisalScore(Tables(s, dir).documents).orderBy(col("doc_id"))
+  private def qTextSurprisal(t: Tables): DataFrame =
+    Corpus.surprisalScore(t.documents).orderBy(col("doc_id"))
 
   private val qTextSurprisalSql =
     s"""WITH tk AS MATERIALIZED (SELECT doc_id, unnest($tokensSql) AS tok FROM documents),
@@ -426,8 +426,8 @@ object CorpusQueries {
        |FROM sc GROUP BY doc_id ORDER BY doc_id""".stripMargin.replace('\n', ' ')
 
   /** Bigram conditional surprisal — same integer floor-log2 discipline. */
-  private def qTextBigramSurprisal(s: SparkSession, dir: String): DataFrame =
-    Corpus.bigramSurprisalScore(Tables(s, dir).documents).orderBy(col("doc_id"))
+  private def qTextBigramSurprisal(t: Tables): DataFrame =
+    Corpus.bigramSurprisalScore(t.documents).orderBy(col("doc_id"))
 
   private val qTextBigramSurprisalSql =
     s"""WITH bt AS MATERIALIZED (SELECT doc_id, t[CAST(i AS INT)] AS a,
@@ -446,8 +446,8 @@ object CorpusQueries {
 
   /** Hash-priority weighted sample ([[Corpus.weightedSample]]): 50 docs
     * biased toward large n_chars, exact-integer priorities. */
-  private def qSampleWeighted(s: SparkSession, dir: String): DataFrame =
-    Corpus.weightedSample(Tables(s, dir).documents
+  private def qSampleWeighted(t: Tables): DataFrame =
+    Corpus.weightedSample(t.documents
         .select(col("doc_id"), col("source"), col("n_chars")),
       k = 50, weightCol = "n_chars")
 
@@ -460,8 +460,8 @@ object CorpusQueries {
   /** Count-min heavy-hitter estimates for the 10 most frequent tokens
     * ([[graft.functions.Sketches.cmsEstimates]], d=3 w=256): estimate
     * AND exact count side by side, integer-reproducible. */
-  private def qTopkCms(s: SparkSession, dir: String): DataFrame = {
-    val toks = Tables(s, dir).documents
+  private def qTopkCms(t: Tables): DataFrame = {
+    val toks = t.documents
       .select(explode(graft.text.TextFunctions.tokens(col("text"))).as("token"))
     val probes = toks.groupBy(col("token")).agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("token")).limit(10).select(col("token"))
@@ -477,8 +477,8 @@ object CorpusQueries {
   /** Hashed linear quality scorer ([[Corpus.hashedLinearScore]]): the
     * model-scoring pass shape with a bucket-derived stand-in weight
     * table the oracle replays exactly. */
-  private def qQualityClassifier(s: SparkSession, dir: String): DataFrame =
-    Corpus.hashedLinearScore(Tables(s, dir).documents).orderBy(col("doc_id"))
+  private def qQualityClassifier(t: Tables): DataFrame =
+    Corpus.hashedLinearScore(t.documents).orderBy(col("doc_id"))
 
   private val qQualityClassifierSql =
     s"""WITH t AS (SELECT doc_id, unnest($tokensSql) AS tok FROM documents),
@@ -489,8 +489,8 @@ object CorpusQueries {
 
   /** Inverted index ([[Corpus.invertedIndex]]): df-ranked tokens with
     * rank-capped posting previews. */
-  private def qIndexPostings(s: SparkSession, dir: String): DataFrame =
-    Corpus.invertedIndex(Tables(s, dir).documents, topN = 25)
+  private def qIndexPostings(t: Tables): DataFrame =
+    Corpus.invertedIndex(t.documents, topN = 25)
 
   private val qIndexPostingsSql =
     s"""WITH t AS (SELECT DISTINCT doc_id, unnest($tokensSql) AS token FROM documents),
@@ -507,8 +507,8 @@ object CorpusQueries {
   /** α=1/2 temperature mixture weights ([[Corpus.temperatureWeights]]):
     * √ is IEEE-correctly-rounded on both engines, so the floor-scaled
     * weight is hash-safe (unlike ln/exp). */
-  private def qMixTemperature(s: SparkSession, dir: String): DataFrame =
-    Corpus.temperatureWeights(Tables(s, dir).documents).orderBy(col("source"))
+  private def qMixTemperature(t: Tables): DataFrame =
+    Corpus.temperatureWeights(t.documents).orderBy(col("source"))
 
   private val qMixTemperatureSql =
     s"""WITH b AS MATERIALIZED (SELECT source,
@@ -522,8 +522,8 @@ object CorpusQueries {
 
   /** Top-100 bigram collocations by rational PMI (min pair count 5);
     * arithmetic contract in [[graft.pipeline.Corpus.collocations]]. */
-  private def qCollocations(s: SparkSession, dir: String): DataFrame =
-    Corpus.collocations(Tables(s, dir).documents, minCount = 5L, topK = 100)
+  private def qCollocations(t: Tables): DataFrame =
+    Corpus.collocations(t.documents, minCount = 5L, topK = 100)
 
   private val qCollocationsSql =
     s"""WITH toks AS MATERIALIZED (SELECT $tokensSql AS tok FROM documents),
@@ -542,9 +542,9 @@ object CorpusQueries {
   /** Hashing-trick sparse features for every 10th document (bounded
     * output; the operator itself is corpus-wide) — see
     * [[graft.pipeline.Corpus.hashFeatures]]. */
-  private def qFeatureHash(s: SparkSession, dir: String): DataFrame =
+  private def qFeatureHash(t: Tables): DataFrame =
     Corpus.hashFeatures(
-        Tables(s, dir).documents.filter(col("doc_id") % 10 === 0), buckets = 256)
+        t.documents.filter(col("doc_id") % 10 === 0), buckets = 256)
       .orderBy(col("doc_id"), col("bucket"))
 
   private val qFeatureHashSql =
@@ -561,8 +561,8 @@ object CorpusQueries {
     * added/removed/changed/unchanged by content md5. One shuffle on the
     * id; at 100 TB both sides are partitioned snapshot reads and the
     * md5 rides the scan. */
-  private def qSnapshotDiff(s: SparkSession, dir: String): DataFrame = {
-    val d = Tables(s, dir).documents
+  private def qSnapshotDiff(t: Tables): DataFrame = {
+    val d = t.documents
     val old = d.filter(col("doc_id") < 400)
       .select(col("doc_id"), md5(col("text")).as("h_old"))
     val nw = d.filter(col("doc_id") >= 100)
@@ -602,8 +602,8 @@ object CorpusQueries {
     * COMPOSITION (stage order matters: dedup before sampling keeps the
     * sample rate honest). One explode-agg + two hash aggs + one final
     * rollup — no stage materializes an intermediate. */
-  private def qPipelineE2e(s: SparkSession, dir: String): DataFrame = {
-    val d = Tables(s, dir).documents
+  private def qPipelineE2e(t: Tables): DataFrame = {
+    val d = t.documents
     val toks = d.select(col("doc_id"), col("source"), col("text"),
       size(TextFunctions.tokens(col("text"))).cast("long").as("n_tok"),
       size(array_distinct(TextFunctions.tokens(col("text")))).cast("long").as("n_uniq"))
@@ -641,8 +641,8 @@ object CorpusQueries {
     * Zipf, zipf_e6 ≈ constant across ranks. Log-free by construction
     * (the log-log slope is the consumer's; these invariants are
     * hash-exact). One explode-agg + one 20-row window. */
-  private def qTextZipf(s: SparkSession, dir: String): DataFrame = {
-    val toks = Tables(s, dir).documents
+  private def qTextZipf(t: Tables): DataFrame = {
+    val toks = t.documents
       .select(explode(TextFunctions.tokens(col("text"))).as("token"))
       .groupBy(col("token")).agg(count(lit(1)).as("cnt"))
     val w = Window.orderBy(col("cnt").desc, col("token"))
@@ -669,8 +669,8 @@ object CorpusQueries {
     * legomena (types occurring once IN that source), type-token ratio
     * and hapax share — the corpus-linguistics diversity panel, all
     * exact integers (two explode-aggs, map-side combined). */
-  private def qTextHapax(s: SparkSession, dir: String): DataFrame = {
-    val tf = Tables(s, dir).documents
+  private def qTextHapax(t: Tables): DataFrame = {
+    val tf = t.documents
       .select(col("source"), explode(TextFunctions.tokens(col("text"))).as("tok"))
       .groupBy(col("source"), col("tok")).agg(count(lit(1)).as("c"))
     tf.groupBy(col("source"))
@@ -699,8 +699,8 @@ object CorpusQueries {
   /** Token-10-gram duplicated-span rollup per doc (docs sharing any
     * 10-token window with another doc). Both engines key on the same
     * 60-bit md5 gram fingerprint. */
-  private def qDedupSpans(s: SparkSession, dir: String): DataFrame =
-    Corpus.dupSpans(Tables(s, dir).documents, n = 10).orderBy(col("doc_id"))
+  private def qDedupSpans(t: Tables): DataFrame =
+    Corpus.dupSpans(t.documents, n = 10).orderBy(col("doc_id"))
 
   private val qDedupSpansSql =
     s"""WITH t AS MATERIALIZED (SELECT doc_id, $tokensSql AS tok FROM documents),
@@ -720,8 +720,8 @@ object CorpusQueries {
   /** Span-cut accounting: tokens covered by any duplicated 10-window,
     * kept fraction per doc — the excision size report completing the
     * q_dedup_spans detect pass. */
-  private def qDedupSpansCut(s: SparkSession, dir: String): DataFrame =
-    Corpus.dupSpanCut(Tables(s, dir).documents, n = 10).orderBy(col("doc_id"))
+  private def qDedupSpansCut(t: Tables): DataFrame =
+    Corpus.dupSpanCut(t.documents, n = 10).orderBy(col("doc_id"))
 
   private val qDedupSpansCutSql =
     s"""WITH t AS MATERIALIZED (SELECT doc_id, $tokensSql AS tok FROM documents),
@@ -745,8 +745,8 @@ object CorpusQueries {
 
   /** Gopher rule panel: per-rule integer flags + conjunction. Pure
     * projection in both engines (no shuffle on the Spark side). */
-  private def qQualityGopher(s: SparkSession, dir: String): DataFrame =
-    Corpus.gopherRules(Tables(s, dir).documents).orderBy(col("doc_id"))
+  private def qQualityGopher(t: Tables): DataFrame =
+    Corpus.gopherRules(t.documents).orderBy(col("doc_id"))
 
   private val qQualityGopherSql =
     s"""WITH t AS (SELECT doc_id, $tokensSql AS tok FROM documents),
@@ -767,8 +767,8 @@ object CorpusQueries {
 
   /** Per-source diversity panel: floor-log2 Shannon entropy + top-token
     * concentration, exact integers (the mixing-config input). */
-  private def qTextEntropy(s: SparkSession, dir: String): DataFrame =
-    Corpus.entropyPanel(Tables(s, dir).documents).orderBy(col("source"))
+  private def qTextEntropy(t: Tables): DataFrame =
+    Corpus.entropyPanel(t.documents).orderBy(col("source"))
 
   private val qTextEntropySql =
     s"""WITH tk AS MATERIALIZED (SELECT source, unnest($tokensSql) AS tok FROM documents),
@@ -785,12 +785,12 @@ object CorpusQueries {
   /** Token burstiness panel: for the 20 highest-cf tokens, collection
     * frequency vs document frequency and the per-doc dispersion ratio —
     * separates evenly-spread function words from bursty topical terms. */
-  private def qTextBurstiness(s: SparkSession, dir: String): DataFrame = {
-    val tf = Tables(s, dir).documents
+  private def qTextBurstiness(t: Tables): DataFrame = {
+    val tf = t.documents
       .select(col("doc_id"), explode(TextFunctions.tokens(col("text"))).as("tok"))
       .groupBy(col("tok")).agg(count(lit(1)).as("cf"),
         countDistinct(col("doc_id")).as("df"))
-    val n = Tables(s, dir).documents.count()
+    val n = t.documents.count()
     tf.select(col("tok"), col("cf"), col("df"),
         expr(s"(df * 1000000) div $n").as("doc_share_e6"),
         expr("(cf * 1000000) div df").as("dispersion_e6"))
@@ -808,8 +808,8 @@ object CorpusQueries {
 
   /** RAKE-shaped keyword panel: window-±2 co-occurrence degree over
     * frequency, top 20 — exact integers. */
-  private def qTextRake(s: SparkSession, dir: String): DataFrame =
-    Corpus.rakeKeywords(Tables(s, dir).documents, window = 2, topK = 20)
+  private def qTextRake(t: Tables): DataFrame =
+    Corpus.rakeKeywords(t.documents, window = 2, topK = 20)
 
   private val qTextRakeSql =
     s"""WITH tk AS MATERIALIZED (SELECT doc_id, CAST(u.i - 1 AS BIGINT) AS p,
@@ -830,8 +830,8 @@ object CorpusQueries {
   /** DSIR-shaped selection scores against the English-target slice:
     * hashed-unigram (64-bucket) smoothed frequency ratios, per-doc mean.
     * Exact e6 integers end to end. */
-  private def qDsirScores(s: SparkSession, dir: String): DataFrame =
-    Corpus.dsirScores(Tables(s, dir).documents, col("lang") === "en")
+  private def qDsirScores(t: Tables): DataFrame =
+    Corpus.dsirScores(t.documents, col("lang") === "en")
       .orderBy(col("doc_id"))
 
   private val qDsirScoresSql =
@@ -855,8 +855,8 @@ object CorpusQueries {
   /** Luhn checksum scan over planted 16-digit runs (every 7th doc gets
     * its zero-padded doc_id as a card-shaped number — validity then
     * varies by doc_id, exercising both checksum branches). */
-  private def qPiiLuhn(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables(s, dir).documents.select(col("doc_id"),
+  private def qPiiLuhn(t: Tables): DataFrame = {
+    val docs = t.documents.select(col("doc_id"),
       when(pmod(col("doc_id"), lit(7L)) === 0,
         concat(col("text"), lit(" card "),
           lpad(col("doc_id").cast("string"), 16, "0")))
@@ -882,77 +882,40 @@ object CorpusQueries {
 
   // --- registry ---------------------------------------------------------
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_text_repetition"   -> (qTextRepetition _),
-    "q_text_tfidf"        -> (qTfidf _),
-    "q_vocab_top"         -> (qVocab _),
-    "q_sample_stratified" -> (qSampleStratified _),
-    "q_sample_topk"       -> (qSampleTopK _),
-    "q_pii_scrub"         -> (qPiiScrub _),
-    "q_pack_chunks"       -> (qPackChunks _),
-    "q_mix_stats"         -> (qMixStats _),
-    "q_contamination"     -> (qContamination _),
-    "q_quality_filter"    -> (qQualityFilter _),
-    "q_text_surprisal"    -> (qTextSurprisal _),
-    "q_bpe_train"         -> (qBpeTrain _),
-    "q_bpe_encode"        -> (qBpeEncode _),
-    "q_bpe_fertility"     -> (qBpeFertility _),
-    "q_text_bigram_surprisal" -> (qTextBigramSurprisal _),
-    "q_text_markup"       -> (qTextMarkup _),
-    "q_sample_weighted"   -> (qSampleWeighted _),
-    "q_topk_cms"          -> (qTopkCms _),
-    "q_quality_classifier" -> (qQualityClassifier _),
-    "q_index_postings"    -> (qIndexPostings _),
-    "q_mix_temperature"   -> (qMixTemperature _),
-    "q_text_pmi"          -> (qCollocations _),
-    "q_feature_hash"      -> (qFeatureHash _),
-    "q_snapshot_diff"     -> (qSnapshotDiff _),
-    "q_pipeline_e2e"      -> (qPipelineE2e _),
-    "q_text_zipf"         -> (qTextZipf _),
-    "q_text_hapax"        -> (qTextHapax _),
-    "q_dedup_spans"       -> (qDedupSpans _),
-    "q_quality_gopher"    -> (qQualityGopher _),
-    "q_dsir_scores"       -> (qDsirScores _),
-    "q_pii_luhn"          -> (qPiiLuhn _),
-    "q_dedup_spans_cut"   -> (qDedupSpansCut _),
-    "q_text_entropy"      -> (qTextEntropy _),
-    "q_text_burstiness"   -> (qTextBurstiness _),
-    "q_text_rake"         -> (qTextRake _))
-
-  val oracles: Map[String, String] = Map(
-    "q_text_repetition"   -> qTextRepetitionSql,
-    "q_text_tfidf"        -> qTfidfSql,
-    "q_vocab_top"         -> qVocabSql,
-    "q_sample_stratified" -> qSampleStratifiedSql,
-    "q_sample_topk"       -> qSampleTopKSql,
-    "q_pii_scrub"         -> qPiiScrubSql,
-    "q_pack_chunks"       -> qPackChunksSql,
-    "q_mix_stats"         -> qMixStatsSql,
-    "q_contamination"     -> qContaminationSql,
-    "q_quality_filter"    -> qQualityFilterSql,
-    "q_text_surprisal"    -> qTextSurprisalSql,
-    "q_bpe_train"         -> qBpeTrainSql,
-    "q_bpe_encode"        -> qBpeEncodeSql,
-    "q_bpe_fertility"     -> qBpeFertilitySql,
-    "q_text_bigram_surprisal" -> qTextBigramSurprisalSql,
-    "q_text_markup"       -> qTextMarkupSql,
-    "q_sample_weighted"   -> qSampleWeightedSql,
-    "q_topk_cms"          -> qTopkCmsSql,
-    "q_quality_classifier" -> qQualityClassifierSql,
-    "q_index_postings"    -> qIndexPostingsSql,
-    "q_mix_temperature"   -> qMixTemperatureSql,
-    "q_text_pmi"          -> qCollocationsSql,
-    "q_feature_hash"      -> qFeatureHashSql,
-    "q_snapshot_diff"     -> qSnapshotDiffSql,
-    "q_pipeline_e2e"      -> qPipelineE2eSql,
-    "q_text_zipf"         -> qTextZipfSql,
-    "q_text_hapax"        -> qTextHapaxSql,
-    "q_dedup_spans"       -> qDedupSpansSql,
-    "q_quality_gopher"    -> qQualityGopherSql,
-    "q_dsir_scores"       -> qDsirScoresSql,
-    "q_pii_luhn"          -> qPiiLuhnSql,
-    "q_dedup_spans_cut"   -> qDedupSpansCutSql,
-    "q_text_entropy"      -> qTextEntropySql,
-    "q_text_burstiness"   -> qTextBurstinessSql,
-    "q_text_rake"         -> qTextRakeSql)
+  val queries: Seq[Query] = Seq(
+    Query("q_text_repetition", qTextRepetition, qTextRepetitionSql),
+    Query("q_text_tfidf", qTfidf, qTfidfSql),
+    Query("q_vocab_top", qVocab, qVocabSql),
+    Query("q_sample_stratified", qSampleStratified, qSampleStratifiedSql),
+    Query("q_sample_topk", qSampleTopK, qSampleTopKSql),
+    Query("q_pii_scrub", qPiiScrub, qPiiScrubSql),
+    Query("q_pack_chunks", qPackChunks, qPackChunksSql),
+    Query("q_mix_stats", qMixStats, qMixStatsSql),
+    Query("q_contamination", qContamination, qContaminationSql),
+    Query("q_quality_filter", qQualityFilter, qQualityFilterSql),
+    Query("q_text_surprisal", qTextSurprisal, qTextSurprisalSql),
+    Query("q_bpe_train", qBpeTrain, qBpeTrainSql),
+    Query("q_bpe_encode", qBpeEncode, qBpeEncodeSql),
+    Query("q_bpe_fertility", qBpeFertility, qBpeFertilitySql),
+    Query("q_text_bigram_surprisal", qTextBigramSurprisal, qTextBigramSurprisalSql),
+    Query("q_text_markup", qTextMarkup, qTextMarkupSql),
+    Query("q_sample_weighted", qSampleWeighted, qSampleWeightedSql),
+    Query("q_topk_cms", qTopkCms, qTopkCmsSql),
+    Query("q_quality_classifier", qQualityClassifier, qQualityClassifierSql),
+    Query("q_index_postings", qIndexPostings, qIndexPostingsSql),
+    Query("q_mix_temperature", qMixTemperature, qMixTemperatureSql),
+    Query("q_text_pmi", qCollocations, qCollocationsSql),
+    Query("q_feature_hash", qFeatureHash, qFeatureHashSql),
+    Query("q_snapshot_diff", qSnapshotDiff, qSnapshotDiffSql),
+    Query("q_pipeline_e2e", qPipelineE2e, qPipelineE2eSql),
+    Query("q_text_zipf", qTextZipf, qTextZipfSql),
+    Query("q_text_hapax", qTextHapax, qTextHapaxSql),
+    Query("q_dedup_spans", qDedupSpans, qDedupSpansSql),
+    Query("q_quality_gopher", qQualityGopher, qQualityGopherSql),
+    Query("q_dsir_scores", qDsirScores, qDsirScoresSql),
+    Query("q_pii_luhn", qPiiLuhn, qPiiLuhnSql),
+    Query("q_dedup_spans_cut", qDedupSpansCut, qDedupSpansCutSql),
+    Query("q_text_entropy", qTextEntropy, qTextEntropySql),
+    Query("q_text_burstiness", qTextBurstiness, qTextBurstinessSql),
+    Query("q_text_rake", qTextRake, qTextRakeSql))
 }

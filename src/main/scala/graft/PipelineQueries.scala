@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.CheckpointBridge.owned
 
@@ -25,8 +25,8 @@ object PipelineQueries {
 
   // text analysis -------------------------------------------------------
 
-  private def qTextStats(s: SparkSession, dir: String): DataFrame = {
-    val d = Tables(s, dir).documents
+  private def qTextStats(t: Tables): DataFrame = {
+    val d = t.documents
     d.select(col("doc_id"),
         tokenCount(col("text")).as("n_tokens"),
         uniqueTokenCount(col("text")).as("n_uniq"),
@@ -45,8 +45,8 @@ object PipelineQueries {
 
   private val stopWords = Seq("the", "a", "of", "to", "in", "and", "is")
 
-  private def qTextBpe(s: SparkSession, dir: String): DataFrame = {
-    val d = Tables(s, dir).documents
+  private def qTextBpe(t: Tables): DataFrame = {
+    val d = t.documents
     d.select(col("doc_id"),
         tokenCount(col("text")).as("ws_tokens"),
         bpeishTokenCount(col("text")).as("bpe_tokens"),
@@ -61,8 +61,8 @@ object PipelineQueries {
        |CAST(len(regexp_extract_all(text, '[^A-Za-z0-9\\s]')) AS BIGINT) AS punct_cnt
        |FROM documents ORDER BY doc_id""".stripMargin.replace('\n', ' ')
 
-  private def qTextQuality(s: SparkSession, dir: String): DataFrame = {
-    val d = Tables(s, dir).documents
+  private def qTextQuality(t: Tables): DataFrame = {
+    val d = t.documents
     d.select(col("doc_id"),
         wordHits(col("text"), stopWords).as("n_stop"),
         tokenCount(col("text")).as("n_tokens"),
@@ -86,8 +86,8 @@ object PipelineQueries {
        |FROM b ORDER BY doc_id""".stripMargin.replace('\n', ' ')
   }
 
-  private def qTextLangid(s: SparkSession, dir: String): DataFrame = {
-    val d = Tables(s, dir).documents
+  private def qTextLangid(t: Tables): DataFrame = {
+    val d = t.documents
     val hits = langProfiles.map { case (name, ws) => wordHits(col("text"), ws).as(s"s_$name") }
     d.select((col("doc_id") +: hits): _*)
       .withColumn("pred_lang",
@@ -115,8 +115,8 @@ object PipelineQueries {
     * the out-of-profile failure mode: a 3-class heuristic must put them
     * somewhere). cnt + per-truth-row share; one groupBy over the
     * codegen'd signal projection. */
-  private def qLangConfusion(s: SparkSession, dir: String): DataFrame = {
-    val d = Tables(s, dir).documents
+  private def qLangConfusion(t: Tables): DataFrame = {
+    val d = t.documents
     val hits = langProfiles.map { case (name, ws) => wordHits(col("text"), ws).as(s"s_$name") }
     d.select((col("doc_id") +: col("lang") +: hits): _*)
       .withColumn("pred_lang",
@@ -146,8 +146,8 @@ object PipelineQueries {
        |FROM g ORDER BY lang, pred_lang""".stripMargin.replace('\n', ' ')
   }
 
-  private def qTextFingerprint(s: SparkSession, dir: String): DataFrame = {
-    val d = Tables(s, dir).documents
+  private def qTextFingerprint(t: Tables): DataFrame = {
+    val d = t.documents
     d.select(col("doc_id"), shingleSet(col("text"), 8).as("sh"))
       .select(col("doc_id"),
         fingerprintMin(col("sh")).as("fp_min"),
@@ -166,16 +166,16 @@ object PipelineQueries {
 
   // dedup family --------------------------------------------------------
 
-  private def qDedupExact(s: SparkSession, dir: String): DataFrame =
-    Dedup.exactClusters(Tables(s, dir).documents).orderBy(col("canonical"))
+  private def qDedupExact(t: Tables): DataFrame =
+    Dedup.exactClusters(t.documents).orderBy(col("canonical"))
 
   private val qDedupExactSql =
     """SELECT md5(lower(regexp_replace(trim(text), '\s+', ' ', 'g'))) AS h,
       |COUNT(*) AS dup_cnt, MIN(doc_id) AS canonical
       |FROM documents GROUP BY 1 ORDER BY canonical""".stripMargin.replace('\n', ' ')
 
-  private def qDedupMinhash(s: SparkSession, dir: String): DataFrame =
-    Dedup.minhashDupPairs(Tables(s, dir).documents)
+  private def qDedupMinhash(t: Tables): DataFrame =
+    Dedup.minhashDupPairs(t.documents)
 
   /** DuckDB twin of TextFunctions.hashPool + minhashFromPool (4 seeded
     * md5s per shingle, each split into four independent 8-hex words;
@@ -216,8 +216,8 @@ object PipelineQueries {
     * the increment (doc_id < 20) probes it. Spark exercises the real
     * write→read→probe cycle; the oracle replays the same split banding
     * logically. */
-  private def qDedupIncremental(s: SparkSession, dir: String): DataFrame = {
-    val d = Tables(s, dir).documents
+  private def qDedupIncremental(t: Tables): DataFrame = {
+    val d = t.documents
     val path = java.nio.file.Files.createTempDirectory("graft_sigidx")
     // the probe frame reads `path` lazily, so the earliest safe delete is
     // JVM exit — recursive (deleteOnExit can't remove non-empty dirs);
@@ -245,8 +245,8 @@ object PipelineQueries {
        |FROM ijx WHERE inter / (la + lb - inter) >= 0.3
        |ORDER BY new_id, idx_id""".stripMargin.replace('\n', ' ')
 
-  private def qDedupSimhash(s: SparkSession, dir: String): DataFrame =
-    Dedup.simhashFingerprints(Tables(s, dir).documents).orderBy(col("doc_id"))
+  private def qDedupSimhash(t: Tables): DataFrame =
+    Dedup.simhashFingerprints(t.documents).orderBy(col("doc_id"))
 
   /** SQL twin of TextFunctions.simhash32 over a shingle-set column `sh`. */
   private val simhashExprSql =
@@ -260,8 +260,8 @@ object PipelineQueries {
        |SELECT doc_id, $simhashExprSql AS simhash
        |FROM b ORDER BY doc_id""".stripMargin.replace('\n', ' ')
 
-  private def qDedupSimhashPairs(s: SparkSession, dir: String): DataFrame =
-    Dedup.simhashDupPairs(Tables(s, dir).documents)
+  private def qDedupSimhashPairs(t: Tables): DataFrame =
+    Dedup.simhashDupPairs(t.documents)
 
   /** DuckDB twin of graft.functions.Simhash at width 60: bit j = majority
     * (count·2 ≥ n) of bit j%4 of the VALUE of md5 hex digit ⌊j/4⌋. */
@@ -288,9 +288,9 @@ object PipelineQueries {
   /** Transitive dup clusters over the MinHash near-dup pair graph (the
     * actionable final step of a dedup pass: min-id survivor per cluster).
     * Oracle = the shared pair CTEs + a min-label-propagation unroll. */
-  private def qDedupClusters(s: SparkSession, dir: String): DataFrame = owned { o =>
+  private def qDedupClusters(t: Tables): DataFrame = owned { o =>
     Dedup.dupClusters(
-      o(Dedup.minhashDupPairs(Tables(s, dir).documents)).select(col("a"), col("b")))
+      o(Dedup.minhashDupPairs(t.documents)).select(col("a"), col("b")))
       .orderBy(col("id"))
   }
 
@@ -305,8 +305,8 @@ object PipelineQueries {
     * multi-member cluster ([[graft.dedup.Dedup.keepBestPerCluster]],
     * score = n_chars, max-id tiebreak) — the quality-aware alternative to
     * min-id survival. */
-  private def qDedupKeepBest(s: SparkSession, dir: String): DataFrame = owned { o =>
-    val docs = Tables(s, dir).documents
+  private def qDedupKeepBest(t: Tables): DataFrame = owned { o =>
+    val docs = t.documents
     Dedup.keepBestPerCluster(docs,
       o(Dedup.minhashDupPairs(docs)).select(col("a"), col("b")))
   }
@@ -321,10 +321,10 @@ object PipelineQueries {
        |FROM r WHERE rn = 1 AND n_members >= 2 ORDER BY cluster""".stripMargin.replace('\n', ' ')
 
   /** The dedup action: corpus minus non-canonical cluster members. */
-  private def qDedupFiltered(s: SparkSession, dir: String): DataFrame = owned { o =>
+  private def qDedupFiltered(t: Tables): DataFrame = owned { o =>
     Dedup.dropDuplicateDocs(
-      Tables(s, dir).documents.select(col("doc_id"), col("source")),
-      o(Dedup.minhashDupPairs(Tables(s, dir).documents)).select(col("a"), col("b")))
+      t.documents.select(col("doc_id"), col("source")),
+      o(Dedup.minhashDupPairs(t.documents)).select(col("a"), col("b")))
       .orderBy(col("doc_id"))
   }
 
@@ -341,8 +341,8 @@ object PipelineQueries {
     * can compute the boundary set per position and chunk by slicing. A
     * hash match therefore proves the kernel walked the same boundaries
     * and hashed the same substrings. */
-  private def qDedupCdc(s: SparkSession, dir: String): DataFrame =
-    Dedup.cdcDupPairs(Tables(s, dir).documents, threshold = 0.5)
+  private def qDedupCdc(t: Tables): DataFrame =
+    Dedup.cdcDupPairs(t.documents, threshold = 0.5)
 
   private val qDedupCdcSql = {
     // h(i) = Σ_{j<4} ascii(t[i−j])·31^j — the kernel's rolling hash
@@ -375,8 +375,8 @@ object PipelineQueries {
        |ORDER BY a, b""".stripMargin.replace('\n', ' ')
   }
 
-  private def qDedupNgram(s: SparkSession, dir: String): DataFrame =
-    Dedup.ngramDupPairs(Tables(s, dir).documents)
+  private def qDedupNgram(t: Tables): DataFrame =
+    Dedup.ngramDupPairs(t.documents)
 
   private val qDedupNgramSql =
     s"""WITH tri AS MATERIALIZED (SELECT doc_id, source AS blk,
@@ -413,8 +413,8 @@ object PipelineQueries {
     * (1−r/2)/√(1−3r/4) over r = x₀²/‖x‖² ∈ [0,1]), and the perturbation
     * genuinely exercises LSH recall — sign bits CAN flip, so the clone is
     * found via band agreement, not via trivially-identical buckets. */
-  private def qDedupEmb(s: SparkSession, dir: String): DataFrame = {
-    val base = Tables(s, dir).embeddings.select(col("vec_id"), col("embedding"))
+  private def qDedupEmb(t: Tables): DataFrame = {
+    val base = t.embeddings.select(col("vec_id"), col("embedding"))
     val planted = base.filter(col("vec_id") < 3).select(
       (col("vec_id") + lit(1000000L)).as("vec_id"),
       transform(col("embedding"), (x, i) =>
@@ -460,8 +460,8 @@ object PipelineQueries {
   /** Exact Jaccard ≥ 0.8 similarity join over 8-char shingle sets via
     * prefix filtering — the exact-verification counterpart of
     * q_dedup_minhash (no LSH false negatives). */
-  private def qJaccardJoin(s: SparkSession, dir: String): DataFrame = {
-    val d = Tables(s, dir).documents
+  private def qJaccardJoin(t: Tables): DataFrame = {
+    val d = t.documents
     Dedup.jaccardJoin(
       d.select(col("doc_id"), shingleSet(col("text"), 8).as("items")),
       thresholdPct = 80)
@@ -495,8 +495,8 @@ object PipelineQueries {
     emb.filter(col("vec_id") < 5)
       .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
 
-  private def qAnnBrute(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables(s, dir).embeddings
+  private def qAnnBrute(t: Tables): DataFrame = {
+    val emb = t.embeddings
     Similarity.bruteTopK(emb.select(col("vec_id"), col("embedding")), queriesOf(emb), 10)
   }
 
@@ -504,8 +504,8 @@ object PipelineQueries {
     * rank, exact rescore of the top k·4. Oracle replays the identical
     * train→encode→dequantize→rank→rescore chain (all FLOOR-pinned,
     * index-ordered list sums). */
-  private def qAnnSq(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables(s, dir).embeddings
+  private def qAnnSq(t: Tables): DataFrame = {
+    val emb = t.embeddings
     Similarity.sqTopK(emb.select(col("vec_id"), col("embedding")), queriesOf(emb), 10)
   }
 
@@ -548,8 +548,8 @@ object PipelineQueries {
     * examples are exactly what a retrieval trainer wants as negatives).
     * Same broadcast-scan shape with one extra label inequality in the
     * join predicate. */
-  private def qAnnHardneg(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables(s, dir).embeddings
+  private def qAnnHardneg(t: Tables): DataFrame = {
+    val emb = t.embeddings
     val q = emb.filter(col("vec_id") < 5)
       .select(col("vec_id").as("q_id"), col("embedding").as("qv"),
         col("label").as("qlabel"))
@@ -580,8 +580,8 @@ object PipelineQueries {
     * (zero/exploded embeddings) an index build should run first. Reuses
     * [[graft.operators.Quantiles.exactScaled]] (the q_outliers shape on
     * a derived integral feature). */
-  private def qEmbOutliers(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables(s, dir).embeddings
+  private def qEmbOutliers(t: Tables): DataFrame = {
+    val emb = t.embeddings
     val norms = emb.select(col("vec_id"), col("label"),
         explode(transform(col("embedding"),
           x => floor(x.cast("double") * lit(16384.0)).cast("long"))).as("q"))
@@ -628,8 +628,8 @@ object PipelineQueries {
        |GROUP BY 1, 2, 3, 4, 5 ORDER BY label""".stripMargin.replace('\n', ' ')
   }
 
-  private def qAnnIvf(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables(s, dir).embeddings
+  private def qAnnIvf(t: Tables): DataFrame = {
+    val emb = t.embeddings
     Similarity.ivfTopK(emb, queriesOf(emb), k = 5, nprobe = 2)
   }
 
@@ -639,8 +639,8 @@ object PipelineQueries {
        |/ (sqrt(list_sum(list_transform(range(1, ${d + 1}), i -> CAST($x[i] AS DOUBLE) * CAST($x[i] AS DOUBLE))))
        |* sqrt(list_sum(list_transform(range(1, ${d + 1}), i -> CAST($y[i] AS DOUBLE) * CAST($y[i] AS DOUBLE))))))""".stripMargin.replace('\n', ' ')
 
-  private def qAnnMatryoshka(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables(s, dir).embeddings
+  private def qAnnMatryoshka(t: Tables): DataFrame = {
+    val emb = t.embeddings
     Similarity.matryoshkaOverlap(emb.select(col("vec_id"), col("embedding")),
       queriesOf(emb), dims = Seq(8, 16, 32), fullDim = 64, k = 10)
   }
@@ -664,8 +664,8 @@ object PipelineQueries {
        |SELECT dim, q_id, overlap FROM ($ovs) z ORDER BY dim, q_id""".stripMargin.replace('\n', ' ')
   }
 
-  private def qKnnGraph(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables(s, dir).embeddings
+  private def qKnnGraph(t: Tables): DataFrame = {
+    val emb = t.embeddings
     Similarity.knnGraph(emb, k = 3, sampleMod = 20L)
   }
 
@@ -704,8 +704,8 @@ object PipelineQueries {
     * from the probes, row-group pushdown from the predicate. Oracle
     * replays probe→filter→rank logically (q_ann_ivf's chain + the
     * predicate). */
-  private def qAnnFiltered(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables(s, dir).embeddings
+  private def qAnnFiltered(t: Tables): DataFrame = {
+    val emb = t.embeddings
     val path = java.nio.file.Files.createTempDirectory("graft_ivfidx_f")
     sys.addShutdownHook {
       import scala.jdk.CollectionConverters._
@@ -714,7 +714,7 @@ object PipelineQueries {
     }
     Similarity.writeIvfIndex(emb.select(col("vec_id"), col("embedding")),
       emb.select(col("vec_id"), col("label").as("cluster")), path.toString)
-    Similarity.ivfIndexFilteredTopK(s, path.toString, queriesOf(emb),
+    Similarity.ivfIndexFilteredTopK(t.spark, path.toString, queriesOf(emb),
       k = 5, nprobe = 2, predicate = col("vec_id") <= 300)
   }
 
@@ -742,8 +742,8 @@ object PipelineQueries {
     * 2 iterations, seeds = 8 lowest vec_ids) assigns every vector, then
     * ivfTopK probes the 2 nearest trained centroids per query. The
     * oracle unrolls the identical assign/update chain. */
-  private def qAnnIvfTrained(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables(s, dir).embeddings
+  private def qAnnIvfTrained(t: Tables): DataFrame = {
+    val emb = t.embeddings
     val assigned = Similarity.kmeansAssign(
       emb.select(col("vec_id"), col("embedding")), k = 8, iters = 2)
     val corpus = emb.select(col("vec_id"), col("embedding")).join(assigned, Seq("vec_id"))
@@ -797,16 +797,16 @@ object PipelineQueries {
     * cluster-scoped pair join — a planted clone is found only if the
     * k-means blocking lands it next to its original, so the query proves
     * the SemDeDup recall mechanism, not just the cosine kernel. */
-  private def qSemDedup(s: SparkSession, dir: String): DataFrame =
-    Similarity.semanticDupPairs(semCorpus(Tables(s, dir).embeddings),
+  private def qSemDedup(t: Tables): DataFrame =
+    Similarity.semanticDupPairs(semCorpus(t.embeddings),
       k = 8, iters = 1, thresholdE4 = 9000L)
 
   /** SemDeDup keep-list: transitive closure over the semantic pairs
     * (WCC, min-id canonical — [[graft.dedup.Dedup.dupClusters]]); the
     * oracle closes the same pair set with unrolled min-label
     * propagation. */
-  private def qSemDedupKeep(s: SparkSession, dir: String): DataFrame = owned { o =>
-    Dedup.dupClusters(o(qSemDedup(s, dir)).select(col("a"), col("b")))
+  private def qSemDedupKeep(t: Tables): DataFrame = owned { o =>
+    Dedup.dupClusters(o(qSemDedup(t)).select(col("a"), col("b")))
       .orderBy(col("id"))
   }
 
@@ -852,8 +852,8 @@ object PipelineQueries {
     * reconstructed vectors, exact rescore of the top k·4. The oracle
     * replays the ENTIRE chain — 4 independent sub-space k-means runs,
     * codebook means, reconstruction, rank, rescore — all FLOOR-pinned. */
-  private def qAnnPq(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables(s, dir).embeddings
+  private def qAnnPq(t: Tables): DataFrame = {
+    val emb = t.embeddings
     Similarity.pqTopK(emb.select(col("vec_id"), col("embedding")), queriesOf(emb), k = 10)
   }
 
@@ -910,8 +910,8 @@ object PipelineQueries {
 
   /** LSH-bucketed ANN over the raw embeddings: same hyperplane index as
     * the embedding dedup, candidates = any-band bucket collision. */
-  private def qAnnLsh(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables(s, dir).embeddings
+  private def qAnnLsh(t: Tables): DataFrame = {
+    val emb = t.embeddings
     Similarity.lshTopK(emb.select(col("vec_id"), col("embedding")), queriesOf(emb), k = 10)
   }
 
@@ -945,8 +945,8 @@ object PipelineQueries {
     * oracle constructs the identical payload but takes width/height from
     * the construction formula — so a hash match proves the parser reads
     * the header correctly (bytes, md5, and all three parsed fields). */
-  private def qMultimodalMeta(s: SparkSession, dir: String): DataFrame =
-    Multimodal.decodeMeta(Multimodal.documentsAsPpm(Tables(s, dir).documents))
+  private def qMultimodalMeta(t: Tables): DataFrame =
+    Multimodal.decodeMeta(Multimodal.documentsAsPpm(t.documents))
       .toDF().orderBy(col("doc_id"))
 
   private val qMultimodalMetaSql =
@@ -965,8 +965,8 @@ object PipelineQueries {
     * formulas, parsed back by the chunk-walking reader; the oracle
     * replays the formulas (docs % 3 == 0 carry a junk LIST chunk, so a
     * fixed-offset "parser" would fail them). */
-  private def qMultimodalWav(s: SparkSession, dir: String): DataFrame =
-    Multimodal.decodeWavMeta(Multimodal.documentsAsWav(Tables(s, dir).documents))
+  private def qMultimodalWav(t: Tables): DataFrame =
+    Multimodal.decodeWavMeta(Multimodal.documentsAsWav(t.documents))
       .toDF().orderBy(col("doc_id"))
 
   private val qMultimodalWavSql =
@@ -986,9 +986,9 @@ object PipelineQueries {
   /** Video frame sampling: every 2nd frame of a concatenated-PPM
     * container; the walker's parsed (w, h) and byte offsets must equal
     * the construction formulas' running totals. */
-  private def qMultimodalFrames(s: SparkSession, dir: String): DataFrame =
+  private def qMultimodalFrames(t: Tables): DataFrame =
     Multimodal.sampleVideoFrames(
-      Multimodal.documentsAsVideo(Tables(s, dir).documents), stride = 2)
+      Multimodal.documentsAsVideo(t.documents), stride = 2)
       .orderBy(col("doc_id"), col("frame_idx"))
 
   private val qMultimodalFramesSql =
@@ -1009,8 +1009,8 @@ object PipelineQueries {
     * the document's (pure-ASCII) text bytes, so the oracle can compute
     * the same stats from the characters — matching only if the parser
     * skipped exactly the real header. */
-  private def qMultimodalPixstats(s: SparkSession, dir: String): DataFrame =
-    Multimodal.pixelStats(Multimodal.documentsAsPpm(Tables(s, dir).documents))
+  private def qMultimodalPixstats(t: Tables): DataFrame =
+    Multimodal.pixelStats(Multimodal.documentsAsPpm(t.documents))
       .toDF().orderBy(col("doc_id"))
 
   // LEFT JOIN back onto documents: an empty text unnests to zero rows
@@ -1034,12 +1034,12 @@ object PipelineQueries {
     * rule, so the oracle recomputes the hash from the text bytes (the
     * pixstats pure-ASCII fixture contract). Sentinels replayed via the
     * same LEFT JOIN + COALESCE discipline as q_multimodal_pixstats. */
-  private def qMultimodalAhash(s: SparkSession, dir: String): DataFrame =
-    Multimodal.averageHash(Multimodal.documentsAsPpm(Tables(s, dir).documents))
+  private def qMultimodalAhash(t: Tables): DataFrame =
+    Multimodal.averageHash(Multimodal.documentsAsPpm(t.documents))
       .toDF().orderBy(col("doc_id"))
 
-  private def qMultimodalPhash(s: SparkSession, dir: String): DataFrame =
-    Multimodal.perceptualHash(Multimodal.documentsAsPpm(Tables(s, dir).documents))
+  private def qMultimodalPhash(t: Tables): DataFrame =
+    Multimodal.perceptualHash(Multimodal.documentsAsPpm(t.documents))
       .toDF().orderBy(col("doc_id"))
 
   /** The DCT kernel literals come from the SAME class-init table the
@@ -1099,8 +1099,8 @@ object PipelineQueries {
     * decode → hash → band-join → verify, never all-pairs. (Natural
     * minimum hamming in this corpus is 8 — threshold 11 keeps the 4
     * genuinely most-similar image pairs.) */
-  private def qMultimodalAhashPairs(s: SparkSession, dir: String): DataFrame = {
-    val h = Multimodal.averageHash(Multimodal.documentsAsPpm(Tables(s, dir).documents))
+  private def qMultimodalAhashPairs(t: Tables): DataFrame = {
+    val h = Multimodal.averageHash(Multimodal.documentsAsPpm(t.documents))
       .toDF().filter(col("ahash") >= 0)
     val bands = h.select(col("doc_id"), col("ahash"),
         explode(expr("sequence(0, 11)")).as("band"))
@@ -1134,8 +1134,8 @@ object PipelineQueries {
     * bytes at the offset the chunk walker found — a match proves the
     * reader walked to the true data chunk and interpreted 8-bit
     * unsigned / 16-bit signed LE samples correctly. */
-  private def qMultimodalEnergy(s: SparkSession, dir: String): DataFrame =
-    Multimodal.wavSampleStats(Multimodal.documentsAsWav(Tables(s, dir).documents))
+  private def qMultimodalEnergy(t: Tables): DataFrame =
+    Multimodal.wavSampleStats(Multimodal.documentsAsWav(t.documents))
       .toDF().orderBy(col("doc_id"))
 
   private val qMultimodalEnergySql =
@@ -1157,8 +1157,7 @@ object PipelineQueries {
     * (FormatsSpec asserts the PartitionFilters), aggregated per day.
     * The oracle replays the aggregate straight off the source table, so
     * a hash match proves the write→prune→read cycle is lossless. */
-  private def qPartitionedWrite(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qPartitionedWrite(t: Tables): DataFrame = {
     val path = java.nio.file.Files.createTempDirectory("graft_warehouse")
     sys.addShutdownHook {
       import scala.jdk.CollectionConverters._
@@ -1169,7 +1168,7 @@ object PipelineQueries {
       col("event_type"), col("value"),
       expr("ts div 86400000000").as("day"))
     graft.io.PartitionedStore.write(ev, path.toString, Seq("event_type", "day"))
-    graft.io.PartitionedStore.read(s, path.toString)
+    graft.io.PartitionedStore.read(t.spark, path.toString)
       .filter(col("event_type") === "purchase")
       .groupBy(col("day").cast("long").as("day"))
       .agg(count(lit(1)).as("n"), e2(sum(col("value"))).as("rev_e2"))
@@ -1191,8 +1190,8 @@ object PipelineQueries {
     * Signatures are computed once (persisted) and re-banded per config;
     * each config is a self-join on its own (band, hash) key, exactly the
     * production pipeline's shape with only the constant changed. */
-  private def qDedupBandTuning(s: SparkSession, dir: String): DataFrame = owned { o =>
-    val docs = Tables(s, dir).documents
+  private def qDedupBandTuning(t: Tables): DataFrame = owned { o =>
+    val docs = t.documents
     val sigs = o(Dedup.withMinhash(docs, shingleLen = 8, numHashes = 16)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val sh = sigs.select(col("doc_id"), col("sh"))
@@ -1226,7 +1225,7 @@ object PipelineQueries {
     // yields ZERO candidates (the old per-config global agg always
     // produced its row; a bare groupBy would drop it)
     val seed = {
-      import s.implicits._
+      import t.spark.implicits._
       configs.map { case (b, r) => (b.toLong, r.toLong) }
         .toDF("bands", "rows_per_band")
     }
@@ -1271,13 +1270,13 @@ object PipelineQueries {
     * number a dedup deployment must publish. One signature pass + one
     * exact join; the oracle recomputes the truth by the independent
     * brute shingle-posting join AND replays the banding. */
-  private def qDedupRecallAudit(s: SparkSession, dir: String): DataFrame = owned { o =>
+  private def qDedupRecallAudit(t: Tables): DataFrame = owned { o =>
     // deterministic half-corpus sample: recall/precision are RATIO
     // estimates, so a fixed 1-in-2 slice answers the audit question at
     // a quarter of the pair cost (the exact-Jaccard truth side is the
     // single most expensive kernel in the library at full corpus —
     // 59s → ~15s at sf0.1)
-    val docs = Tables(s, dir).documents.filter(col("doc_id") % 2 === 0)
+    val docs = t.documents.filter(col("doc_id") % 2 === 0)
     // ONE persisted shingle pass feeds both sides: the exact-truth join
     // reads it twice internally (df pass + sorted-token build) and the
     // MinHash side once more — unshared, that is three full text-shingle
@@ -1335,8 +1334,8 @@ object PipelineQueries {
     * balance number that predicts probe-cost variance (one hot cluster
     * = one hot partition at serving time). The oracle replays the full
     * deterministic train→assign chain and counts the same buckets. */
-  private def qAnnBalance(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables(s, dir).embeddings
+  private def qAnnBalance(t: Tables): DataFrame = {
+    val emb = t.embeddings
     val assigned = Similarity.kmeansAssign(
       emb.select(col("vec_id"), col("embedding")), k = 8, iters = 2)
     val g = assigned.groupBy(col("cluster")).agg(count(lit(1)).as("n_vectors"))
@@ -1371,8 +1370,8 @@ object PipelineQueries {
     * "which domain is flooding the corpus with copies" view that
     * decides per-source dedup budgets. One extra broadcast-sized
     * (doc_id → source) join over the q_dedup_minhash pipeline. */
-  private def qDedupBySource(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables(s, dir).documents
+  private def qDedupBySource(t: Tables): DataFrame = {
+    val docs = t.documents
     val src = docs.select(col("doc_id"), col("source"))
     Dedup.minhashDupPairs(docs)
       .join(src.select(col("doc_id").as("a"), col("source").as("sa")), Seq("a"))
@@ -1398,8 +1397,8 @@ object PipelineQueries {
     * document-as-image. The oracle recomputes the bins from the text
     * characters (the pixstats pure-ASCII fixture contract), so the
     * comparison proves the parser skipped exactly the real header. */
-  private def qMultimodalHistogram(s: SparkSession, dir: String): DataFrame =
-    Multimodal.pixelHistogram(Multimodal.documentsAsPpm(Tables(s, dir).documents))
+  private def qMultimodalHistogram(t: Tables): DataFrame =
+    Multimodal.pixelHistogram(Multimodal.documentsAsPpm(t.documents))
       .toDF().orderBy(col("doc_id"), col("bin"))
 
   private val qMultimodalHistogramSql =
@@ -1411,8 +1410,8 @@ object PipelineQueries {
     * q = ⌊v·2¹⁴⌋ FIRST, then every sum is an order-independent BIGINT.
     * Oracle recomputes the identical numerators by unnest + self-join —
     * an independent (join-based) formulation of the same Gram matrix. */
-  private def qEmbCovariance(s: SparkSession, dir: String): DataFrame =
-    Similarity.covarianceUpper(Tables(s, dir).embeddings, dim = 64)
+  private def qEmbCovariance(t: Tables): DataFrame =
+    Similarity.covarianceUpper(t.embeddings, dim = 64)
       .orderBy(col("j"), col("k"))
 
   private val qEmbCovarianceSql =
@@ -1432,8 +1431,8 @@ object PipelineQueries {
     * cluster-quality audit every embedding-space pipeline needs before
     * trusting its blocking. Shifted-silhouette s' = s+1 keeps every
     * integer division non-negative (truncate vs floor agreement). */
-  private def qEmbSilhouette(s: SparkSession, dir: String): DataFrame =
-    Similarity.silhouette(Tables(s, dir).embeddings)
+  private def qEmbSilhouette(t: Tables): DataFrame =
+    Similarity.silhouette(t.embeddings)
       .orderBy(col("label"))
 
   private val qEmbSilhouetteSql =
@@ -1455,101 +1454,52 @@ object PipelineQueries {
        |MIN(s) AS min_sil_shift_e6, MAX(s) AS max_sil_shift_e6
        |FROM sv GROUP BY label ORDER BY label""".stripMargin.replace('\n', ' ')
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_multimodal_histogram" -> (qMultimodalHistogram _),
-    "q_dedup_band_tuning" -> (qDedupBandTuning _),
-    "q_lang_confusion"   -> (qLangConfusion _),
-    "q_ann_hardneg"      -> (qAnnHardneg _),
-    "q_emb_outliers"     -> (qEmbOutliers _),
-    "q_dedup_recall_audit" -> (qDedupRecallAudit _),
-    "q_ann_balance"      -> (qAnnBalance _),
-    "q_dedup_by_source"  -> (qDedupBySource _),
-    "q_emb_covariance"   -> (qEmbCovariance _),
-    "q_emb_silhouette"   -> (qEmbSilhouette _),
-    "q_partitioned_write" -> (qPartitionedWrite _),
-    "q_text_stats"       -> (qTextStats _),
-    "q_text_bpe"         -> (qTextBpe _),
-    "q_text_quality"     -> (qTextQuality _),
-    "q_text_langid"      -> (qTextLangid _),
-    "q_text_fingerprint" -> (qTextFingerprint _),
-    "q_dedup_exact"      -> (qDedupExact _),
-    "q_dedup_minhash"    -> (qDedupMinhash _),
-    "q_dedup_incremental" -> (qDedupIncremental _),
-    "q_dedup_simhash"    -> (qDedupSimhash _),
-    "q_dedup_simhash_pairs" -> (qDedupSimhashPairs _),
-    "q_dedup_clusters"   -> (qDedupClusters _),
-    "q_dedup_keep_best"  -> (qDedupKeepBest _),
-    "q_dedup_filtered"   -> (qDedupFiltered _),
-    "q_dedup_ngram"      -> (qDedupNgram _),
-    "q_dedup_cdc"        -> (qDedupCdc _),
-    "q_dedup_embedding"  -> (qDedupEmb _),
-    "q_dedup_semantic"   -> (qSemDedup _),
-    "q_dedup_semantic_keep" -> (qSemDedupKeep _),
-    "q_ann_brute"        -> (qAnnBrute _),
-    "q_ann_sq"           -> (qAnnSq _),
-    "q_ann_ivf"          -> (qAnnIvf _),
-    "q_ann_filtered"     -> (qAnnFiltered _),
-    "q_ann_ivf_trained"  -> (qAnnIvfTrained _),
-    "q_ann_lsh"          -> (qAnnLsh _),
-    "q_ann_pq"           -> (qAnnPq _),
-    "q_ann_matryoshka"   -> (qAnnMatryoshka _),
-    "q_knn_graph"        -> (qKnnGraph _),
-    "q_jaccard_join"     -> (qJaccardJoin _),
-    "q_multimodal_meta"  -> (qMultimodalMeta _),
-    "q_multimodal_wav"   -> (qMultimodalWav _),
-    "q_multimodal_energy" -> (qMultimodalEnergy _),
-    "q_multimodal_frames" -> (qMultimodalFrames _),
-    "q_multimodal_pixstats" -> (qMultimodalPixstats _),
-    "q_multimodal_ahash" -> (qMultimodalAhash _),
-    "q_multimodal_phash" -> (qMultimodalPhash _),
-    "q_multimodal_ahash_pairs" -> (qMultimodalAhashPairs _))
-
-  val oracles: Map[String, String] = Map(
-    "q_multimodal_histogram" -> qMultimodalHistogramSql,
-    "q_dedup_band_tuning" -> qDedupBandTuningSql,
-    "q_lang_confusion"   -> qLangConfusionSql,
-    "q_ann_hardneg"      -> qAnnHardnegSql,
-    "q_emb_outliers"     -> qEmbOutliersSql,
-    "q_dedup_recall_audit" -> qDedupRecallAuditSql,
-    "q_ann_balance"      -> qAnnBalanceSql,
-    "q_dedup_by_source"  -> qDedupBySourceSql,
-    "q_emb_covariance"   -> qEmbCovarianceSql,
-    "q_emb_silhouette"   -> qEmbSilhouetteSql,
-    "q_partitioned_write" -> qPartitionedWriteSql,
-    "q_text_stats"       -> qTextStatsSql,
-    "q_text_bpe"         -> qTextBpeSql,
-    "q_text_quality"     -> qTextQualitySql,
-    "q_text_langid"      -> qTextLangidSql,
-    "q_text_fingerprint" -> qTextFingerprintSql,
-    "q_dedup_exact"      -> qDedupExactSql,
-    "q_dedup_minhash"    -> qDedupMinhashSql,
-    "q_dedup_incremental" -> qDedupIncrementalSql,
-    "q_dedup_simhash"    -> qDedupSimhashSql,
-    "q_dedup_simhash_pairs" -> qDedupSimhashPairsSql,
-    "q_dedup_clusters"   -> qDedupClustersSql,
-    "q_dedup_keep_best"  -> qDedupKeepBestSql,
-    "q_dedup_filtered"   -> qDedupFilteredSql,
-    "q_dedup_ngram"      -> qDedupNgramSql,
-    "q_dedup_cdc"        -> qDedupCdcSql,
-    "q_dedup_embedding"  -> qDedupEmbSql,
-    "q_dedup_semantic"   -> qSemDedupSql,
-    "q_dedup_semantic_keep" -> qSemDedupKeepSql,
-    "q_ann_brute"        -> qAnnBruteSql,
-    "q_ann_sq"           -> qAnnSqSql,
-    "q_ann_ivf"          -> qAnnIvfSql,
-    "q_ann_filtered"     -> qAnnFilteredSql,
-    "q_ann_ivf_trained"  -> qAnnIvfTrainedSql,
-    "q_ann_lsh"          -> qAnnLshSql,
-    "q_ann_pq"           -> qAnnPqSql,
-    "q_ann_matryoshka"   -> qAnnMatryoshkaSql,
-    "q_knn_graph"        -> qKnnGraphSql,
-    "q_jaccard_join"     -> qJaccardJoinSql,
-    "q_multimodal_meta"  -> qMultimodalMetaSql,
-    "q_multimodal_wav"   -> qMultimodalWavSql,
-    "q_multimodal_energy" -> qMultimodalEnergySql,
-    "q_multimodal_frames" -> qMultimodalFramesSql,
-    "q_multimodal_pixstats" -> qMultimodalPixstatsSql,
-    "q_multimodal_ahash" -> qMultimodalAhashSql,
-    "q_multimodal_phash" -> qMultimodalPhashSql,
-    "q_multimodal_ahash_pairs" -> qMultimodalAhashPairsSql)
+  val queries: Seq[Query] = Seq(
+    Query("q_multimodal_histogram", qMultimodalHistogram, qMultimodalHistogramSql),
+    Query("q_dedup_band_tuning", qDedupBandTuning, qDedupBandTuningSql),
+    Query("q_lang_confusion", qLangConfusion, qLangConfusionSql),
+    Query("q_ann_hardneg", qAnnHardneg, qAnnHardnegSql),
+    Query("q_emb_outliers", qEmbOutliers, qEmbOutliersSql),
+    Query("q_dedup_recall_audit", qDedupRecallAudit, qDedupRecallAuditSql),
+    Query("q_ann_balance", qAnnBalance, qAnnBalanceSql),
+    Query("q_dedup_by_source", qDedupBySource, qDedupBySourceSql),
+    Query("q_emb_covariance", qEmbCovariance, qEmbCovarianceSql),
+    Query("q_emb_silhouette", qEmbSilhouette, qEmbSilhouetteSql),
+    Query("q_partitioned_write", qPartitionedWrite, qPartitionedWriteSql),
+    Query("q_text_stats", qTextStats, qTextStatsSql),
+    Query("q_text_bpe", qTextBpe, qTextBpeSql),
+    Query("q_text_quality", qTextQuality, qTextQualitySql),
+    Query("q_text_langid", qTextLangid, qTextLangidSql),
+    Query("q_text_fingerprint", qTextFingerprint, qTextFingerprintSql),
+    Query("q_dedup_exact", qDedupExact, qDedupExactSql),
+    Query("q_dedup_minhash", qDedupMinhash, qDedupMinhashSql),
+    Query("q_dedup_incremental", qDedupIncremental, qDedupIncrementalSql),
+    Query("q_dedup_simhash", qDedupSimhash, qDedupSimhashSql),
+    Query("q_dedup_simhash_pairs", qDedupSimhashPairs, qDedupSimhashPairsSql),
+    Query("q_dedup_clusters", qDedupClusters, qDedupClustersSql),
+    Query("q_dedup_keep_best", qDedupKeepBest, qDedupKeepBestSql),
+    Query("q_dedup_filtered", qDedupFiltered, qDedupFilteredSql),
+    Query("q_dedup_ngram", qDedupNgram, qDedupNgramSql),
+    Query("q_dedup_cdc", qDedupCdc, qDedupCdcSql),
+    Query("q_dedup_embedding", qDedupEmb, qDedupEmbSql),
+    Query("q_dedup_semantic", qSemDedup, qSemDedupSql),
+    Query("q_dedup_semantic_keep", qSemDedupKeep, qSemDedupKeepSql),
+    Query("q_ann_brute", qAnnBrute, qAnnBruteSql),
+    Query("q_ann_sq", qAnnSq, qAnnSqSql),
+    Query("q_ann_ivf", qAnnIvf, qAnnIvfSql),
+    Query("q_ann_filtered", qAnnFiltered, qAnnFilteredSql),
+    Query("q_ann_ivf_trained", qAnnIvfTrained, qAnnIvfTrainedSql),
+    Query("q_ann_lsh", qAnnLsh, qAnnLshSql),
+    Query("q_ann_pq", qAnnPq, qAnnPqSql),
+    Query("q_ann_matryoshka", qAnnMatryoshka, qAnnMatryoshkaSql),
+    Query("q_knn_graph", qKnnGraph, qKnnGraphSql),
+    Query("q_jaccard_join", qJaccardJoin, qJaccardJoinSql),
+    Query("q_multimodal_meta", qMultimodalMeta, qMultimodalMetaSql),
+    Query("q_multimodal_wav", qMultimodalWav, qMultimodalWavSql),
+    Query("q_multimodal_energy", qMultimodalEnergy, qMultimodalEnergySql),
+    Query("q_multimodal_frames", qMultimodalFrames, qMultimodalFramesSql),
+    Query("q_multimodal_pixstats", qMultimodalPixstats, qMultimodalPixstatsSql),
+    Query("q_multimodal_ahash", qMultimodalAhash, qMultimodalAhashSql),
+    Query("q_multimodal_phash", qMultimodalPhash, qMultimodalPhashSql),
+    Query("q_multimodal_ahash_pairs", qMultimodalAhashPairs, qMultimodalAhashPairsSql))
 }

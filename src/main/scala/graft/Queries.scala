@@ -11,8 +11,26 @@ import graft.operators.{AsOfJoin, DistributedRank, Quantiles, RangeJoin, Skyline
 import graft.sql.{Exact, OracleGen}
 import graft.sql.Exact.{e2, e4, e6}
 
-/** The engine's declared query corpus: every entry has a Spark plan and —
-  * where SQL-expressible — a DuckDB oracle producing identical rows.
+/** One declared query: its name, its Spark plan over the input tables,
+  * and the DuckDB SQL that produces the same rows from the same parquet
+  * files. */
+final case class Query(name: String, plan: Tables => DataFrame, oracle: String)
+
+object Query {
+  /** `qs` by name; throws if two share a name, which a map would
+    * otherwise resolve silently to the last. */
+  def index(qs: Seq[Query]): Map[String, Query] = {
+    val dup = qs.groupBy(_.name).collect { case (n, g) if g.size > 1 => n }
+    require(dup.isEmpty, s"duplicate query names: ${dup.toSeq.sorted.mkString(", ")}")
+    qs.map(q => q.name -> q).toMap
+  }
+}
+
+/** The engine's declared query corpus. Each query is one row of a
+  * `queries` registry, here or in one of the six family objects: a name,
+  * a plan over [[Tables]] and an oracle. [[all]] and [[oracles]] are
+  * derived from the rows, and are the only place that binds a plan to
+  * the tables of a scale-factor directory.
   *
   * Determinism rules: every query ends in ORDER BY on its keys; every
   * float output is emitted as a floor-scaled BIGINT via [[graft.sql.Exact]]
@@ -28,8 +46,7 @@ object Queries {
   // engine inherits full SQL from Spark; these double as bench headliners)
   // ------------------------------------------------------------------
 
-  private def q01(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def q01(t: Tables): DataFrame =
     t.lineitem
       .filter(col("l_shipdate") <= to_timestamp(lit("2000-12-01")))
       .groupBy(col("l_returnflag"), col("l_linestatus"))
@@ -40,7 +57,6 @@ object Queries {
         e6(avg(col("l_quantity"))).as("avg_qty_e6"),
         count(lit(1)).as("cnt"))
       .orderBy(col("l_returnflag"), col("l_linestatus"))
-  }
 
   private val q01Sql =
     """SELECT l_returnflag, l_linestatus,
@@ -53,8 +69,7 @@ object Queries {
       |GROUP BY l_returnflag, l_linestatus
       |ORDER BY l_returnflag, l_linestatus""".stripMargin.replace('\n', ' ')
 
-  private def q03(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def q03(t: Tables): DataFrame =
     t.customer.filter(col("c_mktsegment") === "BUILDING")
       .join(t.orders.filter(col("o_orderdate") < to_timestamp(lit("1998-06-01"))),
         col("c_custkey") === col("o_custkey"))
@@ -64,7 +79,6 @@ object Queries {
       .agg(e2(sum(col("l_extendedprice") * (lit(1) - col("l_discount")))).as("revenue_e2"))
       .orderBy(col("revenue_e2").desc, col("o_orderkey"))
       .limit(10)
-  }
 
   private val q03Sql =
     """SELECT o_orderkey, CAST(FLOOR(SUM(l_extendedprice * (1 - l_discount)) * 100) AS BIGINT) AS revenue_e2
@@ -75,15 +89,13 @@ object Queries {
       |AND l_shipdate > TIMESTAMP '1998-06-01 00:00:00'
       |GROUP BY o_orderkey ORDER BY revenue_e2 DESC, o_orderkey LIMIT 10""".stripMargin.replace('\n', ' ')
 
-  private def q06(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def q06(t: Tables): DataFrame =
     t.lineitem
       .filter(col("l_shipdate") >= to_timestamp(lit("1996-01-01")) &&
         col("l_shipdate") < to_timestamp(lit("1997-01-01")) &&
         col("l_discount").between(0.05, 0.07) && col("l_quantity") < 24)
       .agg(e2(sum(col("l_extendedprice") * col("l_discount"))).as("revenue_e2"),
         count(lit(1)).as("cnt"))
-  }
 
   private val q06Sql =
     """SELECT CAST(FLOOR(SUM(l_extendedprice * l_discount) * 100) AS BIGINT) AS revenue_e2, COUNT(*) AS cnt
@@ -92,8 +104,7 @@ object Queries {
       |AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
       |AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24""".stripMargin.replace('\n', ' ')
 
-  private def q05(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def q05(t: Tables): DataFrame =
     t.customer
       .join(t.orders, col("c_custkey") === col("o_custkey"))
       .join(t.lineitem, col("o_orderkey") === col("l_orderkey"))
@@ -103,7 +114,6 @@ object Queries {
       .groupBy(col("n_name"))
       .agg(e2(sum(col("l_extendedprice") * (lit(1) - col("l_discount")))).as("revenue_e2"))
       .orderBy(col("n_name"))
-  }
 
   private val q05Sql =
     """SELECT n_name, CAST(FLOOR(SUM(l_extendedprice * (1 - l_discount)) * 100) AS BIGINT) AS revenue_e2
@@ -113,12 +123,10 @@ object Queries {
       |JOIN nation ON s_nationkey = n_nationkey
       |GROUP BY n_name ORDER BY n_name""".stripMargin.replace('\n', ' ')
 
-  private def qRollup(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qRollup(t: Tables): DataFrame =
     t.lineitem.rollup(col("l_returnflag"), col("l_linestatus"))
       .agg(e2(sum(col("l_quantity"))).as("sum_qty_e2"), count(lit(1)).as("cnt"))
       .orderBy(col("l_returnflag").asc_nulls_first, col("l_linestatus").asc_nulls_first)
-  }
 
   private val qRollupSql =
     """SELECT l_returnflag, l_linestatus, CAST(FLOOR(SUM(l_quantity) * 100) AS BIGINT) AS sum_qty_e2, COUNT(*) AS cnt
@@ -134,14 +142,12 @@ object Queries {
     * oracle-matched bit-for-bit — the correctness half of the z-order
     * layout story (the file-locality half is the PipelineSpec
     * fewer-files-touched assert). */
-  private def qZorderKeys(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qZorderKeys(t: Tables): DataFrame =
     t.events.filter(col("event_id") < 200)
       .select(col("event_id"), col("user_id"),
         expr("ts div 86400000000").as("day"))
       .withColumn("z", graft.operators.ZOrder.zValue(col("user_id"), col("day")))
       .orderBy(col("event_id"))
-  }
 
   private val qZorderKeysSql =
     s"""SELECT event_id, user_id, epoch_us(ts) // 86400000000 AS day,
@@ -152,8 +158,7 @@ object Queries {
     * the engine's native JSON path functions (get_json_object — a
     * codegen'd expression, no UDF) and aggregated as exact integers.
     * The "schema-on-read attribute bag" shape event pipelines carry. */
-  private def qPropsJson(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qPropsJson(t: Tables): DataFrame = {
     val k = get_json_object(col("props"), "$.k").cast("long")
     t.events.select(col("event_type"), k.as("k"))
       .groupBy(col("event_type"))
@@ -174,8 +179,7 @@ object Queries {
   /** Anti-join churn query: customers with no order since 2001-01-01
     * (left_anti — Spark's native hash anti path, no NOT-IN rewrite; the
     * order-side filter is pushed into the scan before the join build). */
-  private def qAntiCustomers(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qAntiCustomers(t: Tables): DataFrame = {
     val recent = t.orders
       .filter(col("o_orderdate") >= to_timestamp(lit("2001-01-01")))
     t.customer.join(recent, col("c_custkey") === col("o_custkey"), "left_anti")
@@ -196,8 +200,7 @@ object Queries {
     * [[graft.operators.DistributedRank]] (range-partitioned offset
     * rank, NTILE derived arithmetically from the global row number) —
     * never a zero-partitionBy window over the customer frame. */
-  private def qNtile(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qNtile(t: Tables): DataFrame = {
     val rev = t.orders.groupBy(col("o_custkey"))
       .agg(e2(sum(col("o_totalprice"))).as("rev_e2"))
     DistributedRank.withNtile(rev,
@@ -221,15 +224,13 @@ object Queries {
     * combinable, one shuffle). COALESCE to the 'ALL' sentinel AFTER
     * grouping on both engines so the output needs no null-sort
     * convention. */
-  private def qCube(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qCube(t: Tables): DataFrame =
     t.lineitem.cube(col("l_returnflag"), col("l_linestatus"))
       .agg(count(lit(1)).as("cnt"), e2(sum(col("l_quantity"))).as("qty_e2"))
       .select(coalesce(col("l_returnflag"), lit("ALL")).as("rf"),
         coalesce(col("l_linestatus"), lit("ALL")).as("ls"),
         col("cnt"), col("qty_e2"))
       .orderBy(col("rf"), col("ls"))
-  }
 
   private val qCubeSql =
     """SELECT COALESCE(l_returnflag, 'ALL') AS rf,
@@ -243,8 +244,7 @@ object Queries {
     * the driver — the explicit list keeps the plan static and the
     * columns deterministic). Oracle is the portable conditional-agg
     * spelling. */
-  private def qPivot(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qPivot(t: Tables): DataFrame = {
     val types = Seq("click", "view", "purchase", "signup", "error")
     t.events.select(expr("ts div 86400000000").as("day"), col("event_type"))
       .groupBy(col("day")).pivot("event_type", types).count()
@@ -269,8 +269,7 @@ object Queries {
     * single-partition global sort is the right plan (the 100 TB cost
     * lives in the rollup, not the window). Division happens on exact
     * scaled BIGINTs via the one IEEE double divide both engines share. */
-  private def qMovingAvg(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qMovingAvg(t: Tables): DataFrame = {
     val daily = t.orders
       .select(to_date(col("o_orderdate")).as("d"), col("o_totalprice"))
       .groupBy(col("d")).agg(e2(sum(col("o_totalprice"))).as("day_rev_e2"))
@@ -296,13 +295,11 @@ object Queries {
     * ([[graft.operators.Quantiles]]): the quantile_cont definition in
     * pure scaled-BIGINT arithmetic — the exact companion to
     * percentile_approx's sketch path. */
-  private def qQuantiles(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qQuantiles(t: Tables): DataFrame =
     Quantiles.exactScaled(
       t.lineitem.select(col("l_returnflag"), floor(col("l_quantity")).cast("long").as("qty")),
       valueCol = "qty", groupCol = "l_returnflag",
       ps = Seq((1, 4), (1, 2), (3, 4)), scale = 1000000L)
-  }
 
   private val qQuantilesSql = Quantiles.exactScaledSql(
     "lineitem", "CAST(FLOOR(l_quantity) AS BIGINT)", "l_returnflag",
@@ -311,8 +308,8 @@ object Queries {
   /** KMV distinct-user sketch per event type
     * ([[graft.functions.Sketches.kmvDistinct]]): estimate AND exact
     * side by side, both integer-reproducible by the oracle. */
-  private def qKmv(s: SparkSession, dir: String): DataFrame =
-    Sketches.kmvDistinct(Tables(s, dir).events, keyCol = "user_id",
+  private def qKmv(t: Tables): DataFrame =
+    Sketches.kmvDistinct(t.events, keyCol = "user_id",
       groupCol = "event_type", k = 64)
 
   private val qKmvSql =
@@ -324,8 +321,7 @@ object Queries {
     * sort, the shuffle any history build needs); everything else is
     * projection. The "replay updates into a dimension table" op every
     * warehouse load runs. */
-  private def qScd2(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qScd2(t: Tables): DataFrame = {
     val p = t.events.filter(col("event_type") === "purchase")
       .select(col("user_id"), col("ts").as("us"),
         col("event_id"), e2(col("value")).as("value_e2"))
@@ -350,8 +346,7 @@ object Queries {
     * (per user, time-ordered). Two leads over one per-user window, then
     * a count — sequence extraction without per-user event-list
     * materialization. */
-  private def qEventPaths(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qEventPaths(t: Tables): DataFrame = {
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     t.events.select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
       .select(col("event_type").as("s1"),
@@ -374,8 +369,7 @@ object Queries {
   /** Calendar spine fill: zero-fill the daily revenue series over the
     * full [min, max] day range (`sequence` + explode generates the spine
     * distributively — no driver loop, no stored calendar table). */
-  private def qCalendarFill(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qCalendarFill(t: Tables): DataFrame = {
     val daily = t.orders
       .select(expr("CAST(o_orderdate AS DATE)").as("d"), col("o_totalprice"))
       .groupBy(col("d")).agg(e2(sum(col("o_totalprice"))).as("rev_e2"))
@@ -406,8 +400,7 @@ object Queries {
     * min (map-side combinable) and the (cohort, offset) distinct-count —
     * both on natural keys; no window, no driver state. The classic
     * product-analytics query a warehouse engine must make cheap. */
-  private def qCohort(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qCohort(t: Tables): DataFrame = {
     val ev = t.events.select(col("user_id"), expr("ts div 86400000000").as("day"))
     val first = ev.groupBy(col("user_id")).agg(min(col("day")).as("cohort_day"))
     ev.join(first, Seq("user_id"))
@@ -429,8 +422,7 @@ object Queries {
     * stage totals. Min-aggregations over conditional timestamps (two
     * self-joins on user_id, both AQE-sized); the sequential-pattern
     * match never materializes per-user event lists. */
-  private def qFunnel(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qFunnel(t: Tables): DataFrame = {
     val ev = t.events.select(col("user_id"), col("event_type"),
       col("ts").as("us"))
     val su = ev.filter(col("event_type") === "signup")
@@ -471,8 +463,7 @@ object Queries {
     * (With AQE on, Spark splits skewed partitions at runtime; the salted
     * path is the explicit fallback for pre-partitioned inputs and for
     * single hub keys hotter than one task — SURVEY §2.7.) */
-  private def qSkewSalted(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qSkewSalted(t: Tables): DataFrame = {
     val li = t.lineitem.select(col("l_suppkey").as("s_suppkey"),
       (col("l_extendedprice") * (lit(1) - col("l_discount"))).as("rev"))
     val supp = t.supplier.select(col("s_suppkey"), col("s_nationkey"))
@@ -489,8 +480,7 @@ object Queries {
       |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
       |GROUP BY 1 ORDER BY 1""".stripMargin.replace('\n', ' ')
 
-  private def qSessions(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qSessions(t: Tables): DataFrame = {
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     t.events
       .withColumn("prev", lag(col("ts"), 1).over(w))
@@ -512,13 +502,11 @@ object Queries {
       |FROM events) a ) b
       |GROUP BY user_id ORDER BY user_id""".stripMargin.replace('\n', ' ')
 
-  private def qTumbling(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qTumbling(t: Tables): DataFrame =
     t.events
       .groupBy(expr("ts div 3600000000").as("hour_idx"), col("event_type"))
       .agg(count(lit(1)).as("cnt"), e4(sum(col("value"))).as("sum_value_e4"))
       .orderBy(col("hour_idx"), col("event_type"))
-  }
 
   private val qTumblingSql =
     """SELECT epoch_us(ts) // 3600000000 AS hour_idx,
@@ -529,8 +517,7 @@ object Queries {
     * (win_idx = start/slide); integral ns arithmetic replayed by the
     * oracle. Streaming twin: EventStreams.slidingCounts (StreamingSpec
     * asserts parity). */
-  private def qSliding(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qSliding(t: Tables): DataFrame =
     t.events
       .select(col("event_type"), col("value"),
         explode(sequence(lit(0L), lit(3L))).as("k"),
@@ -539,7 +526,6 @@ object Queries {
       .groupBy(col("win_idx"), col("event_type"))
       .agg(count(lit(1)).as("cnt"), e4(sum(col("value"))).as("sum_value_e4"))
       .orderBy(col("win_idx"), col("event_type"))
-  }
 
   private val qSlidingSql =
     """SELECT win_idx, event_type, COUNT(*) AS cnt,
@@ -553,8 +539,7 @@ object Queries {
     * before its timestamp — the "latest feature value as of example
     * time" shape of training-data assembly. Oracle: DuckDB's native
     * ASOF LEFT JOIN, an independent implementation of the semantics. */
-  private def qAsofPurchase(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qAsofPurchase(t: Tables): DataFrame = {
     // micros on both engines: DuckDB surfaces parquet timestamp[ns] at
     // microsecond precision, so the join must compare at micros too
     val ev = t.events.select(col("event_id"), col("user_id"),
@@ -596,8 +581,7 @@ object Queries {
     * error event, the same user's clicks within the following hour —
     * interval attribution without a per-key cross product (time is part
     * of the equi-key). Micros on both engines, as q_asof_purchase. */
-  private def qRangeAttrib(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qRangeAttrib(t: Tables): DataFrame = {
     val hourUs = 3600000000L
     val clicks = t.events.filter(col("event_type") === "click")
       .select(col("user_id"), col("event_id").as("click_id"),
@@ -630,8 +614,7 @@ object Queries {
     * membership is order-tie-proof: equal timestamps have gap 0, so any
     * tie order yields the same islands; (ts, event_id) ordering makes the
     * running sum itself deterministic too. */
-  private def qGapsIslands(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qGapsIslands(t: Tables): DataFrame = {
     val gapUs = 1800000000L // 30 min; micros on both engines (as q_asof_purchase)
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts_us"), col("event_id"))
     val lagTs = lag(col("ts_us"), 1).over(w)
@@ -661,8 +644,7 @@ object Queries {
     * provenance column computed the same way on both engines. Spark
     * expands to one Expand + single hash agg: one shuffle for all three
     * granularities. */
-  private def qGroupingSets(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qGroupingSets(t: Tables): DataFrame =
     t.orders.groupingSets(
         Seq(Seq(col("o_orderpriority"), col("o_orderstatus")),
           Seq(col("o_orderpriority")), Seq(col("o_orderstatus"))),
@@ -675,7 +657,6 @@ object Queries {
         coalesce(col("o_orderstatus"), lit("ALL")).as("st"),
         col("cnt"), col("rev_e2"))
       .orderBy(col("gid"), col("pri"), col("st"))
-  }
 
   private val qGroupingSetsSql =
     """SELECT CAST(GROUPING(o_orderpriority) * 2 + GROUPING(o_orderstatus) AS BIGINT) AS gid,
@@ -691,8 +672,7 @@ object Queries {
     * independent scan-and-count — at 100 TB they run as parallel jobs
     * over pruned column subsets; a zero row is as meaningful as a
     * non-zero one (the oracle pins both). */
-  private def qDqChecks(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qDqChecks(t: Tables): DataFrame = {
     def chk(name: String, violations: DataFrame): DataFrame =
       violations.agg(count(lit(1)).as("n_violations"))
         .select(lit(name).as("check_name"), col("n_violations"))
@@ -737,8 +717,7 @@ object Queries {
     * column wide) + a single hash agg. At 100 TB swap count_distinct for
     * approx_count_distinct and the Expand disappears — kept exact here
     * because exact is what the oracle can pin. */
-  private def qProfile(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qProfile(t: Tables): DataFrame = {
     val aggs = count(lit(1)).as("n_rows") +: profileCols.flatMap(c =>
       Seq(count(col(c)).as(s"${c}__nn"), count_distinct(col(c)).as(s"${c}__nd")))
     val stackArgs = profileCols.map(c => s"'$c', ${c}__nn, ${c}__nd").mkString(", ")
@@ -762,8 +741,7 @@ object Queries {
     * a deterministic 64 Kbit filter before the exact broadcast
     * semi-join. Result-invisible (the oracle runs the plain semi-join);
     * the pruning itself is asserted in OperatorsSpec. */
-  private def qBloomPrune(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qBloomPrune(t: Tables): DataFrame = {
     val keys = t.customer.filter(col("c_mktsegment") === "BUILDING")
       .select(col("c_custkey"))
     graft.operators.BloomSemiJoin.prunedSemiJoin(t.orders, "o_custkey", keys, "c_custkey")
@@ -788,8 +766,7 @@ object Queries {
     * the band key extends to (length band, first token) the same way
     * the n-gram dedup blocks. Planted corruptions guarantee ≥ 1 match
     * per probe in both engines. */
-  private def qFuzzyJoin(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qFuzzyJoin(t: Tables): DataFrame = {
     val names = t.part.select(col("p_name")).distinct()
     val probes = names
       .withColumn("pos",
@@ -826,8 +803,7 @@ object Queries {
     * arithmetic is bit-reproducible; 1.5·IQR is ×3 div 2). The quantile
     * pass sorts per group once; the fence check is a second scan joined
     * against the broadcast per-group bounds. */
-  private def qOutliers(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qOutliers(t: Tables): DataFrame = {
     val cents = t.orders.select(col("o_orderpriority").as("g"),
       e2(col("o_totalprice")).as("v"))
     val qs = Quantiles.exactScaled(cents, "v", "g", Seq((1, 4), (3, 4)), 1L)
@@ -868,8 +844,7 @@ object Queries {
     * overlap are populated, exercising the join type's three output
     * shapes. USING-column join, so the key coalesces natively; one
     * shuffle per rollup + the outer join on the shared hour key. */
-  private def qFullOuter(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qFullOuter(t: Tables): DataFrame = {
     val purch = t.events.filter(col("event_type") === "purchase")
       .select(expr("ts div 3600000000").as("h"), col("value"))
       .groupBy(col("h"))
@@ -902,14 +877,12 @@ object Queries {
     * the two-stage bucket-pruned plan is in [[graft.operators.Skyline]]
     * (local per-bucket skylines shrink the input before the one global
     * pass, which is what keeps the global sort driver-scale at 100 TB). */
-  private def qSkyline(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qSkyline(t: Tables): DataFrame =
     Skyline.skyline(
       t.lineitem.select(e2(col("l_extendedprice")).as("price_e2"),
         col("l_quantity").cast("long").as("qty")),
       "price_e2", "qty")
       .orderBy(col("minv"))
-  }
 
   private val qSkylineSql =
     Skyline.skylineSql("lineitem", "CAST(FLOOR(l_extendedprice * 100) AS BIGINT)",
@@ -920,8 +893,7 @@ object Queries {
     * Spark's `stack` expands inside the projection (no shuffle beyond
     * the agg); the oracle replays it as a UNION ALL of one SELECT per
     * measure over the same rollup CTE. */
-  private def qUnpivot(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qUnpivot(t: Tables): DataFrame =
     t.lineitem.groupBy(col("l_returnflag"))
       .agg(e2(sum(col("l_quantity"))).as("quantity"),
         e2(sum(col("l_extendedprice"))).as("extendedprice"),
@@ -931,7 +903,6 @@ object Queries {
         "stack(4, 'quantity', quantity, 'extendedprice', extendedprice, " +
           "'discount', discount, 'tax', tax) as (measure, total_e2)")
       .orderBy(col("l_returnflag"), col("measure"))
-  }
 
   private val qUnpivotSql =
     """WITH a AS MATERIALIZED (SELECT l_returnflag,
@@ -957,8 +928,7 @@ object Queries {
     * total is a broadcast scalar. Band thresholds compare cum·10
     * against total·7|9 in exact BIGINT cents, no fractional share until
     * the final e6. */
-  private def qParetoAbc(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qParetoAbc(t: Tables): DataFrame = {
     val rev = t.orders.groupBy(col("o_custkey"))
       .agg(e2(sum(col("o_totalprice"))).as("rev"))
     val tot = rev.agg(sum(col("rev")).cast("long").as("total"))
@@ -999,8 +969,7 @@ object Queries {
     * (s·N + m·S)·10⁶ div (N·(n + m)) — both engines divide identical
     * BIGINTs, so the smoothing is hash-exact, no doubles. Two aggs +
     * one broadcast scalar join. */
-  private def qTargetEnc(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qTargetEnc(t: Tables): DataFrame = {
     val lab = t.orders.join(t.customer, col("o_custkey") === col("c_custkey"))
       .select(col("c_mktsegment").as("seg"),
         when(col("o_orderstatus") === "F", 1L).otherwise(0L).as("y"))
@@ -1032,8 +1001,7 @@ object Queries {
     * (c_xy·10⁶ div c_x and c_xy·N·10⁶ div (c_x·c_y)) so both engines
     * divide identical BIGINTs. Rules are emitted in both directions;
     * minimum support 2% of baskets. */
-  private def qAssocRules(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qAssocRules(t: Tables): DataFrame = {
     val items = t.lineitem
       .join(t.part, col("l_partkey") === col("p_partkey"))
       .select(col("l_orderkey").as("ok"), col("p_brand").as("item"))
@@ -1080,8 +1048,8 @@ object Queries {
     * all-integer α·m²/Z estimate). The at-scale replacement for exact
     * COUNT(DISTINCT): one map-side-combined (group, bucket) max agg —
     * 64 rows per group cross the shuffle regardless of input size. */
-  private def qHll(s: SparkSession, dir: String): DataFrame =
-    Sketches.hllDistinct(Tables(s, dir).events, "event_id", "event_type")
+  private def qHll(t: Tables): DataFrame =
+    Sketches.hllDistinct(t.events, "event_id", "event_type")
 
   private val qHllSql = Sketches.hllDistinctSql("events", "event_id", "event_type")
 
@@ -1092,8 +1060,7 @@ object Queries {
     * (floor-interpolated, pure BIGINT cents), the deviation frame rides
     * a broadcast of the 5-row median table, so the chain is two ranked
     * passes + two broadcast joins and never leaves exact integers. */
-  private def qMad(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qMad(t: Tables): DataFrame = {
     val cents = t.orders.select(col("o_orderpriority").as("g"),
       e2(col("o_totalprice")).as("v"))
     val med = Quantiles.exactScaled(cents, "v", "g", Seq((1, 2)), 1L)
@@ -1133,8 +1100,7 @@ object Queries {
     * (range-partitioned offset rank + arithmetic NTILE — a per-customer
     * frame is data-sized at warehouse scale, so no zero-partitionBy
     * window), the three bucketings re-joined on the unique custkey. */
-  private def qRfm(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qRfm(t: Tables): DataFrame = {
     val day = expr("datediff(CAST(o_orderdate AS DATE), DATE'1970-01-01')").cast("long")
     val per = t.orders.groupBy(col("o_custkey"))
       .agg(max(day).as("last_day"), count(lit(1)).as("f"),
@@ -1176,8 +1142,7 @@ object Queries {
     * precision, the documented trap) counted and row-normalized to
     * exact e6 probabilities. One window pass + two aggs; the matrix is
     * |types|² rows regardless of input size. */
-  private def qMarkov(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qMarkov(t: Tables): DataFrame = {
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts_us"), col("event_id"))
     val pairs = t.events
       .select(col("user_id"), col("event_id"), col("event_type"),
@@ -1207,8 +1172,7 @@ object Queries {
     * negative growth months hash-match too; the first month's growth is
     * NULL in both. One agg + one ordered window over the ~80-row
     * monthly frame. */
-  private def qMomGrowth(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qMomGrowth(t: Tables): DataFrame = {
     val m = t.orders
       .groupBy((year(col("o_orderdate")) * 12 + month(col("o_orderdate"))).cast("long").as("ym"))
       .agg(e2(sum(col("o_totalprice"))).as("rev"))
@@ -1236,8 +1200,7 @@ object Queries {
     * precedent). The global rank i comes from
     * [[graft.operators.DistributedRank]] (range-partitioned offset
     * rank), then one agg. */
-  private def qGini(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qGini(t: Tables): DataFrame = {
     val rev = t.orders.groupBy(col("o_custkey"))
       .agg(e2(sum(col("o_totalprice"))).as("x"))
     DistributedRank.withRowNumber(rev,
@@ -1266,8 +1229,7 @@ object Queries {
     * Output: the 15 cells with their contribution and the χ² total
     * (window sum — identical per row). Three aggs + broadcast joins of
     * the marginal frames. */
-  private def qChi2(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qChi2(t: Tables): DataFrame = {
     val lab = t.orders.join(t.customer, col("o_custkey") === col("c_custkey"))
       .select(col("c_mktsegment").as("seg"), col("o_orderpriority").as("pri"))
     val cells = lab.groupBy(col("seg"), col("pri")).agg(count(lit(1)).as("obs"))
@@ -1306,8 +1268,7 @@ object Queries {
     * Σcᵢ²·10⁶ div n² and (n² − Σcᵢ²)·10⁶ div n², floored
     * INDEPENDENTLY, so the two columns need not sum to 10⁶). Two
     * map-side-combined aggs. */
-  private def qDiversity(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qDiversity(t: Tables): DataFrame =
     t.customer
       .groupBy(col("c_nationkey").cast("long").as("nation"), col("c_mktsegment"))
       .agg(count(lit(1)).as("c"))
@@ -1318,7 +1279,6 @@ object Queries {
         expr("(s2 * 1000000) div (n * n)").as("hhi_e6"),
         expr("((n * n - s2) * 1000000) div (n * n)").as("impurity_e6"))
       .orderBy(col("nation"))
-  }
 
   private val qDiversitySql =
     """WITH c AS (SELECT CAST(c_nationkey AS BIGINT) AS nation, c_mktsegment,
@@ -1333,14 +1293,12 @@ object Queries {
     * ([[graft.operators.Quantiles.weightedMedian]]): smallest price
     * whose running quantity reaches half the total — 2·cumw ≥ W in
     * exact integers. */
-  private def qWeightedMedian(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qWeightedMedian(t: Tables): DataFrame =
     Quantiles.weightedMedian(
       t.lineitem.select(col("l_returnflag").as("g"),
         e2(col("l_extendedprice")).as("price"),
         floor(col("l_quantity")).cast("long").as("qty")),
       "price", "qty", "g")
-  }
 
   private val qWeightedMedianSql = Quantiles.weightedMedianSql(
     "lineitem", "CAST(FLOOR(l_extendedprice * 100) AS BIGINT)",
@@ -1350,8 +1308,7 @@ object Queries {
     * every catalog/dashboard runs (rank window over the part aggregate,
     * unique (rev desc, partkey) order; the window partitions by brand,
     * so no global sort). */
-  private def qGroupedTopK(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qGroupedTopK(t: Tables): DataFrame = {
     val rev = t.lineitem.join(t.part, col("l_partkey") === col("p_partkey"))
       .groupBy(col("p_brand"), col("p_partkey"))
       .agg(e2(sum(col("l_extendedprice") * (lit(1) - col("l_discount")))).as("rev_e2"))
@@ -1380,9 +1337,8 @@ object Queries {
     * distributed-rollup primitive: per-day sketches union into
     * per-month without rescanning — this query is that merge in
     * miniature. */
-  private def qHllAlgebra(s: SparkSession, dir: String): DataFrame = {
+  private def qHllAlgebra(t: Tables): DataFrame = {
     import graft.functions.Sketches
-    val t = Tables(s, dir)
     val a = t.orders.select(lit("A").as("side"), col("o_custkey").as("k"))
     val b = t.customer.select(lit("B").as("side"), col("c_custkey").as("k"))
     val regs = a.unionByName(b)
@@ -1433,8 +1389,7 @@ object Queries {
     * pairs from one LEAD window; all six sums are exact BIGINTs and the
     * final ÷+√ runs on identical operands in both engines (the
     * assortativity discipline), floored at e6. */
-  private def qAutocorr(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qAutocorr(t: Tables): DataFrame = {
     val daily = t.orders
       .groupBy(expr("datediff(CAST(o_orderdate AS DATE), DATE'1970-01-01')").cast("long").as("d"))
       .agg(e2(sum(col("o_totalprice"))).as("x"))
@@ -1471,8 +1426,7 @@ object Queries {
     * precedent), so day-level anomaly flags are structurally
     * hash-stable, no epsilon at the boundary. One daily rollup + one
     * broadcast scalar join. */
-  private def qAnomalyDays(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qAnomalyDays(t: Tables): DataFrame = {
     val daily = t.orders
       .groupBy(expr("datediff(CAST(o_orderdate AS DATE), DATE'1970-01-01')").cast("long").as("d"))
       .agg(e2(sum(col("o_totalprice"))).as("x"))
@@ -1501,8 +1455,7 @@ object Queries {
     * Catalyst folds into a single-partition sort). Two per-user
     * min-aggs + one distributed rank pass; micro-truncated timestamps
     * per the ns-vs-us trap. */
-  private def qTimeToConvert(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qTimeToConvert(t: Tables): DataFrame = {
     val firstView = t.events.filter(col("event_type") === "view")
       .groupBy(col("user_id")).agg(min(col("ts")).as("v_us"))
     val purch = t.events.filter(col("event_type") === "purchase")
@@ -1532,8 +1485,7 @@ object Queries {
     * distinct-count aggs + one join; the at-scale swap for the exact
     * distincts is [[graft.functions.Sketches.hllDistinct]] (documented,
     * same plan shape). */
-  private def qActiveUsers(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qActiveUsers(t: Tables): DataFrame = {
     val ev = t.events.select(col("user_id"),
       expr("ts div 86400000000").as("day"),
       expr("ts div 86400000000 div 30").as("mon"))
@@ -1564,8 +1516,7 @@ object Queries {
     * the pairwise overlap count (structurally zero — the audit row a
     * pipeline must PROVE, not assume; same md5-uniform machinery as the
     * stratified sampler so re-runs and engines agree). */
-  private def qSplit3Way(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qSplit3Way(t: Tables): DataFrame = {
     val u = pmod(graft.pipeline.Corpus.md5Uniform(col("doc_id").cast("string")), lit(100L))
     val tagged = t.documents.select(col("doc_id"), col("n_chars"),
       when(u < 80, lit("train")).when(u < 90, lit("val")).otherwise(lit("test")).as("split"))
@@ -1596,8 +1547,7 @@ object Queries {
     * that makes "users to date" a one-window query instead of an
     * ever-growing distinct set (the at-scale trick; state is one row
     * per user, then one row per day). */
-  private def qCumulativeUsers(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qCumulativeUsers(t: Tables): DataFrame = {
     val firstDay = t.events.groupBy(col("user_id"))
       .agg(min(expr("ts div 86400000000")).as("day"))
     firstDay.groupBy(col("day")).agg(count(lit(1)).as("new_users"))
@@ -1620,8 +1570,7 @@ object Queries {
     * rate per day (the cohort table's operational companion; 29
     * transitions over this corpus' 30-day span). One distinct
     * (user, day) frame, one self-join on (user, d+1). */
-  private def qChurn(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qChurn(t: Tables): DataFrame = {
     val um = t.events
       .select(col("user_id"), expr("ts div 86400000000").as("mon"))
       .distinct()
@@ -1655,8 +1604,7 @@ object Queries {
     * diagnostic a planner (or the salting pass, q_skew_salted) consumes
     * BEFORE choosing a mitigation. One count agg + one tiny top-k sort;
     * the ratio is (max·n_keys·10⁶) div total, all BIGINTs. */
-  private def qSkewProfile(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qSkewProfile(t: Tables): DataFrame = {
     val c = t.orders.groupBy(col("o_custkey")).agg(count(lit(1)).as("n"))
     val st = c.agg(count(lit(1)).as("n_keys"), sum(col("n")).cast("long").as("total"),
       max(col("n")).as("mx"))
@@ -1681,8 +1629,7 @@ object Queries {
     * Flesch-style score — the constants' double arithmetic is left to
     * the consumer, so the signals stay hash-exact. Pure codegen'd
     * regexp columns, one projection. */
-  private def qReadability(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qReadability(t: Tables): DataFrame =
     t.documents.select(col("doc_id"),
         expr("size(split(trim(text), '\\\\s+'))").cast("long").as("n_words"),
         expr("size(regexp_extract_all(text, '[.!?]+', 0))").cast("long").as("n_breaks"),
@@ -1691,7 +1638,6 @@ object Queries {
         expr("(n_words * 1000000) div greatest(n_breaks, 1)").as("words_per_sent_e6"),
         expr("(n_vgroups * 1000000) div greatest(n_words, 1)").as("vgroups_per_word_e6"))
       .orderBy(col("doc_id"))
-  }
 
   private val qReadabilitySql =
     """WITH b AS (SELECT doc_id,
@@ -1710,8 +1656,7 @@ object Queries {
     * timestamp VALUE span, so same-microsecond ties land in the same
     * frame and the count is tie-order-proof by construction, unlike a
     * ROWS spelling). Users with a burst ≥ 8 reported with their peak. */
-  private def qRateLimit(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qRateLimit(t: Tables): DataFrame = {
     val w = Window.partitionBy(col("user_id")).orderBy(col("t"))
       .rangeBetween(-86400000000L, 0L)
     t.events.select(col("user_id"), col("ts").as("t"))
@@ -1734,8 +1679,7 @@ object Queries {
     * autocorr discipline), one ÷+√ per pair on identical operands.
     * ONE aggregation computes all nine sums; the 3×3 upper triangle
     * unpivots from a single row. */
-  private def qCorrMatrix(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qCorrMatrix(t: Tables): DataFrame = {
     val m = t.lineitem.select(
       floor(col("l_quantity")).cast("long").as("a"),
       e2(col("l_extendedprice")).as("b"),
@@ -1788,8 +1732,7 @@ object Queries {
     * — plus r² from the same six sums. ONE aggregation, one row out:
     * distributed linear regression without a single intermediate
     * materialization. */
-  private def qRegression(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qRegression(t: Tables): DataFrame = {
     val m = t.lineitem.select(e2(col("l_discount")).as("x"),
       floor(col("l_quantity")).cast("long").as("y"))
     val st = m.agg(count(lit(1)).as("n"),
@@ -1826,8 +1769,7 @@ object Queries {
     * (day mean ÷ overall mean) per weekday, both exact rationals —
     * index_e6 = (s_d·n)·10⁶ div (n_d·s) needs no mean materialized.
     * One rollup + one broadcast scalar. */
-  private def qSeasonal(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qSeasonal(t: Tables): DataFrame = {
     val d = t.orders.select(
       pmod(expr("datediff(CAST(o_orderdate AS DATE), DATE'1970-01-01')"), lit(7)).cast("long").as("dow"),
       e2(col("o_totalprice")).as("v"))
@@ -1854,8 +1796,7 @@ object Queries {
     * [[graft.operators.Quantiles.exactScaled]] for exact p50/p95 in
     * milliseconds — the arrival-process profile a capacity model needs.
     * Unique (ts_us, event_id) order makes gaps a pure data function. */
-  private def qInterarrival(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qInterarrival(t: Tables): DataFrame = {
     val w = Window.partitionBy(col("event_type")).orderBy(col("ts_us"), col("event_id"))
     val gaps = t.events
       .select(col("event_type"), col("event_id"), col("ts").as("ts_us"))
@@ -1882,8 +1823,7 @@ object Queries {
     * double-division operand order as the window builtins, floored at
     * e6), and lead() becomes an equi-join of rn against rn+1 — no
     * zero-partitionBy window anywhere, every step range-partitioned. */
-  private def qWindowFuncs(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qWindowFuncs(t: Tables): DataFrame = {
     val rev = t.orders.groupBy(col("o_custkey"))
       .agg(e2(sum(col("o_totalprice"))).as("rev_e2"))
     val ranked = DistributedRank.withRowNumber(rev,
@@ -1922,8 +1862,8 @@ object Queries {
   // graph corpus (SURVEY §2.9) on graphs derived from the tables
   // ------------------------------------------------------------------
 
-  private def qDegrees(s: SparkSession, dir: String): DataFrame =
-    Algos.degrees(custSuppE(s, dir)).orderBy(col("id"))
+  private def qDegrees(t: Tables): DataFrame =
+    Algos.degrees(TestGraphs.custSupp(t)).orderBy(col("id"))
 
   private val qDegreesSql =
     s"""WITH ce AS (${TestGraphs.custSuppSql}),
@@ -1933,23 +1873,17 @@ object Queries {
        |COALESCE(in_deg, 0) AS in_deg
        |FROM o FULL OUTER JOIN i ON o.id = i.id ORDER BY id""".stripMargin.replace('\n', ' ')
 
-  private def custSuppE(s: SparkSession, dir: String): DataFrame =
-    TestGraphs.custSupp(Tables(s, dir))
+  private def qWcc(t: Tables): DataFrame =
+    Algos.wcc(TestGraphs.custSuppSym(t).select("src", "dst")).orderBy(col("id"))
 
-  private def custSuppSymE(s: SparkSession, dir: String): DataFrame =
-    TestGraphs.custSuppSym(Tables(s, dir))
-
-  private def qWcc(s: SparkSession, dir: String): DataFrame =
-    Algos.wcc(custSuppSymE(s, dir).select("src", "dst")).orderBy(col("id"))
-
-  private def qSssp(s: SparkSession, dir: String): DataFrame = {
-    val e = custSuppSymE(s, dir).select("src", "dst", "w")
+  private def qSssp(t: Tables): DataFrame = {
+    val e = TestGraphs.custSuppSym(t).select("src", "dst", "w")
     val source = e.agg(min(col("src"))).first().getLong(0)
     Algos.sssp(e, source).orderBy(col("id"))
   }
 
-  private def qBfs(s: SparkSession, dir: String): DataFrame = {
-    val e = custSuppSymE(s, dir).select("src", "dst")
+  private def qBfs(t: Tables): DataFrame = {
+    val e = TestGraphs.custSuppSym(t).select("src", "dst")
     val source = e.agg(min(col("src"))).first().getLong(0)
     Algos.bfs(e, Seq(source)).orderBy(col("id"))
   }
@@ -1958,14 +1892,14 @@ object Queries {
     * distance-distribution panel; [[graft.graph.Algos.anfSketch]] is the
     * sketched scale path, spec-asserted against this). Oracle unrolls
     * the four frontier expansions with distinct pair sets. */
-  private def qNeighborhood(s: SparkSession, dir: String): DataFrame =
-    Algos.neighborhoodFunction(custSuppSymE(s, dir).select("src", "dst"), maxH = 4)
+  private def qNeighborhood(t: Tables): DataFrame =
+    Algos.neighborhoodFunction(TestGraphs.custSuppSym(t).select("src", "dst"), maxH = 4)
 
   /** Per-user behavioral entropy: floor-log2 Shannon entropy of each
     * user's event-type distribution (the engagement-diversity signal) —
     * zero-libm bitlength identity, two shuffles. */
-  private def qUserEntropy(s: SparkSession, dir: String): DataFrame = {
-    val tf = Tables(s, dir).events
+  private def qUserEntropy(t: Tables): DataFrame = {
+    val tf = t.events
       .groupBy(col("user_id"), col("event_type")).agg(count(lit(1)).as("c"))
     val tot = tf.groupBy(col("user_id")).agg(sum(col("c")).cast("long").as("t"))
     tf.join(tot, Seq("user_id"))
@@ -1996,8 +1930,8 @@ object Queries {
     * robustness panel; vertices isolated by the filter leave the graph,
     * identically in both engines). Two FastSV runs over shrinking
     * subgraphs; the oracle replays two 12-round label-prop chains. */
-  private def qPercolation(s: SparkSession, dir: String): DataFrame = {
-    val e = TestGraphs.custSuppSym(Tables(s, dir))
+  private def qPercolation(t: Tables): DataFrame = {
+    val e = TestGraphs.custSuppSym(t)
     Seq(20L, 40L).map { th =>
       val cc = Algos.wcc(e.filter(col("w") >= th).select("src", "dst"))
       cc.groupBy(col("component")).agg(count(lit(1)).as("sz"))
@@ -2043,9 +1977,9 @@ object Queries {
     * rounds left 73/160 vertices uncolored there) — dense graphs belong
     * to [[graft.graph.Algos.independentSet]]-style peeling, chains are
     * the JP case. */
-  private def qColoring(s: SparkSession, dir: String): DataFrame =
+  private def qColoring(t: Tables): DataFrame =
     Algos.greedyColoring(
-      Prep.makeSymmetric(TestGraphs.eventChain(Tables(s, dir))))
+      Prep.makeSymmetric(TestGraphs.eventChain(t)))
 
   private def qColoringSql(rounds: Int): String = {
     val roundCtes = (1 to rounds).map { r =>
@@ -2081,9 +2015,9 @@ object Queries {
     * chains — unique deterministic fixpoint, oracle-unrolled (the
     * globally max-priority live vertex matches every round, and chain
     * graphs clear in a handful of rounds). */
-  private def qMatching(s: SparkSession, dir: String): DataFrame =
+  private def qMatching(t: Tables): DataFrame =
     Algos.maximalMatching(
-      Prep.makeSymmetric(TestGraphs.eventChain(Tables(s, dir))))
+      Prep.makeSymmetric(TestGraphs.eventChain(t)))
 
   private def qMatchingSql(rounds: Int): String = {
     val roundCtes = (1 to rounds).map { r =>
@@ -2116,9 +2050,9 @@ object Queries {
     * vertex, and OPT ≥ |M| since matched edges are disjoint). Pure
     * derivation from [[qMatching]]'s fixpoint — the oracle reuses the
     * unrolled matching chain. */
-  private def qVertexCover(s: SparkSession, dir: String): DataFrame = {
+  private def qVertexCover(t: Tables): DataFrame = {
     val m = Algos.maximalMatching(
-      Prep.makeSymmetric(TestGraphs.eventChain(Tables(s, dir))))
+      Prep.makeSymmetric(TestGraphs.eventChain(t)))
     m.select(col("u").as("id")).union(m.select(col("v").as("id")))
       .distinct().orderBy(col("id"))
   }
@@ -2147,16 +2081,16 @@ object Queries {
        |SELECT h, n_pairs FROM ($counts) z ORDER BY h""".stripMargin.replace('\n', ' ')
   }
 
-  private def qPagerank(s: SparkSession, dir: String): DataFrame =
-    Algos.pagerank(custSuppSymE(s, dir), iterations = 5)
+  private def qPagerank(t: Tables): DataFrame =
+    Algos.pagerank(TestGraphs.custSuppSym(t), iterations = 5)
       .select(col("id"), e6(col("pr")).as("pr_e6"))
       .orderBy(col("id"))
 
-  private def qMaxProp(s: SparkSession, dir: String): DataFrame =
-    Algos.maxProp(custSuppSymE(s, dir).select("src", "dst")).orderBy(col("id"))
+  private def qMaxProp(t: Tables): DataFrame =
+    Algos.maxProp(TestGraphs.custSuppSym(t).select("src", "dst")).orderBy(col("id"))
 
-  private def qCcEvents(s: SparkSession, dir: String): DataFrame =
-    Algos.wcc(Prep.makeSymmetric(TestGraphs.eventChain(Tables(s, dir))))
+  private def qCcEvents(t: Tables): DataFrame =
+    Algos.wcc(Prep.makeSymmetric(TestGraphs.eventChain(t)))
       .orderBy(col("id"))
 
   private val qCcEventsSql =
@@ -2165,8 +2099,8 @@ object Queries {
       |WHERE user_id IN (SELECT user_id FROM events GROUP BY user_id HAVING COUNT(*) >= 2)
       |ORDER BY id""".stripMargin.replace('\n', ' ')
 
-  private def qTriCount(s: SparkSession, dir: String): DataFrame =
-    Algos.triangleCount(TestGraphs.suppCoPairs(Tables(s, dir)))
+  private def qTriCount(t: Tables): DataFrame =
+    Algos.triangleCount(TestGraphs.suppCoPairs(t))
 
   /** 9-truss of the part co-occurrence graph (parts in the same order):
     * edges in ≥ 7 within-subgraph triangles after peeling
@@ -2174,8 +2108,8 @@ object Queries {
     * (115.7k → 12.1k edges over 11 rounds at sf0.01; 1.2M → 133k over
     * 4 rounds at sf0.1) — the supplier graph is complete at every sf,
     * which makes its truss trivial and its triangle pass maximal. */
-  private def qKtruss(s: SparkSession, dir: String): DataFrame =
-    Algos.kTruss(TestGraphs.partCoPairs(Tables(s, dir)), k = 9)
+  private def qKtruss(t: Tables): DataFrame =
+    Algos.kTruss(TestGraphs.partCoPairs(t), k = 9)
 
   private val qTriCountSql =
     s"""WITH cp AS (${TestGraphs.suppCoPairsSql})
@@ -2185,8 +2119,8 @@ object Queries {
 
   /** Candidate cap 128 per supplier (top by lineitem count, then src id):
     * bounds the pair blowup at any hub — see Algos.triangleClosing. */
-  private def qTriClosing(s: SparkSession, dir: String): DataFrame =
-    Algos.triangleClosing(custSuppE(s, dir), topK = 20, maxFanIn = 128)
+  private def qTriClosing(t: Tables): DataFrame =
+    Algos.triangleClosing(TestGraphs.custSupp(t), topK = 20, maxFanIn = 128)
 
   private val qTriClosingSql =
     s"""WITH ce AS (${TestGraphs.custSuppSql}),
@@ -2196,11 +2130,11 @@ object Queries {
        |FROM cc a JOIN cc b ON a.dst = b.dst AND a.src < b.src
        |GROUP BY 1, 2 ORDER BY common DESC, u, v LIMIT 20""".stripMargin.replace('\n', ' ')
 
-  private def qKcore(s: SparkSession, dir: String): DataFrame =
-    Algos.kCore(custSuppSymE(s, dir), k = 30)
+  private def qKcore(t: Tables): DataFrame =
+    Algos.kCore(TestGraphs.custSuppSym(t), k = 30)
 
-  private def qClustering(s: SparkSession, dir: String): DataFrame =
-    Algos.clusteringCoefficient(TestGraphs.suppCoPairs(Tables(s, dir)))
+  private def qClustering(t: Tables): DataFrame =
+    Algos.clusteringCoefficient(TestGraphs.suppCoPairs(t))
       .orderBy(col("id"))
 
   private val qClusteringSql =
@@ -2219,11 +2153,11 @@ object Queries {
        |ELSE 0 END AS cc_e6
        |FROM deg LEFT JOIN tv ON deg.id = tv.id ORDER BY deg.id""".stripMargin.replace('\n', ' ')
 
-  private def qMis(s: SparkSession, dir: String): DataFrame =
-    Algos.independentSet(TestGraphs.suppCoSym(Tables(s, dir))).orderBy(col("id"))
+  private def qMis(t: Tables): DataFrame =
+    Algos.independentSet(TestGraphs.suppCoSym(t)).orderBy(col("id"))
 
-  private def qScc(s: SparkSession, dir: String): DataFrame =
-    Algos.scc(TestGraphs.suppRing(Tables(s, dir))).orderBy(col("id"))
+  private def qScc(t: Tables): DataFrame =
+    Algos.scc(TestGraphs.suppRing(t)).orderBy(col("id"))
 
   /** Bow-tie macro-structure of the wait-for graph
     * ([[graft.graph.Algos.bowtie]]): the supplier ring is one giant SCC
@@ -2233,8 +2167,8 @@ object Queries {
     * zero-row class, the dq_checks discipline), other = the remaining
     * customers. The oracle reuses the SCC transitive-closure doubling
     * plus two closure-probe reach sets. */
-  private def qBowtie(s: SparkSession, dir: String): DataFrame =
-    Algos.bowtie(TestGraphs.waitFor(Tables(s, dir)))
+  private def qBowtie(t: Tables): DataFrame =
+    Algos.bowtie(TestGraphs.waitFor(t))
       .groupBy(col("cls"))
       .agg(count(lit(1)).as("n"), min(col("id")).as("min_id"), max(col("id")).as("max_id"))
       .orderBy(col("cls"))
@@ -2273,8 +2207,8 @@ object Queries {
     * times (rotations) and each FFL once per its unique topological
     * order, so cycles div 3 + ffl = total distinct triads. Exact
     * counts, shuffle-bound joins on the edge key. */
-  private def qTriadCensus(s: SparkSession, dir: String): DataFrame = {
-    val e = TestGraphs.suppRing(Tables(s, dir)).select(col("src"), col("dst")).distinct()
+  private def qTriadCensus(t: Tables): DataFrame = {
+    val e = TestGraphs.suppRing(t).select(col("src"), col("dst")).distinct()
     val paths = e.as("e1").join(e.as("e2"), col("e1.dst") === col("e2.src"))
       .filter(col("e1.src") =!= col("e2.dst"))
       .select(col("e1.src").as("a"), col("e1.dst").as("b"), col("e2.dst").as("c"))
@@ -2296,8 +2230,8 @@ object Queries {
        |SELECT CAST(n3 // 3 AS BIGINT) AS n_cycles, nf AS n_ffl
        |FROM cy CROSS JOIN ff""".stripMargin.replace('\n', ' ')
 
-  private def qNorm(s: SparkSession, dir: String): DataFrame =
-    Prep.normalizeEdgeWeights(custSuppE(s, dir).select("src", "dst", "w"))
+  private def qNorm(t: Tables): DataFrame =
+    Prep.normalizeEdgeWeights(TestGraphs.custSupp(t).select("src", "dst", "w"))
       .select(col("src"), col("dst"), e6(col("w")).as("wn_e6"))
       .orderBy(col("src"), col("dst"))
 
@@ -2306,13 +2240,13 @@ object Queries {
        |SELECT src, dst, CAST(FLOOR(w / CAST(SUM(w) OVER (PARTITION BY src) AS DOUBLE) * 1000000) AS BIGINT) AS wn_e6
        |FROM ce ORDER BY src, dst""".stripMargin.replace('\n', ' ')
 
-  private def qWPagerank(s: SparkSession, dir: String): DataFrame =
-    Algos.pagerankWeighted(custSuppSymE(s, dir), iterations = 5)
+  private def qWPagerank(t: Tables): DataFrame =
+    Algos.pagerankWeighted(TestGraphs.custSuppSym(t), iterations = 5)
       .select(col("id"), e6(col("pr")).as("pr_e6"))
       .orderBy(col("id"))
 
-  private def qRwr(s: SparkSession, dir: String): DataFrame = {
-    val e = custSuppSymE(s, dir).select("src", "dst")
+  private def qRwr(t: Tables): DataFrame = {
+    val e = TestGraphs.custSuppSym(t).select("src", "dst")
     val source = e.agg(min(col("src"))).first().getLong(0)
     Algos.randomWalkWithRestart(e, source, iterations = 5)
       .select(col("id"), e6(col("pr")).as("pr_e6"))
@@ -2322,8 +2256,8 @@ object Queries {
   /** Per-source eccentricities from the 4 smallest vertices — ONE
     * tagged multi-source BFS loop ([[graft.graph.Algos.eccentricities]]).
     * The 4 source ids are the only driver-side values (scalars rule). */
-  private def qEcc(s: SparkSession, dir: String): DataFrame = {
-    val e = custSuppSymE(s, dir).select("src", "dst")
+  private def qEcc(t: Tables): DataFrame = {
+    val e = TestGraphs.custSuppSym(t).select("src", "dst")
     val sources = e.select(col("src")).distinct().orderBy(col("src"))
       .limit(4).collect().map(_.getLong(0)).toSeq
     Algos.eccentricities(e, sources)
@@ -2334,8 +2268,8 @@ object Queries {
     * the min vertex, re-BFS from the farthest reached (deterministic
     * tie-break), report its eccentricity. The oracle unrolls both BFS
     * chains and replays the same farthest pick. */
-  private def qDiameter(s: SparkSession, dir: String): DataFrame =
-    Algos.doubleSweep(custSuppSymE(s, dir).select("src", "dst"))
+  private def qDiameter(t: Tables): DataFrame =
+    Algos.doubleSweep(TestGraphs.custSuppSym(t).select("src", "dst"))
 
   /** Minimum spanning forest of the customer–supplier graph
     * ([[graft.graph.Algos.mst]], Borůvka). Hash-matched against
@@ -2343,21 +2277,21 @@ object Queries {
     * unrolled SQL (pointer-doubling contraction, no union-find needed);
     * determinism + Kruskal equality are additionally pinned by
     * AlgosSpec. */
-  private def qMst(s: SparkSession, dir: String): DataFrame =
-    Algos.mst(TestGraphs.custSupp(Tables(s, dir))
+  private def qMst(t: Tables): DataFrame =
+    Algos.mst(TestGraphs.custSupp(t)
       .select(col("src").as("u"), col("dst").as("v"), col("w")))
 
   /** Node-embedding walk corpus ([[graft.graph.Algos.randomWalks]]):
     * one 3-step deterministic walk per vertex; every hop replayed by the
     * oracle through the same md5-indexed adjacency rule. */
-  private def qWalks(s: SparkSession, dir: String): DataFrame =
-    Algos.randomWalks(custSuppSymE(s, dir).select("src", "dst"), len = 3)
+  private def qWalks(t: Tables): DataFrame =
+    Algos.randomWalks(TestGraphs.custSuppSym(t).select("src", "dst"), len = 3)
 
   /** Link strength on the part co-occurrence graph
     * ([[graft.graph.Algos.edgeJaccard]]): neighborhood Jaccard per
     * existing edge via the triangle-intersection kernel. */
-  private def qEdgeJaccard(s: SparkSession, dir: String): DataFrame =
-    Algos.edgeJaccard(TestGraphs.partCoPairs(Tables(s, dir)), topK = 100)
+  private def qEdgeJaccard(t: Tables): DataFrame =
+    Algos.edgeJaccard(TestGraphs.partCoPairs(t), topK = 100)
 
   private val qEdgeJaccardSql =
     s"""WITH cp AS MATERIALIZED (${TestGraphs.partCoPairsSql}),
@@ -2379,15 +2313,15 @@ object Queries {
   /** Community detection: 4 synchronous LPA rounds over the symmetric
     * customer–supplier graph (neighborhood mode, min-label ties). Oracle
     * unrolls the identical rule — see [[graft.sql.OracleGen.lpaSql]]. */
-  private def qLpa(s: SparkSession, dir: String): DataFrame =
-    Algos.lpa(custSuppSymE(s, dir).select("src", "dst"), rounds = 4)
+  private def qLpa(t: Tables): DataFrame =
+    Algos.lpa(TestGraphs.custSuppSym(t).select("src", "dst"), rounds = 4)
       .orderBy(col("id"))
 
   /** Harmonic centrality of the 4 smallest vertices — the
     * disconnect-robust closeness, riding the same tagged multi-source
     * BFS as q_graph_ecc ([[graft.graph.Algos.harmonicCentrality]]). */
-  private def qHarmonic(s: SparkSession, dir: String): DataFrame = {
-    val e = custSuppSymE(s, dir).select("src", "dst")
+  private def qHarmonic(t: Tables): DataFrame = {
+    val e = TestGraphs.custSuppSym(t).select("src", "dst")
     val sources = e.select(col("src")).distinct().orderBy(col("src"))
       .limit(4).collect().map(_.getLong(0)).toSeq
     Algos.harmonicCentrality(e, sources)
@@ -2402,8 +2336,8 @@ object Queries {
     * accumulate authority, customers hub weight — the bipartite shape
     * makes both sides non-trivial. Oracle unrolls the identical
     * normalize-divide recurrence. */
-  private def qHits(s: SparkSession, dir: String): DataFrame =
-    Algos.hits(custSuppE(s, dir).select("src", "dst"), iterations = 4)
+  private def qHits(t: Tables): DataFrame =
+    Algos.hits(TestGraphs.custSupp(t).select("src", "dst"), iterations = 4)
       .select(col("id"), e6(col("auth")).as("auth_e6"),
         e6(col("hub")).as("hub_e6"))
       .orderBy(col("id"))
@@ -2412,8 +2346,8 @@ object Queries {
     * ([[graft.graph.Algos.modularity]] ∘ [[graft.graph.Algos.lpa]]) —
     * the "was this community structure real" follow-up every LPA run
     * needs. Exact integer numerators; one scalar m2. */
-  private def qModularity(s: SparkSession, dir: String): DataFrame = owned { o =>
-    val e = custSuppSymE(s, dir).select("src", "dst")
+  private def qModularity(t: Tables): DataFrame = owned { o =>
+    val e = TestGraphs.custSuppSym(t).select("src", "dst")
     Algos.modularity(e, o(Algos.lpa(e, rounds = 4)))
       .select(col("community"), col("n_members"), col("internal2"),
         col("deg_sum"), e6(col("contrib")).as("contrib_e6"))
@@ -2424,8 +2358,8 @@ object Queries {
     * ([[graft.graph.Algos.betweenness]]): forward σ-counting BFS +
     * backward dependency peel, both level-synchronous. Sampled sources
     * is the standard at-scale estimator (exact Brandes is Θ(V·E)). */
-  private def qBetweenness(s: SparkSession, dir: String): DataFrame = {
-    val e = custSuppSymE(s, dir).select("src", "dst")
+  private def qBetweenness(t: Tables): DataFrame = {
+    val e = TestGraphs.custSuppSym(t).select("src", "dst")
     val sources = e.select(col("src")).distinct().orderBy(col("src"))
       .limit(4).collect().map(_.getLong(0)).toSeq
     Algos.betweenness(e, sources)
@@ -2437,8 +2371,8 @@ object Queries {
     * customer–supplier graph ([[graft.graph.Algos.temporalReach]]):
     * paths may only traverse edges with non-decreasing order days.
     * 8 fixed relaxation rounds, matched round-for-round by the oracle. */
-  private def qTemporalReach(s: SparkSession, dir: String): DataFrame = {
-    val e = TestGraphs.custSuppTemporal(Tables(s, dir))
+  private def qTemporalReach(t: Tables): DataFrame = {
+    val e = TestGraphs.custSuppTemporal(t)
     val source = e.agg(min(col("src"))).first().getLong(0)
     Algos.temporalReach(e, source, rounds = 8)
   }
@@ -2447,8 +2381,8 @@ object Queries {
     * ([[graft.graph.Algos.assortativity]]): strongly negative on a
     * bipartite hub structure — low-degree customers attach to
     * high-degree suppliers. Exact integer sums; one double formula. */
-  private def qAssortativity(s: SparkSession, dir: String): DataFrame =
-    Algos.assortativity(custSuppSymE(s, dir).select("src", "dst"))
+  private def qAssortativity(t: Tables): DataFrame =
+    Algos.assortativity(TestGraphs.custSuppSym(t).select("src", "dst"))
       // assortativity returns NaN in the zero-degree-variance regime
       // (round-13 exploration find); the e6 floor+CAST would itself
       // throw on NaN under ANSI, so define the oracled column there:
@@ -2480,8 +2414,7 @@ object Queries {
     * recommender candidate pass). The hub cap
     * ([[graft.graph.Algos.linkPredict]]) stays as the worst-case bound.
     * Top 50 non-edges by (common neighbors, preferential attachment). */
-  private def qLinkPred(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qLinkPred(t: Tables): DataFrame = {
     val li = t.lineitem
       .filter(pmod(graft.pipeline.Corpus.md5Uniform(col("l_orderkey").cast("string")), lit(5L)) === 0)
       .select(col("l_orderkey"), col("l_partkey"))
@@ -2523,8 +2456,8 @@ object Queries {
     * attenuation 1/4096 — the exact-integer recurrence contract is in
     * [[graft.graph.Algos.katz]]; the oracle unrolls all 6 rounds of the
     * identical BIGINT chain. */
-  private def qKatz(s: SparkSession, dir: String): DataFrame =
-    Algos.katz(custSuppE(s, dir), rounds = 6)
+  private def qKatz(t: Tables): DataFrame =
+    Algos.katz(TestGraphs.custSupp(t), rounds = 6)
       .orderBy(col("id"))
 
   private val qKatzSql = {
@@ -2549,8 +2482,8 @@ object Queries {
     * directed edges whose reverse also exists — the standard
     * directed-graph symmetry diagnostic (1.0 ⟺ effectively
     * undirected). One self-join ON the reversed key + exact e6 ratio. */
-  private def qReciprocity(s: SparkSession, dir: String): DataFrame = {
-    val e = TestGraphs.suppRing(Tables(s, dir)).select(col("src"), col("dst")).distinct()
+  private def qReciprocity(t: Tables): DataFrame = {
+    val e = TestGraphs.suppRing(t).select(col("src"), col("dst")).distinct()
     val recip = e.as("a").join(e.as("b"),
       col("a.src") === col("b.dst") && col("a.dst") === col("b.src"))
     val n = e.count()
@@ -2574,8 +2507,7 @@ object Queries {
     * bin edges are identical in both engines — the generic-value
     * companion to the log-binned degree histogram. Two aggs + one
     * broadcast of the (min, max) scalar row. */
-  private def qHistogram(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qHistogram(t: Tables): DataFrame = {
     val cents = t.orders.select(e2(col("o_totalprice")).as("x"))
     val mm = cents.agg(min(col("x")).as("mn"), max(col("x")).as("mx"))
     cents.crossJoin(broadcast(mm))
@@ -2592,8 +2524,8 @@ object Queries {
       |MIN(x) AS lo, MAX(x) AS hi
       |FROM c CROSS JOIN mm GROUP BY 1 ORDER BY 1""".stripMargin.replace('\n', ' ')
 
-  private def qDegStats(s: SparkSession, dir: String): DataFrame =
-    Algos.degreeStats(custSuppE(s, dir))
+  private def qDegStats(t: Tables): DataFrame =
+    Algos.degreeStats(TestGraphs.custSupp(t))
 
   private val qDegStatsSql =
     s"""WITH ce AS MATERIALIZED (${TestGraphs.custSuppSql}),
@@ -2604,8 +2536,8 @@ object Queries {
   /** Log-binned degree distribution (power-law inspection — the first
     * plot anyone makes of a graph): bucket = ⌊log₂(out-degree)⌋ via the
     * integer bin-length idiom (no libm), counts per bucket. */
-  private def qDegHist(s: SparkSession, dir: String): DataFrame =
-    custSuppE(s, dir)
+  private def qDegHist(t: Tables): DataFrame =
+    TestGraphs.custSupp(t)
       .groupBy(col("src")).agg(count(lit(1)).as("d"))
       .select((length(bin(col("d"))) - 1).cast("long").as("log2_deg"))
       .groupBy(col("log2_deg")).agg(count(lit(1)).as("n_vertices"))
@@ -2620,8 +2552,8 @@ object Queries {
 
   /** Partitioning-quality stats (edge locality + avg bucket fanout) of
     * the id-mod-8 placement over the customer–supplier graph. */
-  private def qPartitionStats(s: SparkSession, dir: String): DataFrame =
-    Algos.partitioningStats(custSuppE(s, dir), nBuckets = 8)
+  private def qPartitionStats(t: Tables): DataFrame =
+    Algos.partitioningStats(TestGraphs.custSupp(t), nBuckets = 8)
 
   private val qPartitionStatsSql =
     s"""WITH ce AS MATERIALIZED (${TestGraphs.custSuppSql}),
@@ -2635,17 +2567,17 @@ object Queries {
        |CAST(FLOOR(CAST(sf AS DOUBLE) / nv * 1000000) AS BIGINT) AS avg_fanout_e6
        |FROM a1, a2""".stripMargin.replace('\n', ' ')
 
-  private def qDeadlock(s: SparkSession, dir: String): DataFrame =
-    Algos.deadlock(TestGraphs.waitFor(Tables(s, dir))).orderBy(col("id"))
+  private def qDeadlock(t: Tables): DataFrame =
+    Algos.deadlock(TestGraphs.waitFor(t)).orderBy(col("id"))
 
   /** Bracha-Toueg OR/N-of-M deadlock on the tagged wait-for fixture;
     * initiator = supplier 1 (offset id space). */
-  private def qBracha(s: SparkSession, dir: String): DataFrame =
-    Algos.brachaToueg(TestGraphs.taggedWaitFor(Tables(s, dir)),
+  private def qBracha(t: Tables): DataFrame =
+    Algos.brachaToueg(TestGraphs.taggedWaitFor(t),
       initiator = TestGraphs.SuppOffset + 3, rounds = 20).orderBy(col("id"))
 
-  private def qPrepStats(s: SparkSession, dir: String): DataFrame =
-    Prep.cleanSymmetric(custSuppE(s, dir))
+  private def qPrepStats(t: Tables): DataFrame =
+    Prep.cleanSymmetric(TestGraphs.custSupp(t))
       .groupBy(col("src")).agg(count(lit(1)).as("d"))
       .agg(count(lit(1)).as("n_vertices"), sum(col("d")).as("n_edges"),
         max(col("d")).as("max_degree"))
@@ -2663,235 +2595,144 @@ object Queries {
   // registry
   // ------------------------------------------------------------------
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q01_agg"          -> (q01 _),
-    "q03_topn"         -> (q03 _),
-    "q05_nation_rev"   -> (q05 _),
-    "q06_filter_sum"   -> (q06 _),
-    "q_rollup"         -> (qRollup _),
-    "q_anti_customers" -> (qAntiCustomers _),
-    "q_props_json"     -> (qPropsJson _),
-    "q_zorder_keys"    -> (qZorderKeys _),
-    "q_ntile_deciles"  -> (qNtile _),
-    "q_cube"           -> (qCube _),
-    "q_pivot"          -> (qPivot _),
-    "q_moving_avg"     -> (qMovingAvg _),
-    "q_quantiles"      -> (qQuantiles _),
-    "q_distinct_kmv"   -> (qKmv _),
-    "q_cohort"         -> (qCohort _),
-    "q_funnel"         -> (qFunnel _),
-    "q_scd2"           -> (qScd2 _),
-    "q_event_paths"    -> (qEventPaths _),
-    "q_calendar_fill"  -> (qCalendarFill _),
-    "q_skew_salted"    -> (qSkewSalted _),
-    "q_sessions"       -> (qSessions _),
-    "q_tumbling"       -> (qTumbling _),
-    "q_sliding"        -> (qSliding _),
-    "q_asof_purchase"  -> (qAsofPurchase _),
-    "q_range_attrib"   -> (qRangeAttrib _),
-    "q_window_funcs"   -> (qWindowFuncs _),
-    "q_skyline"        -> (qSkyline _),
-    "q_assoc_rules"    -> (qAssocRules _),
-    "q_distinct_hll"   -> (qHll _),
-    "q_mad"            -> (qMad _),
-    "q_rfm"            -> (qRfm _),
-    "q_markov"         -> (qMarkov _),
-    "q_mom_growth"     -> (qMomGrowth _),
-    "q_gini"           -> (qGini _),
-    "q_chi2"           -> (qChi2 _),
-    "q_diversity"      -> (qDiversity _),
-    "q_weighted_median" -> (qWeightedMedian _),
-    "q_grouped_topk"   -> (qGroupedTopK _),
-    "q_hll_algebra"    -> (qHllAlgebra _),
-    "q_autocorr"       -> (qAutocorr _),
-    "q_anomaly_days"   -> (qAnomalyDays _),
-    "q_graph_reciprocity" -> (qReciprocity _),
-    "q_graph_triads"   -> (qTriadCensus _),
-    "q_histogram"      -> (qHistogram _),
-    "q_time_to_convert" -> (qTimeToConvert _),
-    "q_active_users"   -> (qActiveUsers _),
-    "q_split_3way"     -> (qSplit3Way _),
-    "q_cumulative_users" -> (qCumulativeUsers _),
-    "q_churn"          -> (qChurn _),
-    "q_skew_profile"   -> (qSkewProfile _),
-    "q_readability"    -> (qReadability _),
-    "q_rate_limit"     -> (qRateLimit _),
-    "q_corr_matrix"    -> (qCorrMatrix _),
-    "q_regression"     -> (qRegression _),
-    "q_seasonal"       -> (qSeasonal _),
-    "q_interarrival"   -> (qInterarrival _),
-    "q_unpivot"        -> (qUnpivot _),
-    "q_pareto_abc"     -> (qParetoAbc _),
-    "q_target_enc"     -> (qTargetEnc _),
-    "q_full_outer"     -> (qFullOuter _),
-    "q_outliers"       -> (qOutliers _),
-    "q_graph_temporal" -> (qTemporalReach _),
-    "q_graph_assortativity" -> (qAssortativity _),
-    "q_graph_linkpred" -> (qLinkPred _),
-    "q_graph_katz"     -> (qKatz _),
-    "q_gaps_islands"   -> (qGapsIslands _),
-    "q_grouping_sets"  -> (qGroupingSets _),
-    "q_dq_checks"      -> (qDqChecks _),
-    "q_profile"        -> (qProfile _),
-    "q_bloom_prune"    -> (qBloomPrune _),
-    "q_fuzzy_join"     -> (qFuzzyJoin _),
-    "q_graph_degrees"  -> (qDegrees _),
-    "q_graph_wcc"      -> (qWcc _),
-    "q_graph_sssp"     -> (qSssp _),
-    "q_graph_bfs"      -> (qBfs _),
-    "q_graph_neighborhood" -> (qNeighborhood _),
-    "q_graph_coloring" -> (qColoring _),
-    "q_graph_matching" -> (qMatching _),
-    "q_graph_vertex_cover" -> (qVertexCover _),
-    "q_graph_percolation" -> (qPercolation _),
-    "q_user_entropy"   -> (qUserEntropy _),
-    "q_graph_diameter" -> (qDiameter _),
-    "q_graph_pagerank" -> (qPagerank _),
-    "q_graph_maxprop"  -> (qMaxProp _),
-    "q_graph_cc_events" -> (qCcEvents _),
-    "q_graph_tri_count" -> (qTriCount _),
-    "q_graph_ktruss"   -> (qKtruss _),
-    "q_graph_tri_closing" -> (qTriClosing _),
-    "q_graph_mis"      -> (qMis _),
-    "q_graph_scc"      -> (qScc _),
-    "q_graph_bowtie"   -> (qBowtie _),
-    "q_graph_kcore"    -> (qKcore _),
-    "q_graph_clustering" -> (qClustering _),
-    "q_graph_deadlock" -> (qDeadlock _),
-    "q_graph_bracha"   -> (qBracha _),
-    "q_graph_norm"     -> (qNorm _),
-    "q_graph_wpagerank" -> (qWPagerank _),
-    "q_graph_rwr"      -> (qRwr _),
-    "q_graph_lpa"      -> (qLpa _),
-    "q_graph_ecc"      -> (qEcc _),
-    "q_graph_harmonic" -> (qHarmonic _),
-    "q_graph_hits"     -> (qHits _),
-    "q_graph_modularity" -> (qModularity _),
-    "q_graph_betweenness" -> (qBetweenness _),
-    "q_graph_edge_jaccard" -> (qEdgeJaccard _),
-    "q_graph_walks"    -> (qWalks _),
-    "q_graph_mst"      -> (qMst _),
-    "q_graph_deg_stats" -> (qDegStats _),
-    "q_graph_deg_hist" -> (qDegHist _),
-    "q_graph_partition_stats" -> (qPartitionStats _),
-    "q_graph_prep_stats" -> (qPrepStats _)) ++ TpchQueries.all ++ PipelineQueries.all ++ CorpusQueries.all ++ RetrievalQueries.all ++ AnalyticsQueries.all ++ SignalQueries.all
-
-  val oracles: Map[String, String] = Map(
-    "q01_agg"          -> q01Sql,
-    "q03_topn"         -> q03Sql,
-    "q05_nation_rev"   -> q05Sql,
-    "q06_filter_sum"   -> q06Sql,
-    "q_rollup"         -> qRollupSql,
-    "q_anti_customers" -> qAntiCustomersSql,
-    "q_props_json"     -> qPropsJsonSql,
-    "q_zorder_keys"    -> qZorderKeysSql,
-    "q_ntile_deciles"  -> qNtileSql,
-    "q_cube"           -> qCubeSql,
-    "q_pivot"          -> qPivotSql,
-    "q_moving_avg"     -> qMovingAvgSql,
-    "q_quantiles"      -> qQuantilesSql,
-    "q_distinct_kmv"   -> qKmvSql,
-    "q_cohort"         -> qCohortSql,
-    "q_funnel"         -> qFunnelSql,
-    "q_scd2"           -> qScd2Sql,
-    "q_event_paths"    -> qEventPathsSql,
-    "q_calendar_fill"  -> qCalendarFillSql,
-    "q_skew_salted"    -> qSkewSaltedSql,
-    "q_sessions"       -> qSessionsSql,
-    "q_tumbling"       -> qTumblingSql,
-    "q_sliding"        -> qSlidingSql,
-    "q_asof_purchase"  -> qAsofPurchaseSql,
-    "q_range_attrib"   -> qRangeAttribSql,
-    "q_window_funcs"   -> qWindowFuncsSql,
-    "q_skyline"        -> qSkylineSql,
-    "q_assoc_rules"    -> qAssocRulesSql,
-    "q_distinct_hll"   -> qHllSql,
-    "q_mad"            -> qMadSql,
-    "q_rfm"            -> qRfmSql,
-    "q_markov"         -> qMarkovSql,
-    "q_mom_growth"     -> qMomGrowthSql,
-    "q_gini"           -> qGiniSql,
-    "q_chi2"           -> qChi2Sql,
-    "q_diversity"      -> qDiversitySql,
-    "q_weighted_median" -> qWeightedMedianSql,
-    "q_grouped_topk"   -> qGroupedTopKSql,
-    "q_hll_algebra"    -> qHllAlgebraSql,
-    "q_autocorr"       -> qAutocorrSql,
-    "q_anomaly_days"   -> qAnomalyDaysSql,
-    "q_graph_reciprocity" -> qReciprocitySql,
-    "q_graph_triads"   -> qTriadCensusSql,
-    "q_histogram"      -> qHistogramSql,
-    "q_time_to_convert" -> qTimeToConvertSql,
-    "q_active_users"   -> qActiveUsersSql,
-    "q_split_3way"     -> qSplit3WaySql,
-    "q_cumulative_users" -> qCumulativeUsersSql,
-    "q_churn"          -> qChurnSql,
-    "q_skew_profile"   -> qSkewProfileSql,
-    "q_readability"    -> qReadabilitySql,
-    "q_rate_limit"     -> qRateLimitSql,
-    "q_corr_matrix"    -> qCorrMatrixSql,
-    "q_regression"     -> qRegressionSql,
-    "q_seasonal"       -> qSeasonalSql,
-    "q_interarrival"   -> qInterarrivalSql,
-    "q_unpivot"        -> qUnpivotSql,
-    "q_pareto_abc"     -> qParetoAbcSql,
-    "q_target_enc"     -> qTargetEncSql,
-    "q_full_outer"     -> qFullOuterSql,
-    "q_outliers"       -> qOutliersSql,
-    "q_graph_temporal" -> OracleGen.temporalReachSql(TestGraphs.custSuppTemporalSql, 8),
-    "q_graph_assortativity" -> qAssortativitySql,
-    "q_graph_linkpred" -> qLinkPredSql,
-    "q_graph_katz"     -> qKatzSql,
-    "q_gaps_islands"   -> qGapsIslandsSql,
-    "q_grouping_sets"  -> qGroupingSetsSql,
-    "q_dq_checks"      -> qDqChecksSql,
-    "q_profile"        -> qProfileSql,
-    "q_bloom_prune"    -> qBloomPruneSql,
-    "q_fuzzy_join"     -> qFuzzyJoinSql,
-    "q_graph_degrees"  -> qDegreesSql,
-    "q_graph_wcc"      -> OracleGen.labelPropSql(TestGraphs.custSuppSymSql, 12, isMin = true, "component"),
-    "q_graph_mst"      -> OracleGen.boruvkaSql(
+  val queries: Seq[Query] = Seq(
+    Query("q01_agg", q01, q01Sql),
+    Query("q03_topn", q03, q03Sql),
+    Query("q05_nation_rev", q05, q05Sql),
+    Query("q06_filter_sum", q06, q06Sql),
+    Query("q_rollup", qRollup, qRollupSql),
+    Query("q_anti_customers", qAntiCustomers, qAntiCustomersSql),
+    Query("q_props_json", qPropsJson, qPropsJsonSql),
+    Query("q_zorder_keys", qZorderKeys, qZorderKeysSql),
+    Query("q_ntile_deciles", qNtile, qNtileSql),
+    Query("q_cube", qCube, qCubeSql),
+    Query("q_pivot", qPivot, qPivotSql),
+    Query("q_moving_avg", qMovingAvg, qMovingAvgSql),
+    Query("q_quantiles", qQuantiles, qQuantilesSql),
+    Query("q_distinct_kmv", qKmv, qKmvSql),
+    Query("q_cohort", qCohort, qCohortSql),
+    Query("q_funnel", qFunnel, qFunnelSql),
+    Query("q_scd2", qScd2, qScd2Sql),
+    Query("q_event_paths", qEventPaths, qEventPathsSql),
+    Query("q_calendar_fill", qCalendarFill, qCalendarFillSql),
+    Query("q_skew_salted", qSkewSalted, qSkewSaltedSql),
+    Query("q_sessions", qSessions, qSessionsSql),
+    Query("q_tumbling", qTumbling, qTumblingSql),
+    Query("q_sliding", qSliding, qSlidingSql),
+    Query("q_asof_purchase", qAsofPurchase, qAsofPurchaseSql),
+    Query("q_range_attrib", qRangeAttrib, qRangeAttribSql),
+    Query("q_window_funcs", qWindowFuncs, qWindowFuncsSql),
+    Query("q_skyline", qSkyline, qSkylineSql),
+    Query("q_assoc_rules", qAssocRules, qAssocRulesSql),
+    Query("q_distinct_hll", qHll, qHllSql),
+    Query("q_mad", qMad, qMadSql),
+    Query("q_rfm", qRfm, qRfmSql),
+    Query("q_markov", qMarkov, qMarkovSql),
+    Query("q_mom_growth", qMomGrowth, qMomGrowthSql),
+    Query("q_gini", qGini, qGiniSql),
+    Query("q_chi2", qChi2, qChi2Sql),
+    Query("q_diversity", qDiversity, qDiversitySql),
+    Query("q_weighted_median", qWeightedMedian, qWeightedMedianSql),
+    Query("q_grouped_topk", qGroupedTopK, qGroupedTopKSql),
+    Query("q_hll_algebra", qHllAlgebra, qHllAlgebraSql),
+    Query("q_autocorr", qAutocorr, qAutocorrSql),
+    Query("q_anomaly_days", qAnomalyDays, qAnomalyDaysSql),
+    Query("q_graph_reciprocity", qReciprocity, qReciprocitySql),
+    Query("q_graph_triads", qTriadCensus, qTriadCensusSql),
+    Query("q_histogram", qHistogram, qHistogramSql),
+    Query("q_time_to_convert", qTimeToConvert, qTimeToConvertSql),
+    Query("q_active_users", qActiveUsers, qActiveUsersSql),
+    Query("q_split_3way", qSplit3Way, qSplit3WaySql),
+    Query("q_cumulative_users", qCumulativeUsers, qCumulativeUsersSql),
+    Query("q_churn", qChurn, qChurnSql),
+    Query("q_skew_profile", qSkewProfile, qSkewProfileSql),
+    Query("q_readability", qReadability, qReadabilitySql),
+    Query("q_rate_limit", qRateLimit, qRateLimitSql),
+    Query("q_corr_matrix", qCorrMatrix, qCorrMatrixSql),
+    Query("q_regression", qRegression, qRegressionSql),
+    Query("q_seasonal", qSeasonal, qSeasonalSql),
+    Query("q_interarrival", qInterarrival, qInterarrivalSql),
+    Query("q_unpivot", qUnpivot, qUnpivotSql),
+    Query("q_pareto_abc", qParetoAbc, qParetoAbcSql),
+    Query("q_target_enc", qTargetEnc, qTargetEncSql),
+    Query("q_full_outer", qFullOuter, qFullOuterSql),
+    Query("q_outliers", qOutliers, qOutliersSql),
+    Query("q_graph_temporal", qTemporalReach, OracleGen.temporalReachSql(TestGraphs.custSuppTemporalSql, 8)),
+    Query("q_graph_assortativity", qAssortativity, qAssortativitySql),
+    Query("q_graph_linkpred", qLinkPred, qLinkPredSql),
+    Query("q_graph_katz", qKatz, qKatzSql),
+    Query("q_gaps_islands", qGapsIslands, qGapsIslandsSql),
+    Query("q_grouping_sets", qGroupingSets, qGroupingSetsSql),
+    Query("q_dq_checks", qDqChecks, qDqChecksSql),
+    Query("q_profile", qProfile, qProfileSql),
+    Query("q_bloom_prune", qBloomPrune, qBloomPruneSql),
+    Query("q_fuzzy_join", qFuzzyJoin, qFuzzyJoinSql),
+    Query("q_graph_degrees", qDegrees, qDegreesSql),
+    Query("q_graph_wcc", qWcc,
+      OracleGen.labelPropSql(TestGraphs.custSuppSymSql, 12, isMin = true, "component")),
+    Query("q_graph_sssp", qSssp, OracleGen.ssspSql(TestGraphs.custSuppSymSql, 16)),
+    Query("q_graph_bfs", qBfs, OracleGen.bfsMinSourceSql(TestGraphs.custSuppSymSql, 12)),
+    Query("q_graph_neighborhood", qNeighborhood, qNeighborhoodSql),
+    Query("q_graph_coloring", qColoring, qColoringSql(12)),
+    Query("q_graph_matching", qMatching, qMatchingSql(12)),
+    Query("q_graph_vertex_cover", qVertexCover, qVertexCoverSql(12)),
+    Query("q_graph_percolation", qPercolation, qPercolationSql(12)),
+    Query("q_user_entropy", qUserEntropy, qUserEntropySql),
+    Query("q_graph_diameter", qDiameter, OracleGen.doubleSweepSql(TestGraphs.custSuppSymSql, 16)),
+    Query("q_graph_pagerank", qPagerank, OracleGen.pagerankSql(TestGraphs.custSuppSymSql, 5, 0.85, 0.15)),
+    Query("q_graph_maxprop", qMaxProp,
+      OracleGen.labelPropSql(TestGraphs.custSuppSymSql, 12, isMin = false, "max_id")),
+    Query("q_graph_cc_events", qCcEvents, qCcEventsSql),
+    Query("q_graph_tri_count", qTriCount, qTriCountSql),
+    Query("q_graph_ktruss", qKtruss,
+      OracleGen.kTrussSql(s"e0 AS MATERIALIZED (${TestGraphs.partCoPairsSql})", 9, 14)),
+    Query("q_graph_tri_closing", qTriClosing, qTriClosingSql),
+    Query("q_graph_mis", qMis, OracleGen.misSql(TestGraphs.suppCoSymSql, 10)),
+    Query("q_graph_scc", qScc, OracleGen.sccSql(s"e AS MATERIALIZED (${TestGraphs.suppRingSql})", 8)),
+    Query("q_graph_bowtie", qBowtie, qBowtieSql),
+    Query("q_graph_kcore", qKcore, OracleGen.kCoreSql(TestGraphs.custSuppSymSql, 30, 12)),
+    Query("q_graph_clustering", qClustering, qClusteringSql),
+    Query("q_graph_deadlock", qDeadlock, OracleGen.deadlockSql(TestGraphs.waitForSql, 8)),
+    Query("q_graph_bracha", qBracha,
+      OracleGen.brachaTouegSql(TestGraphs.taggedWaitForSql, TestGraphs.SuppOffset + 3, 20)),
+    Query("q_graph_norm", qNorm, qNormSql),
+    Query("q_graph_wpagerank", qWPagerank,
+      OracleGen.pagerankWeightedSql(TestGraphs.custSuppSymSql, 5, 0.85, 0.15)),
+    Query("q_graph_rwr", qRwr, OracleGen.rwrSql(TestGraphs.custSuppSymSql, 5, 0.85, 0.15)),
+    Query("q_graph_lpa", qLpa, OracleGen.lpaSql(TestGraphs.custSuppSymSql, 4)),
+    Query("q_graph_ecc", qEcc, OracleGen.eccSql(TestGraphs.custSuppSymSql, 4, 16)),
+    Query("q_graph_harmonic", qHarmonic, OracleGen.harmonicSql(TestGraphs.custSuppSymSql, 4, 16)),
+    Query("q_graph_hits", qHits, OracleGen.hitsSql(
+      s"ce AS MATERIALIZED (${TestGraphs.custSuppSql}), e AS MATERIALIZED (SELECT src, dst FROM ce)", 4)),
+    Query("q_graph_modularity", qModularity, OracleGen.modularitySql(TestGraphs.custSuppSymSql, 4)),
+    Query("q_graph_betweenness", qBetweenness, OracleGen.betweennessSql(TestGraphs.custSuppSymSql, 4, 16)),
+    Query("q_graph_edge_jaccard", qEdgeJaccard, qEdgeJaccardSql),
+    Query("q_graph_walks", qWalks, OracleGen.walksSql(TestGraphs.custSuppSymSql, 3)),
+    Query("q_graph_mst", qMst, OracleGen.boruvkaSql(
       s"ce AS MATERIALIZED (${TestGraphs.custSuppSql}), " +
         "ew AS MATERIALIZED (SELECT src AS u, dst AS v, w FROM ce)",
-      rounds = 12, jumps = 12),
-    "q_graph_sssp"     -> OracleGen.ssspSql(TestGraphs.custSuppSymSql, 16),
-    "q_graph_bfs"      -> OracleGen.bfsMinSourceSql(TestGraphs.custSuppSymSql, 12),
-    "q_graph_neighborhood" -> qNeighborhoodSql,
-    "q_graph_coloring" -> qColoringSql(12),
-    "q_graph_matching" -> qMatchingSql(12),
-    "q_graph_vertex_cover" -> qVertexCoverSql(12),
-    "q_graph_percolation" -> qPercolationSql(12),
-    "q_user_entropy"   -> qUserEntropySql,
-    "q_graph_diameter" -> OracleGen.doubleSweepSql(TestGraphs.custSuppSymSql, 16),
-    "q_graph_pagerank" -> OracleGen.pagerankSql(TestGraphs.custSuppSymSql, 5, 0.85, 0.15),
-    "q_graph_maxprop"  -> OracleGen.labelPropSql(TestGraphs.custSuppSymSql, 12, isMin = false, "max_id"),
-    "q_graph_cc_events" -> qCcEventsSql,
-    "q_graph_tri_count" -> qTriCountSql,
-    "q_graph_ktruss"   -> OracleGen.kTrussSql(
-      s"e0 AS MATERIALIZED (${TestGraphs.partCoPairsSql})",
-      9, 14),
-    "q_graph_tri_closing" -> qTriClosingSql,
-    "q_graph_mis"      -> OracleGen.misSql(TestGraphs.suppCoSymSql, 10),
-    "q_graph_scc"      -> OracleGen.sccSql(s"e AS MATERIALIZED (${TestGraphs.suppRingSql})", 8),
-    "q_graph_bowtie"   -> qBowtieSql,
-    "q_graph_kcore"    -> OracleGen.kCoreSql(TestGraphs.custSuppSymSql, 30, 12),
-    "q_graph_clustering" -> qClusteringSql,
-    "q_graph_deadlock" -> OracleGen.deadlockSql(TestGraphs.waitForSql, 8),
-    "q_graph_bracha"   -> OracleGen.brachaTouegSql(TestGraphs.taggedWaitForSql, TestGraphs.SuppOffset + 3, 20),
-    "q_graph_norm"     -> qNormSql,
-    "q_graph_wpagerank" -> OracleGen.pagerankWeightedSql(TestGraphs.custSuppSymSql, 5, 0.85, 0.15),
-    "q_graph_rwr"      -> OracleGen.rwrSql(TestGraphs.custSuppSymSql, 5, 0.85, 0.15),
-    "q_graph_lpa"      -> OracleGen.lpaSql(TestGraphs.custSuppSymSql, 4),
-    "q_graph_ecc"      -> OracleGen.eccSql(TestGraphs.custSuppSymSql, 4, 16),
-    "q_graph_harmonic" -> OracleGen.harmonicSql(TestGraphs.custSuppSymSql, 4, 16),
-    "q_graph_hits"     -> OracleGen.hitsSql(
-      s"ce AS MATERIALIZED (${TestGraphs.custSuppSql}), e AS MATERIALIZED (SELECT src, dst FROM ce)", 4),
-    "q_graph_modularity" -> OracleGen.modularitySql(TestGraphs.custSuppSymSql, 4),
-    "q_graph_betweenness" -> OracleGen.betweennessSql(TestGraphs.custSuppSymSql, 4, 16),
-    "q_graph_edge_jaccard" -> qEdgeJaccardSql,
-    "q_graph_walks"    -> OracleGen.walksSql(TestGraphs.custSuppSymSql, 3),
-    "q_graph_deg_stats" -> qDegStatsSql,
-    "q_graph_deg_hist" -> qDegHistSql,
-    "q_graph_partition_stats" -> qPartitionStatsSql,
-    "q_graph_prep_stats" -> qPrepStatsSql) ++ TpchQueries.oracles ++ PipelineQueries.oracles ++ CorpusQueries.oracles ++ RetrievalQueries.oracles ++ AnalyticsQueries.oracles ++ SignalQueries.oracles
+      rounds = 12, jumps = 12)),
+    Query("q_graph_deg_stats", qDegStats, qDegStatsSql),
+    Query("q_graph_deg_hist", qDegHist, qDegHistSql),
+    Query("q_graph_partition_stats", qPartitionStats, qPartitionStatsSql),
+    Query("q_graph_prep_stats", qPrepStats, qPrepStatsSql))
+
+  /** Every declared query, this object's and the six family objects', by name. */
+  private val byName: Map[String, Query] = Query.index(queries ++ TpchQueries.queries ++
+    PipelineQueries.queries ++ CorpusQueries.queries ++ RetrievalQueries.queries ++
+    AnalyticsQueries.queries ++ SignalQueries.queries)
+
+  /** Each query's plan on the tables of a scale-factor directory. */
+  val all: Map[String, (SparkSession, String) => DataFrame] =
+    byName.map { case (n, q) => n -> ((s: SparkSession, dir: String) => q.plan(Tables(s, dir))) }
+
+  val oracles: Map[String, String] = byName.map { case (n, q) => n -> q.oracle }
+
+  /** The named queries' plans, in the order given; throws on an unknown
+    * name rather than dropping it. */
+  def select(names: Seq[String]): Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val unknown = names.filterNot(all.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    names.map(n => n -> all(n))
+  }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 import graft.pipeline.Retrieval
 
@@ -40,8 +40,8 @@ object RetrievalQueries {
 
   // --- q_bm25 -----------------------------------------------------------
 
-  private def qBm25(s: SparkSession, dir: String): DataFrame =
-    Retrieval.bm25(Tables(s, dir).documents, Terms, k = 15)
+  private def qBm25(t: Tables): DataFrame =
+    Retrieval.bm25(t.documents, Terms, k = 15)
 
   private val qBm25Sql =
     s"""WITH toks AS MATERIALIZED (${tokSql("documents")}),
@@ -54,8 +54,8 @@ object RetrievalQueries {
 
   /** RM3-shaped pseudo-relevance feedback: seed BM25 → top-3 docs →
     * 2 most frequent non-seed tokens join the query → re-scored. */
-  private def qPrf(s: SparkSession, dir: String): DataFrame =
-    Retrieval.prfExpand(Tables(s, dir).documents, Terms,
+  private def qPrf(t: Tables): DataFrame =
+    Retrieval.prfExpand(t.documents, Terms,
       fbDocs = 3, nExpand = 2, k = 15)
 
   private val qPrfSql =
@@ -84,10 +84,8 @@ object RetrievalQueries {
 
   // --- q_retrieval_hybrid ----------------------------------------------
 
-  private def qHybrid(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qHybrid(t: Tables): DataFrame =
     Retrieval.hybridRrf(t.documents, t.embeddings, Terms, queryVecId = 0L, k = 10)
-  }
 
   private val HybridCand = 50
 
@@ -124,8 +122,8 @@ object RetrievalQueries {
   private val MmrCand = 12
   private val MmrK = 6
 
-  private def qMmr(s: SparkSession, dir: String): DataFrame =
-    Retrieval.mmrRerank(Tables(s, dir).embeddings, queryVecId = 0L,
+  private def qMmr(t: Tables): DataFrame =
+    Retrieval.mmrRerank(t.embeddings, queryVecId = 0L,
       nCand = MmrCand, k = MmrK)
 
   /** Unrolled greedy chain: p{i} is step i's pick, sel{i} the picked-set
@@ -164,8 +162,8 @@ object RetrievalQueries {
     * tf = 2). The discount table ⌊10⁶/log₂(r+1)⌋ is generated once in
     * Scala and spliced into both plans as literals; the disc JOIN is
     * also the top-k cut (ranks > k have no discount row). */
-  private def qNdcg(s: SparkSession, dir: String): DataFrame =
-    Retrieval.evalRanking(Tables(s, dir).documents, Terms, k = 10)
+  private def qNdcg(t: Tables): DataFrame =
+    Retrieval.evalRanking(t.documents, Terms, k = 10)
 
   private val qNdcgSql = {
     val discRows = Retrieval.ndcgDiscE6(10)
@@ -213,8 +211,8 @@ object RetrievalQueries {
     * most frequent tokens). The oracle unrolls the same 10 damped
     * rounds; the per-round arithmetic is floor-division-exact, so the
     * final scores hash-match. */
-  private def qTextRank(s: SparkSession, dir: String): DataFrame =
-    Retrieval.textRank(Tables(s, dir).documents,
+  private def qTextRank(t: Tables): DataFrame =
+    Retrieval.textRank(t.documents,
       vocab = TrVocab, iters = TrIters, topK = TrTopK)
 
   private val qTextRankSql = {
@@ -249,19 +247,11 @@ object RetrievalQueries {
 
   // --- registry ---------------------------------------------------------
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_bm25"             -> (qBm25 _),
-    "q_retrieval_prf"    -> (qPrf _),
-    "q_retrieval_hybrid" -> (qHybrid _),
-    "q_retrieval_ndcg"   -> (qNdcg _),
-    "q_text_textrank"    -> (qTextRank _),
-    "q_ann_mmr"          -> (qMmr _))
-
-  val oracles: Map[String, String] = Map(
-    "q_bm25"             -> qBm25Sql,
-    "q_retrieval_prf"    -> qPrfSql,
-    "q_retrieval_hybrid" -> qHybridSql,
-    "q_retrieval_ndcg"   -> qNdcgSql,
-    "q_text_textrank"    -> qTextRankSql,
-    "q_ann_mmr"          -> qMmrSql)
+  val queries: Seq[Query] = Seq(
+    Query("q_bm25", qBm25, qBm25Sql),
+    Query("q_retrieval_prf", qPrf, qPrfSql),
+    Query("q_retrieval_hybrid", qHybrid, qHybridSql),
+    Query("q_retrieval_ndcg", qNdcg, qNdcgSql),
+    Query("q_text_textrank", qTextRank, qTextRankSql),
+    Query("q_ann_mmr", qMmr, qMmrSql))
 }

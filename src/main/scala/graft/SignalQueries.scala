@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.CheckpointBridge.{AdaptiveHash, materialize, owned}
 
@@ -38,8 +38,7 @@ object SignalQueries {
     * 100 TB the day count grows with TIME, not data volume, so the
     * O(days²) prefix refold stays a few-thousand-element array op per
     * type. No driver loop, no recursive join. */
-  private def qEwmaDaily(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qEwmaDaily(t: Tables): DataFrame = {
     val daily = t.events
       .select(expr(s"ts div $DayUs").as("day"), col("event_type"),
         floor(col("value") * 100).cast("long").as("cents"))
@@ -88,8 +87,7 @@ object SignalQueries {
     * sign-decomposed (see object doc). Scale: two hash aggs (user,
     * variant) + two single-row broadcasts — no shuffle wider than the
     * per-user rollup. */
-  private def qCuped(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qCuped(t: Tables): DataFrame = {
     val ev = t.events.select(col("user_id"), col("ts"),
       floor(col("value") * 100).cast("long").as("cents"))
     val mm = ev.agg(min(col("ts")).as("lo"), max(col("ts")).as("hi"))
@@ -177,9 +175,8 @@ object SignalQueries {
     * w·h·3 bytes of i % 249), so a hash match proves the engine's
     * parser walked headers and payloads exactly. One row per
     * consecutive-frame pair. */
-  private def qScenecut(s: SparkSession, dir: String): DataFrame = {
+  private def qScenecut(t: Tables): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val t = Tables(s, dir)
     val fs = multimodal.Multimodal.videoFrameStats(
       multimodal.Multimodal.documentsAsVideo(t.documents))
     val w = Window.partitionBy(col("doc_id")).orderBy(col("frame_idx"))
@@ -219,9 +216,9 @@ object SignalQueries {
     * which is what makes the ranking robust to tightly-knit-community
     * inflation. Oracle unrolls the identical divide-sum-normalize
     * recurrence. */
-  private def qSalsa(s: SparkSession, dir: String): DataFrame =
+  private def qSalsa(t: Tables): DataFrame =
     graph.Algos.salsa(
-      TestGraphs.custSupp(Tables(s, dir)).select("src", "dst"), iterations = 4)
+      TestGraphs.custSupp(t).select("src", "dst"), iterations = 4)
       .select(col("id"), e6(col("auth")).as("auth_e6"), e6(col("hub")).as("hub_e6"))
       .orderBy(col("id"))
 
@@ -264,8 +261,8 @@ object SignalQueries {
       .orderBy(col("doc_id"))
   }
 
-  private def qTextWinnow(s: SparkSession, dir: String): DataFrame =
-    winnowPanel(Tables(s, dir).documents)
+  private def qTextWinnow(t: Tables): DataFrame =
+    winnowPanel(t.documents)
 
   private val qTextWinnowSql =
     """WITH g AS (SELECT doc_id,
@@ -310,8 +307,8 @@ object SignalQueries {
       expr("sum((p * (p - 1)) div 2) div 2").cast("long").as("n_squares"))
   }
 
-  private def qSquares(s: SparkSession, dir: String): DataFrame =
-    squareCensus(TestGraphs.partCoPairs(Tables(s, dir)).localCheckpoint())
+  private def qSquares(t: Tables): DataFrame =
+    squareCensus(TestGraphs.partCoPairs(t).localCheckpoint())
 
   private val qSquaresSql =
     s"""WITH cp AS MATERIALIZED (${TestGraphs.partCoPairsSql}),
@@ -335,8 +332,8 @@ object SignalQueries {
     * (covariance), then a broadcast-sized d-row fixpoint; every step
     * exact-integer with max-|x|=1024 rescaling, so the oracle unrolls
     * the identical rounds over an independently-joined Gram matrix. */
-  private def qEmbPowerIter(s: SparkSession, dir: String): DataFrame =
-    sim.Similarity.powerIteration(Tables(s, dir).embeddings, dim = 64, rounds = 6)
+  private def qEmbPowerIter(t: Tables): DataFrame =
+    sim.Similarity.powerIteration(t.embeddings, dim = 64, rounds = 6)
 
   private val qEmbPowerIterSql = {
     val rounds = 6
@@ -380,8 +377,7 @@ object SignalQueries {
     * so the oracle decomposes every division as sign·(|x| div y) to
     * replay Spark's truncating `div` under DuckDB's flooring `//`.
     * Output adds the one-step forecast l + b per day. */
-  private def qHoltLinear(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qHoltLinear(t: Tables): DataFrame = {
     val daily = t.events
       .select(expr(s"ts div $DayUs").as("day"), col("event_type"),
         floor(col("value") * 100).cast("long").as("cents"))
@@ -446,9 +442,9 @@ object SignalQueries {
     * epochs_e3 says how many passes over each source that allocation
     * implies — the over/under-sampling panel a mixture designer reads.
     * One source-keyed agg + a window over the (bounded) source list. */
-  private def qMixEpochs(s: SparkSession, dir: String): DataFrame = {
+  private def qMixEpochs(t: Tables): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val d = Tables(s, dir).documents
+    val d = t.documents
     val src = d.groupBy(col("source")).agg(sum(col("n_chars")).as("chars"))
     val tot = src.agg(sum(col("chars")).as("t"), count(lit(1)).as("k"))
     src.crossJoin(broadcast(tot))
@@ -495,10 +491,10 @@ object SignalQueries {
     * the audit side never single-partitions) and the ratio reported.
     * The sketch/exact split is the point of the query: the cheap path
     * and its error, measured. */
-  private def qQuantileSketch(s: SparkSession, dir: String): DataFrame = {
+  private def qQuantileSketch(t: Tables): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    import s.implicits._
-    val c = Tables(s, dir).orders
+    import t.spark.implicits._
+    val c = t.orders
       .select(floor(col("o_totalprice") * 100).cast("long").as("cents"))
       .filter(col("cents") > 0)
       .localCheckpoint()
@@ -560,9 +556,8 @@ object SignalQueries {
     * order (cnt DESC, then the trigram itself) — the path-mining panel
     * behind "what do users do right before X". Per-user windows only;
     * the global sort runs on the (tiny) distinct-trigram frame. */
-  private def qPathTrigrams(s: SparkSession, dir: String): DataFrame = {
+  private def qPathTrigrams(t: Tables): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val t = Tables(s, dir)
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     val sess = t.events
       .withColumn("prev", lag(col("ts"), 1).over(w))
@@ -643,8 +638,8 @@ object SignalQueries {
       .orderBy(col("doc_id"))
   }
 
-  private def qMultimodalVad(s: SparkSession, dir: String): DataFrame =
-    vadPanel(Tables(s, dir).documents)
+  private def qMultimodalVad(t: Tables): DataFrame =
+    vadPanel(t.documents)
 
   private val qMultimodalVadSql =
     """WITH p AS (SELECT doc_id, 10 + doc_id % 50 AS ns FROM documents),
@@ -687,9 +682,9 @@ object SignalQueries {
     * bounded 3² = 9 paths whatever the degree distribution. That bound
     * is the point at 100 TB: hub vertices cost the same as leaves.
     * Output: per-vertex sampled-2-hop panel. */
-  private def qSampleFanout(s: SparkSession, dir: String): DataFrame = owned { o =>
+  private def qSampleFanout(t: Tables): DataFrame = owned { o =>
     import org.apache.spark.sql.expressions.Window
-    val cp = o(TestGraphs.partCoPairs(Tables(s, dir)).localCheckpoint())
+    val cp = o(TestGraphs.partCoPairs(t).localCheckpoint())
     val e = cp.select(col("u").as("src"), col("v").as("dst"))
       .union(cp.select(col("v").as("src"), col("u").as("dst")))
     val h1 = e.withColumn("r", row_number().over(
@@ -734,9 +729,9 @@ object SignalQueries {
     * standard zipWithIndex-style dense id-map, built distributed via
     * [[graft.operators.DistributedRank]] (range-partitioned offset
     * rank — no global window over the vertex list). */
-  private def qNegativeSamples(s: SparkSession, dir: String): DataFrame = owned { o =>
+  private def qNegativeSamples(t: Tables): DataFrame = owned { o =>
     import org.apache.spark.sql.expressions.Window
-    val cp = o(TestGraphs.partCoPairs(Tables(s, dir)).localCheckpoint())
+    val cp = o(TestGraphs.partCoPairs(t).localCheckpoint())
     val e = cp.select(col("u").as("src"), col("v").as("dst"))
       .union(cp.select(col("v").as("src"), col("u").as("dst")))
       .localCheckpoint()
@@ -790,10 +785,9 @@ object SignalQueries {
     * share — the retention-of-attention curve product teams read. One
     * sessionization pass + a 4-row horizon join (each session lands in
     * ≤ 4 horizon buckets — constant fan-out). */
-  private def qSessionSurvival(s: SparkSession, dir: String): DataFrame = {
+  private def qSessionSurvival(t: Tables): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    import s.implicits._
-    val t = Tables(s, dir)
+    import t.spark.implicits._
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     val sess = t.events
       .withColumn("prev", lag(col("ts"), 1).over(w))
@@ -846,13 +840,11 @@ object SignalQueries {
     * thousand-source personalization viable at warehouse scale, where
     * S independent q_graph_rwr runs would pay S edge shuffles per
     * round. Oracle unrolls the identical tagged recurrence. */
-  private def qRwrMulti(s: SparkSession, dir: String): DataFrame = {
-    val tb = Tables(s, dir)
-    graph.Algos.rwrMulti(TestGraphs.custSuppSym(tb), nSources = 4,
+  private def qRwrMulti(t: Tables): DataFrame =
+    graph.Algos.rwrMulti(TestGraphs.custSuppSym(t), nSources = 4,
         iterations = 5)
       .select(col("id"), col("tag"), e6(col("pr")).as("pr_e6"))
       .orderBy(col("tag"), col("id"))
-  }
 
   private val qRwrMultiSql =
     sql.OracleGen.rwrMultiSql(TestGraphs.custSuppSymSql, 4, 5, 0.85, 0.15)
@@ -871,7 +863,7 @@ object SignalQueries {
     * extension fan-out is out-degree-bounded in the oriented (acyclic)
     * graph — the same arboricity argument as the triangle pass.
     * Single-row (n_triangles, n_k4) output. */
-  private def qK4(s: SparkSession, dir: String): DataFrame = {
+  private def qK4(t: Tables): DataFrame = {
     // Round-14: the edge list is checkpointed with DECLARED hash(u)
     // partitioning, so the wedge self-join (both sides keyed u) runs
     // with ZERO exchanges, and every join against cp is pinned to a
@@ -886,22 +878,22 @@ object SignalQueries {
     // concentrates |E| under few u values can OOM a build task where
     // the old sort-merge would have spilled. PLANS.md r15 records the
     // sizing rule; np (shuffle.partitions) is the at-scale safety valve.
-    val cp = materialize(TestGraphs.partCoPairs(Tables(s, dir)), AdaptiveHash("u"))
-    val t = cp.as("a")
+    val cp = materialize(TestGraphs.partCoPairs(t), AdaptiveHash("u"))
+    val tri = cp.as("a")
       .join(cp.as("b").hint("shuffle_hash"),
         col("b.u") === col("a.u") && col("b.v") > col("a.v"))
       .join(cp.as("c").hint("shuffle_hash"),
         col("c.u") === col("a.v") && col("c.v") === col("b.v"))
       .select(col("a.u").as("x"), col("a.v").as("y"), col("b.v").as("z"))
       .localCheckpoint()
-    val ext = t
+    val ext = tri
       .join(cp.select(col("u").as("z"), col("v").as("d")).hint("shuffle_hash"),
         Seq("z"))
       .join(cp.select(col("u").as("x"), col("v").as("d")).hint("shuffle_hash"),
         Seq("x", "d"), "left_semi")
       .join(cp.select(col("u").as("y"), col("v").as("d")).hint("shuffle_hash"),
         Seq("y", "d"), "left_semi")
-    t.agg(count(lit(1)).as("n_triangles"))
+    tri.agg(count(lit(1)).as("n_triangles"))
       .crossJoin(ext.agg(count(lit(1)).as("n_k4")))
   }
 
@@ -929,8 +921,8 @@ object SignalQueries {
     * join is per-source term frequencies keyed on token — never a doc-
     * or corpus-sized frame. The drift monitor that says which data
     * sources have diverged vocabularies before a mixture is trained. */
-  private def qSourceDriftTv(s: SparkSession, dir: String): DataFrame = {
-    val tf = Tables(s, dir).documents
+  private def qSourceDriftTv(t: Tables): DataFrame = {
+    val tf = t.documents
       .select(col("source"), explode(text.TextFunctions.tokens(col("text"))).as("tok"))
       .groupBy(col("source"), col("tok")).agg(count(lit(1)).as("c"))
       .localCheckpoint()
@@ -986,10 +978,9 @@ object SignalQueries {
     * both engines; the final effect ratio is sign-decomposed. The
     * matrix frames are channel²-sized (tiny metadata), never data-sized
     * — the only corpus pass is the journey construction. */
-  private def qMarkovAttribution(s: SparkSession, dir: String): DataFrame = owned { o =>
+  private def qMarkovAttribution(t: Tables): DataFrame = owned { o =>
     import org.apache.spark.sql.expressions.Window
-    import s.implicits._
-    val t = Tables(s, dir)
+    import t.spark.implicits._
     val ev0 = t.events.select(col("user_id"), col("event_type"), col("ts"), col("event_id"))
     val fp = ev0.filter(col("event_type") === "purchase")
       .groupBy(col("user_id")).agg(min(col("ts")).as("fts"))
@@ -1106,9 +1097,8 @@ object SignalQueries {
     * per-user pair fan-out is capped at a constant, so a power user
     * can't quadratically explode the shuffle at warehouse scale (the
     * contamination df-cap discipline). */
-  private def qItemCf(s: SparkSession, dir: String): DataFrame = owned { o =>
+  private def qItemCf(t: Tables): DataFrame = owned { o =>
     import org.apache.spark.sql.expressions.Window
-    val t = Tables(s, dir)
     // Round-14: both checkpoints declare hash(u) partitioning (the k4
     // treatment), so the u-keyed chain — the ni<=200 degree aggregation,
     // its semi-join, and the quadratic co-occurrence self-join below —
@@ -1166,9 +1156,8 @@ object SignalQueries {
     * (calendar-bounded, like the EWMA fold) — the corpus pass is the
     * (day) rollup. The anomaly triage view: which part of a spike is
     * trend, which is weekday rhythm, which is genuinely new. */
-  private def qStlLite(s: SparkSession, dir: String): DataFrame = {
+  private def qStlLite(t: Tables): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val t = Tables(s, dir)
     val d = t.events
       .select(expr(s"ts div $DayUs").as("day"),
         floor(col("value") * 100).cast("long").as("cents"))
@@ -1220,9 +1209,8 @@ object SignalQueries {
     * q_asof_purchase. The join is user-keyed (per-user signup×purchase
     * fan-out, never cross-user), then one per-signup rank window picks
     * the minimum — the standard nearest-neighbor-in-time shape. */
-  private def qAsofNearest(s: SparkSession, dir: String): DataFrame = {
+  private def qAsofNearest(t: Tables): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val t = Tables(s, dir)
     val ev = t.events.localCheckpoint()
     val sg = ev.filter(col("event_type") === "signup")
       .select(col("user_id"), col("event_id"), col("ts").as("us"))
@@ -1263,8 +1251,8 @@ object SignalQueries {
     * candidate volume is Σ df² over KEPT fingerprints — capped by
     * construction, never all-pairs. Completes the plagiarism-detection
     * story: select → index → match. */
-  private def qWinnowMatches(s: SparkSession, dir: String): DataFrame = owned { o =>
-    val d = Tables(s, dir).documents
+  private def qWinnowMatches(t: Tables): DataFrame = owned { o =>
+    val d = t.documents
     val sel = o(d.select(col("doc_id"), expr(
         """CASE WHEN length(text) < 8 THEN array()
           |ELSE transform(sequence(1, length(text) - 7),
@@ -1331,9 +1319,9 @@ object SignalQueries {
     * q_multimodal_phash (frequency); together the three cover the
     * classic perceptual-hash family. Exact cross-multiplied integer
     * rule, −1 sentinels preserved. */
-  private def qMultimodalDhash(s: SparkSession, dir: String): DataFrame =
+  private def qMultimodalDhash(t: Tables): DataFrame =
     multimodal.Multimodal.differenceHash(
-      multimodal.Multimodal.documentsAsPpm(Tables(s, dir).documents))
+      multimodal.Multimodal.documentsAsPpm(t.documents))
       .orderBy(col("doc_id"))
 
   private val qMultimodalDhashSql =
@@ -1361,8 +1349,7 @@ object SignalQueries {
     * canonical 3-way join + agg + top-k. Revenue in exact floor-cents;
     * Catalyst broadcast-joins the customer dim and the top-k compiles
     * to TakeOrderedAndProject. */
-  private def q10Returned(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def q10Returned(t: Tables): DataFrame =
     t.customer.join(t.orders, col("o_custkey") === col("c_custkey"))
       .join(t.lineitem, col("l_orderkey") === col("o_orderkey"))
       .filter(col("l_returnflag") === "R")
@@ -1371,7 +1358,6 @@ object SignalQueries {
         .cast("long")).cast("long").as("rev_cents"))
       .orderBy(col("rev_cents").desc, col("c_custkey"))
       .limit(20)
-  }
 
   private val q10ReturnedSql =
     """SELECT c_custkey, c_name,
@@ -1385,14 +1371,12 @@ object SignalQueries {
 
   /** TPC-H Q13 shape — customer distribution by order count, including
     * zero-order customers (the LEFT JOIN is the point of the query). */
-  private def q13Custdist(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def q13Custdist(t: Tables): DataFrame =
     t.customer.join(t.orders, col("o_custkey") === col("c_custkey"), "left")
       .groupBy(col("c_custkey"))
       .agg(count(col("o_orderkey")).as("c_count"))
       .groupBy(col("c_count")).agg(count(lit(1)).as("custdist"))
       .orderBy(col("custdist").desc, col("c_count").desc)
-  }
 
   private val q13CustdistSql =
     """WITH co AS (SELECT c_custkey, COUNT(o_orderkey) AS c_count
@@ -1403,8 +1387,7 @@ object SignalQueries {
   /** TPC-H Q18 shape — large-volume orders (Σqty > 150), top 20 by
     * price: the semi-join-on-aggregate pattern (the HAVING subquery
     * prunes BEFORE the wide join). */
-  private def q18Large(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def q18Large(t: Tables): DataFrame = {
     val big = t.lineitem.groupBy(col("l_orderkey"))
       .agg(sum(col("l_quantity")).as("sq")).filter(col("sq") > 150)
       .select(col("l_orderkey"))
@@ -1439,8 +1422,7 @@ object SignalQueries {
     * under-alert), <1e6 = under-dispersed (throttled). Exact integer
     * moments: (k·Σn² − S²)·10⁶ div (S·(k−1)). One (type, day) rollup +
     * one per-type scalar row. */
-  private def qDispersion(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qDispersion(t: Tables): DataFrame =
     t.events.select(col("event_type"), expr(s"ts div $DayUs").as("day"))
       .groupBy(col("event_type"), col("day")).agg(count(lit(1)).as("n"))
       .groupBy(col("event_type"))
@@ -1450,7 +1432,6 @@ object SignalQueries {
       .select(col("event_type"), col("k"), col("s"),
         expr("((k * ss - s * s) * 1000000) div (s * (k - 1))").as("dispersion_e6"))
       .orderBy(col("event_type"))
-  }
 
   private val qDispersionSql =
     s"""WITH d AS (SELECT event_type, epoch_us(ts) // $DayUs AS day,
@@ -1474,8 +1455,7 @@ object SignalQueries {
     * degree-assortativity panel. The numerator can go NEGATIVE
     * (heterophily), so the division is sign-decomposed. One edge scan +
     * two nation-keyed margins (≤ 25 rows each). */
-  private def qHomophily(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qHomophily(t: Tables): DataFrame = {
     val e = t.orders.join(t.lineitem, col("l_orderkey") === col("o_orderkey"))
       .select(col("o_custkey").as("c"), col("l_suppkey").as("sp")).distinct()
     val en = e
@@ -1527,8 +1507,7 @@ object SignalQueries {
     * reads. Built from the deduped (user, day) frame with two
     * shifted self-joins (day±1); no window wider than the user-day
     * rollup. */
-  private def qGrowthAccounting(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qGrowthAccounting(t: Tables): DataFrame = {
     val ud = t.events.select(col("user_id"), expr(s"ts div $DayUs").as("day"))
       .distinct().localCheckpoint()
     val fu = ud.groupBy(col("user_id")).agg(min(col("day")).as("first_day"))
@@ -1580,13 +1559,11 @@ object SignalQueries {
     * the chain structure independently (a user's events form one
     * component, so sizes are per-user event counts): a hash match
     * proves the ENGINE's fixpoint found exactly those components. */
-  private def qComponentSizes(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def qComponentSizes(t: Tables): DataFrame =
     graph.Algos.wcc(graph.Prep.makeSymmetric(TestGraphs.eventChain(t)))
       .groupBy(col("component")).agg(count(lit(1)).as("sz"))
       .groupBy(col("sz")).agg(count(lit(1)).as("n_components"))
       .orderBy(col("sz"))
-  }
 
   // HAVING >= 2 matches the engine's edge-derived vertex set: a
   // single-event user produces no eventChain edge, hence no vertex and
@@ -1609,9 +1586,8 @@ object SignalQueries {
     * flows (automate them), high = genuine user choice. Same
     * libm-free ilog2 = bitlength−1 recipe as the corpus entropy
     * panel. */
-  private def qMarkovEntropy(s: SparkSession, dir: String): DataFrame = {
+  private def qMarkovEntropy(t: Tables): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val t = Tables(s, dir)
     val ev0 = t.events.select(col("user_id"), col("event_type"), col("ts"), col("event_id"))
     val fp = ev0.filter(col("event_type") === "purchase")
       .groupBy(col("user_id")).agg(min(col("ts")).as("fts"))
@@ -1660,71 +1636,37 @@ object SignalQueries {
 
   // ------------------------------------------------------------------
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_ewma_daily"          -> (qEwmaDaily _),
-    "q_cuped"               -> (qCuped _),
-    "q_multimodal_scenecut" -> (qScenecut _),
-    "q_graph_salsa"         -> (qSalsa _),
-    "q_text_winnow"         -> (qTextWinnow _),
-    "q_graph_squares"       -> (qSquares _),
-    "q_emb_power_iter"      -> (qEmbPowerIter _),
-    "q_holt_linear"         -> (qHoltLinear _),
-    "q_mix_epochs"          -> (qMixEpochs _),
-    "q_quantile_sketch"     -> (qQuantileSketch _),
-    "q_path_trigrams"       -> (qPathTrigrams _),
-    "q_multimodal_vad"      -> (qMultimodalVad _),
-    "q_graph_sample_fanout" -> (qSampleFanout _),
-    "q_graph_negative_samples" -> (qNegativeSamples _),
-    "q_session_survival"    -> (qSessionSurvival _),
-    "q_graph_rwr_multi"     -> (qRwrMulti _),
-    "q_graph_k4"            -> (qK4 _),
-    "q_source_drift_tv"     -> (qSourceDriftTv _),
-    "q_markov_attribution"  -> (qMarkovAttribution _),
-    "q_item_cf"             -> (qItemCf _),
-    "q_stl_lite"            -> (qStlLite _),
-    "q_asof_nearest"        -> (qAsofNearest _),
-    "q_winnow_matches"      -> (qWinnowMatches _),
-    "q_multimodal_dhash"    -> (qMultimodalDhash _),
-    "q10_returned"          -> (q10Returned _),
-    "q13_custdist"          -> (q13Custdist _),
-    "q18_large"             -> (q18Large _),
-    "q_dispersion"          -> (qDispersion _),
-    "q_graph_homophily"     -> (qHomophily _),
-    "q_growth_accounting"   -> (qGrowthAccounting _),
-    "q_graph_component_sizes" -> (qComponentSizes _),
-    "q_markov_entropy"      -> (qMarkovEntropy _))
-
-  val oracles: Map[String, String] = Map(
-    "q_ewma_daily"          -> qEwmaDailySql,
-    "q_cuped"               -> qCupedSql,
-    "q_multimodal_scenecut" -> qScenecutSql,
-    "q_graph_salsa"         -> qSalsaSql,
-    "q_text_winnow"         -> qTextWinnowSql,
-    "q_graph_squares"       -> qSquaresSql,
-    "q_emb_power_iter"      -> qEmbPowerIterSql,
-    "q_holt_linear"         -> qHoltLinearSql,
-    "q_mix_epochs"          -> qMixEpochsSql,
-    "q_quantile_sketch"     -> qQuantileSketchSql,
-    "q_path_trigrams"       -> qPathTrigramsSql,
-    "q_multimodal_vad"      -> qMultimodalVadSql,
-    "q_graph_sample_fanout" -> qSampleFanoutSql,
-    "q_graph_negative_samples" -> qNegativeSamplesSql,
-    "q_session_survival"    -> qSessionSurvivalSql,
-    "q_graph_rwr_multi"     -> qRwrMultiSql,
-    "q_graph_k4"            -> qK4Sql,
-    "q_source_drift_tv"     -> qSourceDriftTvSql,
-    "q_markov_attribution"  -> qMarkovAttributionSql,
-    "q_item_cf"             -> qItemCfSql,
-    "q_stl_lite"            -> qStlLiteSql,
-    "q_asof_nearest"        -> qAsofNearestSql,
-    "q_winnow_matches"      -> qWinnowMatchesSql,
-    "q_multimodal_dhash"    -> qMultimodalDhashSql,
-    "q10_returned"          -> q10ReturnedSql,
-    "q13_custdist"          -> q13CustdistSql,
-    "q18_large"             -> q18LargeSql,
-    "q_dispersion"          -> qDispersionSql,
-    "q_graph_homophily"     -> qHomophilySql,
-    "q_growth_accounting"   -> qGrowthAccountingSql,
-    "q_graph_component_sizes" -> qComponentSizesSql,
-    "q_markov_entropy"      -> qMarkovEntropySql)
+  val queries: Seq[Query] = Seq(
+    Query("q_ewma_daily", qEwmaDaily, qEwmaDailySql),
+    Query("q_cuped", qCuped, qCupedSql),
+    Query("q_multimodal_scenecut", qScenecut, qScenecutSql),
+    Query("q_graph_salsa", qSalsa, qSalsaSql),
+    Query("q_text_winnow", qTextWinnow, qTextWinnowSql),
+    Query("q_graph_squares", qSquares, qSquaresSql),
+    Query("q_emb_power_iter", qEmbPowerIter, qEmbPowerIterSql),
+    Query("q_holt_linear", qHoltLinear, qHoltLinearSql),
+    Query("q_mix_epochs", qMixEpochs, qMixEpochsSql),
+    Query("q_quantile_sketch", qQuantileSketch, qQuantileSketchSql),
+    Query("q_path_trigrams", qPathTrigrams, qPathTrigramsSql),
+    Query("q_multimodal_vad", qMultimodalVad, qMultimodalVadSql),
+    Query("q_graph_sample_fanout", qSampleFanout, qSampleFanoutSql),
+    Query("q_graph_negative_samples", qNegativeSamples, qNegativeSamplesSql),
+    Query("q_session_survival", qSessionSurvival, qSessionSurvivalSql),
+    Query("q_graph_rwr_multi", qRwrMulti, qRwrMultiSql),
+    Query("q_graph_k4", qK4, qK4Sql),
+    Query("q_source_drift_tv", qSourceDriftTv, qSourceDriftTvSql),
+    Query("q_markov_attribution", qMarkovAttribution, qMarkovAttributionSql),
+    Query("q_item_cf", qItemCf, qItemCfSql),
+    Query("q_stl_lite", qStlLite, qStlLiteSql),
+    Query("q_asof_nearest", qAsofNearest, qAsofNearestSql),
+    Query("q_winnow_matches", qWinnowMatches, qWinnowMatchesSql),
+    Query("q_multimodal_dhash", qMultimodalDhash, qMultimodalDhashSql),
+    Query("q10_returned", q10Returned, q10ReturnedSql),
+    Query("q13_custdist", q13Custdist, q13CustdistSql),
+    Query("q18_large", q18Large, q18LargeSql),
+    Query("q_dispersion", qDispersion, qDispersionSql),
+    Query("q_graph_homophily", qHomophily, qHomophilySql),
+    Query("q_growth_accounting", qGrowthAccounting, qGrowthAccountingSql),
+    Query("q_graph_component_sizes", qComponentSizes, qComponentSizesSql),
+    Query("q_markov_entropy", qMarkovEntropy, qMarkovEntropySql))
 }

@@ -13,6 +13,6 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Queries.all
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
+    * the same parquet tables. */
   def oracleSql: Map[String, String] = Queries.oracles
 }

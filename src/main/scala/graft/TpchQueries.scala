@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.sql.Exact.{e2, idiv}
@@ -36,8 +36,7 @@ object TpchQueries {
 
   // --- Q4: priority count of orders with a late shipment (EXISTS) -----
 
-  private def q04(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def q04(t: Tables): DataFrame = {
     val o = t.orders
       .filter(col("o_orderdate") >= to_timestamp(lit("1996-01-01")) &&
         col("o_orderdate") < to_timestamp(lit("1997-01-01")))
@@ -63,8 +62,7 @@ object TpchQueries {
 
   private val q07Nations = Seq(3, 8, 12, 13).map(_.toLong)
 
-  private def q07(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def q07(t: Tables): DataFrame = {
     val n1 = t.nation.select(col("n_nationkey").as("sn_key"), col("n_name").as("supp_nation"))
     val n2 = t.nation.select(col("n_nationkey").as("cn_key"), col("n_name").as("cust_nation"))
     t.lineitem
@@ -101,8 +99,7 @@ object TpchQueries {
 
   // --- Q8: national market share within a region ----------------------
 
-  private def q08(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def q08(t: Tables): DataFrame = {
     val euroNationKeys = t.nation
       .join(broadcast(t.region.filter(col("r_name") === "EUROPE")),
         col("n_regionkey") === col("r_regionkey"), "left_semi")
@@ -149,8 +146,7 @@ object TpchQueries {
 
   // --- Q9: product-line profit by supplier nation and year ------------
 
-  private def q09(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def q09(t: Tables): DataFrame = {
     // floor to cents PER ROW, then integer-sum: the subtraction makes the
     // summand cancellation-prone, and floor(Σdoubles · 100) flipped a
     // last digit between engines at sf0.01 (addition-order ulp). Per-row
@@ -183,8 +179,7 @@ object TpchQueries {
 
   // --- Q12: late-shipment counts split by order priority --------------
 
-  private def q12(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def q12(t: Tables): DataFrame = {
     val high = col("o_orderpriority").isin("1-URGENT", "2-HIGH")
     t.lineitem
       .filter(col("l_shipdate") >= to_timestamp(lit("1996-01-01")) &&
@@ -210,8 +205,7 @@ object TpchQueries {
 
   // --- Q14: promo revenue share (integer ratio of floored sums) -------
 
-  private def q14(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def q14(t: Tables): DataFrame = {
     val rev = col("l_extendedprice") * (lit(1) - col("l_discount"))
     t.lineitem
       .filter(col("l_shipdate") >= to_timestamp(lit("1996-01-01")) &&
@@ -232,8 +226,7 @@ object TpchQueries {
 
   // --- Q15: top supplier(s) by quarterly revenue (argmax with ties) ---
 
-  private def q15(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def q15(t: Tables): DataFrame = {
     val rev = t.lineitem
       .filter(col("l_shipdate") >= to_timestamp(lit("1996-01-01")) &&
         col("l_shipdate") < to_timestamp(lit("1996-04-01")))
@@ -257,8 +250,7 @@ object TpchQueries {
 
   private val q16Sizes = Seq(1, 4, 9, 14, 19, 23, 36, 45)
 
-  private def q16(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def q16(t: Tables): DataFrame =
     t.lineitem.select(col("l_partkey"), col("l_suppkey"))
       .join(t.part
           .filter(col("p_brand") =!= "Brand#21" && col("p_type") =!= "PROMO" &&
@@ -268,7 +260,6 @@ object TpchQueries {
       .groupBy(col("p_brand"), col("p_type"), col("p_size").cast("long").as("p_size"))
       .agg(countDistinct(col("l_suppkey")).as("supplier_cnt"))
       .orderBy(col("supplier_cnt").desc, col("p_brand"), col("p_type"), col("p_size"))
-  }
 
   private val q16Sql =
     """SELECT p_brand, p_type, CAST(p_size AS BIGINT) AS p_size, COUNT(DISTINCT l_suppkey) AS supplier_cnt
@@ -278,8 +269,7 @@ object TpchQueries {
 
   // --- Q17: small-quantity revenue (integer-exact 20%-of-avg test) ----
 
-  private def q17(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def q17(t: Tables): DataFrame = {
     // per-part stats over ALL lineitems (the TPC-H correlated subquery);
     // quantities are integral so 5·q·cnt < Σq is the exact integer form
     // of q < 0.2·avg — no float threshold ever sits on a boundary
@@ -303,8 +293,7 @@ object TpchQueries {
 
   // --- Q19: disjunctive brand/size/quantity predicate -----------------
 
-  private def q19(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def q19(t: Tables): DataFrame = {
     val pred =
       (col("p_brand") === "Brand#12" && col("p_size").between(1, 15) &&
         col("l_quantity").between(1, 15)) ||
@@ -329,8 +318,7 @@ object TpchQueries {
 
   // --- Q21: suppliers who alone held up a multi-supplier order --------
 
-  private def q21(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def q21(t: Tables): DataFrame = {
     val fo = t.orders.filter(col("o_orderstatus") === "F")
       .select(col("o_orderkey"), col("o_orderdate"))
     val li = t.lineitem.select(col("l_orderkey"), col("l_suppkey"), col("l_shipdate"))
@@ -377,8 +365,7 @@ object TpchQueries {
 
   // --- Q22: well-funded customers idle since 2000 ---------------------
 
-  private def q22(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
+  private def q22(t: Tables): DataFrame = {
     // balances are cent-valued: per-row round-to-cents is exact, so the
     // above-average test is pure integer arithmetic (cents·n > Σcents)
     val cents = round(col("c_acctbal") * lit(100)).cast("long")
@@ -409,31 +396,17 @@ object TpchQueries {
 
   // ------------------------------------------------------------------
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q04_priority" -> (q04 _),
-    "q07_volume" -> (q07 _),
-    "q08_share" -> (q08 _),
-    "q09_profit" -> (q09 _),
-    "q12_late" -> (q12 _),
-    "q14_promo" -> (q14 _),
-    "q15_topsupp" -> (q15 _),
-    "q16_partcnt" -> (q16 _),
-    "q17_smallqty" -> (q17 _),
-    "q19_orpred" -> (q19 _),
-    "q21_waiting" -> (q21 _),
-    "q22_idle" -> (q22 _))
-
-  val oracles: Map[String, String] = Map(
-    "q04_priority" -> q04Sql,
-    "q07_volume" -> q07Sql,
-    "q08_share" -> q08Sql,
-    "q09_profit" -> q09Sql,
-    "q12_late" -> q12Sql,
-    "q14_promo" -> q14Sql,
-    "q15_topsupp" -> q15Sql,
-    "q16_partcnt" -> q16Sql,
-    "q17_smallqty" -> q17Sql,
-    "q19_orpred" -> q19Sql,
-    "q21_waiting" -> q21Sql,
-    "q22_idle" -> q22Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q04_priority", q04, q04Sql),
+    Query("q07_volume", q07, q07Sql),
+    Query("q08_share", q08, q08Sql),
+    Query("q09_profit", q09, q09Sql),
+    Query("q12_late", q12, q12Sql),
+    Query("q14_promo", q14, q14Sql),
+    Query("q15_topsupp", q15, q15Sql),
+    Query("q16_partcnt", q16, q16Sql),
+    Query("q17_smallqty", q17, q17Sql),
+    Query("q19_orpred", q19, q19Sql),
+    Query("q21_waiting", q21, q21Sql),
+    Query("q22_idle", q22, q22Sql))
 }

@@ -5,6 +5,8 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // SPARK_GRAFT_ONLY narrows the run for fast local iteration
+    val selected = Bench.selected
     // RAM-backed scratch (LocalScratch): the driver's correctness drive
     // is sf0.01, whose spills are tiny. A corpus whose spill exceeds RAM
     // (PLANS.md, "Round-12 continuation #4": the 50× CDC pair dump) must
@@ -13,21 +15,17 @@ object Verify {
     spark.sparkContext.setLogLevel("WARN")
     val recorder = new graft.obs.Recorder(spark)
     new java.io.File(outDir).mkdirs()
-    // optional name filter for fast local iteration (unset => all)
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-        // the recorder's cleanup after each query drops its leftover
-        // checkpoints, so one query's cache can't starve the next
-        recorder.measure {
-          fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-          -1L
-        }.error.foreach { e =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-          e.printStackTrace()
-        }
+    selected.foreach { case (name, fn) =>
+      // the recorder's cleanup after each query drops its leftover
+      // checkpoints, so one query's cache can't starve the next
+      recorder.measure {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        -1L
+      }.error.foreach { e =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        e.printStackTrace()
       }
+    }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -96,14 +96,6 @@ object Reducers {
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Double]]()
   }
 
-  /** Column-expression elementwise vector sum (codegen path — preferred
-    * over the typed Aggregator when the vector is an array column):
-    * aggregate over zip_with. */
-  def vectorSumCol(c: Column, dim: Int): Column =
-    aggregate(collect_list(c),
-      array((0 until dim).map(_ => lit(0.0)): _*),
-      (acc, v) => zip_with(acc, v, (x, y) => x + y))
-
   /** Sparse vector sum (CORE/aggregators/matrix/sparse — the
     * {Double,Float,Int,Long}SparseVectorSumAggregator family, one class
     * per primitive there; one generic here): vectors are index→value

@@ -29,8 +29,4 @@ object Exact {
     * quotient can round across an integer boundary. */
   def idiv(a: Column, b: Column): Column =
     ((a - pmod(a, b)) / b).cast("long")
-
-  /** SQL twin for the oracle side. */
-  def sqlFloorScale(expr: String, scale: Long): String =
-    s"CAST(FLOOR(($expr) * $scale) AS BIGINT)"
 }

@@ -29,16 +29,8 @@ object OracleGen {
 
   /** K rounds of unweighted hop relaxation from the minimum `src` vertex
     * (mirrors the engine's min-id source pick). */
-  def bfsMinSourceSql(withBody: String, k: Int): String =
-    bfsSeededSql(withBody, "SELECT (SELECT MIN(src) FROM e) AS id, CAST(0 AS BIGINT) AS level", k)
-
-  /** K rounds of unweighted hop relaxation from a given source set. */
-  def bfsSql(withBody: String, sources: Seq[Long], k: Int): String =
-    bfsSeededSql(withBody,
-      sources.map(s => s"SELECT CAST($s AS BIGINT) AS id, CAST(0 AS BIGINT) AS level")
-        .mkString(" UNION ALL "), k)
-
-  private def bfsSeededSql(withBody: String, seed: String, k: Int): String = {
+  def bfsMinSourceSql(withBody: String, k: Int): String = {
+    val seed = "SELECT (SELECT MIN(src) FROM e) AS id, CAST(0 AS BIGINT) AS level"
     val steps = (1 to k).map { i =>
       s"""d$i AS MATERIALIZED (SELECT id, MIN(level) AS level FROM (
          |SELECT id, level FROM d${i - 1}

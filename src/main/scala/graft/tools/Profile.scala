@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
-import graft.{Bench, LocalLiveness, SparkEntry, TestCorpora}
+import graft.{Bench, LocalLiveness, Queries, TestCorpora}
 import graft.obs.{Measurement, Recorder}
 
 /** The one profiling entry point: runs named declared queries on one local
@@ -55,14 +55,13 @@ object Profile {
   def run(spark: SparkSession, args: Seq[String], sfDir: String, passes: Int,
           out: String => Unit = println): Seq[Row] = {
     val o = parse(args.toList, Opts())
-    val unknown = o.queries.filterNot(SparkEntry.queries.contains)
     require(o.queries.nonEmpty, Usage)
-    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    val selected = Queries.select(o.queries)
     require(o.copies.forall(_ >= 2), s"--copies needs N >= 2; $Usage")
     if (o.explain) {
-      o.queries.foreach { q =>
+      selected.foreach { case (q, fn) =>
         out(s"======== $q")
-        out(SparkEntry.queries(q)(spark, sfDir).queryExecution
+        out(fn(spark, sfDir).queryExecution
           .explainString(ExplainMode.fromString("formatted")))
         Recorder.cleanup(spark)
       }
@@ -76,9 +75,8 @@ object Profile {
       n -> dir
     }
     val recorder = new Recorder(spark)
-    try o.queries.flatMap(q => (1 to passes).flatMap { pass =>
+    try selected.flatMap { case (q, fn) => (1 to passes).flatMap { pass =>
       val rows = dirs.map { case (n, dir) =>
-        val fn = SparkEntry.queries(q)
         val r = Row(q, pass, n, recorder.measureQuery(fn(spark, dir))(Recorder.fullOutput),
           recorder.measure(fn(spark, dir).count()))
         report(r, out)
@@ -90,7 +88,7 @@ object Profile {
           f"count=${b.count.seconds / a.count.seconds}%.2f jobs=${b.full.jobs}/${a.full.jobs}")
       }
       rows
-    }) finally recorder.close()
+    }} finally recorder.close()
   }
 
   private def report(r: Row, out: String => Unit): Unit = {

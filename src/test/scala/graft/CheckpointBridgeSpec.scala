@@ -242,7 +242,7 @@ class CheckpointBridgeSpec extends SparkSpec {
       }))
     val queries = SparkEntry.queries.keys.toSeq.sorted.filter(q =>
       Seq("q_graph_", "q_dedup_", "q_text_", "q_multimodal_").exists(q.startsWith) ||
-        CorpusQueries.all.contains(q) || q == "q_item_cf" || q == "q_winnow_matches")
+        CorpusQueries.queries.exists(_.name == q) || q == "q_item_cf" || q == "q_winnow_matches")
     assert(queries.size == 140, queries)
     val sf = "/root/testdata/sf0.001"
     // hold every RDD persisted by the start of each job: a stranded

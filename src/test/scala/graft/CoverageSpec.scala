@@ -69,6 +69,14 @@ class CoverageSpec extends SparkSpec {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
+  test("query registry: every query has an oracle, 275 names, no duplicate") {
+    assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
+    assert(SparkEntry.queries.size == 275)
+    val q = Query("q_dup", _ => spark.emptyDataFrame, "SELECT 1")
+    val e = intercept[IllegalArgumentException](Query.index(Seq(q, q.copy(oracle = "SELECT 2"))))
+    assert(e.getMessage.contains("q_dup"), e.getMessage)
+  }
+
   test("salted join replicates via explode, never BroadcastNestedLoop") {
     import spark.implicits._
     val skewed = (0 until 100).map(i => (1L, i.toLong)).toDF("k", "payload")

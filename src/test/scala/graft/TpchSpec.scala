@@ -34,7 +34,7 @@ class TpchSpec extends SparkSpec {
       (3L, 1.0, 999.0)
     ).toDF("l_partkey", "l_quantity", "l_extendedprice")
     val dir = dirWith("part" -> part, "lineitem" -> li)
-    val r = TpchQueries.all("q17_smallqty")(spark, dir)
+    val r = Queries.all("q17_smallqty")(spark, dir)
       .as[(Long, Long)].collect().toSeq
     assert(r == Seq((10000L, 1L)))
   }
@@ -58,7 +58,7 @@ class TpchSpec extends SparkSpec {
       .select(col("l_orderkey"), col("l_suppkey"), ts(col("d")).as("l_shipdate"))
     val supplier = Seq((1L, "S1"), (2L, "S2"), (3L, "S3")).toDF("s_suppkey", "s_name")
     val dir = dirWith("orders" -> orders, "lineitem" -> li, "supplier" -> supplier)
-    val r = TpchQueries.all("q21_waiting")(spark, dir)
+    val r = Queries.all("q21_waiting")(spark, dir)
       .as[(String, Long)].collect().toSeq
     assert(r == Seq(("S1", 1L)))
   }
@@ -76,7 +76,7 @@ class TpchSpec extends SparkSpec {
     ).toDF("o_orderkey", "o_custkey", "d")
       .select(col("o_orderkey"), col("o_custkey"), ts(col("d")).as("o_orderdate"))
     val dir = dirWith("customer" -> customer, "orders" -> orders)
-    val r = TpchQueries.all("q22_idle")(spark, dir)
+    val r = Queries.all("q22_idle")(spark, dir)
       .as[(Long, Long, Long)].collect().toSeq
     assert(r == Seq((2L, 1L, 20000L)))
   }
@@ -94,7 +94,7 @@ class TpchSpec extends SparkSpec {
         ts(col("d")).as("l_shipdate"))
     val supplier = Seq((1L, "S1"), (2L, "S2"), (3L, "S3")).toDF("s_suppkey", "s_name")
     val dir = dirWith("lineitem" -> li, "supplier" -> supplier)
-    val r = TpchQueries.all("q15_topsupp")(spark, dir)
+    val r = Queries.all("q15_topsupp")(spark, dir)
       .as[(Long, String, Long)].collect().toSeq
     assert(r == Seq((1L, "S1", 30000L), (2L, "S2", 30000L)))
   }

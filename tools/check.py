@@ -8,6 +8,9 @@ import json, subprocess, sys, glob, os
 
 import duckdb
 
+# the checkout this script belongs to, wherever it is run from
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
@@ -19,7 +22,7 @@ def main():
     if "--skip-verify" not in sys.argv:
         r = subprocess.run(
             ["sbt", f'runMain graft.Verify {sfdir} {outdir}'],
-            cwd="/root/repo", capture_output=True, text=True, timeout=3000)
+            cwd=ROOT, capture_output=True, text=True, timeout=3000)
         tail = (r.stdout + r.stderr)[-3000:]
         if r.returncode != 0:
             print("VERIFY FAILED:", tail); sys.exit(1)
